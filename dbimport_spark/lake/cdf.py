@@ -262,6 +262,12 @@ def table_changes(
                 "every update on it invisible"
             )
         value_cols = [c for c in value_cols if c in compare_cols]
+        if not value_cols:
+            raise ValueError(
+                f"compare_cols {sorted(compare_cols)} names no non-key "
+                f"payload column (merge key {keys}) — every update would "
+                "be invisible; pass None to compare the full payload"
+            )
     soft = AUDIT_DELETE in snap_b.schema.fieldNames()
 
     if rewrite_only_window(table, snap_a, snap_b):

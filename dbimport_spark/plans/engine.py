@@ -128,8 +128,9 @@ class BatchStats:
     out_bytes: int = 0
     skipped: bool = False
     quarantined: int = 0
-    # matview only: groups recomputed for min/max extremum invalidation
-    # (plans/matview.sync_view) — 0 for plain engine batches
+    # matview only: groups recomputed from the source (plans/matview) —
+    # the min/max-invalidated groups of an incremental sync, every group
+    # of a recompute sync; 0 for plain engine batches
     rescanned_groups: int = 0
 
 

@@ -4,10 +4,10 @@ The reference keeps downstream aggregates fresh by re-running export
 queries over the whole table each cycle (export_operations.py runs the
 full ``sparkQuery`` per export; custom validation aggregates likewise
 re-scan, import_config.py:2257-2284). At the 100 TB design point a
-re-scan per refresh is the wrong shape: this module maintains a
-``GROUP BY`` table *incrementally* from the engine's own change feed
-(``lake/cdf.py``) — each refresh reads only the rows a version window
-changed, never the base table.
+re-scan per refresh is the wrong shape for a big table and a small
+window: this module maintains a ``GROUP BY`` table from the engine's own
+change feed (``lake/cdf.py``) and re-scans only when file metadata says
+the feed would cost more (see "Scale shape per refresh").
 
 Semantics: the view equals
 
@@ -23,8 +23,7 @@ maintenance exact. min/max are NOT invertible; they are maintained by
 the candidate rule (a new value can only grow the extremum) plus
 GROUP-SCOPED rescan-on-invalidation: only a group whose stored extremum
 was possibly removed is recomputed, from the source's live rows at the
-window's end version — the table as a whole is still never rescanned.
-Derive avg at read time as sum/count.
+window's end version. Derive avg at read time as sum/count.
 
 Exactly-once rides the engine unchanged: the view is a lake table whose
 LSN domain is the SOURCE VERSION NUMBER (the mirror's trick,
@@ -38,12 +37,24 @@ loudly / quarantined, never silently grouped) applies — unlike SQL's
 ``GROUP BY``, which would invent a NULL group. Filter or coalesce null
 group values in the source before aggregating on them.
 
-Scale shape per refresh: one groupBy shuffle of the delta (feed-sized),
-one left join of the delta against current totals (delta side drives;
-AQE broadcasts it when small), and the engine's bucket-pruned merge of
-the touched groups. The base table is never scanned after bootstrap —
-bootstrap itself is the same code path, because version 0 is the empty
-creation snapshot and its feed is the full table as inserts.
+Scale shape per refresh: each sync chooses recompute or incremental from
+snapshot metadata alone (*All that Incremental is not Efficient*, EDBT
+2018) and logs the inputs of the choice. It RECOMPUTES when the window's
+diff read set costs at least a rescan (Σbytes of ``cdf.diff_read_sets``
+≥ Σbytes of the source's files at the window's end) AND an upper bound
+on the view's groups after the window — min(source file rows, view rows
++ rows of the window's new files) — is within the view engine's
+``broadcast_threshold_rows``, the bound on the driver-side fold: one
+column-pruned groupBy of the source and the view's rows are collected and
+diffed on the driver, and only new, changed and vanished groups reach the
+engine's merge. Bootstrap (the v0 feed is the whole table) lands there
+for any view within the bound, the ``on_gap='full'`` rebuild always.
+Otherwise — always for rewrite-only windows (zero diff bytes) and views
+over the bound — it folds INCREMENTALLY: one groupBy shuffle of the delta
+(feed-sized), one left join of the delta against current totals (delta
+side drives; AQE broadcasts it when small), and the engine's
+bucket-pruned merge of the touched groups; only min/max-invalidated
+groups read the base table.
 """
 
 from __future__ import annotations
@@ -54,7 +65,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dbimport_spark.lake.cdf import CHANGE_TYPE_COL, table_changes, window_has_reload
+from dbimport_spark.lake.cdf import (
+    CHANGE_TYPE_COL,
+    diff_read_sets,
+    rewrite_only_window,
+    snapshot_diff_files,
+    table_changes,
+    window_has_reload,
+)
 from dbimport_spark.lake.table import LakeTable
 from dbimport_spark.plans.engine import BatchStats, CDCEngine
 from dbimport_spark.schema import AUDIT_COLUMNS, AUDIT_DELETE
@@ -76,10 +94,10 @@ class AggSpec:
     extremum, so inserts fold in for free — plus group-scoped
     rescan-on-invalidation: a removed value that EQUALS a group's stored
     extremum may have been its last carrier, so that group (and ONLY
-    that group) is recomputed from the source's live rows. The base
-    table is still never fully rescanned; the rescan reads the
-    invalidated groups via a semi-join (predicate reaches the parquet
-    scan) and its trigger count is logged per sync (no-silent-caps)."""
+    that group) is recomputed from the source's live rows. The rescan
+    reads the invalidated groups via a semi-join behind per-column
+    ``isin`` filters (which reach the parquet scan) and its trigger
+    count is logged per sync (no-silent-caps)."""
 
     group_cols: list[str]
     sum_cols: list[str] = field(default_factory=list)
@@ -98,6 +116,15 @@ class AggSpec:
 
     def minmax_cols(self) -> list[str]:
         return sorted(set(self.min_cols) | set(self.max_cols))
+
+    def view_cols(self) -> list[str]:
+        """The view's payload columns (the order every fold selects)."""
+        return [
+            *self.group_cols, self.count_col,
+            *map(self.sum_name, self.sum_cols),
+            *map(self.min_name, self.min_cols),
+            *map(self.max_name, self.max_cols),
+        ]
 
 
 def view_schema(source_schema: T.StructType, spec: AggSpec) -> T.StructType:
@@ -175,6 +202,32 @@ def _source_live(
     return df
 
 
+def _aggregate(rows: DataFrame, spec: AggSpec, vschema: T.StructType) -> DataFrame:
+    """The view's defining groupBy over source ``rows``, columns in
+    ``spec.view_cols()`` order — shared by the recompute fold, the min/max
+    rescan and ``verify_view``."""
+    return rows.groupBy(*spec.group_cols).agg(
+        F.count(F.lit(1)).alias(spec.count_col),
+        *[
+            F.coalesce(F.sum(F.col(c)), F.lit(0))
+            .cast(_view_sum_type(vschema, spec, c))
+            .alias(spec.sum_name(c))
+            for c in spec.sum_cols
+        ],
+        *[F.min(F.col(c)).alias(spec.min_name(c)) for c in spec.min_cols],
+        *[F.max(F.col(c)).alias(spec.max_name(c)) for c in spec.max_cols],
+    )
+
+
+def _check_view_key(view_engine: CDCEngine, spec: AggSpec) -> None:
+    if list(view_engine.keys) != list(spec.group_cols):
+        raise ValueError(
+            f"spec.group_cols {spec.group_cols} != view table merge key "
+            f"{list(view_engine.keys)} — the view is keyed by its group "
+            "columns; syncing with a different spec would corrupt totals"
+        )
+
+
 def _contributions(feed: DataFrame, spec: AggSpec) -> DataFrame:
     """Explode the net feed into signed (+/-) per-row contributions.
 
@@ -185,11 +238,8 @@ def _contributions(feed: DataFrame, spec: AggSpec) -> DataFrame:
     new one in the same delta.
 
     Shape: ONE pass over the feed — each row builds an array of its 0-2
-    contribution structs (post / pre), compacted and exploded. The former
-    three-way union re-executed the feed's snapshot-diff JOIN once per
-    branch (three scans of both diff sides; the bootstrap sync paid two
-    of them for provably-empty branches), tripling the dominant cost of
-    every view sync.
+    contribution structs (post / pre), compacted and exploded; a union of
+    branches would re-run the feed's snapshot-diff join once per branch.
     """
     ct = F.col(CHANGE_TYPE_COL)
     dtypes = {f.name: f.dataType for f in feed.schema.fields}
@@ -285,17 +335,13 @@ def apply_feed_to_view(
     two are pinned row-identical by tests/test_cdf_stream.py). The
     window MUST start at the view's own watermark and callers enforce
     it; min/max invalidation rescans read the SOURCE at ``to_v``."""
-    if list(view_engine.keys) != list(spec.group_cols):
-        raise ValueError(
-            f"spec.group_cols {spec.group_cols} != view table merge key "
-            f"{list(view_engine.keys)} — the view is keyed by its group "
-            "columns; syncing with a different spec would corrupt totals"
-        )
-    # one metadata parse for every per-sum-column type lookup below
-    vschema = view_engine.table.current().schema
+    _check_view_key(view_engine, spec)
+    # one metadata parse for the sum types and bucket count below
+    vsnap = view_engine.table.current()
+    vschema = vsnap.schema
     sums = [
         F.coalesce(F.sum(spec.sum_name(c)), F.lit(0))
-        .cast(_view_sum_type(view_engine, spec, c, vschema))
+        .cast(_view_sum_type(vschema, spec, c))
         .alias(spec.sum_name(c))
         for c in spec.sum_cols
     ]
@@ -323,18 +369,13 @@ def apply_feed_to_view(
         noop = noop & F.col(f"_cand_max_{c}").isNull()
         noop = noop & F.col(f"_remv_max_{c}").isNull()
     # group-cardinality-sized; materialized once because three
-    # consumers follow (bucket collect, join, merge) — an uncached
-    # delta would re-run the feed groupBy per consumer. Caveat: this
-    # buys the reuse at the cost of materializing |touched groups|
-    # rows — the right trade while group cardinality << row
-    # cardinality; a near-unique grouping (groups ~ rows) makes the
-    # checkpoint itself data-sized, and such a "view" should be a
-    # mirror instead
+    # consumers follow (bucket collect, join, merge) — an uncached delta
+    # would re-run the feed groupBy per consumer. A near-unique grouping
+    # makes this data-sized; such a "view" should be a mirror instead
     delta = delta.filter(~noop).localCheckpoint(eager=True)
 
     # current totals, bucket-pruned to the delta's touched groups:
     # sync cost scales with the window's delta, not the view size
-    vsnap = view_engine.table.current()
     bexpr = view_engine.table.bucket_expr(
         key_col=list(spec.group_cols), num_buckets=vsnap.num_buckets
     )
@@ -401,7 +442,7 @@ def apply_feed_to_view(
                     F.coalesce(F.col(f"_cur_{spec.sum_name(c)}"), F.lit(0))
                     + F.col(spec.sum_name(c))
                 )
-                .cast(_view_sum_type(view_engine, spec, c, vschema))
+                .cast(_view_sum_type(vschema, spec, c))
                 .alias(spec.sum_name(c))
                 for c in spec.sum_cols
             ],
@@ -420,31 +461,23 @@ def apply_feed_to_view(
             ],
         )
 
+    # group-scoped rescan: one row per invalidated group (none without
+    # min/max columns: the filter folds to false and runs no job),
+    # collected once for the log and fed back as per-column isin filters
+    # that reach the parquet scan, plus a semi-join with the exact keys
+    # (the filters admit their cross product)
+    key_rows = merged.filter(inval).select(*spec.group_cols)
+    keys = key_rows.collect()
+    n_rescan = len(keys)
+    _log().info(
+        "sync_view window (%d, %d]: %d group(s) rescanned for min/max "
+        "invalidation", from_v, to_v, n_rescan,
+    )
     # the fold-event frame is group-cardinality-sized (touched groups
     # only), but the engine consumes it in TWO jobs (stats agg + write),
     # each of which would re-execute the delta-join/rescan dataflow —
     # materialize it once (lazy: the stats agg computes, the write reads
     # cache). Same group-cardinality bound as the delta checkpoint above.
-    if not spec.minmax_cols():
-        return view_engine.apply_batch(
-            fold_events(merged).localCheckpoint(eager=False), from_v, to_v
-        )
-
-    # group-scoped rescan: tiny (one row per invalidated group), and
-    # consumed three times (count for the log, broadcast join, plan)
-    rescan_keys = (
-        merged.filter(inval)
-        .select(*spec.group_cols)
-        .localCheckpoint(eager=True)
-    )
-    n_rescan = rescan_keys.count()
-    _log().info(
-        "sync_view window (%d, %d]: %d group(s) rescanned for min/max "
-        "invalidation",
-        from_v,
-        to_v,
-        n_rescan,
-    )
     if n_rescan == 0:
         return view_engine.apply_batch(
             fold_events(merged).localCheckpoint(eager=False), from_v, to_v
@@ -455,37 +488,17 @@ def apply_feed_to_view(
     # writer may have advanced the source past this sync's window);
     # count/sum would fold exactly anyway, but one groupBy for
     # everything keeps the rescan single-pass
-    src = source.read(spark, version=to_v)
-    if AUDIT_DELETE in src.columns:
-        src = src.filter(F.col(AUDIT_DELETE).isNull())
-    recomputed = (
-        src.join(
-            F.broadcast(rescan_keys), on=list(spec.group_cols), how="inner"
-        )
-        .groupBy(*spec.group_cols)
-        .agg(
-            F.count(F.lit(1)).alias(spec.count_col),
-            *[
-                F.coalesce(F.sum(F.col(c)), F.lit(0))
-                .cast(_view_sum_type(view_engine, spec, c, vschema))
-                .alias(spec.sum_name(c))
-                for c in spec.sum_cols
-            ],
-            *[F.min(F.col(c)).alias(spec.min_name(c)) for c in spec.min_cols],
-            *[F.max(F.col(c)).alias(spec.max_name(c)) for c in spec.max_cols],
-        )
+    src = _source_live(spark, source, version=to_v)
+    for g in spec.group_cols:
+        src = src.filter(F.col(g).isin(list({k[g] for k in keys})))
+    src = src.join(
+        F.broadcast(spark.createDataFrame(keys, key_rows.schema)),
+        on=list(spec.group_cols), how="left_semi",
     )
-    rescan_events = recomputed.select(
-        F.lit(to_v).cast("long").alias("lsn"),
-        F.lit("U").alias("op"),
-        *spec.group_cols,
-        F.col(spec.count_col),
-        *[F.col(spec.sum_name(c)) for c in spec.sum_cols],
-        *[F.col(spec.min_name(c)) for c in spec.min_cols],
-        *[F.col(spec.max_name(c)) for c in spec.max_cols],
+    rescan_events = _aggregate(src, spec, vschema).select(
+        F.lit(to_v).cast("long").alias("lsn"), F.lit("U").alias("op"), "*"
     )
-    # group-cardinality-sized; materialized once so the engine's stats agg
-    # and write jobs don't each re-run the rescan join + delta fold
+    # materialized once, as above
     events = (
         fold_events(merged.filter(~inval))
         .unionByName(rescan_events)
@@ -505,40 +518,61 @@ def _sync_view_impl(
 ) -> BatchStats:
     """Advance the view to the source's current version. Idempotent.
 
-    ``on_gap``: when the last-synced source snapshot has been expired
-    (the delta base is gone), 'error' raises and 'full' rebuilds — a
-    one-time full groupBy of the source plus anti-join deletes for
-    groups that vanished, applied through the same exactly-once merge.
+    Chooses recompute or incremental per window from snapshot metadata
+    (module docstring, "Scale shape per refresh"). ``on_gap``: when the
+    last-synced source snapshot has been expired (the delta base is
+    gone), 'error' raises and 'full' rebuilds through the recompute fold.
     """
-    if list(view_engine.keys) != list(spec.group_cols):
-        raise ValueError(
-            f"spec.group_cols {spec.group_cols} != view table merge key "
-            f"{list(view_engine.keys)} — the view is keyed by its group "
-            "columns; syncing with a different spec would corrupt totals"
-        )
+    _check_view_key(view_engine, spec)
     from_v = max(view_engine.table.last_lsn(), 0)
     to_v = source.current().version
     if to_v <= from_v:
         return BatchStats(lo=from_v, hi=to_v, skipped=True)
 
+    # every choice below is pinned to to_v: reading current() instead
+    # would count a commit that lands during the sync while the watermark
+    # stays at to_v, and the next sync would fold it twice
+    snap_to = source.snapshot(to_v)
+    src_bytes = sum(f.bytes for f in snap_to.files)
     reload_v = window_has_reload(source, from_v, to_v)
     if from_v in source.snapshots() and reload_v is None:
+        snap_from = source.snapshot(from_v)
+        diff = (
+            ([], [])
+            if rewrite_only_window(source, snap_from, snap_to)
+            else diff_read_sets(snap_from, snap_to)
+        )
+        diff_bytes = sum(f.bytes for side in diff for f in side)
+        group_bound = min(
+            sum(f.rows for f in snap_to.files),
+            sum(f.rows for f in view_engine.table.current().files)
+            + sum(f.rows for f in snapshot_diff_files(snap_from, snap_to)[1]),
+        )
+        recompute = (
+            diff_bytes > 0
+            and diff_bytes >= src_bytes
+            and group_bound <= view_engine.broadcast_threshold_rows
+        )
+        _log().info(
+            "sync_view window (%d, %d]: %s — diff read set %d B vs source "
+            "%d B, view group bound %d (driver fold limit %d)", from_v, to_v,
+            "recompute" if recompute else "incremental", diff_bytes,
+            src_bytes, group_bound, view_engine.broadcast_threshold_rows,
+        )
+        if recompute:
+            return _recompute_view(spark, source, view_engine, spec, from_v, to_v)
         # compare_cols scopes update detection to the view's own columns:
         # a source row whose group/sum/min/max columns are ALL unchanged
-        # contributes exactly zero to every maintained aggregate (its +1
-        # and -1 cancel in the same group, its sums cancel, and the
-        # `unchanged` rule already nulled its min/max candidates), so
-        # dropping it from the feed changes nothing — while letting
-        # Catalyst prune the wide payload columns from both diff-join
-        # sides. Measured: the sf0.1 incr sync's feed join drops from
-        # full-token-array width to (key, source, n_tok).
+        # contributes exactly zero to every aggregate, and Catalyst prunes
+        # the wide payload columns from both diff-join sides. A view over
+        # merge-key columns only (table_changes refuses a key-only list)
+        # compares the full payload instead.
+        keys = snap_to.bucket_column
+        cols = {*spec.group_cols, *spec.sum_cols, *spec.minmax_cols()}
+        scoped = cols - set(keys if isinstance(keys, list) else [keys])
         feed = table_changes(
             spark, source, from_v, to_v, include_preimage=True,
-            compare_cols=sorted(
-                set(spec.group_cols)
-                | set(spec.sum_cols)
-                | set(spec.minmax_cols())
-            ),
+            compare_cols=sorted(cols) if scoped else None,
         )
         return apply_feed_to_view(
             spark, source, view_engine, spec, feed, from_v, to_v
@@ -558,68 +592,60 @@ def _sync_view_impl(
             "on_gap='full' for a one-time full rebuild."
         )
     # no-silent-caps: the rebuild scans the whole source once — report
-    # how much, from file metadata alone, before paying it. The scan is
-    # PINNED to to_v: reading current() instead would count a commit that
-    # lands during the rebuild while the watermark stays at to_v, and the
-    # next incremental sync would re-apply that commit's deltas onto
-    # totals that already include it — off-by-one forever (deltas fold,
-    # they never self-correct).
-    src_snap = source.snapshot(to_v)
+    # how much, from file metadata alone, before paying it
     _log().warning(
         "sync_view on_gap='full': delta base v%d expired — full rebuild "
         "will scan the source (%d rows, %d bytes, %d files)",
-        from_v,
-        sum(f.rows for f in src_snap.files),
-        sum(f.bytes for f in src_snap.files),
-        len(src_snap.files),
+        from_v, sum(f.rows for f in snap_to.files), src_bytes, len(snap_to.files),
     )
-    fresh = (
-        _source_live(spark, source, version=to_v)
-        .groupBy(*spec.group_cols)
-        .agg(
-            F.count(F.lit(1)).alias(spec.count_col),
-            *[
-                F.coalesce(F.sum(F.col(c)), F.lit(0))
-                .cast(_view_sum_type(view_engine, spec, c))
-                .alias(spec.sum_name(c))
-                for c in spec.sum_cols
-            ],
-            *[F.min(F.col(c)).alias(spec.min_name(c)) for c in spec.min_cols],
-            *[F.max(F.col(c)).alias(spec.max_name(c)) for c in spec.max_cols],
-        )
+    return _recompute_view(spark, source, view_engine, spec, from_v, to_v)
+
+
+def _recompute_view(
+    spark: SparkSession,
+    source: LakeTable,
+    view_engine: CDCEngine,
+    spec: AggSpec,
+    from_v: int,
+    to_v: int,
+) -> BatchStats:
+    """Fold the window by recomputing: one groupBy of the source's live
+    rows at ``to_v`` and one read of the view, both collected, diffed on
+    the driver. Only new or changed groups (``U``) and vanished groups
+    (``D``) reach the engine, as a driver-local frame through the same
+    exactly-once ``apply_batch`` — an unchanged view is a watermark-only
+    commit. ``rescanned_groups`` reports the groups recomputed."""
+    import pyarrow as pa
+
+    def rows(tbl: pa.Table) -> list[tuple]:
+        return list(zip(*(c.to_pylist() for c in tbl.columns)))
+
+    fresh = _aggregate(
+        _source_live(spark, source, version=to_v),
+        spec, view_engine.table.current().schema,
+    ).toArrow()
+    cur = view_engine.table.read(spark)
+    if AUDIT_DELETE in cur.columns:
+        cur = cur.filter(F.col(AUDIT_DELETE).isNull())
+    ng = len(spec.group_cols)
+    stale = {r[:ng]: r for r in rows(cur.select(*spec.view_cols()).toArrow())}
+    groups = rows(fresh)
+    # pop: what is left in ``stale`` afterwards has vanished from the source
+    events = [(to_v, "U", *r) for r in groups if stale.pop(r[:ng], None) != r]
+    events += [(to_v, "D", *k, *[None] * (fresh.num_columns - ng)) for k in stale]
+    # an Arrow table, not a list of rows: a row-list frame re-runs Python
+    # deserialization in every one of the engine's ~10 jobs over it
+    schema = pa.schema(
+        [("lsn", pa.int64()), ("op", pa.string())]
+        + [(f.name, f.type) for f in fresh.schema]
     )
-    upserts = fresh.select(
-        F.lit(to_v).cast("long").alias("lsn"), F.lit("U").alias("op"), "*"
+    events_tbl = pa.Table.from_pylist(
+        [dict(zip(schema.names, e)) for e in events], schema=schema
     )
-    vtypes = {
-        f.name: f.dataType for f in view_engine.table.current().schema.fields
-    }
-    gone = (
-        view_engine.table.read(spark)
-        .select(*spec.group_cols)
-        .join(fresh.select(*spec.group_cols), on=list(spec.group_cols), how="left_anti")
-        .select(
-            F.lit(to_v).cast("long").alias("lsn"),
-            F.lit("D").alias("op"),
-            *spec.group_cols,
-            F.lit(None).cast("long").alias(spec.count_col),
-            *[
-                F.lit(None)
-                .cast(vtypes[spec.sum_name(c)])
-                .alias(spec.sum_name(c))
-                for c in spec.sum_cols
-            ],
-            *[
-                F.lit(None).cast(vtypes[spec.min_name(c)]).alias(spec.min_name(c))
-                for c in spec.min_cols
-            ],
-            *[
-                F.lit(None).cast(vtypes[spec.max_name(c)]).alias(spec.max_name(c))
-                for c in spec.max_cols
-            ],
-        )
+    return view_engine.apply_batch(
+        spark.createDataFrame(events_tbl), from_v, to_v,
+        stats_extra={"rescanned_groups": len(groups)},
     )
-    return view_engine.apply_batch(upserts.unionByName(gone), from_v, to_v)
 
 
 def follow_view(
@@ -650,15 +676,9 @@ def follow_view(
     )
 
 
-def _view_sum_type(
-    view_engine: CDCEngine, spec: AggSpec, c: str, schema=None
-) -> T.DataType:
-    # callers building per-sum-column expression lists pass the schema
-    # once — each bare call re-opens and json-parses the full view
-    # snapshot metadata (O(files)), which adds up to ~4x|sum_cols| full
-    # parses per sync when left implicit
-    if schema is None:
-        schema = view_engine.table.current().schema
+def _view_sum_type(schema: T.StructType, spec: AggSpec, c: str) -> T.DataType:
+    # callers pass the view schema parsed once per sync — each
+    # current() re-opens and json-parses the full snapshot metadata
     dt = next(
         (f.dataType for f in schema.fields if f.name == spec.sum_name(c)),
         None,
@@ -680,30 +700,9 @@ def verify_view(
     reference's custom-aggregate validation, import_config.py:2257-2284)."""
     from dbimport_spark.plans.validate import reconcile
 
-    cols = (
-        list(spec.group_cols)
-        + [spec.count_col]
-        + [spec.sum_name(c) for c in spec.sum_cols]
-        + [spec.min_name(c) for c in spec.min_cols]
-        + [spec.max_name(c) for c in spec.max_cols]
-    )
+    cols = spec.view_cols()
     vdf = view.read(spark)
     if AUDIT_DELETE in vdf.columns:
         vdf = vdf.filter(F.col(AUDIT_DELETE).isNull())
-    vtypes = {f.name: f.dataType for f in view.current().schema.fields}
-    expected = (
-        _source_live(spark, source)
-        .groupBy(*spec.group_cols)
-        .agg(
-            F.count(F.lit(1)).alias(spec.count_col),
-            *[
-                F.coalesce(F.sum(F.col(c)), F.lit(0))
-                .cast(vtypes[spec.sum_name(c)])
-                .alias(spec.sum_name(c))
-                for c in spec.sum_cols
-            ],
-            *[F.min(F.col(c)).alias(spec.min_name(c)) for c in spec.min_cols],
-            *[F.max(F.col(c)).alias(spec.max_name(c)) for c in spec.max_cols],
-        )
-    )
-    return reconcile(vdf.select(*cols), expected.select(*cols), cols)
+    expected = _aggregate(_source_live(spark, source), spec, view.current().schema)
+    return reconcile(vdf.select(*cols), expected, cols)

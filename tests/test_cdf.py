@@ -482,3 +482,26 @@ def test_compare_cols_scopes_update_detection(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="compare_cols"):
         table_changes(spark, table, v_a, v_b, compare_cols=["nope"])
+
+
+def test_compare_cols_refuses_empty_and_key_only(spark, tmp_path):
+    """An empty or merge-key-only compare_cols leaves nothing to compare,
+    so every update would vanish from the feed: both refuse loudly, like
+    an unknown name does, instead of emitting a silently update-free
+    feed."""
+    import pytest
+
+    table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=2)
+    eng = CDCEngine(spark, table)
+    ts = dt.datetime(2030, 1, 1)
+    eng.apply_batch(_log(spark, [(1, "I", "k1", [1], 1, "web", ts)]), 0, 1)
+    v_a = table.current().version
+    eng.apply_batch(_log(spark, [(2, "U", "k1", [1, 2], 2, "web", ts)]), 1, 2)
+    v_b = table.current().version
+    for cols in ([], ["doc_id"]):
+        with pytest.raises(ValueError, match="no non-key payload column"):
+            table_changes(spark, table, v_a, v_b, compare_cols=cols)
+    # the same window with the full comparison does carry the update
+    assert [
+        r["_change_type"] for r in table_changes(spark, table, v_a, v_b).collect()
+    ] == ["update"]

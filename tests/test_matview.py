@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.matview import (
     AggSpec,
+    apply_feed_to_view,
     create_view,
     sync_view,
     verify_view,
@@ -262,11 +263,15 @@ MM_SPEC = AggSpec(
 
 
 def _mm_pair(spark, tmp_path, spec=MM_SPEC):
+    """Source, a view synced by ``sync_view``, and a twin view driven
+    through the incremental core (``apply_feed_to_view``) over the same
+    windows — the rescan counts below are properties of that core, which
+    ``sync_view`` may bypass by recomputing a small view."""
     src_t = CDCEngine.create_table(str(tmp_path / "src"), num_buckets=8)
     src = CDCEngine(spark, src_t, checkpoint_dir=str(tmp_path / "ckpt"))
     view_t = create_view(str(tmp_path / "view"), src_t, spec, num_buckets=4)
-    view = CDCEngine(spark, view_t)
-    return src, view
+    inc_t = create_view(str(tmp_path / "inc"), src_t, spec, num_buckets=4)
+    return src, CDCEngine(spark, view_t), CDCEngine(spark, inc_t)
 
 
 def _mm_totals(spark, view_t):
@@ -288,36 +293,53 @@ def _rescans(recs):
     return n
 
 
-def _mm_sync(spark, src, view, spec=MM_SPEC):
+def _feed_sync(spark, source_t, view, spec):
+    """One window through ``apply_feed_to_view`` driven by
+    ``table_changes(include_preimage=True)`` — the incremental core the
+    stream follower uses; returns its stats and groups rescanned."""
     import logging
 
+    from dbimport_spark.lake.cdf import table_changes
     from tests.test_mirror import _caplog_records
 
+    from_v = max(view.table.last_lsn(), 0)
+    to_v = source_t.current().version
+    feed = table_changes(spark, source_t, from_v, to_v, include_preimage=True)
     with _caplog_records(
         "dbimport_spark.plans.matview", level=logging.INFO
     ) as recs:
-        bs = sync_view(spark, src.table, view, spec)
+        bs = apply_feed_to_view(spark, source_t, view, spec, feed, from_v, to_v)
     return bs, _rescans(recs)
+
+
+def _mm_sync(spark, src, view, inc, spec=MM_SPEC):
+    """``sync_view`` on ``view`` and the incremental core on ``inc``; the
+    two must hold equal totals. Returns sync_view's stats and the groups
+    the incremental core rescanned."""
+    bs = sync_view(spark, src.table, view, spec)
+    _, rescanned = _feed_sync(spark, src.table, inc, spec)
+    assert _mm_totals(spark, view.table) == _mm_totals(spark, inc.table)
+    return bs, rescanned
 
 
 def test_minmax_bootstrap_and_growth_without_rescan(spark, tmp_path):
     """Inserts only ever GROW an extremum — the candidate rule handles
     them with zero rescans, including bootstrap (the whole table arrives
     as inserts)."""
-    src, view = _mm_pair(spark, tmp_path)
+    src, view, inc = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 20, 20, "a", TS),
                      (3, "I", "k3", [3] * 5, 5, "b", TS)]), 0, 3,
     )
-    bs, rescanned = _mm_sync(spark, src, view)
+    bs, rescanned = _mm_sync(spark, src, view, inc)
     assert not bs.skipped and rescanned == 0
     assert _mm_totals(spark, view.table) == {
         "a": (2, 30, 10, 20), "b": (1, 5, 5, 5),
     }
     # a new outlier value: candidate folds in, still no rescan
     src.apply_batch(_log(spark, [(4, "I", "k4", [4] * 99, 99, "a", TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view)
+    bs, rescanned = _mm_sync(spark, src, view, inc)
     assert rescanned == 0
     assert _mm_totals(spark, view.table)["a"] == (3, 129, 10, 99)
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
@@ -326,15 +348,15 @@ def test_minmax_bootstrap_and_growth_without_rescan(spark, tmp_path):
 def test_minmax_extremum_removal_rescans_only_that_group(spark, tmp_path):
     """Deleting the max-carrier of group 'a' invalidates only 'a': one
     group rescanned, 'b' untouched, and the new max is the runner-up."""
-    src, view = _mm_pair(spark, tmp_path)
+    src, view, inc = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 20, 20, "a", TS),
                      (3, "I", "k3", [3] * 7, 7, "b", TS)]), 0, 3,
     )
-    _mm_sync(spark, src, view)
+    _mm_sync(spark, src, view, inc)
     src.apply_batch(_log(spark, [(4, "D", "k2", None, None, None, TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view)
+    bs, rescanned = _mm_sync(spark, src, view, inc)
     assert rescanned == 1
     assert _mm_totals(spark, view.table) == {
         "a": (1, 10, 10, 10), "b": (1, 7, 7, 7),
@@ -345,15 +367,15 @@ def test_minmax_extremum_removal_rescans_only_that_group(spark, tmp_path):
 def test_minmax_nonextremal_delete_no_rescan(spark, tmp_path):
     """Removing a strictly-interior value can't carry an extremum: no
     group is rescanned and both extremes survive."""
-    src, view = _mm_pair(spark, tmp_path)
+    src, view, inc = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 15, 15, "a", TS),
                      (3, "I", "k3", [3] * 20, 20, "a", TS)]), 0, 3,
     )
-    _mm_sync(spark, src, view)
+    _mm_sync(spark, src, view, inc)
     src.apply_batch(_log(spark, [(4, "D", "k2", None, None, None, TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view)
+    bs, rescanned = _mm_sync(spark, src, view, inc)
     assert rescanned == 0
     assert _mm_totals(spark, view.table)["a"] == (2, 30, 10, 20)
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
@@ -363,15 +385,15 @@ def test_minmax_tied_extremum_delete_rescans_and_survives(spark, tmp_path):
     """Two rows tie for the max; deleting one MUST rescan (the stored
     extremum was possibly removed) and the max must survive via the
     remaining carrier."""
-    src, view = _mm_pair(spark, tmp_path)
+    src, view, inc = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 20, 20, "a", TS),
                      (2, "I", "k2", [2] * 20, 20, "a", TS),
                      (3, "I", "k3", [3] * 5, 5, "a", TS)]), 0, 3,
     )
-    _mm_sync(spark, src, view)
+    _mm_sync(spark, src, view, inc)
     src.apply_batch(_log(spark, [(4, "D", "k1", None, None, None, TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view)
+    bs, rescanned = _mm_sync(spark, src, view, inc)
     assert rescanned == 1
     assert _mm_totals(spark, view.table)["a"] == (2, 25, 5, 20)
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
@@ -380,15 +402,15 @@ def test_minmax_tied_extremum_delete_rescans_and_survives(spark, tmp_path):
 def test_minmax_update_moves_extremum_across_groups(spark, tmp_path):
     """An update migrating the max-carrier from group 'a' to 'b' removes
     a's extremum (rescan) and candidates b's new one (no rescan)."""
-    src, view = _mm_pair(spark, tmp_path)
+    src, view, inc = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 30, 30, "a", TS),
                      (3, "I", "k3", [3] * 7, 7, "b", TS)]), 0, 3,
     )
-    _mm_sync(spark, src, view)
+    _mm_sync(spark, src, view, inc)
     src.apply_batch(_log(spark, [(4, "U", "k2", [2] * 30, 30, "b", TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view)
+    bs, rescanned = _mm_sync(spark, src, view, inc)
     assert rescanned == 1  # only 'a' (b's new value is a pure candidate)
     assert _mm_totals(spark, view.table) == {
         "a": (1, 10, 10, 10), "b": (2, 37, 7, 30),
@@ -400,14 +422,14 @@ def test_minmax_value_unchanged_update_is_skipped(spark, tmp_path):
     """An update that keeps both the group and the aggregated value
     contributes nothing: no candidate, no removal, no rescan — even
     though the row itself changed (token values differ)."""
-    src, view = _mm_pair(spark, tmp_path)
+    src, view, inc = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 5, 5, "a", TS)]), 0, 2,
     )
-    _mm_sync(spark, src, view)
+    _mm_sync(spark, src, view, inc)
     src.apply_batch(_log(spark, [(3, "U", "k1", [9] * 10, 10, "a", TS)]), 2, 3)
-    bs, rescanned = _mm_sync(spark, src, view)
+    bs, rescanned = _mm_sync(spark, src, view, inc)
     assert rescanned == 0 and bs.events == 0  # watermark-only sync
     assert _mm_totals(spark, view.table)["a"] == (2, 15, 5, 10)
 
@@ -415,23 +437,23 @@ def test_minmax_value_unchanged_update_is_skipped(spark, tmp_path):
 def test_minmax_group_collapse_needs_no_rescan(spark, tmp_path):
     """Deleting a group's LAST row deletes the view row outright — no
     rescan even though the extremum was removed."""
-    src, view = _mm_pair(spark, tmp_path)
+    src, view, inc = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 5, 5, "b", TS)]), 0, 2,
     )
-    _mm_sync(spark, src, view)
+    _mm_sync(spark, src, view, inc)
     src.apply_batch(_log(spark, [(3, "D", "k1", None, None, None, TS)]), 2, 3)
-    bs, rescanned = _mm_sync(spark, src, view)
+    bs, rescanned = _mm_sync(spark, src, view, inc)
     assert rescanned == 0
     assert _mm_totals(spark, view.table) == {"b": (1, 5, 5, 5)}
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
 
 
 def test_minmax_full_rebuild_gap(spark, tmp_path):
-    src, view = _mm_pair(spark, tmp_path)
+    src, view, inc = _mm_pair(spark, tmp_path)
     src.apply_batch(_log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS)]), 0, 1)
-    _mm_sync(spark, src, view)
+    _mm_sync(spark, src, view, inc)
     src.apply_batch(
         _log(spark, [(2, "I", "k2", [2] * 7, 7, "a", TS),
                      (3, "I", "k3", [3] * 2, 2, "b", TS),
@@ -494,7 +516,9 @@ def test_view_sync_across_reload_boundary(spark, tmp_path):
 def test_rescanned_groups_reaches_stats_sink(spark, tmp_path):
     """code-review r5: the min/max invalidation rescan count must be in
     the EMITTED stats record, not set on the BatchStats after the sink
-    already serialized it."""
+    already serialized it — for the incremental core and for
+    ``sync_view`` (which reports the groups it recomputed from the
+    source when it recomputes; here that is the one group 'a' too)."""
     from dbimport_spark.plans.stats_sink import CallableStatsSink
 
     spec = AggSpec(group_cols=["source"], min_cols=["n_tok"])
@@ -504,14 +528,186 @@ def test_rescanned_groups_reaches_stats_sink(spark, tmp_path):
         _log(spark, [(1, "I", "k1", [1] * 2, 2, "a", TS),
                      (2, "I", "k2", [2] * 9, 9, "a", TS)]), 0, 2,
     )
-    view_t = create_view(str(tmp_path / "view"), src_t, spec, num_buckets=2)
-    got = []
-    view = CDCEngine(spark, view_t, stats_sink=CallableStatsSink(got.append))
+    got = {"view": [], "inc": []}
+    view, inc = (
+        CDCEngine(
+            spark,
+            create_view(str(tmp_path / name), src_t, spec, num_buckets=2),
+            stats_sink=CallableStatsSink(got[name].append),
+        )
+        for name in ("view", "inc")
+    )
     sync_view(spark, src_t, view, spec)
+    _feed_sync(spark, src_t, inc, spec)
     # delete the min carrier: group 'a' must rescan, and the emitted
     # record must say so
     src.apply_batch(_log(spark, [(3, "D", "k1", None, None, None, TS)]), 2, 3)
-    got.clear()
+    for recs in got.values():
+        recs.clear()
     sync_view(spark, src_t, view, spec)
-    recs = [r for r in got if r["op"] == "apply_batch" and not r["skipped"]]
-    assert recs and recs[-1]["rescanned_groups"] == 1
+    _feed_sync(spark, src_t, inc, spec)
+    for recs in got.values():
+        recs = [r for r in recs if r["op"] == "apply_batch" and not r["skipped"]]
+        assert recs and recs[-1]["rescanned_groups"] == 1
+
+
+# ---- recompute vs incremental: per-window choice from metadata -------------
+
+
+def _recompute_sync(spark, source_t, view, spec):
+    """One window through the recompute fold, whatever the metadata rule
+    would choose."""
+    from dbimport_spark.plans.matview import _recompute_view
+
+    from_v = max(view.table.last_lsn(), 0)
+    return _recompute_view(
+        spark, source_t, view, spec, from_v, source_t.current().version
+    )
+
+
+def _windows(seed):
+    """A seeded window sequence over keys k0..k11 and groups a..d that
+    always includes, besides random I/U/D traffic: a delete of a group's
+    max carrier, a cross-group move of a min carrier, a group vanishing,
+    null-valued rows (null n_tok: sum 0, no extremum) and a no-op update
+    (tokens change, group and n_tok do not)."""
+    import random
+
+    rnd = random.Random(seed)
+    row = lambda lsn, op, k, n, g: (  # noqa: E731
+        lsn, op, k, None if n is None else [lsn % 7] * n, n, g, TS
+    )
+    wins = [
+        [row(1, "I", "k0", 9, "a"), row(2, "I", "k1", 3, "a"),
+         row(3, "I", "k2", None, "a"), row(4, "I", "k3", 2, "b"),
+         row(5, "I", "k4", 8, "b"), row(6, "I", "k5", 5, "c")],
+        # max carrier of a deleted; min carrier of b moves to c
+        [row(7, "D", "k0", None, None), row(8, "U", "k3", 2, "c")],
+        # group c vanishes; no-op update on k1 (same length, same group)
+        [row(9, "D", "k5", None, None), row(10, "D", "k3", None, None),
+         row(11, "U", "k1", 3, "a")],
+    ]
+    lsn = 11
+    for _ in range(2):
+        win = []
+        for _ in range(8):
+            lsn += 1
+            op = rnd.choice("IUD")
+            k = f"k{rnd.randrange(12)}"
+            if op == "D":
+                win.append(row(lsn, "D", k, None, None))
+            else:
+                n = rnd.choice([None, 1, 4, 4, 9, 12])
+                win.append(row(lsn, op, k, n, rnd.choice("abcd")))
+        wins.append(win)
+    return wins
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_recompute_equals_incremental_per_window(spark, tmp_path, mode):
+    """After every window of a seeded sequence, the recompute fold and the
+    incremental core hold equal views, both equal to a direct groupBy of
+    the source — over copy-on-write and merge-on-read sources."""
+    src_t = CDCEngine.create_table(str(tmp_path / "src"), num_buckets=4)
+    src = CDCEngine(spark, src_t, write_mode=mode)
+    rec, inc = (
+        CDCEngine(spark, create_view(str(tmp_path / n), src_t, MM_SPEC, 4))
+        for n in ("rec", "inc")
+    )
+    lo = 0
+    for win in _windows(seed=5):
+        hi = win[-1][0]
+        src.apply_batch(_log(spark, win), lo, hi)
+        lo = hi
+        _recompute_sync(spark, src_t, rec, MM_SPEC)
+        _feed_sync(spark, src_t, inc, MM_SPEC)
+        assert _mm_totals(spark, rec.table) == _mm_totals(spark, inc.table)
+        assert rec.table.last_lsn() == inc.table.last_lsn() == src_t.current().version
+        assert verify_view(spark, src_t, rec.table, MM_SPEC)["converged"]
+    assert verify_view(spark, src_t, inc.table, MM_SPEC)["converged"]
+    # a window that changes no view column: the recompute fold writes no
+    # group and commits the watermark alone
+    live = src_t.read(spark).filter("n_tok is not null").first()
+    src.apply_batch(_log(spark, [(lo + 1, "U", live["doc_id"], [6] * live["n_tok"],
+                                  live["n_tok"], live["source"], TS)]), lo, lo + 1)
+    v_before = rec.table.current().version
+    bs = _recompute_sync(spark, src_t, rec, MM_SPEC)
+    assert bs.events == 0 and rec.table.current().version == v_before + 1
+    assert rec.table.last_lsn() == src_t.current().version
+    assert _recompute_sync(spark, src_t, rec, MM_SPEC).skipped  # exactly-once
+
+
+def _decision(spark, source_t, view, spec):
+    """``sync_view`` plus its logged recompute/incremental decision."""
+    import logging
+
+    from tests.test_mirror import _caplog_records
+
+    with _caplog_records(
+        "dbimport_spark.plans.matview", level=logging.INFO
+    ) as recs:
+        bs = sync_view(spark, source_t, view, spec)
+    msgs = [r.getMessage() for r in recs if "diff read set" in r.getMessage()]
+    assert len(msgs) == 1, msgs  # logged once per sync
+    return bs, msgs[0]
+
+
+def test_sync_chooses_strategy_from_metadata(spark, tmp_path):
+    """An 8-bucket copy-on-write source whose window rewrites one bucket
+    reads far less than the table: incremental. A merge-on-read window
+    touching every uncompacted bucket widens the diff to whole buckets on
+    both sides, more than one scan: recompute, reporting every group it
+    recomputed as rescanned."""
+    rows = [(i, "I", f"k{i}", [1] * i, i, f"g{i % 3}", TS) for i in range(1, 49)]
+
+    cow_t = CDCEngine.create_table(str(tmp_path / "cow"), num_buckets=8)
+    cow = CDCEngine(spark, cow_t)
+    cow.apply_batch(_log(spark, rows), 0, 48)
+    cview = CDCEngine(spark, create_view(str(tmp_path / "cv"), cow_t, MM_SPEC, 4))
+    sync_view(spark, cow_t, cview, MM_SPEC)
+    cow.apply_batch(_log(spark, [(49, "U", "k1", [1] * 60, 60, "g1", TS)]), 48, 49)
+    assert {f.bucket for f in cow_t.current().files} == set(range(8))
+    bs, msg = _decision(spark, cow_t, cview, MM_SPEC)
+    assert ": incremental —" in msg and not bs.skipped
+    assert verify_view(spark, cow_t, cview.table, MM_SPEC)["converged"]
+
+    mor_t = CDCEngine.create_table(str(tmp_path / "mor"), num_buckets=4)
+    mor = CDCEngine(spark, mor_t, write_mode="mor")
+    mor.apply_batch(_log(spark, rows), 0, 48)
+    mview = CDCEngine(spark, create_view(str(tmp_path / "mv"), mor_t, MM_SPEC, 4))
+    sync_view(spark, mor_t, mview, MM_SPEC)
+    upd = [(48 + i, "U", f"k{i}", [1] * 2, 2, f"g{i % 3}", TS) for i in range(1, 49)]
+    mor.apply_batch(_log(spark, upd), 48, 96)
+    assert any(f.kind != "base" for f in mor_t.current().files)
+    bs, msg = _decision(spark, mor_t, mview, MM_SPEC)
+    assert ": recompute —" in msg and bs.rescanned_groups == 3
+    assert verify_view(spark, mor_t, mview.table, MM_SPEC)["converged"]
+
+
+def test_merge_key_only_view_syncs_incrementally(spark, tmp_path):
+    """A view grouped by the source's merge key alone leaves no non-key
+    column to scope the change feed by (``table_changes`` refuses a
+    key-only ``compare_cols``): the incremental sync compares the full
+    payload instead and still converges."""
+    spec = AggSpec(group_cols=["doc_id"])
+    src_t = CDCEngine.create_table(str(tmp_path / "src"), num_buckets=2)
+    src = CDCEngine(spark, src_t)
+    # a zero driver-fold limit keeps every window on the incremental path
+    view = CDCEngine(
+        spark, create_view(str(tmp_path / "v"), src_t, spec, num_buckets=2),
+        broadcast_threshold_rows=0,
+    )
+    src.apply_batch(
+        _log(spark, [(1, "I", "k1", [1] * 3, 3, "a", TS),
+                     (2, "I", "k2", [2] * 4, 4, "b", TS)]), 0, 2,
+    )
+    assert ": incremental —" in _decision(spark, src_t, view, spec)[1]
+    src.apply_batch(
+        _log(spark, [(3, "U", "k1", [5] * 3, 3, "c", TS),
+                     (4, "D", "k2", None, None, None, TS),
+                     (5, "I", "k3", [6], 1, "a", TS)]), 2, 5,
+    )
+    bs, msg = _decision(spark, src_t, view, spec)
+    assert ": incremental —" in msg and not bs.skipped
+    assert {r["doc_id"] for r in view.table.read(spark).collect()} == {"k1", "k3"}
+    assert verify_view(spark, src_t, view.table, spec)["converged"]
