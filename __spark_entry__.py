@@ -1112,7 +1112,9 @@ def q_matview_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches, syncing the view after EACH batch. count/sum are exactly
     delta-maintained; min/max use the candidate rule plus group-scoped
     rescan-on-invalidation — the derived log's updates and deletes
-    remove current extrema, forcing the rescan path. The oracle
+    remove current extrema, forcing the rescan path. A zero driver-fold
+    limit on the view keeps every sync on that incremental path (a small
+    view would otherwise be recomputed from the source). The oracle
     recomputes all four aggregates directly from the full LWW fold, so
     any drift in delta math or a missed invalidation is a value
     mismatch."""
@@ -1132,7 +1134,7 @@ def q_matview_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_cols=["val_cents"],
     )
     view_t = create_view(os.path.join(root, "view"), src, spec, num_buckets=4)
-    veng = CDCEngine(spark, view_t)
+    veng = CDCEngine(spark, view_t, broadcast_threshold_rows=0)
     for k in range(1, CDC_REPLAY_BATCHES + 1):
         eng.replay(changes, num_batches=CDC_REPLAY_BATCHES, stop_after=k)
         sync_view(spark, src, veng, spec)

@@ -202,6 +202,15 @@ def check_window(table: LakeTable, snap_a: Snapshot, snap_b: Snapshot) -> None:
         )
 
 
+def compare_scope(snap: Snapshot, cols) -> list[str] | None:
+    """The ``table_changes`` ``compare_cols`` for a consumer that reads only
+    ``cols``: those columns, or None (compare the full payload) when they
+    name no non-key column — the one list shape ``table_changes`` refuses,
+    because it would hide every update."""
+    cols = sorted(set(cols))
+    return cols if set(cols) - set(snap.merge_keys) else None
+
+
 def table_changes(
     spark: SparkSession,
     table: LakeTable,
@@ -244,11 +253,7 @@ def table_changes(
     )
     check_window(table, snap_a, snap_b)
 
-    keys = (
-        list(snap_b.bucket_column)
-        if isinstance(snap_b.bucket_column, list)
-        else [snap_b.bucket_column]
-    )
+    keys = snap_b.merge_keys
     payload_cols = [
         f.name for f in snap_b.schema.fields if f.name not in AUDIT_COLUMNS
     ]
@@ -261,13 +266,13 @@ def table_changes(
                 f"{payload_cols} — a silently ignored name would make "
                 "every update on it invisible"
             )
-        value_cols = [c for c in value_cols if c in compare_cols]
-        if not value_cols:
+        if compare_scope(snap_b, compare_cols) is None:
             raise ValueError(
                 f"compare_cols {sorted(compare_cols)} names no non-key "
                 f"payload column (merge key {keys}) — every update would "
                 "be invisible; pass None to compare the full payload"
             )
+        value_cols = [c for c in value_cols if c in compare_cols]
     soft = AUDIT_DELETE in snap_b.schema.fieldNames()
 
     if rewrite_only_window(table, snap_a, snap_b):

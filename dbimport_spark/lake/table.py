@@ -212,6 +212,12 @@ class Snapshot:
     # len(renames) is the current rename epoch stamped on new data files.
     renames: list[dict] = field(default_factory=list)
 
+    @property
+    def merge_keys(self) -> list[str]:
+        """The merge key as a column list (one column or a composite)."""
+        b = self.bucket_column
+        return list(b) if isinstance(b, list) else [b]
+
     def to_json(self) -> dict:
         return {
             "format_version": 1,
@@ -554,11 +560,7 @@ class LakeTable:
 
         from pyspark.sql.window import Window
 
-        keys = (
-            list(snap.bucket_column)
-            if isinstance(snap.bucket_column, list)
-            else [snap.bucket_column]
-        )
+        keys = snap.merge_keys
         # one read per (seq, kind) group, each stamped with its literal
         # seq — the number of groups is the number of un-compacted delta
         # commits, bounded small by the compaction policy

@@ -39,22 +39,20 @@ group values in the source before aggregating on them.
 
 Scale shape per refresh: each sync chooses recompute or incremental from
 snapshot metadata alone (*All that Incremental is not Efficient*, EDBT
-2018) and logs the inputs of the choice. It RECOMPUTES when the window's
-diff read set costs at least a rescan (Σbytes of ``cdf.diff_read_sets``
-≥ Σbytes of the source's files at the window's end) AND an upper bound
-on the view's groups after the window — min(source file rows, view rows
-+ rows of the window's new files) — is within the view engine's
-``broadcast_threshold_rows``, the bound on the driver-side fold: one
-column-pruned groupBy of the source and the view's rows are collected and
-diffed on the driver, and only new, changed and vanished groups reach the
-engine's merge. Bootstrap (the v0 feed is the whole table) lands there
-for any view within the bound, the ``on_gap='full'`` rebuild always.
-Otherwise — always for rewrite-only windows (zero diff bytes) and views
-over the bound — it folds INCREMENTALLY: one groupBy shuffle of the delta
-(feed-sized), one left join of the delta against current totals (delta
-side drives; AQE broadcasts it when small), and the engine's
-bucket-pruned merge of the touched groups; only min/max-invalidated
-groups read the base table.
+2018) and logs the inputs. It RECOMPUTES when the window's diff read set
+costs at least a rescan (Σbytes of ``cdf.diff_read_sets`` ≥ Σbytes of the
+source's files at the window's end) and the driver can hold the fold: the
+view's rows and a bound on its groups after the window, min(source rows,
+view rows + rows of the window's new files), are both within the view
+engine's ``broadcast_threshold_rows``. A column-pruned groupBy of the
+source and the view's rows are then collected and diffed on the driver,
+and only new, changed and vanished groups reach the engine's merge. (A
+copy-on-write window's new files are whole buckets: a window touching
+every bucket recomputes only a source within that limit.) Otherwise it
+folds INCREMENTALLY: a groupBy of the delta, a left join against the
+touched groups' current totals, the engine's bucket-pruned merge; only
+min/max-invalidated groups read the base table. The ``on_gap='full'``
+rebuild always recomputes, diffing in Spark when over the limit.
 """
 
 from __future__ import annotations
@@ -66,12 +64,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbimport_spark.lake.cdf import (
-    CHANGE_TYPE_COL,
-    diff_read_sets,
-    rewrite_only_window,
-    snapshot_diff_files,
-    table_changes,
-    window_has_reload,
+    CHANGE_TYPE_COL, compare_scope, diff_read_sets, rewrite_only_window,
+    snapshot_diff_files, table_changes, window_has_reload,
 )
 from dbimport_spark.lake.table import LakeTable
 from dbimport_spark.plans.engine import BatchStats, CDCEngine
@@ -386,20 +380,12 @@ def apply_feed_to_view(
     cur = view_engine.table.read(spark, buckets=touched)
     if AUDIT_DELETE in cur.columns:
         cur = cur.filter(F.col(AUDIT_DELETE).isNull())
+    # current totals as _cur_n, _cur_sum_<c>, _cur_min_<c>, _cur_max_<c>
     cur = cur.select(
-        *spec.group_cols,
-        F.col(spec.count_col).alias("_cur_n"),
+        *spec.group_cols, F.col(spec.count_col).alias("_cur_n"),
         *[
-            F.col(spec.sum_name(c)).alias(f"_cur_{spec.sum_name(c)}")
-            for c in spec.sum_cols
-        ],
-        *[
-            F.col(spec.min_name(c)).alias(f"_cur_min_{c}")
-            for c in spec.min_cols
-        ],
-        *[
-            F.col(spec.max_name(c)).alias(f"_cur_max_{c}")
-            for c in spec.max_cols
+            F.col(c).alias(f"_cur_{c}")
+            for c in spec.view_cols()[len(spec.group_cols) + 1:]
         ],
     )
     merged = delta.join(cur, on=list(spec.group_cols), how="left")
@@ -516,13 +502,10 @@ def _sync_view_impl(
     spec: AggSpec,
     on_gap: str = "error",
 ) -> BatchStats:
-    """Advance the view to the source's current version. Idempotent.
-
-    Chooses recompute or incremental per window from snapshot metadata
-    (module docstring, "Scale shape per refresh"). ``on_gap``: when the
-    last-synced source snapshot has been expired (the delta base is
-    gone), 'error' raises and 'full' rebuilds through the recompute fold.
-    """
+    """Advance the view to the source's current version, by recompute or
+    incrementally (module docstring, "Scale shape per refresh"). Idempotent.
+    ``on_gap``: when the delta base (the last-synced source snapshot) has
+    expired, 'error' raises and 'full' rebuilds by recompute."""
     _check_view_key(view_engine, spec)
     from_v = max(view_engine.table.last_lsn(), 0)
     to_v = source.current().version
@@ -534,6 +517,9 @@ def _sync_view_impl(
     # stays at to_v, and the next sync would fold it twice
     snap_to = source.snapshot(to_v)
     src_bytes = sum(f.bytes for f in snap_to.files)
+    src_rows = sum(f.rows for f in snap_to.files)
+    view_rows = sum(f.rows for f in view_engine.table.current().files)
+    limit = view_engine.broadcast_threshold_rows
     reload_v = window_has_reload(source, from_v, to_v)
     if from_v in source.snapshots() and reload_v is None:
         snap_from = source.snapshot(from_v)
@@ -543,36 +529,27 @@ def _sync_view_impl(
             else diff_read_sets(snap_from, snap_to)
         )
         diff_bytes = sum(f.bytes for side in diff for f in side)
-        group_bound = min(
-            sum(f.rows for f in snap_to.files),
-            sum(f.rows for f in view_engine.table.current().files)
-            + sum(f.rows for f in snapshot_diff_files(snap_from, snap_to)[1]),
-        )
-        recompute = (
-            diff_bytes > 0
-            and diff_bytes >= src_bytes
-            and group_bound <= view_engine.broadcast_threshold_rows
-        )
+        new_rows = sum(f.rows for f in snapshot_diff_files(snap_from, snap_to)[1])
+        group_bound = min(src_rows, view_rows + new_rows)
+        fits = max(group_bound, view_rows) <= limit  # the driver holds both
+        recompute = fits and 0 < diff_bytes and src_bytes <= diff_bytes
         _log().info(
             "sync_view window (%d, %d]: %s — diff read set %d B vs source "
-            "%d B, view group bound %d (driver fold limit %d)", from_v, to_v,
-            "recompute" if recompute else "incremental", diff_bytes,
-            src_bytes, group_bound, view_engine.broadcast_threshold_rows,
+            "%d B, view group bound %d, view rows %d (driver fold limit %d)",
+            from_v, to_v, "recompute" if recompute else "incremental",
+            diff_bytes, src_bytes, group_bound, view_rows, limit,
         )
         if recompute:
             return _recompute_view(spark, source, view_engine, spec, from_v, to_v)
         # compare_cols scopes update detection to the view's own columns:
         # a source row whose group/sum/min/max columns are ALL unchanged
         # contributes exactly zero to every aggregate, and Catalyst prunes
-        # the wide payload columns from both diff-join sides. A view over
-        # merge-key columns only (table_changes refuses a key-only list)
-        # compares the full payload instead.
-        keys = snap_to.bucket_column
-        cols = {*spec.group_cols, *spec.sum_cols, *spec.minmax_cols()}
-        scoped = cols - set(keys if isinstance(keys, list) else [keys])
+        # the wide payload columns from both diff-join sides
         feed = table_changes(
             spark, source, from_v, to_v, include_preimage=True,
-            compare_cols=sorted(cols) if scoped else None,
+            compare_cols=compare_scope(
+                snap_to, [*spec.group_cols, *spec.sum_cols, *spec.minmax_cols()]
+            ),
         )
         return apply_feed_to_view(
             spark, source, view_engine, spec, feed, from_v, to_v
@@ -591,14 +568,17 @@ def _sync_view_impl(
             f"{source.snapshots()}) — the delta base is gone. Re-run with "
             "on_gap='full' for a one-time full rebuild."
         )
+    on_driver = max(src_rows, view_rows) <= limit
     # no-silent-caps: the rebuild scans the whole source once — report
     # how much, from file metadata alone, before paying it
     _log().warning(
         "sync_view on_gap='full': delta base v%d expired — full rebuild "
-        "will scan the source (%d rows, %d bytes, %d files)",
-        from_v, sum(f.rows for f in snap_to.files), src_bytes, len(snap_to.files),
+        "will scan the source (%d rows, %d bytes, %d files) and diff it "
+        "against the view (%d rows) %s", from_v, src_rows, src_bytes,
+        len(snap_to.files), view_rows,
+        "on the driver" if on_driver else f"in Spark (over {limit} rows)",
     )
-    return _recompute_view(spark, source, view_engine, spec, from_v, to_v)
+    return _recompute_view(spark, source, view_engine, spec, from_v, to_v, on_driver)
 
 
 def _recompute_view(
@@ -608,43 +588,63 @@ def _recompute_view(
     spec: AggSpec,
     from_v: int,
     to_v: int,
+    on_driver: bool = True,
 ) -> BatchStats:
     """Fold the window by recomputing: one groupBy of the source's live
-    rows at ``to_v`` and one read of the view, both collected, diffed on
-    the driver. Only new or changed groups (``U``) and vanished groups
-    (``D``) reach the engine, as a driver-local frame through the same
-    exactly-once ``apply_batch`` — an unchanged view is a watermark-only
-    commit. ``rescanned_groups`` reports the groups recomputed."""
+    rows at ``to_v``, diffed against the view's rows — collected to the
+    driver (``on_driver``; callers bound both sides) or by a full outer
+    join in Spark. Only new or changed (``U``) and vanished (``D``) groups
+    reach the exactly-once ``apply_batch``; an unchanged view commits the
+    watermark alone. ``rescanned_groups`` = the groups recomputed."""
     import pyarrow as pa
-
-    def rows(tbl: pa.Table) -> list[tuple]:
-        return list(zip(*(c.to_pylist() for c in tbl.columns)))
 
     fresh = _aggregate(
         _source_live(spark, source, version=to_v),
         spec, view_engine.table.current().schema,
-    ).toArrow()
+    )
     cur = view_engine.table.read(spark)
     if AUDIT_DELETE in cur.columns:
         cur = cur.filter(F.col(AUDIT_DELETE).isNull())
+    cur = cur.select(*spec.view_cols())
     ng = len(spec.group_cols)
-    stale = {r[:ng]: r for r in rows(cur.select(*spec.view_cols()).toArrow())}
-    groups = rows(fresh)
-    # pop: what is left in ``stale`` afterwards has vanished from the source
-    events = [(to_v, "U", *r) for r in groups if stale.pop(r[:ng], None) != r]
-    events += [(to_v, "D", *k, *[None] * (fresh.num_columns - ng)) for k in stale]
-    # an Arrow table, not a list of rows: a row-list frame re-runs Python
-    # deserialization in every one of the engine's ~10 jobs over it
-    schema = pa.schema(
-        [("lsn", pa.int64()), ("op", pa.string())]
-        + [(f.name, f.type) for f in fresh.schema]
-    )
-    events_tbl = pa.Table.from_pylist(
-        [dict(zip(schema.names, e)) for e in events], schema=schema
-    )
+    if on_driver:
+        def rows(tbl: pa.Table) -> list[tuple]:
+            return list(zip(*(c.to_pylist() for c in tbl.columns)))
+
+        fresh = fresh.toArrow()
+        stale = {r[:ng]: r for r in rows(cur.toArrow())}
+        groups = rows(fresh)
+        n_groups = len(groups)
+        # pop: what is left in ``stale`` afterwards has vanished
+        events = [(to_v, "U", *r) for r in groups if stale.pop(r[:ng], None) != r]
+        events += [(to_v, "D", *k, *[None] * (fresh.num_columns - ng)) for k in stale]
+        # an Arrow table, not a row list (whose Python deserialization
+        # re-runs in each of the engine's ~10 jobs); D events carry nulls
+        cols = [("lsn", pa.int64()), ("op", pa.string())]
+        schema = pa.schema(cols + [(f.name, f.type) for f in fresh.schema])
+        events = spark.createDataFrame(pa.Table.from_pylist(
+            [dict(zip(schema.names, e)) for e in events], schema=schema
+        ))
+    else:
+        vals = spec.view_cols()[ng:]
+        fresh = fresh.localCheckpoint(eager=True)  # joined and counted
+        n_groups = fresh.count()
+        events = (
+            fresh.select(*spec.group_cols, F.struct(*vals).alias("_new"))
+            .join(
+                cur.select(*spec.group_cols, F.struct(*vals).alias("_old")),
+                on=list(spec.group_cols), how="full_outer",
+            )
+            .filter(~F.col("_new").eqNullSafe(F.col("_old")))
+            .select(
+                F.lit(to_v).cast("long").alias("lsn"),
+                F.when(F.col("_new").isNull(), "D").otherwise("U").alias("op"),
+                *spec.group_cols, *[F.col(f"_new.{c}").alias(c) for c in vals],
+            )
+            .localCheckpoint(eager=False)  # the engine reads it twice
+        )
     return view_engine.apply_batch(
-        spark.createDataFrame(events_tbl), from_v, to_v,
-        stats_extra={"rescanned_groups": len(groups)},
+        events, from_v, to_v, stats_extra={"rescanned_groups": n_groups}
     )
 
 

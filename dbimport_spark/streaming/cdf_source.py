@@ -122,11 +122,7 @@ def plan_window(
     snap_b = table.snapshot(to_version)
     check_window(table, snap_a, snap_b)
 
-    keys = (
-        list(snap_b.bucket_column)
-        if isinstance(snap_b.bucket_column, list)
-        else [snap_b.bucket_column]
-    )
+    keys = snap_b.merge_keys
     payload_cols = [
         f.name for f in snap_b.schema.fields if f.name not in AUDIT_COLUMNS
     ]

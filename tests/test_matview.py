@@ -29,12 +29,17 @@ def _log(spark, rows):
     return spark.createDataFrame(rows, CHANGE_SCHEMA)
 
 
-def _pair(spark, tmp_path):
+def _pair(spark, tmp_path, **view_kw):
     src_t = CDCEngine.create_table(str(tmp_path / "src"), num_buckets=8)
     src = CDCEngine(spark, src_t, checkpoint_dir=str(tmp_path / "ckpt"))
     view_t = create_view(str(tmp_path / "view"), src_t, SPEC, num_buckets=4)
-    view = CDCEngine(spark, view_t)
+    view = CDCEngine(spark, view_t, **view_kw)
     return src, view
+
+
+# a zero driver-fold limit keeps sync_view on the incremental core, which
+# it bypasses when it recomputes a small view; _inc_sync asserts the choice
+INCREMENTAL = {"broadcast_threshold_rows": 0}
 
 
 def _totals(spark, view_t):
@@ -56,7 +61,7 @@ def test_bootstrap_equals_direct_groupby(spark, tmp_path):
 
 
 def test_incremental_insert_update_delete(spark, tmp_path):
-    src, view = _pair(spark, tmp_path)
+    src, view = _pair(spark, tmp_path, **INCREMENTAL)
     # n_tok is engine-normalized to size(tokens) on apply, so the token
     # arrays carry the summed quantity
     src.apply_batch(
@@ -64,7 +69,7 @@ def test_incremental_insert_update_delete(spark, tmp_path):
                      (2, "I", "k2", [2] * 20, 20, "a", TS),
                      (3, "I", "k3", [3] * 5, 5, "b", TS)]), 0, 3,
     )
-    sync_view(spark, src.table, view, SPEC)
+    _inc_sync(spark, src, view, SPEC)
     assert _totals(spark, view.table) == {"a": (2, 30), "b": (1, 5)}
 
     # update within group (sum moves), update across groups (row migrates),
@@ -74,22 +79,22 @@ def test_incremental_insert_update_delete(spark, tmp_path):
                      (5, "U", "k3", [3] * 5, 5, "a", TS),    # b -> a migration
                      (6, "D", "k2", None, None, None, TS)]), 3, 6,
     )
-    bs = sync_view(spark, src.table, view, SPEC)
+    bs, _ = _inc_sync(spark, src, view, SPEC)
     assert not bs.skipped
     assert _totals(spark, view.table) == {"a": (2, 20)}
     assert verify_view(spark, src.table, view.table, SPEC)["converged"]
 
 
 def test_update_not_touching_aggregates_is_noop(spark, tmp_path):
-    src, view = _pair(spark, tmp_path)
+    src, view = _pair(spark, tmp_path, **INCREMENTAL)
     src.apply_batch(_log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS)]), 0, 1)
-    sync_view(spark, src.table, view, SPEC)
+    _inc_sync(spark, src, view, SPEC)
     v_before = view.table.current().version
     # token VALUES change but neither the group nor n_tok (same length)
     # does: the delta nets to zero and no group is rewritten — the sync
     # still advances the view's watermark (empty batch commits are atomic)
     src.apply_batch(_log(spark, [(2, "U", "k1", [9] * 10, 10, "a", TS)]), 1, 2)
-    bs = sync_view(spark, src.table, view, SPEC)
+    bs, _ = _inc_sync(spark, src, view, SPEC)
     assert not bs.skipped and bs.events == 0
     assert view.table.current().version == v_before + 1  # watermark-only
     assert view.table.last_lsn() == src.table.current().version
@@ -121,7 +126,10 @@ def test_gap_refuses_then_full_rebuild(spark, tmp_path):
 
     with _caplog_records("dbimport_spark.plans.matview") as recs:
         bs = sync_view(spark, src.table, view, SPEC, on_gap="full")
-    assert any("full rebuild will scan" in r.getMessage() for r in recs)
+    assert any(
+        "full rebuild will scan" in r.getMessage()
+        and r.getMessage().endswith("on the driver") for r in recs
+    )
     assert not bs.skipped
     assert _totals(spark, view.table) == {"b": (1, 7)}
     assert verify_view(spark, src.table, view.table, SPEC)["converged"]
@@ -132,7 +140,7 @@ def test_composite_groups_and_null_sums(spark, tmp_path):
     src_t = CDCEngine.create_table(str(tmp_path / "s2"), num_buckets=4)
     src = CDCEngine(spark, src_t)
     view_t = create_view(str(tmp_path / "v2"), src_t, spec, num_buckets=2)
-    view = CDCEngine(spark, view_t)
+    view = CDCEngine(spark, view_t, **INCREMENTAL)
     # null tokens => engine-normalized null n_tok, which contributes 0 to
     # the sum (documented convention: the invertible COALESCE(sum, 0)
     # form) but still counts the row
@@ -140,10 +148,10 @@ def test_composite_groups_and_null_sums(spark, tmp_path):
         _log(spark, [(1, "I", "k1", None, None, "a", TS),
                      (2, "I", "k2", [2] * 4, 4, "a", TS)]), 0, 2,
     )
-    sync_view(spark, src_t, view, spec)
+    _inc_sync(spark, src, view, spec)
     assert _totals(spark, view_t) == {"a": (2, 4)}
     src.apply_batch(_log(spark, [(3, "D", "k2", None, None, None, TS)]), 2, 3)
-    sync_view(spark, src_t, view, spec)
+    _inc_sync(spark, src, view, spec)
     assert _totals(spark, view_t) == {"a": (1, 0)}
     assert verify_view(spark, src_t, view_t, spec)["converged"]
 
@@ -203,26 +211,36 @@ def test_sync_reads_only_touched_view_buckets(spark, tmp_path):
 def test_soft_delete_source(spark, tmp_path):
     """Soft sources: a tombstoned row leaves the aggregate (the feed
     emits 'delete' on the live->dead transition), and a revival
-    re-enters it — totals always equal the groupBy of LIVE rows."""
+    re-enters it — totals always equal the groupBy of LIVE rows, through
+    the recompute fold and the incremental core alike."""
     src_t = CDCEngine.create_table(
         str(tmp_path / "soft"), num_buckets=4, soft_delete=True
     )
     src = CDCEngine(spark, src_t)
-    view_t = create_view(str(tmp_path / "vsoft"), src_t, SPEC, num_buckets=2)
-    view = CDCEngine(spark, view_t)
+    views = {
+        fold: CDCEngine(
+            spark, create_view(str(tmp_path / fold), src_t, SPEC, num_buckets=2),
+            **(INCREMENTAL if fold == "incremental" else {}),
+        )
+        for fold in ("recompute", "incremental")
+    }
+
+    def sync(expected):
+        for fold, view in views.items():
+            assert f": {fold} —" in _decision(spark, src_t, view, SPEC)[1]
+            assert _totals(spark, view.table) == expected
+
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 5, 5, "a", TS)]), 0, 2,
     )
-    sync_view(spark, src_t, view, SPEC)
-    assert _totals(spark, view_t) == {"a": (2, 15)}
+    sync({"a": (2, 15)})
     src.apply_batch(_log(spark, [(3, "D", "k1", None, None, None, TS)]), 2, 3)
-    sync_view(spark, src_t, view, SPEC)
-    assert _totals(spark, view_t) == {"a": (1, 5)}  # tombstone left the agg
+    sync({"a": (1, 5)})  # tombstone left the agg
     src.apply_batch(_log(spark, [(4, "I", "k1", [7] * 7, 7, "a", TS)]), 3, 4)
-    sync_view(spark, src_t, view, SPEC)
-    assert _totals(spark, view_t) == {"a": (2, 12)}  # revival re-entered
-    assert verify_view(spark, src_t, view_t, SPEC)["converged"]
+    sync({"a": (2, 12)})  # revival re-entered
+    for view in views.values():
+        assert verify_view(spark, src_t, view.table, SPEC)["converged"]
 
 
 def test_follow_view_applies_windows(spark, tmp_path):
@@ -263,15 +281,12 @@ MM_SPEC = AggSpec(
 
 
 def _mm_pair(spark, tmp_path, spec=MM_SPEC):
-    """Source, a view synced by ``sync_view``, and a twin view driven
-    through the incremental core (``apply_feed_to_view``) over the same
-    windows — the rescan counts below are properties of that core, which
-    ``sync_view`` may bypass by recomputing a small view."""
+    """Source and a view kept on the incremental core (``INCREMENTAL``):
+    the rescan counts below are properties of that core."""
     src_t = CDCEngine.create_table(str(tmp_path / "src"), num_buckets=8)
     src = CDCEngine(spark, src_t, checkpoint_dir=str(tmp_path / "ckpt"))
     view_t = create_view(str(tmp_path / "view"), src_t, spec, num_buckets=4)
-    inc_t = create_view(str(tmp_path / "inc"), src_t, spec, num_buckets=4)
-    return src, CDCEngine(spark, view_t), CDCEngine(spark, inc_t)
+    return src, CDCEngine(spark, view_t, **INCREMENTAL)
 
 
 def _mm_totals(spark, view_t):
@@ -293,32 +308,48 @@ def _rescans(recs):
     return n
 
 
+def _logged(spark, sync, *args):
+    """Run ``sync(spark, *args)`` capturing the matview INFO log."""
+    import logging
+
+    from tests.test_mirror import _caplog_records
+
+    with _caplog_records(
+        "dbimport_spark.plans.matview", level=logging.INFO
+    ) as recs:
+        bs = sync(spark, *args)
+    return bs, recs
+
+
 def _feed_sync(spark, source_t, view, spec):
     """One window through ``apply_feed_to_view`` driven by
     ``table_changes(include_preimage=True)`` — the incremental core the
     stream follower uses; returns its stats and groups rescanned."""
-    import logging
-
     from dbimport_spark.lake.cdf import table_changes
-    from tests.test_mirror import _caplog_records
 
     from_v = max(view.table.last_lsn(), 0)
     to_v = source_t.current().version
     feed = table_changes(spark, source_t, from_v, to_v, include_preimage=True)
-    with _caplog_records(
-        "dbimport_spark.plans.matview", level=logging.INFO
-    ) as recs:
-        bs = apply_feed_to_view(spark, source_t, view, spec, feed, from_v, to_v)
+    bs, recs = _logged(
+        spark, apply_feed_to_view, source_t, view, spec, feed, from_v, to_v
+    )
     return bs, _rescans(recs)
 
 
-def _mm_sync(spark, src, view, inc, spec=MM_SPEC):
-    """``sync_view`` on ``view`` and the incremental core on ``inc``; the
-    two must hold equal totals. Returns sync_view's stats and the groups
-    the incremental core rescanned."""
-    bs = sync_view(spark, src.table, view, spec)
-    _, rescanned = _feed_sync(spark, src.table, inc, spec)
-    assert _mm_totals(spark, view.table) == _mm_totals(spark, inc.table)
+def _decision(spark, source_t, view, spec):
+    """``sync_view`` plus its logged recompute/incremental decision and the
+    groups it rescanned."""
+    bs, recs = _logged(spark, sync_view, source_t, view, spec)
+    msgs = [r.getMessage() for r in recs if "diff read set" in r.getMessage()]
+    assert len(msgs) == 1, msgs  # logged once per sync
+    return bs, msgs[0], _rescans(recs)
+
+
+def _inc_sync(spark, src, view, spec=MM_SPEC):
+    """``sync_view`` on the incremental path; returns its stats and the
+    groups it rescanned."""
+    bs, msg, rescanned = _decision(spark, src.table, view, spec)
+    assert ": incremental —" in msg
     return bs, rescanned
 
 
@@ -326,20 +357,20 @@ def test_minmax_bootstrap_and_growth_without_rescan(spark, tmp_path):
     """Inserts only ever GROW an extremum — the candidate rule handles
     them with zero rescans, including bootstrap (the whole table arrives
     as inserts)."""
-    src, view, inc = _mm_pair(spark, tmp_path)
+    src, view = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 20, 20, "a", TS),
                      (3, "I", "k3", [3] * 5, 5, "b", TS)]), 0, 3,
     )
-    bs, rescanned = _mm_sync(spark, src, view, inc)
+    bs, rescanned = _inc_sync(spark, src, view)
     assert not bs.skipped and rescanned == 0
     assert _mm_totals(spark, view.table) == {
         "a": (2, 30, 10, 20), "b": (1, 5, 5, 5),
     }
     # a new outlier value: candidate folds in, still no rescan
     src.apply_batch(_log(spark, [(4, "I", "k4", [4] * 99, 99, "a", TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view, inc)
+    bs, rescanned = _inc_sync(spark, src, view)
     assert rescanned == 0
     assert _mm_totals(spark, view.table)["a"] == (3, 129, 10, 99)
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
@@ -348,15 +379,15 @@ def test_minmax_bootstrap_and_growth_without_rescan(spark, tmp_path):
 def test_minmax_extremum_removal_rescans_only_that_group(spark, tmp_path):
     """Deleting the max-carrier of group 'a' invalidates only 'a': one
     group rescanned, 'b' untouched, and the new max is the runner-up."""
-    src, view, inc = _mm_pair(spark, tmp_path)
+    src, view = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 20, 20, "a", TS),
                      (3, "I", "k3", [3] * 7, 7, "b", TS)]), 0, 3,
     )
-    _mm_sync(spark, src, view, inc)
+    _inc_sync(spark, src, view)
     src.apply_batch(_log(spark, [(4, "D", "k2", None, None, None, TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view, inc)
+    bs, rescanned = _inc_sync(spark, src, view)
     assert rescanned == 1
     assert _mm_totals(spark, view.table) == {
         "a": (1, 10, 10, 10), "b": (1, 7, 7, 7),
@@ -367,15 +398,15 @@ def test_minmax_extremum_removal_rescans_only_that_group(spark, tmp_path):
 def test_minmax_nonextremal_delete_no_rescan(spark, tmp_path):
     """Removing a strictly-interior value can't carry an extremum: no
     group is rescanned and both extremes survive."""
-    src, view, inc = _mm_pair(spark, tmp_path)
+    src, view = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 15, 15, "a", TS),
                      (3, "I", "k3", [3] * 20, 20, "a", TS)]), 0, 3,
     )
-    _mm_sync(spark, src, view, inc)
+    _inc_sync(spark, src, view)
     src.apply_batch(_log(spark, [(4, "D", "k2", None, None, None, TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view, inc)
+    bs, rescanned = _inc_sync(spark, src, view)
     assert rescanned == 0
     assert _mm_totals(spark, view.table)["a"] == (2, 30, 10, 20)
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
@@ -385,15 +416,15 @@ def test_minmax_tied_extremum_delete_rescans_and_survives(spark, tmp_path):
     """Two rows tie for the max; deleting one MUST rescan (the stored
     extremum was possibly removed) and the max must survive via the
     remaining carrier."""
-    src, view, inc = _mm_pair(spark, tmp_path)
+    src, view = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 20, 20, "a", TS),
                      (2, "I", "k2", [2] * 20, 20, "a", TS),
                      (3, "I", "k3", [3] * 5, 5, "a", TS)]), 0, 3,
     )
-    _mm_sync(spark, src, view, inc)
+    _inc_sync(spark, src, view)
     src.apply_batch(_log(spark, [(4, "D", "k1", None, None, None, TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view, inc)
+    bs, rescanned = _inc_sync(spark, src, view)
     assert rescanned == 1
     assert _mm_totals(spark, view.table)["a"] == (2, 25, 5, 20)
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
@@ -402,15 +433,15 @@ def test_minmax_tied_extremum_delete_rescans_and_survives(spark, tmp_path):
 def test_minmax_update_moves_extremum_across_groups(spark, tmp_path):
     """An update migrating the max-carrier from group 'a' to 'b' removes
     a's extremum (rescan) and candidates b's new one (no rescan)."""
-    src, view, inc = _mm_pair(spark, tmp_path)
+    src, view = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 30, 30, "a", TS),
                      (3, "I", "k3", [3] * 7, 7, "b", TS)]), 0, 3,
     )
-    _mm_sync(spark, src, view, inc)
+    _inc_sync(spark, src, view)
     src.apply_batch(_log(spark, [(4, "U", "k2", [2] * 30, 30, "b", TS)]), 3, 4)
-    bs, rescanned = _mm_sync(spark, src, view, inc)
+    bs, rescanned = _inc_sync(spark, src, view)
     assert rescanned == 1  # only 'a' (b's new value is a pure candidate)
     assert _mm_totals(spark, view.table) == {
         "a": (1, 10, 10, 10), "b": (2, 37, 7, 30),
@@ -422,14 +453,14 @@ def test_minmax_value_unchanged_update_is_skipped(spark, tmp_path):
     """An update that keeps both the group and the aggregated value
     contributes nothing: no candidate, no removal, no rescan — even
     though the row itself changed (token values differ)."""
-    src, view, inc = _mm_pair(spark, tmp_path)
+    src, view = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 5, 5, "a", TS)]), 0, 2,
     )
-    _mm_sync(spark, src, view, inc)
+    _inc_sync(spark, src, view)
     src.apply_batch(_log(spark, [(3, "U", "k1", [9] * 10, 10, "a", TS)]), 2, 3)
-    bs, rescanned = _mm_sync(spark, src, view, inc)
+    bs, rescanned = _inc_sync(spark, src, view)
     assert rescanned == 0 and bs.events == 0  # watermark-only sync
     assert _mm_totals(spark, view.table)["a"] == (2, 15, 5, 10)
 
@@ -437,33 +468,45 @@ def test_minmax_value_unchanged_update_is_skipped(spark, tmp_path):
 def test_minmax_group_collapse_needs_no_rescan(spark, tmp_path):
     """Deleting a group's LAST row deletes the view row outright — no
     rescan even though the extremum was removed."""
-    src, view, inc = _mm_pair(spark, tmp_path)
+    src, view = _mm_pair(spark, tmp_path)
     src.apply_batch(
         _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
                      (2, "I", "k2", [2] * 5, 5, "b", TS)]), 0, 2,
     )
-    _mm_sync(spark, src, view, inc)
+    _inc_sync(spark, src, view)
     src.apply_batch(_log(spark, [(3, "D", "k1", None, None, None, TS)]), 2, 3)
-    bs, rescanned = _mm_sync(spark, src, view, inc)
+    bs, rescanned = _inc_sync(spark, src, view)
     assert rescanned == 0
     assert _mm_totals(spark, view.table) == {"b": (1, 5, 5, 5)}
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
 
 
 def test_minmax_full_rebuild_gap(spark, tmp_path):
-    src, view, inc = _mm_pair(spark, tmp_path)
-    src.apply_batch(_log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS)]), 0, 1)
-    _mm_sync(spark, src, view, inc)
+    """A view over the driver-fold limit (zero here) rebuilds through a
+    full outer join in Spark: only the changed group 'a', the new group
+    'd' and the vanished group 'c' reach the merge; 'b' stays as it is."""
+    from tests.test_mirror import _caplog_records
+
+    src, view = _mm_pair(spark, tmp_path)
     src.apply_batch(
-        _log(spark, [(2, "I", "k2", [2] * 7, 7, "a", TS),
-                     (3, "I", "k3", [3] * 2, 2, "b", TS),
-                     (4, "D", "k1", None, None, None, TS)]), 1, 4,
+        _log(spark, [(1, "I", "k1", [1] * 10, 10, "a", TS),
+                     (2, "I", "k5", [5] * 4, 4, "b", TS),
+                     (3, "I", "k6", [6] * 3, 3, "c", TS)]), 0, 3,
+    )
+    _inc_sync(spark, src, view)
+    src.apply_batch(
+        _log(spark, [(4, "I", "k2", [2] * 7, 7, "a", TS),
+                     (5, "I", "k3", [3] * 2, 2, "d", TS),
+                     (6, "D", "k1", None, None, None, TS),
+                     (7, "D", "k6", None, None, None, TS)]), 3, 7,
     )
     src.table.expire_snapshots(keep_last=1)
-    bs = sync_view(spark, src.table, view, MM_SPEC, on_gap="full")
-    assert not bs.skipped
+    with _caplog_records("dbimport_spark.plans.matview") as recs:
+        bs = sync_view(spark, src.table, view, MM_SPEC, on_gap="full")
+    assert any("in Spark (over 0 rows)" in r.getMessage() for r in recs)
+    assert not bs.skipped and bs.events == 3 and bs.rescanned_groups == 3
     assert _mm_totals(spark, view.table) == {
-        "a": (1, 7, 7, 7), "b": (1, 2, 2, 2),
+        "a": (1, 7, 7, 7), "b": (1, 4, 4, 4), "d": (1, 2, 2, 2),
     }
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
 
@@ -637,21 +680,6 @@ def test_recompute_equals_incremental_per_window(spark, tmp_path, mode):
     assert _recompute_sync(spark, src_t, rec, MM_SPEC).skipped  # exactly-once
 
 
-def _decision(spark, source_t, view, spec):
-    """``sync_view`` plus its logged recompute/incremental decision."""
-    import logging
-
-    from tests.test_mirror import _caplog_records
-
-    with _caplog_records(
-        "dbimport_spark.plans.matview", level=logging.INFO
-    ) as recs:
-        bs = sync_view(spark, source_t, view, spec)
-    msgs = [r.getMessage() for r in recs if "diff read set" in r.getMessage()]
-    assert len(msgs) == 1, msgs  # logged once per sync
-    return bs, msgs[0]
-
-
 def test_sync_chooses_strategy_from_metadata(spark, tmp_path):
     """An 8-bucket copy-on-write source whose window rewrites one bucket
     reads far less than the table: incremental. A merge-on-read window
@@ -667,7 +695,7 @@ def test_sync_chooses_strategy_from_metadata(spark, tmp_path):
     sync_view(spark, cow_t, cview, MM_SPEC)
     cow.apply_batch(_log(spark, [(49, "U", "k1", [1] * 60, 60, "g1", TS)]), 48, 49)
     assert {f.bucket for f in cow_t.current().files} == set(range(8))
-    bs, msg = _decision(spark, cow_t, cview, MM_SPEC)
+    bs, msg, _ = _decision(spark, cow_t, cview, MM_SPEC)
     assert ": incremental —" in msg and not bs.skipped
     assert verify_view(spark, cow_t, cview.table, MM_SPEC)["converged"]
 
@@ -679,7 +707,7 @@ def test_sync_chooses_strategy_from_metadata(spark, tmp_path):
     upd = [(48 + i, "U", f"k{i}", [1] * 2, 2, f"g{i % 3}", TS) for i in range(1, 49)]
     mor.apply_batch(_log(spark, upd), 48, 96)
     assert any(f.kind != "base" for f in mor_t.current().files)
-    bs, msg = _decision(spark, mor_t, mview, MM_SPEC)
+    bs, msg, _ = _decision(spark, mor_t, mview, MM_SPEC)
     assert ": recompute —" in msg and bs.rescanned_groups == 3
     assert verify_view(spark, mor_t, mview.table, MM_SPEC)["converged"]
 
@@ -707,7 +735,7 @@ def test_merge_key_only_view_syncs_incrementally(spark, tmp_path):
                      (4, "D", "k2", None, None, None, TS),
                      (5, "I", "k3", [6], 1, "a", TS)]), 2, 5,
     )
-    bs, msg = _decision(spark, src_t, view, spec)
+    bs, msg, _ = _decision(spark, src_t, view, spec)
     assert ": incremental —" in msg and not bs.skipped
     assert {r["doc_id"] for r in view.table.read(spark).collect()} == {"k1", "k3"}
     assert verify_view(spark, src_t, view.table, spec)["converged"]
