@@ -193,16 +193,15 @@ def test_matview_random_sequences_equal_groupby(
     cross-group migrations, no-op updates — synced in any windowing must
     leave the view equal to a direct groupBy of the live rows. The spec
     carries min/max too, so extremum-removal rescans (non-invertible
-    aggregates) are exercised under the same random interleavings: a twin
-    view folds every window through the incremental core
-    (``apply_feed_to_view``), which ``sync_view`` bypasses when it
-    recomputes a small view."""
+    aggregates) are exercised under the same random interleavings. A zero
+    driver-fold limit keeps the syncs on the incremental core, which
+    ``sync_view`` bypasses when it recomputes a small view (only a window
+    leaving source and view both empty may still recompute); the
+    recompute fold is pinned equal to that core in tests/test_matview.py."""
     from pyspark.sql import functions as F
 
-    from dbimport_spark.lake.cdf import table_changes
     from dbimport_spark.plans.matview import (
         AggSpec,
-        apply_feed_to_view,
         create_view,
         sync_view,
         verify_view,
@@ -224,9 +223,9 @@ def test_matview_random_sequences_equal_groupby(
         group_cols=["source"], sum_cols=["n_tok"],
         min_cols=["n_tok"], max_cols=["n_tok"],
     )
-    view, inc = (
-        CDCEngine(spark, create_view(f"{root}/{n}", table, spec, num_buckets=2))
-        for n in ("v", "inc")
+    view = CDCEngine(
+        spark, create_view(root + "/v", table, spec, num_buckets=2),
+        broadcast_threshold_rows=0,
     )
     n = len(rows)
     edges = [(n * k) // n_windows for k in range(n_windows + 1)]
@@ -238,16 +237,6 @@ def test_matview_random_sequences_equal_groupby(
         )
         sync_view(spark, table, view, spec)
         assert verify_view(spark, table, view.table, spec)["converged"]
-        from_v = max(inc.table.last_lsn(), 0)
-        to_v = table.current().version
-        feed = table_changes(spark, table, from_v, to_v, include_preimage=True)
-        apply_feed_to_view(spark, table, inc, spec, feed, from_v, to_v)
-        # equal to the verified view, hence to the groupBy as well
-        rows = [
-            sorted(v.table.read(spark).select(*spec.view_cols()).collect())
-            for v in (view, inc)
-        ]
-        assert rows[0] == rows[1]
 
 
 # dead-letter fuzz: segments of valid events with malformed (null-lsn)
