@@ -64,7 +64,10 @@ class DataFile:
     # (the equality-delete-file analogue). Non-base files carry ``seq``
     # (the committing snapshot version, stamped by ``commit``) — the
     # last-writer-wins order across delta commits. ``seq`` lives in file
-    # METADATA, never as a per-row column: reads attach it as a literal.
+    # METADATA, never as a per-row column. Invariant: a commit writes at
+    # most one row per key across its delta and delete files (the engine
+    # writes both from one deduped batch); ``read_files_reconciled`` relies
+    # on it, since rows of equal seq never compete.
     kind: str = "base"
     seq: int = 0
     # per-file column statistics (the Iceberg manifest-metrics analogue):
@@ -535,62 +538,64 @@ class LakeTable:
             files = [f for f in files if f.bucket in wanted]
         return self.read_files_reconciled(spark, snap, files)
 
-    # merge-on-read: delta sets past this size lose the broadcast hint on
-    # the base-side anti-join (AQE then picks the join strategy) — the
-    # compaction policy should fold deltas long before this point.
+    # merge-on-read: the key-only superseding set of a read's delta and
+    # delete files is broadcast to the anti-joins up to this many bytes of
+    # those files. Past it the hint is dropped (AQE picks the join, and
+    # the base side is shuffled on the merge key) and each such read logs
+    # a WARNING — the compaction policy should fold deltas long before.
     MOR_BROADCAST_BYTES = 128 * 1024 * 1024
 
     def read_files_reconciled(
         self, spark: SparkSession, snap: Snapshot, files: list[DataFile]
     ) -> DataFrame:
-        """Read a file subset with merge-on-read reconciliation: the live
-        state is base rows not superseded by any delta/delete, plus the
-        max-``seq`` upsert per key among the delta files.
+        """Read a file subset with merge-on-read reconciliation by the
+        Iceberg-v2 equality-delete rule: a delta or delete row of seq *s*
+        hides its key's rows in base files and in delta files of seq < *s*.
 
-        Plan shape at scale: the delta world (small by the compaction
-        policy) takes one exchange for its per-key LWW window; the base —
-        the 100 TB side — is STREAMED through a single broadcast anti-join
-        and never shuffled. A pure-base subset short-circuits to the plain
-        file read (byte-identical plan to pre-MOR tables).
+        Plan shape: anti-joins only. With ``sup(s)`` the merge keys of
+        every delta/delete file of seq > *s*, the live rows are base
+        anti-join ``sup(0)`` plus, per delta seq *s*, delta_s anti-join
+        ``sup(s)`` (the newest seq needs no join). ``sup`` is broadcast
+        while the subset's delta/delete files total <=
+        ``MOR_BROADCAST_BYTES``, so the base — the 100 TB side — is
+        streamed, never shuffled; no merge-key exchange, no per-key
+        ordering, one scan of the delta payload. A pure-base subset reads
+        as plain files (the pre-MOR plan). Relies on the writer invariant
+        (``DataFile.kind/seq``): a commit writes at most one row per key
+        across its delta and delete files, so equal seqs never compete.
         """
         base = [f for f in files if f.kind == "base"]
         extras = [f for f in files if f.kind != "base"]
         if not extras:
             return self.read_files(spark, snap, files)
-
-        from pyspark.sql.window import Window
-
         keys = snap.merge_keys
-        # one read per (seq, kind) group, each stamped with its literal
-        # seq — the number of groups is the number of un-compacted delta
-        # commits, bounded small by the compaction policy
-        groups: dict[tuple[int, str], list[DataFile]] = {}
-        for f in extras:
-            groups.setdefault((f.seq, f.kind), []).append(f)
-        events: DataFrame | None = None
-        for (seq, kind), grp in sorted(groups.items()):
-            part = (
-                self.read_files(spark, snap, grp)
-                .withColumn("_mor_seq", F.lit(int(seq)))
-                .withColumn("_mor_del", F.lit(kind == "delete"))
+        nbytes = sum(f.bytes for f in extras)
+        small = nbytes <= self.MOR_BROADCAST_BYTES
+        if not small:
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "%s: merge-on-read read over %d delta/delete bytes (> "
+                "MOR_BROADCAST_BYTES=%d) shuffles the base on the merge "
+                "key; maintenance.compact folds the deltas",
+                self.root, nbytes, self.MOR_BROADCAST_BYTES,
             )
-            events = part if events is None else events.unionByName(part)
-        w = Window.partitionBy(*keys).orderBy(F.col("_mor_seq").desc())
-        winner = (
-            events.withColumn("_mor_rn", F.row_number().over(w))
-            .filter(F.col("_mor_rn") == 1)
-            .drop("_mor_rn")
-        )
-        superseded = winner.select(*keys)
-        if sum(f.bytes for f in extras) <= self.MOR_BROADCAST_BYTES:
-            superseded = F.broadcast(superseded)
-        live_base = self.read_files(spark, snap, base).join(
-            superseded, keys, "left_anti"
-        )
-        live_delta = winner.filter(~F.col("_mor_del")).drop(
-            "_mor_seq", "_mor_del"
-        )
-        return live_base.unionByName(live_delta)
+        hint = F.broadcast if small else (lambda df: df)
+        by_seq: dict[int, list[DataFile]] = {}
+        for f in extras:
+            by_seq.setdefault(f.seq, []).append(f)
+        sup = live = None  # newest seq first: sup = keys of newer seqs
+        for seq, grp in sorted(by_seq.items(), reverse=True):
+            deltas = [f for f in grp if f.kind == "delta"]
+            if deltas:
+                part = self.read_files(spark, snap, deltas)
+                if sup is not None:
+                    part = part.join(hint(sup), keys, "left_anti")
+                live = part if live is None else live.unionByName(part)
+            grp_keys = self.read_files(spark, snap, grp).select(*keys)
+            sup = grp_keys if sup is None else sup.unionByName(grp_keys)
+        out = self.read_files(spark, snap, base).join(hint(sup), keys, "left_anti")
+        return out if live is None else out.unionByName(live)
 
     def read_files(
         self, spark: SparkSession, snap: Snapshot, files: list[DataFile]

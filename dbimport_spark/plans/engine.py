@@ -1290,7 +1290,10 @@ class CDCEngine:
         )
         # batch-sized output: a handful of write tasks, each emitting one
         # file per bucket it holds — total delta files per batch stays
-        # <= touched buckets regardless of parallelism
+        # <= touched buckets regardless of parallelism. Both writes come
+        # from ``deduped`` (one winner per key), so this commit holds at
+        # most one row per key across its delta and delete files — the
+        # invariant ``LakeTable.read_files_reconciled`` relies on.
         import math as _math
 
         nparts = max(1, min(len(touched), _math.ceil(n_events / 1_000_000) * 8))

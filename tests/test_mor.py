@@ -75,30 +75,81 @@ def _commit_kind(spark, t, schema, rows, kind, cols=None):
     return t.current().version
 
 
-def test_delta_supersedes_base_and_older_delta(spark, tmp_path):
+@pytest.fixture(params=["default", "zero"])
+def mor_limit(request, spark, monkeypatch):
+    """MOR_BROADCAST_BYTES at its default, or 0 with Spark's own broadcast
+    threshold off too, so the anti-joins really run as shuffle joins."""
+    if request.param == "default":
+        yield LakeTable.MOR_BROADCAST_BYTES
+        return
+    monkeypatch.setattr(LakeTable, "MOR_BROADCAST_BYTES", 0)
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        yield 0
+    finally:
+        spark.conf.set(conf, old)
+
+
+def _reconciled_read(spark, t, mor_limit, caplog):
+    """Read ``t`` and check the plan shape each limit promises: at the
+    default, no Window and no exchange on the merge key; at 0, no
+    broadcast and one WARNING naming the table and the way out."""
+    import io
+    from contextlib import redirect_stdout
+
+    caplog.clear()
+    with caplog.at_level("WARNING", logger="dbimport_spark.lake.table"):
+        df = t.read(spark)
+    warned = [r.getMessage() for r in caplog.records]
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    plan = buf.getvalue()
+    if mor_limit:
+        assert "Window" not in plan and "hashpartitioning(doc_id" not in plan
+        assert not warned
+    else:
+        assert "BroadcastHashJoin" not in plan
+        assert len(warned) == 1
+        assert t.root in warned[0] and "maintenance.compact" in warned[0]
+        assert "MOR_BROADCAST_BYTES=0" in warned[0]
+    return {(r.doc_id, r.v) for r in df.collect()}
+
+
+def test_delta_supersedes_base_and_older_delta(
+    spark, tmp_path, mor_limit, caplog
+):
     t, schema = _mini_table(
         spark, tmp_path, [("a", 1), ("b", 2), ("c", 3)]
     )
     _commit_kind(spark, t, schema, [("a", 10), ("d", 40)], "delta")
     _commit_kind(spark, t, schema, [("a", 100)], "delta")
-    got = {(r.doc_id, r.v) for r in t.read(spark).collect()}
+    got = _reconciled_read(spark, t, mor_limit, caplog)
     assert got == {("a", 100), ("b", 2), ("c", 3), ("d", 40)}
     # time travel: the pre-delta snapshot still reads pure base
     v0 = {(r.doc_id, r.v) for r in t.read(spark, version=1).collect()}
     assert v0 == {("a", 1), ("b", 2), ("c", 3)}
 
 
-def test_delete_file_tombstones_and_reinsert_order(spark, tmp_path):
+def test_delete_file_tombstones_and_reinsert_order(
+    spark, tmp_path, mor_limit, caplog
+):
     t, schema = _mini_table(spark, tmp_path, [("a", 1), ("b", 2)], "mini2")
     key_schema = T.StructType([T.StructField("doc_id", T.StringType(), False)])
     # delete 'a' (seq 2), then re-insert it via a later delta (seq 3):
-    # the max-seq event wins — 'a' is live again
+    # the newer event wins — 'a' is live again
     _commit_kind(spark, t, schema, [("a",)], "delete", cols=key_schema)
     mid = {(r.doc_id, r.v) for r in t.read(spark).collect()}
     assert mid == {("b", 2)}
     _commit_kind(spark, t, schema, [("a", 7)], "delta")
-    got = {(r.doc_id, r.v) for r in t.read(spark).collect()}
+    got = _reconciled_read(spark, t, mor_limit, caplog)
     assert got == {("a", 7), ("b", 2)}
+    # a later delete (seq 4) hides the older delta's row
+    _commit_kind(spark, t, schema, [("a",)], "delete", cols=key_schema)
+    got = _reconciled_read(spark, t, mor_limit, caplog)
+    assert got == {("b", 2)}
 
 
 def test_commit_guards(spark, tmp_path):
@@ -123,8 +174,32 @@ def test_mor_replay_matches_oracle_hard(spark, tmp_path):
     eng.replay(log, num_batches=5)
     assert _state(spark, eng.table) == _oracle_state(log)
     # batches after the initial insert-only one actually took the MOR path
-    kinds = {f.kind for f in eng.table.current().files}
-    assert "delta" in kinds
+    t = eng.table
+    snap = t.current()
+    assert {"delta", "delete"} <= {f.kind for f in snap.files}
+    # the writer invariant reconciled reads rely on: per committed seq, the
+    # rows across its delta and delete files have distinct merge keys
+    extras = {
+        f.path: f
+        for v in range(1, snap.version + 1)
+        for f in t.snapshot(v).files
+        if f.kind != "base"
+    }
+    by_seq = {}
+    for f in extras.values():
+        by_seq.setdefault(f.seq, []).append(f)
+    parts = [
+        t.read_files(spark, snap, grp).select(F.lit(seq).alias("_s"), "doc_id")
+        for seq, grp in by_seq.items()
+    ]
+    per_seq = parts[0]
+    for p in parts[1:]:
+        per_seq = per_seq.unionByName(p)
+    counts = per_seq.groupBy("_s").agg(
+        F.count("*").alias("n"), F.countDistinct("doc_id").alias("k")
+    ).collect()
+    assert len(counts) == len(by_seq) > 1
+    assert all(r.n == r.k for r in counts)
 
 
 def test_mor_replay_matches_cow_soft(spark, tmp_path):

@@ -188,9 +188,10 @@ def test_pack_sequences_plan_is_partition_parallel(spark):
 
 def test_mor_reconciled_read_streams_base(spark, tmp_path):
     """Merge-on-read read-path shape: the base side is STREAMED through a
-    broadcast anti-join (no hash/range exchange on base bytes); only the
-    small delta world pays an exchange for its per-key LWW window. A
-    pure-base table keeps the plain multi-file scan (no join at all)."""
+    broadcast anti-join (no hash/range exchange on base bytes), and the
+    delta world resolves by broadcast anti-joins too — no exchange at
+    all, no per-key window. A pure-base table keeps the plain multi-file
+    scan (no join at all)."""
     log = generate_changes(spark, 3000, n_keys=200, seed=31)
     table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=8)
     eng = CDCEngine(spark, table, write_mode="mor")
@@ -204,9 +205,13 @@ def test_mor_reconciled_read_streams_base(spark, tmp_path):
     # (no shuffle of base bytes) sits between them
     after_join = plan.split("BroadcastHashJoin LeftAnti", 1)[1]
     assert "Scan parquet" in after_join.splitlines()[1], plan
-    # the only data exchanges are the delta world's per-key LWW windows
-    # (superseded-keys branch + live-delta branch), both delta-sized
-    assert plan.count("hashpartitioning(") == 2, plan
+    # no data exchange anywhere: one anti-join for the base plus one per
+    # delta seq older than the newest delta/delete seq
+    assert "hashpartitioning(" not in plan and "Window" not in plan, plan
+    extras = [f for f in table.current().files if f.kind != "base"]
+    top = max(f.seq for f in extras)
+    older = {f.seq for f in extras if f.kind == "delta" and f.seq < top}
+    assert plan.count("BroadcastHashJoin LeftAnti") == 1 + len(older), plan
 
     # after compaction the reconciliation (and its join) must vanish
     from dbimport_spark.lake.maintenance import compact
