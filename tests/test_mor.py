@@ -23,6 +23,7 @@ from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import PAYLOAD_COLUMNS
 from dbimport_spark.sources.loggen import generate_changes
 from tests.oracle import as_tuple_set, lww_fold
+from tests.test_plans import explain_str
 
 COLS = PAYLOAD_COLUMNS  # doc_id, tokens, n_tok, source
 
@@ -96,17 +97,11 @@ def _reconciled_read(spark, t, mor_limit, caplog):
     """Read ``t`` and check the plan shape each limit promises: at the
     default, no Window and no exchange on the merge key; at 0, no
     broadcast and one WARNING naming the table and the way out."""
-    import io
-    from contextlib import redirect_stdout
-
     caplog.clear()
     with caplog.at_level("WARNING", logger="dbimport_spark.lake.table"):
         df = t.read(spark)
     warned = [r.getMessage() for r in caplog.records]
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain()
-    plan = buf.getvalue()
+    plan = explain_str(df, "simple")
     if mor_limit:
         assert "Window" not in plan and "hashpartitioning(doc_id" not in plan
         assert not warned
