@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbimport_spark.lake.catalog import Catalog, CommitConflict, FileCatalog
+from dbimport_spark.session import local_frame
 
 
 @dataclass
@@ -606,7 +607,7 @@ class LakeTable:
         (``lake.cdf``) reads only files not shared between two snapshots —
         use this directly; ``read`` delegates here after bucket pruning."""
         if not files:
-            return spark.createDataFrame([], snap.schema)
+            return local_frame(spark, [], snap.schema)
 
         # group files by rename epoch: each group is read through the
         # physical (backdated) names of its era, then aliased to the current

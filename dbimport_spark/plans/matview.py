@@ -70,6 +70,7 @@ from dbimport_spark.lake.cdf import (
 from dbimport_spark.lake.table import LakeTable
 from dbimport_spark.plans.engine import BatchStats, CDCEngine
 from dbimport_spark.schema import AUDIT_COLUMNS, AUDIT_DELETE
+from dbimport_spark.session import local_frame
 
 
 def _log():
@@ -478,7 +479,7 @@ def apply_feed_to_view(
     for g in spec.group_cols:
         src = src.filter(F.col(g).isin(list({k[g] for k in keys})))
     src = src.join(
-        F.broadcast(spark.createDataFrame(keys, key_rows.schema)),
+        F.broadcast(local_frame(spark, keys, key_rows.schema)),
         on=list(spec.group_cols), how="left_semi",
     )
     rescan_events = _aggregate(src, spec, vschema).select(

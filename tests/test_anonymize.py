@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 from tests.oracle import as_tuple_set, lww_fold
 
@@ -84,12 +85,12 @@ def test_mask_is_change_detection_transparent(spark, tmp_path):
         (1, "I", "k1", [1], 1, "web", dt.datetime(2024, 1, 1)),
         (2, "I", "k2", [2], 1, "mail", dt.datetime(2024, 1, 1)),
     ]
-    eng.apply_batch(spark.createDataFrame(rows, CHANGE_SCHEMA), 0, 2)
+    eng.apply_batch(local_frame(spark, rows, CHANGE_SCHEMA), 0, 2)
     rows2 = [
         (3, "U", "k1", [1], 1, "forum", dt.datetime(2024, 2, 1)),  # changed
         (4, "U", "k2", [2], 1, "mail", dt.datetime(2024, 2, 1)),  # re-stated
     ]
-    eng.apply_batch(spark.createDataFrame(rows2, CHANGE_SCHEMA), 2, 4)
+    eng.apply_batch(local_frame(spark, rows2, CHANGE_SCHEMA), 2, 4)
     got = {r["doc_id"]: r.asDict() for r in table.read(spark).collect()}
     assert got["k1"]["dl_iud"] == "U"
     assert got["k1"]["source"] == _sha("forum")

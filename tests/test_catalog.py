@@ -214,6 +214,7 @@ def test_sqlite_catalog_two_process_race_and_loser_gc(tmp_path):
         "w = sys.argv[1]\n"
         f"t = LakeTable.load({root!r}, catalog=SqliteCatalog())\n"
         "v = t.current().version\n"
+        f"open(os.path.join({str(tmp_path)!r}, 'ready-' + w), 'w').close()\n"
         f"while not os.path.exists({str(go)!r}):\n"
         "    time.sleep(0.005)\n"
         "try:\n"
@@ -230,9 +231,9 @@ def test_sqlite_catalog_two_process_race_and_loser_gc(tmp_path):
         )
         for w in ("A", "B")
     ]
-    import time
+    from tests.test_skew_and_concurrency import _await_ready
 
-    time.sleep(2.0)  # both racers loaded and spinning on the barrier
+    _await_ready(tmp_path, ("A", "B"), procs)  # both spinning on the barrier
     go.write_text("go")
     outs = [p.communicate(timeout=300) for p in procs]
     stdout = "".join(o[0] for o in outs)

@@ -16,11 +16,12 @@ from dbimport_spark.lake.cdf import (
 )
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import CHANGE_SCHEMA, PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 
 def _log(spark, rows):
-    return spark.createDataFrame(rows, CHANGE_SCHEMA)
+    return local_frame(spark, rows, CHANGE_SCHEMA)
 
 
 def _state(spark, table, version):
@@ -172,7 +173,8 @@ def test_changes_across_declared_rename_and_evolution(spark, tmp_path):
     v_a = table.current().version
 
     # rename source -> origin (declared), plus additive quality column
-    evolved = spark.createDataFrame(
+    evolved = local_frame(
+        spark,
         [(2, "U", "k1", [1, 2], 2, "web2", ts, 0.5)],
         "lsn long, op string, doc_id string, tokens array<int>, "
         "n_tok int, origin string, commit_ts timestamp, quality float",
@@ -375,7 +377,8 @@ def test_table_changes_refuses_grown_back_rename_history(spark, tmp_path):
     )
     eng = CDCEngine(spark, table)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(1, "I", "k1", 1)], "lsn long, op string, doc_id string, a int"
         ), 0, 1,
     )
@@ -388,7 +391,8 @@ def test_table_changes_refuses_grown_back_rename_history(spark, tmp_path):
     table = type(table).load(str(tmp_path / "t"))
     eng = CDCEngine(spark, table)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(1, "I", "k1", 5)], "lsn long, op string, doc_id string, a int"
         ), 0, 1,
     )

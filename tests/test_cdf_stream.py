@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.session import local_frame
 from dbimport_spark.streaming.cdf_source import (
     CHANGE_TYPE_COL,
     COMMIT_VERSION_COL,
@@ -27,7 +28,7 @@ TS = dt.datetime(2024, 1, 1)
 
 
 def _log(spark, rows):
-    return spark.createDataFrame(rows, CHANGE_SCHEMA)
+    return local_frame(spark, rows, CHANGE_SCHEMA)
 
 
 def _stream_rows(table, a, b):
@@ -129,21 +130,24 @@ def test_bucket_diff_across_schema_evolution_files(spark, tmp_path):
     )
     eng = CDCEngine(spark, t)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(1, "I", "a", 10), (2, "I", "b", 20)],
             "lsn long, op string, doc_id string, v int",
         ), 0, 2,
     )
     # widen v to long and add a column in one batch
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(3, "I", "c", 2**40, 1.5)],
             "lsn long, op string, doc_id string, v long, q double",
         ), 2, 3,
     )
     t.rename_column("q", "quality")
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(4, "U", "a", 11, 2.5)],
             "lsn long, op string, doc_id string, v long, quality double",
         ), 3, 4,
@@ -203,7 +207,8 @@ def test_reader_refuses_mid_stream_schema_change(spark, tmp_path):
     v1 = t.current().version
     # evolve: add a column via a wider batch
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(2, "I", "k2", [2], 1, "a", TS, 0.5)],
             "lsn long, op string, doc_id string, tokens array<int>, "
             "n_tok int, source string, commit_ts timestamp, extra double",
@@ -944,13 +949,15 @@ def test_reader_aligns_catchup_windows_across_evolution(spark, tmp_path):
     )
     eng = CDCEngine(spark, t)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(1, "I", "a", 10), (2, "I", "b", 20)],
             "lsn long, op string, doc_id string, v int",
         ), 0, 2,
     )
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(3, "U", "a", 11)],
             "lsn long, op string, doc_id string, v int",
         ), 2, 3,
@@ -958,7 +965,8 @@ def test_reader_aligns_catchup_windows_across_evolution(spark, tmp_path):
     v_pre = t.current().version
     # widen v to long, add q, rename q -> quality, then one more batch
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(4, "I", "c", 2**40, 1.5)],
             "lsn long, op string, doc_id string, v long, q double",
         ), 3, 4,
@@ -967,7 +975,8 @@ def test_reader_aligns_catchup_windows_across_evolution(spark, tmp_path):
     t = type(t).load(str(tmp_path / "t"))
     eng = CDCEngine(spark, t)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(5, "U", "a", 12, 3.5)],
             "lsn long, op string, doc_id string, v long, quality double",
         ), t.current().version, 5,
@@ -1032,7 +1041,8 @@ def test_mirror_follow_catchup_over_evolution_rate_capped(spark, tmp_path):
     src.apply_batch(_log(spark, [(3, "U", "k1", [9], 1, "a", TS)]), 2, 3)
     # compatible evolution mid-history: add a column
     src.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(4, "I", "k3", [5], 1, "c", TS, 0.5)],
             "lsn long, op string, doc_id string, tokens array<int>, "
             "n_tok int, source string, commit_ts timestamp, score double",
@@ -1100,7 +1110,7 @@ def test_catchup_alignment_random_evolutions(spark, tmp_path):
                         else round(rng.random(), 3)
                     )
                 rows.append(tuple(vals))
-            eng.apply_batch(spark.createDataFrame(rows, ddl), lsn - n, lsn)
+            eng.apply_batch(local_frame(spark, rows, ddl), lsn - n, lsn)
             ev = rng.choice(["none", "none", "add", "widen", "rename"])
             if ev == "add":
                 added += 1

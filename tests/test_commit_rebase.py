@@ -11,6 +11,7 @@ from pyspark.sql import types as T
 from dbimport_spark.lake.catalog import CommitConflict
 from dbimport_spark.lake.maintenance import compact, rebucket
 from dbimport_spark.lake.table import LakeTable
+from dbimport_spark.session import local_frame
 
 SCHEMA = T.StructType(
     [
@@ -22,11 +23,11 @@ SCHEMA = T.StructType(
 
 def _table(spark, tmp_path, name="t", rows=(("a", 1), ("b", 2), ("c", 3))):
     t = LakeTable.create(str(tmp_path / name), schema=SCHEMA, num_buckets=4)
-    df = spark.createDataFrame(list(rows), SCHEMA)
+    df = local_frame(spark, list(rows), SCHEMA)
     out = df.withColumn("_bucket", t.bucket_expr())
     # two commits so compaction has something to fold
     t.commit(t.write_data_files(spark, out, "w0"), replaced_buckets=set(range(4)))
-    df2 = spark.createDataFrame([("d", 4)], SCHEMA)
+    df2 = local_frame(spark, [("d", 4)], SCHEMA)
     t.commit(
         t.write_data_files(spark, df2.withColumn("_bucket", t.bucket_expr()), "w1"),
         replaced_buckets=set(),
@@ -35,7 +36,7 @@ def _table(spark, tmp_path, name="t", rows=(("a", 1), ("b", 2), ("c", 3))):
 
 
 def _stale_files(spark, t, rows, kind="base"):
-    df = spark.createDataFrame(rows, SCHEMA)
+    df = local_frame(spark, rows, SCHEMA)
     files = t.write_data_files(
         spark, df.withColumn("_bucket", t.bucket_expr()), f"x{t.current().version}"
     )

@@ -1,6 +1,7 @@
 from pyspark.sql import functions as F
 
 from dbimport_spark.operators.dedup import STRATEGIES, dedup_lww
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 
@@ -40,7 +41,8 @@ def test_neardup_clusters_and_survivors(spark):
     survivors keep exactly one doc per component."""
     from dbimport_spark.operators.text_dedup import dedup_survivors, neardup_clusters
 
-    pairs = spark.createDataFrame(
+    pairs = local_frame(
+        spark,
         [("b", "c"), ("a", "b"), ("e", "f")], "id_a string, id_b string"
     )
     got = {
@@ -48,7 +50,8 @@ def test_neardup_clusters_and_survivors(spark):
     }
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("e", "e"), ("f", "e")}
 
-    docs = spark.createDataFrame(
+    docs = local_frame(
+        spark,
         [(x, f"text {x}") for x in "abcefg"], "doc_id string, text string"
     )
     surv = {r["doc_id"] for r in dedup_survivors(docs, pairs).collect()}
@@ -62,7 +65,8 @@ def test_jaccard_max_doc_freq_cap(spark):
     from dbimport_spark.operators.text_dedup import jaccard_pairs, word_shingles
 
     boiler = "terms of service apply to all content"
-    docs = spark.createDataFrame(
+    docs = local_frame(
+        spark,
         [
             (1, f"{boiler} alpha beta gamma delta epsilon zeta"),
             (2, f"{boiler} alpha beta gamma delta epsilon eta"),
@@ -152,14 +156,16 @@ def test_dedup_against_corpus_exact_and_minhash(spark):
     exact matches by digest, near-dups by asymmetric LSH + verify."""
     from dbimport_spark.operators.text_dedup import dedup_against_corpus
 
-    corpus = spark.createDataFrame(
+    corpus = local_frame(
+        spark,
         [
             (0, "the quick brown fox jumps over the lazy dog every day"),
             (2, "completely different corpus content about spark engines"),
         ],
         "doc_id long, text string",
     )
-    batch = spark.createDataFrame(
+    batch = local_frame(
+        spark,
         [
             (11, "the quick brown fox jumps over the lazy dog every day"),  # exact dup
             (13, "the quick brown fox jumps over the lazy dog every night"),  # near-dup

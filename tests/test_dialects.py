@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbimport_spark.plans import dialects as D
+from dbimport_spark.session import local_frame
 
 SCHEMA = T.StructType(
     [
@@ -223,7 +224,7 @@ def test_live_derby_dialect_export_with_evolution(spark, tmp_path):
     url = f"jdbc:derby:{os.path.join(str(tmp_path), 'ddldb')};create=true"
 
     def log(rows):
-        return spark.createDataFrame(rows, CHANGE_SCHEMA)
+        return local_frame(spark, rows, CHANGE_SCHEMA)
 
     table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=4)
     eng = CDCEngine(spark, table)

@@ -15,6 +15,7 @@ from dbimport_spark.lake.table import LakeTable
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.export import ParquetExporter
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.changelog import LogTruncatedError
 from dbimport_spark.sources.loggen import generate_changes, write_changes_segments
 from dbimport_spark.streaming.stream import run_stream, stream_changes
@@ -29,7 +30,8 @@ def test_widening_through_replay(spark, tmp_path):
     readable through the wider schema with values intact."""
     table = CDCEngine.create_table(str(tmp_path / "w"), num_buckets=4)
     eng = CDCEngine(spark, table)
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [_row(1, "I", "k1", [1, 2], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     )
     eng.apply_batch(b1, 0, 1)
@@ -37,7 +39,8 @@ def test_widening_through_replay(spark, tmp_path):
         "n_tok"
     ] == "int"
 
-    b2 = spark.createDataFrame(
+    b2 = local_frame(
+        spark,
         [_row(2, "I", "k2", [3], "web", dt.datetime(2024, 1, 2))], CHANGE_SCHEMA
     ).withColumn("n_tok", F.col("n_tok").cast("long"))
     eng.apply_batch(b2, 1, 2)
@@ -46,7 +49,8 @@ def test_widening_through_replay(spark, tmp_path):
     got = {(r["doc_id"], r["n_tok"]) for r in table.read(spark).collect()}
     assert got == {("k1", 2), ("k2", 1)}
     # and the reverse (narrower batch) needs no evolution at all
-    b3 = spark.createDataFrame(
+    b3 = local_frame(
+        spark,
         [_row(3, "U", "k1", [9], "web", dt.datetime(2024, 1, 3))], CHANGE_SCHEMA
     )  # n_tok back to int
     eng.apply_batch(b3, 2, 3)
@@ -61,12 +65,14 @@ def test_widening_through_replay(spark, tmp_path):
 def test_rename_suspected_raises_and_declared_rename_applies(spark, tmp_path):
     table = CDCEngine.create_table(str(tmp_path / "r"), num_buckets=4)
     eng = CDCEngine(spark, table)
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [_row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     )
     eng.apply_batch(b1, 0, 1)
 
-    renamed_batch = spark.createDataFrame(
+    renamed_batch = local_frame(
+        spark,
         [_row(2, "I", "k2", [2], "books", dt.datetime(2024, 1, 2))], CHANGE_SCHEMA
     ).withColumnRenamed("source", "origin")
     # undeclared: same position, same type => suspected rename, hard error
@@ -108,13 +114,13 @@ def test_merge_ts_strictly_monotonic_and_export_sees_second_window(spark, tmp_pa
     table = CDCEngine.create_table(str(tmp_path / "m"), num_buckets=4)
     eng = CDCEngine(spark, table)
     same_ts = dt.datetime(2024, 3, 1, 12, 0, 0)
-    b1 = spark.createDataFrame([_row(1, "I", "k1", [1], "web", same_ts)], CHANGE_SCHEMA)
+    b1 = local_frame(spark, [_row(1, "I", "k1", [1], "web", same_ts)], CHANGE_SCHEMA)
     eng.apply_batch(b1, 0, 1)
     ex = ParquetExporter(table, str(tmp_path / "out"))
     s1 = ex.export(spark, mode="incr")
     assert s1["last_run_rows"] == 1
 
-    b2 = spark.createDataFrame([_row(2, "I", "k2", [2], "web", same_ts)], CHANGE_SCHEMA)
+    b2 = local_frame(spark, [_row(2, "I", "k2", [2], "web", same_ts)], CHANGE_SCHEMA)
     eng.apply_batch(b2, 1, 2)
     ts = {r["doc_id"]: r["dl_update_ts"] for r in table.read(spark).collect()}
     assert ts["k2"] > ts["k1"]  # strictly monotonic despite equal commit_ts
@@ -142,7 +148,8 @@ def test_version_hint_recovery(spark, tmp_path):
     root = str(tmp_path / "vh")
     table = CDCEngine.create_table(root, num_buckets=4)
     eng = CDCEngine(spark, table)
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [_row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     )
     eng.apply_batch(b1, 0, 1)
@@ -221,12 +228,14 @@ def test_rename_propagates_to_history_table(spark, tmp_path):
     table = CDCEngine.create_table(str(tmp_path / "rh"), num_buckets=4)
     hist = CDCEngine.create_history_table(str(tmp_path / "rhh"), num_buckets=4)
     eng = CDCEngine(spark, table, history_table=hist)
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [_row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     )
     eng.apply_batch(b1, 0, 1)
 
-    b2 = spark.createDataFrame(
+    b2 = local_frame(
+        spark,
         [_row(2, "I", "k2", [2], "books", dt.datetime(2024, 1, 2))], CHANGE_SCHEMA
     ).withColumnRenamed("source", "origin")
     eng2 = CDCEngine(
@@ -357,7 +366,8 @@ def test_full_reload_recovers_incompatible_change(spark, tmp_path):
 
     table = CDCEngine.create_table(str(tmp_path / "fr"), num_buckets=4)
     eng = CDCEngine(spark, table, checkpoint_dir=str(tmp_path / "frc"))
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [_row(1, "I", "k1", [1, 2], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     )
     eng.apply_batch(b1, 0, 1)
@@ -365,14 +375,16 @@ def test_full_reload_recovers_incompatible_change(spark, tmp_path):
 
     # upstream changed n_tok int -> string: incompatible, refuses with the
     # recovery command in the message
-    bad = spark.createDataFrame(
+    bad = local_frame(
+        spark,
         [_row(2, "I", "k2", [3], "web", dt.datetime(2024, 1, 2))], CHANGE_SCHEMA
     ).withColumn("n_tok", F.col("n_tok").cast("string"))
     with pytest.raises(SchemaEvolutionError, match="full_reload"):
         eng.apply_batch(bad, 1, 2)
 
     # the declared reload replays the WHOLE log at the new schema
-    full_log = spark.createDataFrame(
+    full_log = local_frame(
+        spark,
         [
             _row(1, "I", "k1", [1, 2], "web", dt.datetime(2024, 1, 1)),
             _row(2, "I", "k2", [3], "web", dt.datetime(2024, 1, 2)),
@@ -475,7 +487,8 @@ def test_comment_metadata_evolution(spark, tmp_path):
     assert meta["source"].get("comment") == "origin system"
 
     # comment-free later batch: comment survives
-    b2 = spark.createDataFrame(
+    b2 = local_frame(
+        spark,
         [_row(2, "I", "k2", [2], "web", dt.datetime(2024, 1, 2))], CHANGE_SCHEMA
     )
     eng.apply_batch(b2, 1, 2)
@@ -515,14 +528,16 @@ def test_mixed_name_log_replay_and_repair_coalesce_former_names(spark, tmp_path)
 
     log_dir = str(tmp_path / "mxlog")
     os.makedirs(log_dir)
-    old_seg = spark.createDataFrame(
+    old_seg = local_frame(
+        spark,
         [
             _row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1)),
             _row(2, "I", "k2", [2], "books", dt.datetime(2024, 1, 1)),
         ],
         CHANGE_SCHEMA,
     )
-    new_seg = spark.createDataFrame(
+    new_seg = local_frame(
+        spark,
         [
             _row(3, "U", "k2", [9], "press", dt.datetime(2024, 1, 2)),
             _row(4, "I", "k3", [3], "wiki", dt.datetime(2024, 1, 2)),
@@ -544,7 +559,7 @@ def test_mixed_name_log_replay_and_repair_coalesce_former_names(spark, tmp_path)
 
     # repair over the mixed log: re-fold k1 (old-name segment only) — its
     # value must survive the rename-aware alignment
-    eng.repair_keys(mixed, spark.createDataFrame([("k1",)], "doc_id string"))
+    eng.repair_keys(mixed, local_frame(spark, [("k1",)], "doc_id string"))
     got = {(r["doc_id"], r["origin"]) for r in table.read(spark).collect()}
     assert got == {("k1", "web"), ("k2", "press"), ("k3", "wiki")}
 
@@ -556,7 +571,8 @@ def test_undeclared_former_name_reuse_is_refused_loudly(spark, tmp_path):
     the epoch-collision guard, never silently coalesced into 'origin'."""
     table = CDCEngine.create_table(str(tmp_path / "ud"), num_buckets=4)
     eng = CDCEngine(spark, table, renames={"source": "origin"})
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [_row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     ).withColumnRenamed("source", "origin")
     eng.apply_batch(b1, 0, 1)
@@ -564,7 +580,8 @@ def test_undeclared_former_name_reuse_is_refused_loudly(spark, tmp_path):
 
     # fresh engine, NO declared renames: a batch column named 'source'
     fresh = CDCEngine(spark, table, rename_check=False)
-    b2 = spark.createDataFrame(
+    b2 = local_frame(
+        spark,
         [_row(2, "I", "k2", [2], "books", dt.datetime(2024, 1, 2))], CHANGE_SCHEMA
     ).withColumn("origin", F.lit("b2"))  # carries BOTH origin and source
     with pytest.raises(ValueError, match="physical name"):
@@ -622,14 +639,16 @@ def test_full_reload_folds_declared_former_names(spark, tmp_path):
     )
     log_dir = str(tmp_path / "frnlog")
     os.makedirs(log_dir)
-    old_seg = spark.createDataFrame(
+    old_seg = local_frame(
+        spark,
         [
             _row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1)),
             _row(2, "I", "k2", [2], "books", dt.datetime(2024, 1, 1)),
         ],
         CHANGE_SCHEMA,
     )
-    new_seg = spark.createDataFrame(
+    new_seg = local_frame(
+        spark,
         [
             _row(3, "U", "k2", [9], "press", dt.datetime(2024, 1, 2)),
             _row(4, "I", "k3", [3], "wiki", dt.datetime(2024, 1, 2)),
@@ -667,18 +686,21 @@ def test_former_name_wider_type_refused(spark, tmp_path):
 
     table = CDCEngine.create_table(str(tmp_path / "fw"), num_buckets=4)
     eng = CDCEngine(spark, table, renames={"n_tok": "tok_n"})
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [_row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     )
     eng.apply_batch(b1, 0, 1)
-    b2 = spark.createDataFrame(
+    b2 = local_frame(
+        spark,
         [_row(2, "I", "k2", [2], "web", dt.datetime(2024, 1, 2))], CHANGE_SCHEMA
     ).withColumnRenamed("n_tok", "tok_n")
     eng.apply_batch(b2, 1, 2)
     assert "tok_n" in table.current().schema.fieldNames()
 
     # old name resurfaces WIDER (int -> bigint): refuse loudly
-    b3 = spark.createDataFrame(
+    b3 = local_frame(
+        spark,
         [_row(3, "I", "k3", [3], "web", dt.datetime(2024, 1, 3))], CHANGE_SCHEMA
     ).withColumn("n_tok", F.col("n_tok").cast("bigint"))
     with pytest.raises(SchemaEvolutionError, match="wider"):
@@ -691,14 +713,16 @@ def test_plan_evolution_matches_apply_refusals(spark, tmp_path):
     included — and green-light what replay accepts."""
     table = CDCEngine.create_table(str(tmp_path / "pe"), num_buckets=4)
     eng = CDCEngine(spark, table, renames={"n_tok": "tok_n"})
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [_row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     )
     assert eng.plan_evolution(b1.schema)["would_apply"] is True
     eng.apply_batch(b1, 0, 1)
 
     # declared rename: simulated, not an add
-    b2 = spark.createDataFrame(
+    b2 = local_frame(
+        spark,
         [_row(2, "I", "k2", [2], "web", dt.datetime(2024, 1, 2))], CHANGE_SCHEMA
     ).withColumnRenamed("n_tok", "tok_n")
     rep = eng.plan_evolution(b2.schema)
@@ -708,7 +732,8 @@ def test_plan_evolution_matches_apply_refusals(spark, tmp_path):
     eng.apply_batch(b2, 1, 2)
 
     # former name back WIDER: planner refuses exactly like alignment does
-    b3 = spark.createDataFrame(
+    b3 = local_frame(
+        spark,
         [_row(3, "I", "k3", [3], "web", dt.datetime(2024, 1, 3))], CHANGE_SCHEMA
     ).withColumn("n_tok", F.col("n_tok").cast("bigint"))
     rep = eng.plan_evolution(b3.schema)
@@ -717,7 +742,8 @@ def test_plan_evolution_matches_apply_refusals(spark, tmp_path):
     # add colliding with a historical physical name: planner refuses with
     # the commit guard's message (batch carries BOTH tok_n and a re-added
     # n_tok of a DIFFERENT type so the rename heuristic cannot fire)
-    b4 = spark.createDataFrame(
+    b4 = local_frame(
+        spark,
         [(4, "I", "k4", [4], 1, "s", "web", dt.datetime(2024, 1, 4))],
         "lsn long, op string, doc_id string, tokens array<int>, "
         "tok_n int, n_tok string, source string, commit_ts timestamp",

@@ -5,6 +5,7 @@ import datetime as dt
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.export import ParquetExporter
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 
@@ -52,12 +53,12 @@ def test_incremental_export_sees_soft_delete_tombstones(spark, tmp_path):
     )
     eng = CDCEngine(spark, table, delete_mode="soft")
     rows = [(1, "I", "k1", [1], 1, "web", dt.datetime(2024, 1, 1))]
-    eng.apply_batch(spark.createDataFrame(rows, CHANGE_SCHEMA), 0, 1)
+    eng.apply_batch(local_frame(spark, rows, CHANGE_SCHEMA), 0, 1)
     ex = ParquetExporter(table, str(tmp_path / "out2"), include_audit=True)
     ex.export(spark, mode="incr")
     # soft-delete k1 in a later batch
     rows2 = [(2, "D", "k1", None, None, None, dt.datetime(2024, 2, 1))]
-    eng.apply_batch(spark.createDataFrame(rows2, CHANGE_SCHEMA), 1, 2)
+    eng.apply_batch(local_frame(spark, rows2, CHANGE_SCHEMA), 1, 2)
     s = ex.export(spark, mode="incr")
     assert s["last_run_rows"] == 1
     out = spark.read.parquet(s["last_run_dir"]).collect()
@@ -151,7 +152,8 @@ def test_snapshot_export_excludes_tombstones(spark, tmp_path):
     )
     eng = CDCEngine(spark, table)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(1, "I", "k1", [1] * 3, 3, "a", ts),
              (2, "I", "k2", [2] * 4, 4, "b", ts),
              (3, "D", "k1", None, None, None, ts)],

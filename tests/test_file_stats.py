@@ -11,6 +11,7 @@ from dbimport_spark.lake.table import ts_micros
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.export import ParquetExporter
 from dbimport_spark.schema import AUDIT_UPDATE
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 EVENT_SCHEMA = T.StructType(
@@ -96,7 +97,8 @@ def test_export_scans_only_touched_buckets(spark, tmp_path):
     # touch exactly one key — via the MOR path, so the touched bucket
     # holds a delta file whose stats must keep the bucket readable
     key = table.read(spark).select("doc_id").orderBy("doc_id").first()[0]
-    batch = spark.createDataFrame(
+    batch = local_frame(
+        spark,
         [(100_000, "U", key, [7, 7, 7], 3, "stats-test")], EVENT_SCHEMA
     )
     mor = CDCEngine(spark, table, write_mode="mor")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.export import export_to_jdbc
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.jdbc import JdbcScan, plan_sessions
 from dbimport_spark.sources.loggen import generate_changes
 
@@ -137,7 +138,7 @@ def test_cdc_jdbc_export_propagates_deletes_and_resumes(spark, tmp_path):
     TS = dt.datetime(2024, 1, 1)
 
     def log(rows):
-        return spark.createDataFrame(rows, CHANGE_SCHEMA)
+        return local_frame(spark, rows, CHANGE_SCHEMA)
 
     url = _url(tmp_path, "cdcdb")
     table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=4)
@@ -198,7 +199,7 @@ def test_cdc_jdbc_export_gap_full_reconcile(spark, tmp_path):
     TS = dt.datetime(2024, 1, 1)
 
     def log(rows):
-        return spark.createDataFrame(rows, CHANGE_SCHEMA)
+        return local_frame(spark, rows, CHANGE_SCHEMA)
 
     url = _url(tmp_path, "gapdb")
     table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=4)
@@ -305,7 +306,7 @@ def test_cdc_jdbc_export_stream_follower(spark, tmp_path):
     TS = dt.datetime(2024, 1, 1)
 
     def log(rows):
-        return spark.createDataFrame(rows, CHANGE_SCHEMA)
+        return local_frame(spark, rows, CHANGE_SCHEMA)
 
     def _wait(pred, timeout=120):
         t0 = time.time()
@@ -387,7 +388,8 @@ def test_cli_cdc_export_stream_drains_then_stops(spark, tmp_path, capsys):
     table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=2)
     eng = CDCEngine(spark, table)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(1, "I", "k1", [1] * 3, 3, "a", TS),
              (2, "I", "k2", [2] * 4, 4, "b", TS)], CHANGE_SCHEMA
         ), 0, 2,
@@ -430,7 +432,7 @@ def test_cdc_export_stream_refuses_straddling_window(spark, tmp_path):
     TS = dt.datetime(2024, 1, 1)
 
     def log(rows):
-        return spark.createDataFrame(rows, CHANGE_SCHEMA)
+        return local_frame(spark, rows, CHANGE_SCHEMA)
 
     def _wait(pred, timeout=120):
         t0 = time.time()

@@ -14,6 +14,7 @@ from dbimport_spark.plans.lag import follower_lag, log_max_lsn, source_lag
 from dbimport_spark.plans.matview import AggSpec, create_view, sync_view
 from dbimport_spark.plans.mirror import sync_mirror
 from dbimport_spark.plans.registry import TableEntry, TableRegistry
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes, write_changes
 
 
@@ -166,7 +167,8 @@ def test_log_bounds_resolve_leaf_index_past_struct(spark, tmp_path):
     from dbimport_spark.plans.lag import log_lsn_bounds, log_max_lsn
 
     log = str(tmp_path / "structlog")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [((1, 999), 7), ((2, 888), 9)],
         "doc struct<a:int, b:int>, lsn long",
     ).coalesce(1).write.parquet(log)

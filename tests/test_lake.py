@@ -13,6 +13,7 @@ from dbimport_spark.lake.evolve import (
     evolve_schema,
 )
 from dbimport_spark.lake.table import LakeTable
+from dbimport_spark.session import local_frame
 
 SCHEMA = T.StructType(
     [
@@ -23,7 +24,7 @@ SCHEMA = T.StructType(
 
 
 def _write(table, spark, rows, version_dir):
-    df = spark.createDataFrame(rows, SCHEMA).withColumn(
+    df = local_frame(spark, rows, SCHEMA).withColumn(
         "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")
     )
     return table.write_data_files(spark, df, version_dir)
@@ -50,7 +51,7 @@ def test_bucket_replacement_and_pruning(spark, tmp_path):
     t.commit(f1, {f.bucket for f in f1})
     # replace only the bucket containing 'a'
     a_bucket = (
-        spark.createDataFrame([("a",)], "doc_id string")
+        local_frame(spark, [("a",)], "doc_id string")
         .select(F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int").alias("b"))
         .first()["b"]
     )

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import AUDIT_IUD, AUDIT_LSN, CHANGE_SCHEMA, PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes, write_changes_segments
 from dbimport_spark.streaming.stream import run_stream, stream_changes
 from tests.oracle import as_tuple_set, lww_fold
@@ -91,7 +92,8 @@ def test_apply_late_gate_semantics(spark, tmp_path):
         str(tmp_path / "t"), num_buckets=4, soft_delete=True, track_lsn=True
     )
     eng = CDCEngine(spark, table)
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [
             _row(10, "I", "k1", [1], "web", dt.datetime(2024, 1, 1)),
             _row(20, "D", "k1", None, None, dt.datetime(2024, 1, 2)),
@@ -105,7 +107,8 @@ def test_apply_late_gate_semantics(spark, tmp_path):
 
     # late U@15 for k1 loses to the tombstone@20 (no resurrect);
     # late U@15 for k2 beats its row@10
-    late = spark.createDataFrame(
+    late = local_frame(
+        spark,
         [
             _row(15, "U", "k1", [9], "press", dt.datetime(2024, 1, 3)),
             _row(15, "U", "k2", [7], "press", dt.datetime(2024, 1, 3)),
@@ -119,7 +122,8 @@ def test_apply_late_gate_semantics(spark, tmp_path):
 
     # late U@25 revives k1 (above the tombstone's version)
     eng.apply_late(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [_row(25, "U", "k1", [5], "wiki", dt.datetime(2024, 1, 4))],
             CHANGE_SCHEMA,
         )
@@ -196,14 +200,16 @@ def test_apply_late_refuses_null_merge_keys(spark, tmp_path):
     )
     eng = CDCEngine(spark, table)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [_row(10, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))],
             CHANGE_SCHEMA,
         ),
         0,
         10,
     )
-    late = spark.createDataFrame(
+    late = local_frame(
+        spark,
         [_row(5, "I", "k2", [2], "web", dt.datetime(2024, 1, 1))], CHANGE_SCHEMA
     ).withColumnRenamed("doc_id", "legacy_id")
     with pytest.raises(ValueError, match="undeclared former name"):

@@ -13,6 +13,7 @@ from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.export import ParquetExporter
 from dbimport_spark.plans.validate import fold_expected, reconcile
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.session import local_frame
 
 
 def _row(lsn, op, key, toks, src, ts):
@@ -34,7 +35,8 @@ def test_full_lifecycle(spark, tmp_path):
     ex = ParquetExporter(table, str(tmp_path / "out"))
 
     # 1. initial window
-    b1 = spark.createDataFrame(
+    b1 = local_frame(
+        spark,
         [
             _row(1, "I", "k1", [1, 2], "web", dt.datetime(2024, 1, 1)),
             _row(2, "I", "k2", [3], "books", dt.datetime(2024, 1, 1)),
@@ -45,7 +47,8 @@ def test_full_lifecycle(spark, tmp_path):
     assert ex.export(spark, mode="incr")["last_run_rows"] == 2
 
     # 2. additive evolution mid-stream (new nullable column)
-    b2 = spark.createDataFrame(
+    b2 = local_frame(
+        spark,
         [_row(3, "I", "k3", [4, 5], "wiki", dt.datetime(2024, 1, 2))],
         CHANGE_SCHEMA,
     ).withColumn("quality", F.lit(0.9))
@@ -55,7 +58,8 @@ def test_full_lifecycle(spark, tmp_path):
 
     # 3. declared rename lands with the next window
     b3 = (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [_row(4, "U", "k1", [9], "press", dt.datetime(2024, 1, 3))],
             CHANGE_SCHEMA,
         )
@@ -134,7 +138,8 @@ def test_full_lifecycle(spark, tmp_path):
         eng.apply_batch(bad, 6, 7)
 
     # 6. declared full reload at the new schema converges on the new log
-    reload_log = spark.createDataFrame(
+    reload_log = local_frame(
+        spark,
         [
             (1, "I", "k1", [9], 1, "press", "high", dt.datetime(2024, 2, 1)),
             (2, "I", "k2", [8, 8], 2, "mixed", "low", dt.datetime(2024, 2, 1)),

@@ -19,6 +19,7 @@ from dbimport_spark.plans.matview import (
     verify_view,
 )
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 TS = dt.datetime(2024, 1, 1)
@@ -26,7 +27,7 @@ SPEC = AggSpec(group_cols=["source"], sum_cols=["n_tok"])
 
 
 def _log(spark, rows):
-    return spark.createDataFrame(rows, CHANGE_SCHEMA)
+    return local_frame(spark, rows, CHANGE_SCHEMA)
 
 
 def _pair(spark, tmp_path, **view_kw):

@@ -11,13 +11,14 @@ from pyspark.sql import functions as F
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.mirror import source_version_mirrored, sync_mirror
 from dbimport_spark.schema import CHANGE_SCHEMA, PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 TS = dt.datetime(2024, 1, 1)
 
 
 def _log(spark, rows):
-    return spark.createDataFrame(rows, CHANGE_SCHEMA)
+    return local_frame(spark, rows, CHANGE_SCHEMA)
 
 
 def _payload_state(spark, table):
@@ -172,7 +173,8 @@ def test_mirror_carries_evolved_columns(spark, tmp_path):
     src, mir = _pair(spark, tmp_path)
     src.apply_batch(_log(spark, [(1, "I", "k1", [1], 1, "a", TS)]), 0, 1)
     sync_mirror(spark, src.table, mir)
-    evolved = spark.createDataFrame(
+    evolved = local_frame(
+        spark,
         [(2, "U", "k1", [1, 2], 2, "a", TS, 0.9)],
         "lsn long, op string, doc_id string, tokens array<int>, n_tok int, "
         "source string, commit_ts timestamp, quality float",

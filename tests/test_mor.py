@@ -21,6 +21,7 @@ from dbimport_spark.lake.maintenance import (
 from dbimport_spark.lake.table import DataFile, LakeTable
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 from tests.oracle import as_tuple_set, lww_fold
 from tests.test_plans import explain_str
@@ -55,7 +56,7 @@ def _mini_table(spark, tmp_path, rows, name="mini"):
         ]
     )
     t = LakeTable.create(str(tmp_path / name), schema=schema, num_buckets=4)
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
     out = df.withColumn("_bucket", t.bucket_expr())
     files = t.write_data_files(spark, out, "base-0")
     t.commit(files, replaced_buckets=set(range(4)))
@@ -63,7 +64,7 @@ def _mini_table(spark, tmp_path, rows, name="mini"):
 
 
 def _commit_kind(spark, t, schema, rows, kind, cols=None):
-    df = spark.createDataFrame(rows, cols or schema)
+    df = local_frame(spark, rows, cols or schema)
     out = df.withColumn(
         "_bucket", t.bucket_expr(key_col="doc_id", num_buckets=4)
     )
@@ -301,9 +302,9 @@ def test_mor_audit_columns(spark, tmp_path):
         return (lsn, op, k, toks, len(toks) if toks else None, "s")
 
     eng = _engine(spark, tmp_path, "maud", write_mode="mor")
-    b1 = spark.createDataFrame([ev(1, "I", "a", [1]), ev(2, "I", "b", [2])], schema)
+    b1 = local_frame(spark, [ev(1, "I", "a", [1]), ev(2, "I", "b", [2])], schema)
     eng.apply_batch(b1, 0, 2)
-    b2 = spark.createDataFrame([ev(3, "U", "a", [9, 9]), ev(4, "D", "b", None)], schema)
+    b2 = local_frame(spark, [ev(3, "U", "a", [9, 9]), ev(4, "D", "b", None)], schema)
     eng.apply_batch(b2, 2, 4)
     rows = {r.doc_id: r for r in eng.table.read(spark).collect()}
     assert set(rows) == {"a"}
@@ -326,10 +327,10 @@ def test_mor_evolution_added_column(spark, tmp_path):
         ]
     )
     eng = _engine(spark, tmp_path, "mev", write_mode="mor")
-    b1 = spark.createDataFrame([(1, "I", "a", [1], 1, "s")], base_schema)
+    b1 = local_frame(spark, [(1, "I", "a", [1], 1, "s")], base_schema)
     eng.apply_batch(b1, 0, 1)
     evolved = base_schema.add(T.StructField("lang", T.StringType(), True))
-    b2 = spark.createDataFrame([(2, "U", "a", [2], 1, "s", "en")], evolved)
+    b2 = local_frame(spark, [(2, "U", "a", [2], 1, "s", "en")], evolved)
     eng.apply_batch(b2, 1, 2)
     row = eng.table.read(spark).collect()[0]
     assert row.lang == "en" and row.tokens == [2]
@@ -522,7 +523,8 @@ def test_inserts_only_track_lsn_tombstone_without_lv(spark):
     from dbimport_spark.operators.merge import inserts_only
     from dbimport_spark.schema import AUDIT_DELETE, AUDIT_IUD, AUDIT_LSN
 
-    batch = spark.createDataFrame(
+    batch = local_frame(
+        spark,
         [
             (1, "I", "a", [1], 1, "web"),
             (2, "D", "b", None, None, None),

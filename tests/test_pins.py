@@ -17,12 +17,13 @@ from dbimport_spark.lake.fsck import check_table
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.mirror import sync_mirror
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.session import local_frame
 
 TS = dt.datetime(2024, 1, 1)
 
 
 def _log(spark, rows):
-    return spark.createDataFrame(rows, CHANGE_SCHEMA)
+    return local_frame(spark, rows, CHANGE_SCHEMA)
 
 
 def _commits(spark, eng, n, lo=0):

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from dbimport_spark.operators.dedup import dedup_lww
 from dbimport_spark.operators.merge import merge_changes
 from dbimport_spark.plans.engine import CDCEngine
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes, write_changes
 
 
@@ -127,7 +128,8 @@ def test_neardup_scale_plans_have_no_nested_loop(spark):
     modes exist to avoid."""
     from dbimport_spark.operators.similarity import cosine_near_dup_pairs
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(i, [float((i * 7 + j) % 13) for j in range(8)]) for i in range(50)],
         "vec_id int, embedding array<float>",
     )
@@ -152,11 +154,13 @@ def test_corpus_dedup_plan_has_no_nested_loop(spark):
     nested-loop node (the corpus side is never self-joined either)."""
     from dbimport_spark.operators.text_dedup import dedup_against_corpus
 
-    corpus = spark.createDataFrame(
+    corpus = local_frame(
+        spark,
         [(i, f"corpus doc number {i} with some shared words") for i in range(0, 40, 2)],
         "doc_id long, text string",
     )
-    batch = spark.createDataFrame(
+    batch = local_frame(
+        spark,
         [(i, f"batch doc number {i} with some shared words") for i in range(1, 40, 2)],
         "doc_id long, text string",
     )
@@ -173,7 +177,8 @@ def test_pack_sequences_plan_is_partition_parallel(spark):
     (_pid, stratum) and the stratum offsets arrive via broadcast."""
     from dbimport_spark.operators.training import pack_sequences
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(f"d{i:03d}", f"s{i % 4}", 100 + i) for i in range(300)],
         "doc_id string, source string, n_tok int",
     )

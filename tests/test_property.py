@@ -9,6 +9,7 @@ from hypothesis import strategies as st
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import CHANGE_SCHEMA, PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from tests.oracle import as_tuple_set, lww_fold
 
 KEYS = ["a", "b", "c"]
@@ -35,7 +36,7 @@ def test_random_sequences_converge(spark, tmp_path_factory, ops, num_batches):
             rows.append(
                 (i, op, key, toks, len(toks), "web", dt.datetime(2024, 1, 1))
             )
-    log = spark.createDataFrame(rows, CHANGE_SCHEMA)
+    log = local_frame(spark, rows, CHANGE_SCHEMA)
     root = str(tmp_path_factory.mktemp("prop"))
     table = CDCEngine.create_table(root + "/t", num_buckets=4)
     CDCEngine(spark, table, broadcast_threshold_rows=2).replay(
@@ -84,7 +85,7 @@ def test_random_evolution_sequences_converge(spark, tmp_path_factory, steps):
             lsn += 1
             key = f"k{(si + k) % 5}"
             rows.append((lsn, "I", key, lsn * 10))
-        df = spark.createDataFrame(rows, "lsn long, op string, doc_id string, v long")
+        df = local_frame(spark, rows, "lsn long, op string, doc_id string, v long")
         if step == "widen":
             pass  # v already long: widening against the int table schema
         elif step == "plain":
@@ -149,16 +150,16 @@ def test_random_late_splits_converge_via_apply_late(
     late_rows = [r for r, m in zip(rows, mask) if m]
     if not applied_rows or not late_rows:
         return
-    log = spark.createDataFrame(rows, CHANGE_SCHEMA)
+    log = local_frame(spark, rows, CHANGE_SCHEMA)
     root = str(tmp_path_factory.mktemp("latep"))
     table = CDCEngine.create_table(
         root + "/t", num_buckets=4, soft_delete=True, track_lsn=True
     )
     eng = CDCEngine(spark, table, broadcast_threshold_rows=2)
     eng.replay(
-        spark.createDataFrame(applied_rows, CHANGE_SCHEMA), num_batches=1
+        local_frame(spark, applied_rows, CHANGE_SCHEMA), num_batches=1
     )
-    eng.apply_late(spark.createDataFrame(late_rows, CHANGE_SCHEMA))
+    eng.apply_late(local_frame(spark, late_rows, CHANGE_SCHEMA))
 
     live = table.read(spark).filter(F.col("dl_iud") != "D")
     got = as_tuple_set(
@@ -168,7 +169,7 @@ def test_random_late_splits_converge_via_apply_late(
     assert got == as_tuple_set(list(expected.values()), PAYLOAD_COLUMNS)
     # idempotent: re-delivering the late window commits nothing
     v = table.current().version
-    eng.apply_late(spark.createDataFrame(late_rows, CHANGE_SCHEMA))
+    eng.apply_late(local_frame(spark, late_rows, CHANGE_SCHEMA))
     assert table.current().version == v
 
 
@@ -215,7 +216,7 @@ def test_matview_random_sequences_equal_groupby(
             rows.append(
                 (i, op, key, toks, len(toks), grp, dt.datetime(2024, 1, 1))
             )
-    log = spark.createDataFrame(rows, CHANGE_SCHEMA)
+    log = local_frame(spark, rows, CHANGE_SCHEMA)
     root = str(tmp_path_factory.mktemp("mvprop"))
     table = CDCEngine.create_table(root + "/t", num_buckets=2)
     eng = CDCEngine(spark, table)

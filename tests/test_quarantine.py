@@ -12,6 +12,7 @@ from pyspark.sql import types as T
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.session import local_frame
 
 TS = dt.datetime(2024, 1, 1)
 
@@ -37,7 +38,7 @@ BAD = [
 
 
 def _log(spark, rows):
-    return spark.createDataFrame(rows, LAX_SCHEMA)
+    return local_frame(spark, rows, LAX_SCHEMA)
 
 
 def test_refuses_loudly_without_quarantine_dir(spark, tmp_path):
@@ -391,7 +392,7 @@ def test_replay_routes_null_lsn_rows_to_quarantine(spark, tmp_path):
 
 def _append_segment(spark, rows, path):
     """One immutable log segment (its own parquet file) per call."""
-    spark.createDataFrame(rows, LAX_SCHEMA).coalesce(1).write.mode(
+    local_frame(spark, rows, LAX_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(path)
 

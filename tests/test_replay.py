@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 from tests.oracle import as_tuple_set, lww_fold
 
@@ -97,7 +98,7 @@ def test_delete_then_reinsert_resurrects(spark, tmp_path):
     ]
     from dbimport_spark.schema import CHANGE_SCHEMA
 
-    log = spark.createDataFrame(rows, CHANGE_SCHEMA)
+    log = local_frame(spark, rows, CHANGE_SCHEMA)
     eng = _new_engine(spark, tmp_path, "t5")
     # apply event-by-event (each its own batch): exercises matched-delete and
     # not-matched-insert branches, then resurrection
@@ -116,7 +117,7 @@ def test_audit_columns(spark, tmp_path):
         (1, "I", "k1", [1], 1, "web", dt.datetime(2024, 1, 1)),
         (2, "I", "k2", [2], 1, "web", dt.datetime(2024, 1, 1)),
     ]
-    log1 = spark.createDataFrame(rows, CHANGE_SCHEMA)
+    log1 = local_frame(spark, rows, CHANGE_SCHEMA)
     eng = _new_engine(spark, tmp_path, "t6")
     eng.apply_batch(log1, 0, 2)
     # second batch: update k1 with NEW content, touch k2 with SAME content
@@ -124,7 +125,7 @@ def test_audit_columns(spark, tmp_path):
         (3, "U", "k1", [7, 8], 2, "web", dt.datetime(2024, 2, 1)),
         (4, "U", "k2", [2], 1, "web", dt.datetime(2024, 2, 1)),
     ]
-    eng.apply_batch(spark.createDataFrame(rows2, CHANGE_SCHEMA), 2, 4)
+    eng.apply_batch(local_frame(spark, rows2, CHANGE_SCHEMA), 2, 4)
     got = {r["doc_id"]: r.asDict() for r in eng.table.read(spark).collect()}
     assert got["k1"]["dl_iud"] == "U"
     assert got["k1"]["dl_update_ts"] > got["k1"]["dl_insert_ts"]
@@ -166,7 +167,7 @@ def test_n_tok_recomputed(spark, tmp_path):
     # log carries a WRONG n_tok; engine must recompute size(tokens)
     rows = [(1, "I", "k1", [1, 2, 3], 99, "web", dt.datetime(2024, 1, 1))]
     eng = _new_engine(spark, tmp_path, "t7")
-    eng.apply_batch(spark.createDataFrame(rows, CHANGE_SCHEMA), 0, 1)
+    eng.apply_batch(local_frame(spark, rows, CHANGE_SCHEMA), 0, 1)
     got = eng.table.read(spark).collect()[0]
     assert got["n_tok"] == 3
 

@@ -12,6 +12,7 @@ import pytest
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.registry import TableEntry, TableRegistry, replay_all
 from dbimport_spark.server import make_server
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes, write_changes
 
 
@@ -156,7 +157,7 @@ def test_server_quarantine_inventory(spark, tmp_path):
         (1, "I", "k1", [1], 1, "web", TS),
         (2, "I", None, [2], 1, "web", TS),  # null merge key -> parked
     ]
-    spark.createDataFrame(rows, LAX).coalesce(1).write.parquet(
+    local_frame(spark, rows, LAX).coalesce(1).write.parquet(
         str(tmp_path / "log")
     )
     CDCEngine.create_table(str(tmp_path / "t"), num_buckets=2)
@@ -267,7 +268,7 @@ def test_server_metrics_quarantine_series(spark, tmp_path):
         (1, "I", "k1", [1], 1, "web", TS),
         (2, "I", None, [2], 1, "web", TS),  # null merge key -> parked
     ]
-    spark.createDataFrame(rows, LAX).coalesce(1).write.parquet(
+    local_frame(spark, rows, LAX).coalesce(1).write.parquet(
         str(tmp_path / "log")
     )
     CDCEngine.create_table(str(tmp_path / "t"), num_buckets=2)

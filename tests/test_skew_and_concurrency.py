@@ -79,6 +79,20 @@ def test_commit_race_duplicate_window_skipped(spark, tmp_path):
     assert rec["converged"], rec
 
 
+def _await_ready(tmp_path, tags, procs, timeout=300.0):
+    """Block until each child process has written its ``ready-<tag>``
+    marker, i.e. is set up and spinning on the start barrier; fail at once
+    if a child exits first."""
+    import time
+
+    deadline = time.monotonic() + timeout
+    while not all((tmp_path / f"ready-{t}").exists() for t in tags):
+        dead = [p for p in procs if p.poll() is not None]
+        assert not dead, f"child exited before the barrier:\n{dead[0].communicate()}"
+        assert time.monotonic() < deadline, "children not at the barrier in time"
+        time.sleep(0.05)
+
+
 def test_two_process_concurrent_replay_converges(spark, tmp_path):
     """Two OS PROCESSES replay the same log into the same table
     concurrently through the durable sqlite catalog: version races resolve
@@ -111,6 +125,7 @@ def test_two_process_concurrent_replay_converges(spark, tmp_path):
         f"changes = spark.read.parquet({log_path!r})\n"
         f"t = LakeTable.load({root!r}, catalog=SqliteCatalog())\n"
         "eng = CDCEngine(spark, t)\n"
+        f"open(os.path.join({str(tmp_path)!r}, 'ready-' + tag), 'w').close()\n"
         f"while not os.path.exists({str(go)!r}):\n"
         "    time.sleep(0.01)\n"
         "stats = eng.replay(changes, num_batches=4)\n"
@@ -125,9 +140,7 @@ def test_two_process_concurrent_replay_converges(spark, tmp_path):
         )
         for tag in ("A", "B")
     ]
-    import time
-
-    time.sleep(20)  # both JVMs up and spinning on the barrier
+    _await_ready(tmp_path, ("A", "B"), procs)  # both spinning on the barrier
     go.write_text("go")
     outs = [p.communicate(timeout=600) for p in procs]
     results = []

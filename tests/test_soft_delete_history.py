@@ -7,11 +7,12 @@ from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 
 def _log(spark, rows):
-    return spark.createDataFrame(rows, CHANGE_SCHEMA)
+    return local_frame(spark, rows, CHANGE_SCHEMA)
 
 
 def test_soft_delete_marks_and_revives(spark, tmp_path):

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from dbimport_spark.lake.maintenance import buckets_needing_compaction, compact
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.validate import custom_query_check, fold_expected
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.changelog import (
     ChangeLogSource,
     LogTruncatedError,
@@ -240,7 +241,8 @@ def test_purge_tombstones_retention(spark, tmp_path):
     # two deletes with DIFFERENT commit_ts (merge_ts = max batch commit_ts,
     # so apply in separate batches to give each tombstone its own age)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 _row(1, "I", "old-dead", [1], "web", dt.datetime(2024, 1, 1)),
                 _row(2, "I", "alive", [2], "web", dt.datetime(2024, 1, 1)),
@@ -253,7 +255,8 @@ def test_purge_tombstones_retention(spark, tmp_path):
         4,
     )
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [_row(5, "D", "new-dead", None, None, dt.datetime(2024, 6, 1))],
             CHANGE_SCHEMA,
         ),
@@ -354,7 +357,8 @@ def test_purge_tombstones_mor_exact_count(spark, tmp_path):
     # batch 1: inserts (base); batch 2: update one key (delta supersedes
     # its base row) and delete another (tombstone delta + delete file)
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 _row(1, "I", "a", [1], "web", dt.datetime(2024, 1, 1)),
                 _row(2, "I", "b", [2], "web", dt.datetime(2024, 1, 1)),
@@ -365,7 +369,8 @@ def test_purge_tombstones_mor_exact_count(spark, tmp_path):
         0, 3,
     )
     eng.apply_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 _row(4, "U", "a", [9], "web", dt.datetime(2024, 1, 2)),
                 _row(5, "D", "b", None, None, dt.datetime(2024, 1, 2)),
@@ -396,7 +401,8 @@ def test_repair_keys_empty_scope_skips(spark, tmp_path):
     root = str(tmp_path / "rk")
     table = CDCEngine.create_table(root, num_buckets=2)
     eng = CDCEngine(spark, table, checkpoint_dir=f"{root}/_ckpt")
-    log = spark.createDataFrame(
+    log = local_frame(
+        spark,
         [(1, "I", "a", [1], 1, "web", dt.datetime(2024, 1, 1))],
         CHANGE_SCHEMA,
     )
@@ -413,10 +419,11 @@ def test_asof_join_suffix_collision_refused(spark):
     downstream reference AMBIGUOUS_REFERENCE far from the cause."""
     from dbimport_spark.operators.temporal import asof_join
 
-    left = spark.createDataFrame(
+    left = local_frame(
+        spark,
         [("k", 10, 1, 2)], "id string, ts long, v long, v_r long"
     )
-    right = spark.createDataFrame([("k", 9, 7)], "id string, ts long, v long")
+    right = local_frame(spark, [("k", 9, 7)], "id string, ts long, v long")
     with pytest.raises(ValueError, match="collide"):
         asof_join(left, right, on="id", left_ts="ts", right_ts="ts")
     # a non-colliding suffix works

@@ -3,6 +3,7 @@ converge to the same state as batch replay (SURVEY.md §2.7)."""
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import (
     generate_changes,
     write_changes,
@@ -321,7 +322,8 @@ def test_stream_recover_late_prerename_segment_keeps_payload(spark, tmp_path):
     )
     log_dir = str(tmp_path / "prlog")
     os.makedirs(log_dir)
-    new_seg = spark.createDataFrame(
+    new_seg = local_frame(
+        spark,
         [
             (2, "U", "k1", [9], 1, "press", None),
             (3, "I", "k3", [3], 1, "wiki", None),
@@ -343,7 +345,8 @@ def test_stream_recover_late_prerename_segment_keeps_payload(spark, tmp_path):
     # late PRE-rename segment: lsn 1 carries k2's only row image under the
     # OLD column name — if recover trusted the fixed-schema stream frame,
     # k2 would materialize with origin=null
-    late = spark.createDataFrame(
+    late = local_frame(
+        spark,
         [(1, "I", "k2", [2], 1, "web", None)], CHANGE_SCHEMA
     )
     stage = str(tmp_path / "prstage")
@@ -706,7 +709,7 @@ def test_stream_parked_dead_letters_not_rewedged_or_reparked(spark, tmp_path):
     log_dir = str(tmp_path / "log")
 
     def seg(rows):
-        spark.createDataFrame(rows, LAX).coalesce(1).write.mode(
+        local_frame(spark, rows, LAX).coalesce(1).write.mode(
             "append"
         ).parquet(log_dir)
         time.sleep(0.05)  # distinct mtimes: the WAL-tailer delivery order
@@ -817,7 +820,8 @@ def test_recover_parks_dead_letters_from_late_segment(spark, tmp_path):
     qdir = str(tmp_path / "rpq")
     eng = CDCEngine(spark, table, quarantine_dir=qdir)
 
-    fresh = spark.createDataFrame(
+    fresh = local_frame(
+        spark,
         [
             (10, "I", "a", [1], 1, "web", TS),
             (11, "I", "b", [2], 1, "web", TS),
@@ -838,7 +842,8 @@ def test_recover_parks_dead_letters_from_late_segment(spark, tmp_path):
     assert table.last_lsn() == 11
 
     # late segment: one genuinely late ordered row + one null-lsn row
-    late = spark.createDataFrame(
+    late = local_frame(
+        spark,
         [
             (5, "I", "c", [9], 1, "web", TS),
             (None, "I", "zz", [7], 1, "web", TS),

@@ -6,6 +6,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from dbimport_spark.operators.temporal import asof_join, sessionize
+from dbimport_spark.session import local_frame
 
 
 def _ts(s: str) -> dt.datetime:
@@ -14,7 +15,8 @@ def _ts(s: str) -> dt.datetime:
 
 def _quotes(spark):
     # right side: per-key quote history
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("a", _ts("2024-01-01 10:00:00"), 100),
             ("a", _ts("2024-01-01 10:00:05"), 105),
@@ -27,7 +29,8 @@ def _quotes(spark):
 
 def _trades(spark):
     # left side: events to enrich
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (1, "a", _ts("2024-01-01 10:00:03")),   # latest quote <= : 10:00:00
             (2, "a", _ts("2024-01-01 10:00:05")),   # equal ts is INCLUSIVE: 105
@@ -100,7 +103,8 @@ def test_asof_single_exchange(spark):
 
 
 def test_sessionize_exact(spark):
-    ev = spark.createDataFrame(
+    ev = local_frame(
+        spark,
         [
             ("u1", _ts("2024-01-01 10:00:00"), 1),
             ("u1", _ts("2024-01-01 10:10:00"), 2),   # 600s gap: same session
@@ -118,7 +122,8 @@ def test_sessionize_exact(spark):
 def test_sessionize_numeric_ts_and_single_exchange(spark):
     from tests.test_plans import explain_str
 
-    ev = spark.createDataFrame(
+    ev = local_frame(
+        spark,
         [("a", 0, 1), ("a", 50, 2), ("a", 151, 3)], "k string, t long, id int"
     )
     out = sessionize(ev, "k", "t", gap=100, order_cols=["id"])
@@ -179,7 +184,8 @@ def test_asof_matches_duckdb_on_events(spark):
 
 
 def _intervals(spark):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("w1", 10, 20),
             ("w2", 20, 30),          # adjacent: p=20 belongs here under [)
@@ -192,7 +198,8 @@ def _intervals(spark):
 
 
 def _points(spark):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(1, 10), (2, 20), (3, 24), (4, 40), (5, 99)], "id int, p long"
     )
 
@@ -300,7 +307,8 @@ def test_asof_null_left_ts_matches_nothing(spark):
     import pytest
     from dbimport_spark.operators.temporal import range_join
 
-    trades = spark.createDataFrame(
+    trades = local_frame(
+        spark,
         [(1, "a", None), (2, "a", _ts("2024-01-01 10:00:03"))],
         "id int, k string, ts timestamp",
     )
@@ -347,8 +355,8 @@ def test_asof_fuzz_vs_bruteforce(spark):
             if (k, ts) not in seen:
                 seen.add((k, ts))
                 rdedup.append((k, ts, v))
-        left = spark.createDataFrame(lrows, "id int, k string, ts int")
-        right = spark.createDataFrame(rdedup, "k string, ts int, v int")
+        left = local_frame(spark, lrows, "id int, k string, ts int")
+        right = local_frame(spark, rdedup, "k string, ts int, v int")
 
         for direction in ("backward", "forward"):
             for tol in (None, 5):
@@ -385,8 +393,9 @@ def test_asof_null_right_ts_never_matches(spark):
     """A NULL right timestamp matches nothing: under backward/asc window
     ordering it sorted FIRST and its carry leaked into every left row
     preceding all real right rows."""
-    left = spark.createDataFrame([(1, "k", 50)], "id int, k string, ts int")
-    right = spark.createDataFrame(
+    left = local_frame(spark, [(1, "k", 50)], "id int, k string, ts int")
+    right = local_frame(
+        spark,
         [("k", None, 42), ("k", 100, 7)], "k string, ts int, v int"
     )
     for direction, want in (("backward", None), ("forward", 7)):

@@ -4,10 +4,11 @@ multimodal operators."""
 import math
 
 from pyspark.sql import functions as F
+from dbimport_spark.session import local_frame
 
 
 def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id int, text string")
+    return local_frame(spark, rows, "doc_id int, text string")
 
 
 def test_token_counts_and_fingerprint(spark):
@@ -133,7 +134,7 @@ def test_cosine_similarity(spark):
     )
 
     rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]), (3, [-1.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    df = local_frame(spark, rows, "vec_id int, embedding array<float>")
     q = [1.0, 0.0]
     scored = {r["vec_id"]: r["cosine_sim"] for r in cosine_to_query(df, q).collect()}
     assert abs(scored[0] - 1.0) < 1e-9
@@ -154,7 +155,8 @@ def test_token_functions(spark):
         token_stats,
     )
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(1, [5, 3, 5, 1]), (2, None)], "id int, tokens array<int>"
     )
     out = {r["id"]: r for r in df.select(
@@ -176,7 +178,7 @@ def test_token_functions(spark):
     assert out[1]["rf"] == (h1 << 31) + h2
     assert out[1]["dc"] == 3 and out[2]["dc"] == 0
     # order sensitivity: reversed sequence fingerprints differently
-    df2 = spark.createDataFrame([(1, [1, 5, 3, 5])], "id int, tokens array<int>")
+    df2 = local_frame(spark, [(1, [1, 5, 3, 5])], "id int, tokens array<int>")
     rf2 = df2.select(rolling_token_fingerprint(F.col("tokens")).alias("rf")).first()["rf"]
     assert rf2 != out[1]["rf"]
 
@@ -184,7 +186,7 @@ def test_token_functions(spark):
 def test_masking(spark):
     from dbimport_spark.functions.masking import apply_anonymization
 
-    df = spark.createDataFrame([("Customer#001", "secret", "abcdef")],
+    df = local_frame(spark, [("Customer#001", "secret", "abcdef")],
                                "name string, pw string, code string")
     out = apply_anonymization(
         df, {"name": "first4", "pw": "star", "code": "hash"}, salt="s1"
@@ -238,7 +240,7 @@ def test_ivf_topk(spark):
     from dbimport_spark.operators.similarity import brute_force_topk, ivf_topk
 
     rows = [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    df = local_frame(spark, rows, "vec_id int, embedding array<float>")
     q = [6.0, 2.0, 1.0]
     exact = [r["vec_id"] for r in brute_force_topk(df, q, k=5).collect()]
     approx = [
@@ -303,7 +305,7 @@ def test_ivf_index_fit_once_persist_reuse(spark, tmp_path, monkeypatch):
     )
 
     rows = [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    df = local_frame(spark, rows, "vec_id int, embedding array<float>")
     q = [6.0, 2.0, 1.0]
 
     idx = IVFIndex.fit(df, n_clusters=4, seed=1)
@@ -347,7 +349,8 @@ def test_cosine_zero_norm_is_null_not_crash(spark):
         cosine_to_query,
     )
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
@@ -364,7 +367,8 @@ def test_cosine_zero_norm_is_null_not_crash(spark):
 def test_ann_lsh_accepts_int_query(spark):
     from dbimport_spark.operators.similarity import ann_lsh_topk
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
         "vec_id long, embedding array<double>",
     )
@@ -380,7 +384,8 @@ def test_token_fingerprint_null_element_refused(spark):
 
     from dbimport_spark.functions.tokens import rolling_token_fingerprint
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("a", [1, None, 3])], "doc_id string, tokens array<long>"
     )
     with pytest.raises(Exception, match="null token"):
@@ -390,7 +395,8 @@ def test_token_fingerprint_null_element_refused(spark):
 def test_token_stats_bigint_elements(spark):
     from dbimport_spark.functions.tokens import token_stats
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("a", [2**40, 5, -3])], "doc_id string, tokens array<long>"
     )
     st = df.select(token_stats(F.col("tokens")).alias("s")).first()["s"]
@@ -408,7 +414,8 @@ def test_lsh_band_validation(spark):
         simhash_near_dups,
     )
 
-    docs = spark.createDataFrame(
+    docs = local_frame(
+        spark,
         [("a", "x y z"), ("b", "x y w")], "doc_id string, text string"
     )
     with pytest.raises(ValueError, match="multiple of"):
@@ -429,7 +436,8 @@ def test_stopword_hits_consecutive_repeats_and_empty_tokens(spark):
         ws_token_count,
     )
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("r", "the the the"), ("e", ""), ("w", "   ")],
         "doc_id string, text string",
     )
@@ -460,7 +468,7 @@ def test_masking_newlines_and_multimodal_null_duration(spark):
     )
     from dbimport_spark.operators.multimodal import sample_frames
 
-    df = spark.createDataFrame([("s", "ab\ncd\ne")], "k string, v string")
+    df = local_frame(spark, [("s", "ab\ncd\ne")], "k string, v string")
     row = df.select(
         replace_with_star(F.col("v")).alias("star"),
         show_first_four(F.col("v")).alias("f4"),
@@ -468,7 +476,8 @@ def test_masking_newlines_and_multimodal_null_duration(spark):
     assert row["star"] == "*******"  # no newline survives
     assert row["f4"] == "ab\nc***"  # first 4 verbatim, rest starred
 
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [("m1", "video", bytearray(b"0123456789abcdef"), None, None, None,
           None)],
         "media_id string, kind string, payload binary, mime string, "
@@ -486,7 +495,8 @@ def test_multimodal_codec_gate_raises_at_call_time(spark):
 
     from dbimport_spark.operators.multimodal import extract_features
 
-    empty = spark.createDataFrame(
+    empty = local_frame(
+        spark,
         [], "media_id string, kind string, payload binary, mime string, "
         "width int, height int, duration_ms int",
     )

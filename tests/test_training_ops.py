@@ -2,6 +2,7 @@
 sum), deterministic stratified sampling, benchmark-contamination check."""
 
 from pyspark.sql import functions as F
+from dbimport_spark.session import local_frame
 
 
 def _ops(spark):
@@ -16,7 +17,7 @@ def test_pack_sequences_matches_serial_fold(spark):
     """The two-phase distributed prefix sum must equal the serial
     concat-and-chunk fold, for any partition count."""
     rows = [(f"d{i:03d}", f"s{i % 3}", (i * 37) % 500 + 1) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id string, source string, n_tok int")
+    df = local_frame(spark, rows, "doc_id string, source string, n_tok int")
 
     expected = {}
     run: dict = {}
@@ -41,7 +42,7 @@ def test_pack_sequences_windows_are_dense(spark):
     doc's offset equals prev cumsum mod context — no token is lost or
     double-counted by the chunking."""
     rows = [(f"d{i:02d}", "s", 700) for i in range(10)]  # 7000 tokens, ctx 2048
-    df = spark.createDataFrame(rows, "doc_id string, source string, n_tok int")
+    df = local_frame(spark, rows, "doc_id string, source string, n_tok int")
     out = sorted(
         _ops(spark).pack_sequences(df, context_len=2048).collect(), key=lambda r: r["doc_id"]
     )
@@ -83,10 +84,12 @@ def test_stratified_sample_deterministic_and_rate_accurate(spark):
 def test_contamination_containment_asymmetry(spark):
     """A benchmark doc fully quoted inside a longer train doc scores 1000;
     the partial-overlap doc scores proportionally; unrelated docs absent."""
-    bench = spark.createDataFrame(
+    bench = local_frame(
+        spark,
         [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
     )
-    train = spark.createDataFrame(
+    train = local_frame(
+        spark,
         [
             (100, "intro words alpha beta gamma delta epsilon outro words here"),
             (101, "alpha beta gamma unrelated tail of text"),
@@ -115,11 +118,13 @@ def test_contamination_precomputed_shingles_identical(spark, tmp_path):
         contamination_pairs_from_shingles,
     )
 
-    bench = spark.createDataFrame(
+    bench = local_frame(
+        spark,
         [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta iota kappa")],
         "doc_id long, text string",
     )
-    train = spark.createDataFrame(
+    train = local_frame(
+        spark,
         [
             (100, "intro words alpha beta gamma delta epsilon outro words here"),
             (101, "alpha beta gamma unrelated tail of text"),

@@ -14,6 +14,7 @@ from dbimport_spark.plans.validate import (
     validate_rowcount,
 )
 from dbimport_spark.schema import PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 
@@ -111,8 +112,8 @@ def test_checksum_catches_even_multiplicity_swap(spark):
     duplicate+drop reconciled as converged. The sum fold must differ."""
     from dbimport_spark.plans.validate import reconcile
 
-    a = spark.createDataFrame([("A", 1), ("A", 1), ("C", 3)], "k string, v int")
-    e = spark.createDataFrame([("B", 2), ("B", 2), ("C", 3)], "k string, v int")
+    a = local_frame(spark, [("A", 1), ("A", 1), ("C", 3)], "k string, v int")
+    e = local_frame(spark, [("B", 2), ("B", 2), ("C", 3)], "k string, v int")
     rec = reconcile(a, e, ["k", "v"])
     assert rec["rowcount_ok"] and not rec["checksum_ok"]
     assert not rec["converged"]
@@ -123,7 +124,7 @@ def test_reconcile_type_widening_converges(spark):
     must still reconcile against a fold producing the original int."""
     from dbimport_spark.plans.validate import reconcile
 
-    actual = spark.createDataFrame([("a", 5)], "k string, v long")
-    expected = spark.createDataFrame([("a", 5)], "k string, v int")
+    actual = local_frame(spark, [("a", 5)], "k string, v long")
+    expected = local_frame(spark, [("a", 5)], "k string, v int")
     rec = reconcile(actual, expected, ["k", "v"])
     assert rec["converged"], rec
