@@ -597,8 +597,6 @@ def _recompute_view(
     join in Spark. Only new or changed (``U``) and vanished (``D``) groups
     reach the exactly-once ``apply_batch``; an unchanged view commits the
     watermark alone. ``rescanned_groups`` = the groups recomputed."""
-    import pyarrow as pa
-
     fresh = _aggregate(
         _source_live(spark, source, version=to_v),
         spec, view_engine.table.current().schema,
@@ -609,22 +607,19 @@ def _recompute_view(
     cur = cur.select(*spec.view_cols())
     ng = len(spec.group_cols)
     if on_driver:
-        def rows(tbl: pa.Table) -> list[tuple]:
-            return list(zip(*(c.to_pylist() for c in tbl.columns)))
+        def rows(df: DataFrame) -> list[tuple]:
+            return list(zip(*(c.to_pylist() for c in df.toArrow().columns)))
 
-        fresh = fresh.toArrow()
-        stale = {r[:ng]: r for r in rows(cur.toArrow())}
         groups = rows(fresh)
+        stale = {r[:ng]: r for r in rows(cur)}
         n_groups = len(groups)
         # pop: what is left in ``stale`` afterwards has vanished
         events = [(to_v, "U", *r) for r in groups if stale.pop(r[:ng], None) != r]
-        events += [(to_v, "D", *k, *[None] * (fresh.num_columns - ng)) for k in stale]
-        # an Arrow table, not a row list (whose Python deserialization
-        # re-runs in each of the engine's ~10 jobs); D events carry nulls
-        cols = [("lsn", pa.int64()), ("op", pa.string())]
-        schema = pa.schema(cols + [(f.name, f.type) for f in fresh.schema])
-        events = spark.createDataFrame(pa.Table.from_pylist(
-            [dict(zip(schema.names, e)) for e in events], schema=schema
+        events += [(to_v, "D", *k, *[None] * (len(fresh.columns) - ng)) for k in stale]
+        # D events carry nulls in every value column: all fields nullable
+        events = local_frame(spark, events, T.StructType(
+            [T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType())]
+            + [T.StructField(f.name, f.dataType) for f in fresh.schema.fields]
         ))
     else:
         vals = spec.view_cols()[ng:]
