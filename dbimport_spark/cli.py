@@ -24,31 +24,83 @@ import os
 import sys
 
 
-def _stream_drain_loop(query, drained, stop_file, poll) -> None:
-    """Shared drain-then-stop loop for the streaming followers (mirror /
-    matview / cdc-export): surface the stream's own exception, honor the
-    stop file only once the follower has drained, always stop the query.
-    ``drained`` is a zero-arg predicate combining the follower watermark
-    with the stream's delivered offset (stream_caught_up), so trailing
-    empty windows (compaction / rewrite-only commits, which never advance
-    a follower watermark) don't hang the drain."""
-    import os
+# the followers' one stop rule (lake/cdf.follow_passes), for every verb
+_STOP_FILE_HELP = (
+    "once this file appears, finish the windows committed up to that "
+    "moment, then stop"
+)
+
+
+def _add_follower_args(sp, what: str, daemon: str | None) -> None:
+    """The follow options of the follower verbs (mirror, matview,
+    cdc-export): ``--follow`` polling when the verb has a ``daemon``,
+    ``--stream``, and their shared ``--poll``, ``--stop-file``, ``--pin``."""
+    if daemon is not None:
+        sp.add_argument(
+            "--follow", action="store_true",
+            help="keep polling the source and syncing each new commit "
+            f"window ({daemon})",
+        )
+        sp.add_argument(
+            "--max-syncs", type=int, default=None, metavar="N",
+            help="stop --follow after N applied syncs (default: run forever)",
+        )
+    sp.add_argument(
+        "--poll", type=float, default=5.0, metavar="SECONDS",
+        help=("metadata poll interval of --follow, " if daemon else "")
+        + "trigger interval of --stream (default 5)",
+    )
+    sp.add_argument("--stop-file", default=None, metavar="PATH", help=_STOP_FILE_HELP)
+    sp.add_argument(
+        "--stream", default=None, metavar="CHECKPOINT_DIR",
+        help="follow via Structured Streaming instead of "
+        f"{'the polling daemon' if daemon else 'a one-shot sync'}: the "
+        "lake_cdf source's offsets are source versions, checkpointed by "
+        "Spark in this directory — kill/restart resumes from the last "
+        "committed window (use with --stop-file; --poll sets the trigger "
+        "interval)",
+    )
+    sp.add_argument(
+        "--pin", default=None, metavar="NAME",
+        help="advance this retention pin on the SOURCE after each synced "
+        f"window, so source snapshot expiry never strands this {what} "
+        "(see the pin command)",
+    )
+
+
+def _drain_stream(args, query, source, watermark, out_key) -> dict:
+    """The one ``--stream`` branch of the follower verbs (mirror, matview,
+    cdc-export): drain the follower's started ``query``, surfacing the
+    stream's own exception and always stopping the query; return the
+    verb's JSON record, the follower's ``watermark()`` as ``out_key``.
+
+    The stop rule is the polling followers' (``lake/cdf.follow_passes``):
+    once ``--stop-file`` is seen, finish the windows committed up to that
+    moment — here, drain to the source version read when the file was
+    first seen — then stop. Drained = the follower's watermark reached
+    that version, or the stream's delivered offset did (trailing empty
+    windows — compaction / rewrite-only commits — never advance a
+    watermark)."""
     import time
 
+    from dbimport_spark.streaming.cdf_source import _delivered_version
+
+    target = None
     try:
         while True:
             if query.exception() is not None:
                 raise query.exception()
-            if (
-                stop_file is not None
-                and os.path.isfile(stop_file)
-                and drained()
+            if target is None and args.stop_file and os.path.isfile(args.stop_file):
+                target = source.current().version
+            if target is not None and (
+                watermark() >= target or _delivered_version(query) >= target
             ):
                 break
-            time.sleep(min(poll, 1.0))
+            time.sleep(min(args.poll, 1.0))
     finally:
         query.stop()
         query.awaitTermination(60)
+    return {out_key: watermark(), "checkpoint": args.stream}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -260,28 +312,7 @@ def main(argv: list[str] | None = None) -> int:
         "following the source's evolution. Default: let Spark's JDBC "
         "writer create the target",
     )
-    sp.add_argument(
-        "--stream", default=None, metavar="CHECKPOINT_DIR",
-        help="follow via Structured Streaming instead of a one-shot sync: "
-        "the lake_cdf source's offsets are source versions, checkpointed "
-        "by Spark in this directory — kill/restart resumes from the last "
-        "committed window (use with --stop-file; --poll sets the trigger "
-        "interval)",
-    )
-    sp.add_argument(
-        "--poll", type=float, default=5.0, metavar="SECONDS",
-        help="with --stream: trigger interval",
-    )
-    sp.add_argument(
-        "--stop-file", default=None, metavar="PATH",
-        help="with --stream: stop once this file appears AND the target "
-        "has drained",
-    )
-    sp.add_argument(
-        "--pin", default=None, metavar="NAME",
-        help="advance this retention pin on the SOURCE after each synced "
-        "window, so source snapshot expiry never strands this export",
-    )
+    _add_follower_args(sp, "export", daemon=None)
 
     sp = sub.add_parser(
         "ddl",
@@ -453,7 +484,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     sp.add_argument(
         "--stop-file", default=None, metavar="PATH",
-        help="stop --follow when this file appears (after draining)",
+        help=_STOP_FILE_HELP,
     )
 
     sp = sub.add_parser(
@@ -474,37 +505,7 @@ def main(argv: list[str] | None = None) -> int:
         help="after syncing, reconcile mirror vs source (count + content "
         "checksum) and include the result",
     )
-    sp.add_argument(
-        "--follow", action="store_true",
-        help="keep polling the source and syncing each new commit window "
-        "(continuous replication daemon)",
-    )
-    sp.add_argument(
-        "--poll", type=float, default=5.0, metavar="SECONDS",
-        help="metadata poll interval in --follow mode (default 5)",
-    )
-    sp.add_argument(
-        "--max-syncs", type=int, default=None, metavar="N",
-        help="stop --follow after N applied syncs (default: run forever)",
-    )
-    sp.add_argument(
-        "--stop-file", default=None, metavar="PATH",
-        help="stop --follow when this file appears",
-    )
-    sp.add_argument(
-        "--stream", default=None, metavar="CHECKPOINT_DIR",
-        help="follow via Structured Streaming instead of the polling "
-        "daemon: the lake_cdf source's offsets are source versions, "
-        "checkpointed by Spark in this directory — kill/restart resumes "
-        "from the last committed window (use with --stop-file; "
-        "--poll sets the trigger interval)",
-    )
-    sp.add_argument(
-        "--pin", default=None, metavar="NAME",
-        help="advance this retention pin on the SOURCE after each synced "
-        "window, so source snapshot expiry never strands this mirror "
-        "(see the pin command)",
-    )
+    _add_follower_args(sp, "mirror", daemon="continuous replication daemon")
 
     sp = sub.add_parser(
         "matview",
@@ -548,38 +549,7 @@ def main(argv: list[str] | None = None) -> int:
         help="after syncing, reconcile the view against a direct groupBy "
         "of the source and include the result",
     )
-    sp.add_argument(
-        "--follow", action="store_true",
-        help="keep polling the source and syncing each new commit window "
-        "(continuous view-maintenance daemon)",
-    )
-    sp.add_argument(
-        "--poll", type=float, default=5.0, metavar="SECONDS",
-        help="metadata poll interval in --follow mode (default 5)",
-    )
-    sp.add_argument(
-        "--max-syncs", type=int, default=None, metavar="N",
-        help="stop --follow after N applied syncs (default: run forever)",
-    )
-    sp.add_argument(
-        "--stop-file", default=None, metavar="PATH",
-        help="stop --follow when this file appears (after draining)",
-    )
-    sp.add_argument(
-        "--stream", default=None, metavar="CHECKPOINT_DIR",
-        help="follow via Structured Streaming instead of the polling "
-        "daemon: the lake_cdf source streams the PRE-IMAGE change feed "
-        "(offsets are source versions, checkpointed by Spark here) and "
-        "each micro-batch is folded straight into the view — kill/"
-        "restart resumes from the last committed window (use with "
-        "--stop-file; --poll sets the trigger interval)",
-    )
-    sp.add_argument(
-        "--pin", default=None, metavar="NAME",
-        help="advance this retention pin on the SOURCE after each synced "
-        "window, so source snapshot expiry never strands this view "
-        "(see the pin command)",
-    )
+    _add_follower_args(sp, "view", daemon="continuous view-maintenance daemon")
 
     sp = sub.add_parser(
         "fsck",
@@ -1395,41 +1365,19 @@ def main(argv: list[str] | None = None) -> int:
             dialect=args.dialect, pin_name=args.pin,
         )
         if args.stream is not None:
+            from dbimport_spark.streaming.cdf_source import follow_export_stream
 
-            from dbimport_spark.streaming.cdf_source import (
-                follow_export_stream,
-                stream_caught_up,
-            )
-
-            q = follow_export_stream(
-                spark, args.table_root, exp, args.stream,
-                trigger_seconds=args.poll,
-            )
-            _stream_drain_loop(
-                q,
-                lambda: (
-                    int(exp._state()["last_version"])
-                    >= table.current().version
-                    or stream_caught_up(q, table)
+            out = _drain_stream(
+                args,
+                follow_export_stream(
+                    spark, args.table_root, exp, args.stream,
+                    trigger_seconds=args.poll,
                 ),
-                args.stop_file,
-                args.poll,
+                table, lambda: int(exp._state()["last_version"]),
+                "exported_source_version",
             )
-            out = {
-                "exported_source_version": int(
-                    exp._state()["last_version"]
-                ),
-                "checkpoint": args.stream,
-            }
-            if args.verify:
-                out["verify"] = verify_cdc_export(
-                    spark, table, args.url, args.target_table
-                )
-            print(json.dumps(out))
-            if args.verify and not out["verify"]["converged"]:
-                return 1
-            return 0
-        out = exp.sync(spark, on_gap=args.on_gap)
+        else:
+            out = exp.sync(spark, on_gap=args.on_gap)
         if args.verify:
             out["verify"] = verify_cdc_export(
                 spark, table, args.url, args.target_table
@@ -1575,29 +1523,16 @@ def main(argv: list[str] | None = None) -> int:
         mirror = LakeTable.load(args.mirror_root)
         eng = CDCEngine(spark, mirror)
         if args.stream is not None:
+            from dbimport_spark.streaming.cdf_source import follow_mirror_stream
 
-            from dbimport_spark.streaming.cdf_source import (
-                follow_mirror_stream,
-                stream_caught_up,
-            )
-
-            q = follow_mirror_stream(
-                spark, args.source_root, eng, args.stream,
-                trigger_seconds=args.poll, pin_name=args.pin,
-            )
-            _stream_drain_loop(
-                q,
-                lambda: (
-                    mirror.last_lsn() >= source.current().version
-                    or stream_caught_up(q, source)
+            out = _drain_stream(
+                args,
+                follow_mirror_stream(
+                    spark, args.source_root, eng, args.stream,
+                    trigger_seconds=args.poll, pin_name=args.pin,
                 ),
-                args.stop_file,
-                args.poll,
+                source, mirror.last_lsn, "mirrored_source_version",
             )
-            out = {
-                "mirrored_source_version": mirror.last_lsn(),
-                "checkpoint": args.stream,
-            }
         elif args.follow:
             applied = follow_mirror(
                 spark, source, eng, poll_s=args.poll,
@@ -1644,29 +1579,16 @@ def main(argv: list[str] | None = None) -> int:
             view = LakeTable.load(args.view_root)
         eng = CDCEngine(spark, view)
         if args.stream is not None:
+            from dbimport_spark.streaming.cdf_source import follow_view_stream
 
-            from dbimport_spark.streaming.cdf_source import (
-                follow_view_stream,
-                stream_caught_up,
-            )
-
-            q = follow_view_stream(
-                spark, args.source_root, eng, spec, args.stream,
-                trigger_seconds=args.poll, pin_name=args.pin,
-            )
-            _stream_drain_loop(
-                q,
-                lambda: (
-                    view.last_lsn() >= source.current().version
-                    or stream_caught_up(q, source)
+            out = _drain_stream(
+                args,
+                follow_view_stream(
+                    spark, args.source_root, eng, spec, args.stream,
+                    trigger_seconds=args.poll, pin_name=args.pin,
                 ),
-                args.stop_file,
-                args.poll,
+                source, view.last_lsn, "view_source_version",
             )
-            out = {
-                "view_source_version": view.last_lsn(),
-                "checkpoint": args.stream,
-            }
         elif args.follow:
             from dbimport_spark.plans.matview import follow_view
 

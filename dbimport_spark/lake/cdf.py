@@ -98,9 +98,8 @@ def rename_mapping(from_renames: list, to_renames: list) -> dict[str, str]:
     """old-name -> new-name over the rename-log slice
     ``to_renames[len(from_renames):]``, transitively chained (a->b then
     b->c folds to a->c). The ONE definition of the chain fold — shared
-    by ``_align_to``, ``table_changes_per_commit``'s part alignment, and
-    the streaming source's catch-up alignment, which must never drift
-    from each other."""
+    by ``_align_to`` and the streaming source's catch-up alignment,
+    which must never drift from each other."""
     mapping: dict[str, str] = {}
     for r in to_renames[len(from_renames):]:
         src = next((k for k, v in mapping.items() if v == r["from"]), r["from"])
@@ -109,24 +108,31 @@ def rename_mapping(from_renames: list, to_renames: list) -> dict[str, str]:
 
 
 def _align_to(
-    df: DataFrame, from_snap: Snapshot, to_snap: Snapshot
+    df: DataFrame,
+    from_snap: Snapshot,
+    to_snap: Snapshot,
+    names: list[str],
+    passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Project an older snapshot's rows to the newer snapshot's schema:
-    renames applied in the window are mapped old-name -> new-name,
-    columns added in the window come through as nulls, widened columns
-    are cast up. Mirrors how ``LakeTable.read`` maps old files to the
+    """Project an older snapshot's rows onto ``names`` of the newer
+    snapshot's schema: renames applied in the window are mapped
+    old-name -> new-name, columns added in the window come through as
+    nulls, widened columns are cast up; ``passthrough`` columns follow
+    unchanged. Mirrors how ``LakeTable.read`` maps old files to the
     current names, but across VERSIONS instead of file epochs."""
     mapping = rename_mapping(from_snap.renames, to_snap.renames)
     have = {mapping.get(c, c): c for c in df.columns}
+    types = {f.name: f.dataType for f in to_snap.schema.fields}
     return df.select(
         *[
             (
-                F.col(have[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
+                F.col(have[n]).cast(types[n]).alias(n)
+                if n in have
+                else F.lit(None).cast(types[n]).alias(n)
             )
-            for f in to_snap.schema.fields
-        ]
+            for n in names
+        ],
+        *passthrough,
     )
 
 
@@ -200,6 +206,72 @@ def check_window(table: LakeTable, snap_a: Snapshot, snap_b: Snapshot) -> None:
             f"the history at {snap_a.version} — the window crosses an "
             "expired reload boundary. Reconcile with a full read instead."
         )
+
+
+def incremental_window(
+    table: LakeTable, from_v: int, to_v: int, on_gap: str, full_sync: str
+) -> bool:
+    """The followers' one gap rule (mirror, matview and CDC-export syncs).
+    A sync window ``(from_v, to_v]`` is incremental — True — when its
+    delta base ``from_v`` is still retained and no declared full reload
+    lies inside it. Otherwise only the follower's full path can cover it:
+    False under ``on_gap='full'``, else a ValueError naming the cause and
+    ``full_sync``, the remedy. The reload is probed FIRST, so a retained
+    base across a reload is refused as the reload, not diffed. Metadata
+    only."""
+    reload_v = window_has_reload(table, from_v, to_v)
+    if from_v in table.snapshots() and reload_v is None:
+        return True
+    if on_gap == "full":
+        return False
+    if reload_v is not None:
+        raise ValueError(
+            f"window ({from_v}, {to_v}] crosses a declared full reload at "
+            f"version {reload_v} — an incremental sync cannot cover it. "
+            f"Re-run with on_gap='full' for {full_sync}."
+        )
+    raise ValueError(
+        f"source snapshot {from_v} has been expired (retained: "
+        f"{table.snapshots()}) — the delta base is gone. Re-run with "
+        f"on_gap='full' for {full_sync}."
+    )
+
+
+def reconcile_feed(
+    spark: SparkSession,
+    source: LakeTable,
+    to_v: int,
+    target_keys: DataFrame | None,
+) -> DataFrame:
+    """The full-reconcile feed of a follower whose window is not
+    incremental (``incremental_window``): the source's live rows at
+    ``to_v`` as updates, plus a null-payload delete for every row of
+    ``target_keys`` (the target's merge-key columns) whose key the source
+    no longer has; None (no target yet) gives the updates alone. Columns
+    as ``table_changes`` minus ``_commit_version``. PINNED to ``to_v``:
+    reading current() would let a row of a racing commit (> to_v) into
+    the reconcile while the watermark commits as ``to_v`` — if the
+    source then deletes that row, the next window's net diff sees
+    absent→absent and the target keeps the phantom row forever."""
+    src = source.read(spark, version=to_v)
+    if AUDIT_DELETE in src.columns:  # soft source: tombstones are deletes
+        src = src.filter(F.col(AUDIT_DELETE).isNull())
+    live = src.select(*[c for c in src.columns if c not in AUDIT_COLUMNS])
+    upserts = live.withColumn(CHANGE_TYPE_COL, F.lit("update"))
+    if target_keys is None:
+        return upserts
+    keys = target_keys.columns
+    gone = target_keys.join(live.select(*keys), on=keys, how="left_anti")
+    return upserts.unionByName(
+        gone.select(
+            *[
+                F.col(f.name) if f.name in keys
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in live.schema.fields
+            ],
+            F.lit("delete").alias(CHANGE_TYPE_COL),
+        )
+    )
 
 
 def compare_scope(snap: Snapshot, cols) -> list[str] | None:
@@ -284,8 +356,8 @@ def table_changes(
         only_a, only_b = diff_read_sets(snap_a, snap_b)
     keep = payload_cols + ([AUDIT_DELETE] if soft else [])
     side_a = _align_to(
-        table.read_files_reconciled(spark, snap_a, only_a), snap_a, snap_b
-    ).select(*keep)
+        table.read_files_reconciled(spark, snap_a, only_a), snap_a, snap_b, keep
+    )
     side_b = table.read_files_reconciled(spark, snap_b, only_b).select(*keep)
 
     a = side_a.alias("a")
@@ -356,9 +428,9 @@ def follow_changes(
     e.g. ``plans/mirror.follow_mirror`` commits ``to_v`` as the mirror's
     LSN, so a killed follower resumes from its table, not this loop.
 
-    Stops after ``max_windows`` yields (None = forever) or when
-    ``stop_file`` appears (checked every iteration, including between
-    back-to-back windows on a busy table).
+    Stops after ``max_windows`` yields (None = forever) or by the
+    followers' stop rule (``follow_passes``): once ``stop_file`` is seen,
+    one final window covers every commit up to that moment.
 
     A declared full reload landing inside a window raises ``ValueError``
     out of the generator (``check_window``) — deliberately: an
@@ -366,25 +438,49 @@ def follow_changes(
     consumer must reconcile with a full read (mirror/matview:
     ``on_gap='full'``) and restart the follower from the reload version.
     """
-    import os as _os
-    import time as _time
-
     last = table.current().version if from_version is None else from_version
-    yielded = 0
-    while max_windows is None or yielded < max_windows:
-        # stop signal checked EVERY iteration: under a continuously
-        # committing table the busy branch used to re-loop without ever
-        # reaching the check, so --stop-file could not stop the follower
-        # until the table went quiet
-        if stop_file is not None and _os.path.isfile(stop_file):
-            return
+
+    def next_window():
+        nonlocal last
         cur = table.current().version
-        if cur > last:
-            yield last, cur, table_changes(spark, table, last, cur)
-            last = cur
-            yielded += 1
-            continue  # re-check immediately: more commits may have landed
-        _time.sleep(poll_s)
+        if cur <= last:
+            return None
+        lo, last = last, cur
+        return lo, cur, table_changes(spark, table, lo, cur)
+
+    yield from follow_passes(next_window, poll_s, max_windows, stop_file)
+
+
+def follow_passes(step, poll_s: float, limit: int | None, stop_file: str | None):
+    """THE polling follower loop and the followers' one stop rule,
+    shared by ``follow_changes`` and ``plans/mirror.follow_sync``.
+
+    ``step()`` runs one pass over ``(watermark, current]`` and returns
+    what it applied, or None when nothing was pending. Each result is
+    yielded before the next pass runs; a pass that applied something is
+    followed at once (more commits may have landed), an idle one sleeps
+    ``poll_s``. Stops after ``limit`` results (None = never), or by the
+    stop rule: once ``stop_file`` is seen, finish the windows committed up
+    to that moment, then stop. The file is checked BEFORE each pass and
+    that pass is the last one — it covers everything current when the
+    file was seen, so a source that commits between passes can neither
+    keep the follower running nor strand a pending window. (The stream
+    followers' CLI drain applies the same rule to the source version read
+    when the file was first seen, ``cli._drain_stream``.)"""
+    import os
+    import time
+
+    done = 0
+    while limit is None or done < limit:
+        stopping = stop_file is not None and os.path.isfile(stop_file)
+        out = step()
+        if out is not None:
+            done += 1
+            yield out
+        if stopping:
+            return
+        if out is None:
+            time.sleep(poll_s)
 
 
 def table_changes_per_commit(
@@ -423,23 +519,8 @@ def table_changes_per_commit(
     # widened types cast up) before unioning.
     final = table.snapshot(hi)
     final_payload = [
-        f for f in final.schema.fields if f.name not in AUDIT_COLUMNS
+        f.name for f in final.schema.fields if f.name not in AUDIT_COLUMNS
     ]
-
-    def _align_part(part_df: DataFrame, part_snap: Snapshot) -> DataFrame:
-        mapping = rename_mapping(part_snap.renames, final.renames)
-        have = {mapping.get(c, c): c for c in part_df.columns}
-        cols = [
-            (
-                F.col(have[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-            )
-            for f in final_payload
-        ]
-        return part_df.select(
-            *cols, F.col(CHANGE_TYPE_COL), F.col(COMMIT_VERSION_COL)
-        )
 
     out: DataFrame | None = None
     for lo, hi_v in zip(versions, versions[1:]):
@@ -452,16 +533,13 @@ def table_changes_per_commit(
             table, table.snapshot(lo), table.snapshot(hi_v)
         ):
             continue  # layout-only span: contributes no rows, keep the union narrow
-        part = _align_part(
-            table_changes(spark, table, lo, hi_v), table.snapshot(hi_v)
+        part = _align_to(
+            table_changes(spark, table, lo, hi_v), table.snapshot(hi_v), final,
+            final_payload, (CHANGE_TYPE_COL, COMMIT_VERSION_COL),
         )
         out = part if out is None else out.unionByName(part)
     if out is None:
-        snap = table.snapshot(hi)
-        keep = [
-            f.name for f in snap.schema.fields if f.name not in AUDIT_COLUMNS
-        ]
-        empty = table.read_files(spark, snap, []).select(*keep)
+        empty = table.read_files(spark, final, []).select(*final_payload)
         return empty.withColumn(CHANGE_TYPE_COL, F.lit("insert")).withColumn(
             COMMIT_VERSION_COL, F.lit(hi)
         ).limit(0)

@@ -44,8 +44,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbimport_spark.lake.cdf import CHANGE_TYPE_COL, table_changes, window_has_reload
-from dbimport_spark.lake.table import LakeTable
+from dbimport_spark.lake.cdf import (
+    CHANGE_TYPE_COL,
+    incremental_window,
+    reconcile_feed,
+    table_changes,
+)
+from dbimport_spark.lake.table import LakeTable, advance_pin
 from dbimport_spark.schema import AUDIT_COLUMNS, AUDIT_DELETE
 
 
@@ -212,12 +217,10 @@ class CDCJdbcExporter:
         # an underscore must reach the target, and the CDF's bookkeeping
         # columns (_change_type/_commit_version/_pre_*) are excluded by
         # simply not being source columns
-        from dbimport_spark.schema import AUDIT_COLUMNS as _AUDIT
-
         payload = {
             f.name
             for f in self.source.current().schema.fields
-            if f.name not in _AUDIT
+            if f.name not in AUDIT_COLUMNS
         }
         return [c for c in feed.columns if c in payload]
 
@@ -344,30 +347,16 @@ class CDCJdbcExporter:
         from_v = int(state["last_version"])
         to_v = self.source.current().version
         if to_v <= from_v:
-            from dbimport_spark.lake.table import advance_pin
-
             advance_pin(self.source, self.pin_name, min(from_v, to_v))
             return {**state, "skipped": True}
 
-        reload_v = window_has_reload(self.source, from_v, to_v)
-        if from_v in self.source.snapshots() and reload_v is None:
+        if incremental_window(
+            self.source, from_v, to_v, on_gap,
+            "a one-time full reconcile (live rows as upserts + target-side "
+            "anti-join deletes)",
+        ):
             feed = table_changes(spark, self.source, from_v, to_v)
         else:
-            if on_gap != "full":
-                if reload_v is not None:
-                    raise ValueError(
-                        f"window ({from_v}, {to_v}] crosses a declared "
-                        f"full reload at version {reload_v} — an "
-                        "incremental sync cannot cover it. Re-run with "
-                        "on_gap='full' for a one-time full reconcile."
-                    )
-                raise ValueError(
-                    f"source snapshot {from_v} has been expired (retained: "
-                    f"{self.source.snapshots()}) — the delta base is gone. "
-                    "Re-run with on_gap='full' for a one-time full "
-                    "reconcile (live rows as upserts + target-side "
-                    "anti-join deletes)."
-                )
             feed = self._full_reconcile_feed(spark, to_v)
         return self.apply_feed(spark, feed, to_v)
 
@@ -415,19 +404,13 @@ class CDCJdbcExporter:
             "skipped": False,
         }
         self._save_state(state)
-        from dbimport_spark.lake.table import advance_pin
-
         advance_pin(self.source, self.pin_name, to_v)
         return state
 
     def _full_reconcile_feed(self, spark: SparkSession, to_v: int) -> DataFrame:
-        """Expired delta base: live rows as upserts plus anti-join deletes
-        for target keys the source no longer has. Scans the source once
-        and the TARGET'S KEY COLUMNS once (distributed JDBC read) —
-        logged, per the no-silent-caps rule. PINNED to ``to_v``: reading
-        current() would export a racing commit's rows while the watermark
-        commits as ``to_v``, and a later delete of such a row diffs
-        absent→absent — the target would keep it forever."""
+        """Expired delta base: ``cdf.reconcile_feed`` against the TARGET'S
+        KEY COLUMNS (distributed JDBC read); the source scan is logged
+        first, per the no-silent-caps rule."""
         import logging
 
         snap = self.source.snapshot(to_v)
@@ -438,36 +421,17 @@ class CDCJdbcExporter:
             sum(f.rows for f in snap.files),
             sum(f.bytes for f in snap.files),
         )
-        src = self.source.read(spark, version=to_v)
-        if AUDIT_DELETE in src.columns:
-            src = src.filter(F.col(AUDIT_DELETE).isNull())
-        payload = [c for c in src.columns if c not in AUDIT_COLUMNS]
-        live = src.select(*payload)
-        upserts = live.withColumn(CHANGE_TYPE_COL, F.lit("update"))
         try:
-            tgt_keys = (
-                spark.read.jdbc(
-                    self.url, self.target_table, properties=self.properties
-                ).select(*self.keys)
-            )
+            tgt_keys = spark.read.jdbc(
+                self.url, self.target_table, properties=self.properties
+            ).select(*self.keys)
         except Exception:
             if self._target_exists(spark):
                 # real read failure, not absence: swallowing it would
                 # drop every anti-join delete from this reconcile
                 raise
-            return upserts  # target absent: bootstrap is inserts-only
-        ptypes = {f.name: f.dataType for f in live.schema.fields}
-        gone = tgt_keys.join(
-            live.select(*self.keys), on=self.keys, how="left_anti"
-        ).select(
-            *[
-                F.col(c) if c in self.keys
-                else F.lit(None).cast(ptypes[c]).alias(c)
-                for c in payload
-            ],
-            F.lit("delete").alias(CHANGE_TYPE_COL),
-        )
-        return upserts.unionByName(gone)
+            tgt_keys = None  # target absent: bootstrap is inserts-only
+        return reconcile_feed(spark, self.source, to_v, tgt_keys)
 
 
 def verify_cdc_export(

@@ -64,10 +64,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbimport_spark.lake.cdf import (
-    CHANGE_TYPE_COL, compare_scope, diff_read_sets, rewrite_only_window,
-    snapshot_diff_files, table_changes, window_has_reload,
+    CHANGE_TYPE_COL, compare_scope, diff_read_sets, incremental_window,
+    rewrite_only_window, snapshot_diff_files, table_changes,
 )
-from dbimport_spark.lake.table import LakeTable
+from dbimport_spark.lake.table import LakeTable, advance_pin
 from dbimport_spark.plans.engine import BatchStats, CDCEngine
 from dbimport_spark.schema import AUDIT_COLUMNS, AUDIT_DELETE
 from dbimport_spark.session import local_frame
@@ -307,8 +307,6 @@ def sync_view(
     Best-effort, exactly like the mirror's pin."""
     bs = _sync_view_impl(spark, source, view_engine, spec, on_gap)
     if pin_name is not None:
-        from dbimport_spark.lake.table import advance_pin
-
         advance_pin(source, pin_name, max(view_engine.table.last_lsn(), 0))
     return bs
 
@@ -521,8 +519,7 @@ def _sync_view_impl(
     src_rows = sum(f.rows for f in snap_to.files)
     view_rows = sum(f.rows for f in view_engine.table.current().files)
     limit = view_engine.broadcast_threshold_rows
-    reload_v = window_has_reload(source, from_v, to_v)
-    if from_v in source.snapshots() and reload_v is None:
+    if incremental_window(source, from_v, to_v, on_gap, "a one-time full rebuild"):
         snap_from = source.snapshot(from_v)
         diff = (
             ([], [])
@@ -556,19 +553,6 @@ def _sync_view_impl(
             spark, source, view_engine, spec, feed, from_v, to_v
         )
 
-    if on_gap != "full":
-        if reload_v is not None:
-            raise ValueError(
-                f"window ({from_v}, {to_v}] crosses a declared full "
-                f"reload at version {reload_v} — an incremental sync "
-                "cannot cover it. Re-run with on_gap='full' for a "
-                "one-time full rebuild."
-            )
-        raise ValueError(
-            f"source snapshot {from_v} has been expired (retained: "
-            f"{source.snapshots()}) — the delta base is gone. Re-run with "
-            "on_gap='full' for a one-time full rebuild."
-        )
     on_driver = max(src_rows, view_rows) <= limit
     # no-silent-caps: the rebuild scans the whole source once — report
     # how much, from file metadata alone, before paying it
@@ -659,8 +643,8 @@ def follow_view(
     each time it advances (``plans/mirror.follow_mirror``'s shape — the
     watermark lives in the VIEW table, so a killed follower resumes from
     its last committed sync). Stops after ``max_syncs`` applied syncs,
-    or — drain first, then stop — when ``stop_file`` exists and the
-    source has no pending window."""
+    or once ``stop_file`` is seen, after one final sync of the windows
+    committed up to that moment (``lake/cdf.follow_passes``)."""
     from dbimport_spark.plans.mirror import follow_sync
 
     return follow_sync(

@@ -31,8 +31,10 @@ from pyspark.sql import functions as F
 from dbimport_spark.lake.cdf import (
     CHANGE_TYPE_COL,
     COMMIT_VERSION_COL,
+    follow_passes,
+    incremental_window,
+    reconcile_feed,
     table_changes,
-    window_has_reload,
 )
 from dbimport_spark.lake.table import LakeTable, advance_pin
 from dbimport_spark.plans.engine import BatchStats, CDCEngine
@@ -92,77 +94,33 @@ def sync_mirror(
         advance_pin(source, pin_name, min(from_v, to_v))
         return BatchStats(lo=from_v, hi=to_v, skipped=True)
 
-    reload_v = window_has_reload(source, from_v, to_v)
-    if from_v in source.snapshots() and reload_v is None:
+    if incremental_window(source, from_v, to_v, on_gap, "a full reconcile sync"):
         feed = table_changes(spark, source, from_v, to_v)
-        events = feed_to_change_events(feed, to_v)
-        bs = mirror_engine.apply_batch(events, from_v, to_v)
-        advance_pin(source, pin_name, to_v)
-        return bs
-
-    if on_gap != "full":
-        if reload_v is not None:
-            raise ValueError(
-                f"window ({from_v}, {to_v}] crosses a declared full "
-                f"reload at version {reload_v} — an incremental sync "
-                "cannot cover it. Re-run with on_gap='full' for a full "
-                "reconcile sync."
-            )
-        raise ValueError(
-            f"source snapshot {from_v} has been expired (retained: "
-            f"{source.snapshots()}) — the delta base is gone. Re-run with "
-            "on_gap='full' for a full reconcile sync."
-        )
-    # no-silent-caps: the fallback scans BOTH tables once (the metadata
-    # that scoped the delta is deleted) — report how much, from file
-    # metadata alone, before paying it
-    import logging
-
-    # PINNED to to_v: reading current() would let a row inserted by a
-    # racing commit (> to_v) into the reconcile while the watermark
-    # commits as to_v — if the source then deletes that row, the next
-    # window's net diff sees absent→absent and emits nothing, so the
-    # mirror retains the phantom row forever
-    src_snap, mir_snap = source.snapshot(to_v), mirror_engine.table.current()
-    logging.getLogger(__name__).warning(
-        "sync_mirror on_gap='full': delta base v%d expired — full "
-        "reconcile will scan the source (%d rows, %d bytes, %d files) "
-        "and the mirror's keys (%d rows, %d bytes, %d files)",
-        from_v,
-        sum(f.rows for f in src_snap.files),
-        sum(f.bytes for f in src_snap.files),
-        len(src_snap.files),
-        sum(f.rows for f in mir_snap.files),
-        sum(f.bytes for f in mir_snap.files),
-        len(mir_snap.files),
-    )
-    keys = mirror_engine.keys
-    src = source.read(spark, version=to_v)
-    payload = [c for c in src.columns if c not in AUDIT_COLUMNS]
-    from dbimport_spark.schema import AUDIT_DELETE
-
-    if AUDIT_DELETE in src.columns:  # soft source: tombstones are deletes
-        live = src.filter(F.col(AUDIT_DELETE).isNull())
     else:
-        live = src
-    upserts = live.select(
-        F.lit(to_v).cast("long").alias("lsn"), F.lit("U").alias("op"), *payload
+        # no-silent-caps: the fallback scans BOTH tables once (the
+        # metadata that scoped the delta is deleted) — report how much,
+        # from file metadata alone, before paying it
+        import logging
+
+        src_snap = source.snapshot(to_v)
+        mir_snap = mirror_engine.table.current()
+        logging.getLogger(__name__).warning(
+            "sync_mirror on_gap='full': delta base v%d expired — full "
+            "reconcile will scan the source (%d rows, %d bytes, %d files) "
+            "and the mirror's keys (%d rows, %d bytes, %d files)",
+            from_v,
+            sum(f.rows for f in src_snap.files),
+            sum(f.bytes for f in src_snap.files),
+            len(src_snap.files),
+            sum(f.rows for f in mir_snap.files),
+            sum(f.bytes for f in mir_snap.files),
+            len(mir_snap.files),
+        )
+        mirror_keys = mirror_engine.table.read(spark).select(*mirror_engine.keys)
+        feed = reconcile_feed(spark, source, to_v, mirror_keys)
+    bs = mirror_engine.apply_batch(
+        feed_to_change_events(feed, to_v), from_v, to_v
     )
-    gone = (
-        mirror_engine.table.read(spark)
-        .select(*keys)
-        .join(live.select(*keys), on=keys, how="left_anti")
-    )
-    ptypes = {f.name: f.dataType for f in live.select(*payload).schema.fields}
-    deletes = gone.select(
-        F.lit(to_v).cast("long").alias("lsn"),
-        F.lit("D").alias("op"),
-        *[
-            F.col(c) if c in keys else F.lit(None).cast(ptypes[c]).alias(c)
-            for c in payload
-        ],
-    )
-    bs = mirror_engine.apply_batch(upserts.unionByName(deletes), from_v, to_v)
     advance_pin(source, pin_name, to_v)
     return bs
 
@@ -173,25 +131,16 @@ def follow_sync(
     max_syncs: int | None = None,
     stop_file: str | None = None,
 ) -> list[BatchStats]:
-    """THE follower loop — drain-first-then-stop, shared by
-    ``follow_mirror`` and ``matview.follow_view`` so the subtle ordering
-    (applied windows re-check immediately; the stop file only wins when
-    the source has no pending window) is defined once. ``sync_fn`` runs
-    one sync attempt and returns a ``BatchStats`` (``skipped=True`` =
-    nothing pending)."""
-    import os as _os
-    import time as _time
+    """The polling follower loop of ``follow_mirror`` and
+    ``matview.follow_view``: ``lake/cdf.follow_passes`` over ``sync_fn``,
+    which runs one sync attempt and returns a ``BatchStats``
+    (``skipped=True`` = nothing pending). Returns the applied syncs."""
 
-    applied: list[BatchStats] = []
-    while max_syncs is None or len(applied) < max_syncs:
+    def step() -> BatchStats | None:
         bs = sync_fn()
-        if not bs.skipped:
-            applied.append(bs)
-            continue  # drained this window; re-check before sleeping
-        if stop_file is not None and _os.path.isfile(stop_file):
-            break
-        _time.sleep(poll_s)
-    return applied
+        return None if bs.skipped else bs
+
+    return list(follow_passes(step, poll_s, max_syncs, stop_file))
 
 
 def follow_mirror(
@@ -210,9 +159,9 @@ def follow_mirror(
     are metadata-only; each applied sync ships one window's delta. The
     watermark lives in the MIRROR table, so a killed follower restarted
     with the same arguments resumes exactly where the last committed
-    sync left it. Stops after ``max_syncs`` applied syncs, or — drain
-    first, then stop — when ``stop_file`` exists and the source has no
-    pending window (pending work is never abandoned mid-shutdown)."""
+    sync left it. Stops after ``max_syncs`` applied syncs, or once
+    ``stop_file`` is seen, after one final sync of the windows committed
+    up to that moment (``lake/cdf.follow_passes``)."""
     return follow_sync(
         lambda: sync_mirror(
             spark, source, mirror_engine, on_gap=on_gap, pin_name=pin_name

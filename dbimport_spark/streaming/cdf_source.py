@@ -24,8 +24,12 @@ Scale/architecture notes:
   exchange. Rows stream back as Arrow record batches.
 - **Exactly-once end-to-end** composes two idempotencies: Spark replans
   a crashed micro-batch from its checkpointed offsets (same version
-  window), and version-watermarked sinks (``follow_mirror_stream``)
-  skip a redelivered window via the engine's LSN guard.
+  window), and the follower's source-version watermark skips a
+  redelivered window. The three followers (``follow_mirror_stream``,
+  ``follow_view_stream``, ``follow_export_stream``) share one
+  micro-batch driver, ``_follow_stream``, which states the argument
+  and enforces window continuity; each passes only its watermark
+  reader and its apply primitive.
 - **Schema changes DURING the stream stop it loudly.** The declared
   stream schema is fixed at query start; a window whose end snapshot
   evolved AFTER that raises (restart the stream to pick up the new
@@ -62,11 +66,7 @@ COMMIT_VERSION_COL = "_commit_version"
 # opt-in (option includeWindowStart): the micro-batch window's EXCLUSIVE
 # low bound, constant per batch — lets a follower sink verify window
 # CONTINUITY against its own watermark, which COMMIT_VERSION_COL (the
-# end bound) alone cannot do. All three followers need it: a signed
-# delta fold (matview) double-counts an overlap, and even a full-row
-# apply (mirror / cdc-export) is unsafe because a straddling window is
-# one NETTED snapshot diff — an applied insert cancels an unapplied
-# delete into no row at all (_require_window_continuity)
+# end bound) alone cannot do; every follower needs it (_follow_stream)
 COMMIT_WINDOW_START_COL = "_commit_window_start"
 
 FORMAT_NAME = "lake_cdf"
@@ -437,24 +437,6 @@ def resolve_starting_version(table, options: dict) -> int:
     return max(before) if before else min(versions)
 
 
-def _guard_follower_start(source_root: str, follower_v: int, options: dict):
-    """A stream started AHEAD of its follower's watermark would silently
-    skip the window (follower_v, start] — the feed's first micro-batch
-    begins past it and the sink's LSN guard cannot detect a hole BELOW
-    its own watermark. Refuse loudly instead."""
-    from dbimport_spark.lake.table import LakeTable
-
-    start = resolve_starting_version(LakeTable.load(source_root), options)
-    if follower_v < start:
-        raise ValueError(
-            f"stream starting position {start} is ahead of the "
-            f"follower's watermark {follower_v}: the window "
-            f"({follower_v}, {start}] would be silently lost. Set "
-            f"startingVersion={follower_v} (the follower's watermark), "
-            "or catch the follower up first."
-        )
-
-
 class _BucketPartition(InputPartition):
     def __init__(self, meta: dict):
         self.meta = meta
@@ -733,13 +715,20 @@ def stream_caught_up(query, table) -> bool:
     ends at (or past) the table's current version — i.e. every committed
     window has been DELIVERED to the sink, even windows that produced
     zero change rows (compaction / rewrite-only / quarantine-only
-    commits), which never advance a follower's own watermark. This is
-    the correct drain predicate for a follower CLI: comparing the
-    follower's watermark to ``table.current().version`` hangs forever
-    when the newest commits are empty windows."""
+    commits), which never advance a follower's own watermark. So the
+    delivered offset is what shows a follower drained: its watermark
+    compared to ``table.current().version`` hangs forever when the
+    newest commits are empty windows (the CLI drain,
+    ``cli._drain_stream``, checks both)."""
+    return _delivered_version(query) >= table.current().version
+
+
+def _delivered_version(query) -> int:
+    """End version of the ``lake_cdf`` stream's last completed
+    micro-batch; -1 before the first one."""
     p = query.lastProgress
     if not p:
-        return False
+        return -1
     try:
         end = p["sources"][0]["endOffset"]
         if isinstance(end, str):
@@ -753,9 +742,9 @@ def stream_caught_up(query, table) -> bool:
                 import ast as _ast
 
                 end = _ast.literal_eval(end)
-        return int(end["version"]) >= table.current().version
+        return int(end["version"])
     except (KeyError, IndexError, TypeError, ValueError, SyntaxError):
-        return False
+        return -1
 
 
 def _ci_last(options: dict, name: str):
@@ -769,31 +758,12 @@ def _ci_last(options: dict, name: str):
     return val
 
 
-def _window_start_options(source_options: dict, what: str) -> dict:
-    """Force ``includeWindowStart`` on for a follower feed; an explicit
-    caller value of false (any key case) is refused loudly (the
-    continuity check cannot run without the window-start column, and
-    silently overriding the caller would hide the disagreement)."""
-    user = _ci_last(source_options, "includeWindowStart")
-    if user is not None and str(user).lower() not in ("true", "1"):
-        raise ValueError(
-            f"{what} follower needs the window-start column — "
-            "includeWindowStart cannot be disabled (window continuity "
-            "is verified against it, see _require_window_continuity)"
-        )
-    return {"includeWindowStart": "true", **source_options}
-
-
 def _require_window_continuity(
     load_source, start: int, from_v: int, to_v: int, what: str
 ) -> None:
     """Refuse a micro-batch window that does not begin exactly at the
-    follower's watermark. BELOW is an overlap: a signed delta fold
-    double-counts it, and even the mirror/export's full-row apply is
-    unsafe — each micro-batch is one NETTED snapshot diff, so a key
-    inserted inside the overlap (already applied) and deleted after the
-    watermark nets to NO ROW and the unapplied delete is silently lost
-    (the row is resurrected forever). ABOVE is a skipped window — benign
+    follower's watermark. BELOW is an overlap, unsafe for every
+    follower (``_follow_stream``). ABOVE is a skipped window — benign
     exactly when the gap is provably change-free: the stream emitted an
     empty micro-batch for (from_v, start] (compaction / rebucket /
     quarantine-only commits plan zero partitions), which never advances
@@ -808,17 +778,15 @@ def _require_window_continuity(
     full-metadata parse just to check continuity."""
     if start == from_v:
         return
-    gap_change_free = False
     gap_err: Exception | None = None
     if start > from_v:
         try:
-            gap_change_free = not plan_window(load_source(), from_v, start)
+            if not plan_window(load_source(), from_v, start):
+                return  # change-free gap
         except Exception as e:
             gap_err = e  # surfaced below — the planner's reason
             # (expired snapshot, reload boundary) is the real
             # diagnostic, not the generic out-of-band message
-    if gap_change_free:
-        return
     detail = (
         f" Gap probe ({from_v}, {start}] failed: {gap_err}"
         if gap_err is not None
@@ -835,6 +803,101 @@ def _require_window_continuity(
     ) from gap_err
 
 
+def _follow_stream(
+    spark,
+    source_root: str,
+    checkpoint_dir: str,
+    trigger_seconds: float,
+    source_options: dict,
+    what: str,
+    watermark,
+    apply,
+    pin_name: str | None = None,
+):
+    """THE micro-batch driver of the three stream followers (mirror,
+    matview, cdc-export). Spark owns the trigger loop and the offset
+    checkpoint; the follower's own source-version watermark
+    (``watermark()``) owns exactly-once. A micro-batch redelivered after
+    a crash between its apply and Spark's offset commit ends at or below
+    the watermark and is skipped whole, so every window is applied once —
+    the same composition the reference's copy stage and Structured
+    Streaming's idempotent ``foreachBatch`` sinks rely on.
+
+    Exactly-once also needs every window to START at the watermark.
+    Each micro-batch is one NETTED snapshot diff over its window, so a
+    window straddling the watermark is unsafe for every follower, not
+    only the matview's signed fold: a key inserted inside the overlap
+    (already applied) and deleted after the watermark nets to NO ROW,
+    and the unapplied delete is silently lost — the row is resurrected
+    forever. The feed therefore always carries its window's exclusive
+    low bound (``includeWindowStart``, refused if disabled) and every
+    window is checked by ``_require_window_continuity``: a fresh
+    checkpoint dir below the watermark, or a batch sync racing the
+    stream, is a loud stop. A start AHEAD of the watermark is refused
+    before the query starts (``_guard_follower_start``) — the skipped
+    window would be lost below the watermark, where no later check sees
+    it. A fresh checkpoint dir must pass ``startingVersion=<the
+    follower's watermark>``; one restarted with the same dir resumes
+    from the last committed window.
+
+    ``apply(feed, source, from_v, to_v)`` applies one window's feed
+    (window-start column dropped); ``source()`` loads the source table,
+    at most once per window and only when needed. With ``pin_name`` the
+    source's retention pin follows each applied window. Returns the
+    started ``StreamingQuery``; callers stop it."""
+    import functools
+
+    from pyspark.sql import functions as F
+
+    from dbimport_spark.lake.table import LakeTable, advance_pin
+
+    follower_v = watermark()
+    start = resolve_starting_version(LakeTable.load(source_root), source_options)
+    if follower_v < start:
+        raise ValueError(
+            f"stream starting position {start} is ahead of the "
+            f"follower's watermark {follower_v}: the window "
+            f"({follower_v}, {start}] would be silently lost. Set "
+            f"startingVersion={follower_v} (the follower's watermark), "
+            "or catch the follower up first."
+        )
+    # an explicit includeWindowStart=false (any key case) is refused,
+    # not silently overridden: that would hide the disagreement
+    user = _ci_last(source_options, "includeWindowStart")
+    if user is not None and str(user).lower() not in ("true", "1"):
+        raise ValueError(
+            f"{what} follower needs the window-start column — "
+            "includeWindowStart cannot be disabled (window continuity "
+            "is verified against it, see _require_window_continuity)"
+        )
+    feed = read_changes_stream(
+        spark, source_root, **{"includeWindowStart": "true", **source_options}
+    )
+
+    def apply_window(batch_df, _epoch_id: int) -> None:
+        head = batch_df.agg(
+            F.max(COMMIT_VERSION_COL).alias("v"),
+            F.max(COMMIT_WINDOW_START_COL).alias("ws"),
+        ).collect()[0]
+        if head["v"] is None:
+            return  # empty window (compaction / rebucket-only commits)
+        to_v, from_v = int(head["v"]), watermark()
+        if to_v <= from_v:
+            return  # redelivered window: the follower already has it
+        source = functools.cache(lambda: LakeTable.load(source_root))
+        _require_window_continuity(source, int(head["ws"]), from_v, to_v, what)
+        apply(batch_df.drop(COMMIT_WINDOW_START_COL), source, from_v, to_v)
+        if pin_name is not None:
+            advance_pin(source(), pin_name, to_v)
+
+    return (
+        feed.writeStream.foreachBatch(apply_window)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(processingTime=f"{trigger_seconds} seconds")
+        .start()
+    )
+
+
 def follow_mirror_stream(
     spark,
     source_root: str,
@@ -844,70 +907,25 @@ def follow_mirror_stream(
     pin_name: str | None = None,
     **source_options,
 ):
-    """The streaming twin of ``plans/mirror.follow_mirror``: Spark owns
-    the trigger loop and offset checkpointing; the mirror's own version
-    watermark makes a redelivered micro-batch (crash between foreachBatch
-    and offset commit) a no-op — exactly-once end-to-end.
-
-    Returns the started ``StreamingQuery``; callers stop it. A killed
-    follower restarted with the SAME checkpoint dir resumes from the
-    last committed window; a fresh checkpoint dir must pass
-    ``startingVersion=<the mirror's watermark>`` — window continuity is
-    enforced per micro-batch (``_require_window_continuity``), because a
-    window straddling the watermark is one netted snapshot diff that can
-    cancel an unapplied delete against an already-applied insert and
-    silently resurrect the row.
-    """
-    from pyspark.sql import functions as F
-
+    """The streaming twin of ``plans/mirror.follow_mirror``: each
+    micro-batch is mapped to change events and applied through the
+    mirror's engine, whose LSN watermark is the last mirrored source
+    version. Exactly-once and window continuity: ``_follow_stream``.
+    Returns the started ``StreamingQuery``; callers stop it."""
     from dbimport_spark.plans.mirror import (
         feed_to_change_events,
         source_version_mirrored,
     )
 
-    _guard_follower_start(
-        source_root, source_version_mirrored(mirror_engine), source_options
-    )
-    # every micro-batch carries its window's exclusive low bound so the
-    # sink can verify window CONTINUITY. This is NOT optional for the
-    # mirror either: a micro-batch is one netted snapshot diff, so a
-    # window starting below the mirror's watermark can net an applied
-    # insert against an unapplied delete into NO ROW — the mirror would
-    # keep the deleted key forever (see _require_window_continuity)
-    source_options = _window_start_options(source_options, "mirror")
-    feed = read_changes_stream(spark, source_root, **source_options)
-
-    def apply_window(batch_df, _epoch_id: int) -> None:
-        head = batch_df.agg(
-            F.max(COMMIT_VERSION_COL).alias("v"),
-            F.max(COMMIT_WINDOW_START_COL).alias("ws"),
-        ).collect()[0]
-        if head["v"] is None:
-            return  # empty window (e.g. compaction-only commits)
-        to_v = int(head["v"])
-        from_v = source_version_mirrored(mirror_engine)
-        if to_v <= from_v:
-            return  # redelivered window: mirror already has it
-        from dbimport_spark.lake.table import LakeTable
-
-        _require_window_continuity(
-            lambda: LakeTable.load(source_root), int(head["ws"]),
-            from_v, to_v, "mirror",
+    def apply(feed, _source, from_v: int, to_v: int) -> None:
+        mirror_engine.apply_batch(
+            feed_to_change_events(feed, to_v), from_v, to_v
         )
-        events = feed_to_change_events(
-            batch_df.drop(COMMIT_WINDOW_START_COL), to_v
-        )
-        mirror_engine.apply_batch(events, from_v, to_v)
-        if pin_name is not None:
-            from dbimport_spark.lake.table import advance_pin
 
-            advance_pin(LakeTable.load(source_root), pin_name, to_v)
-
-    return (
-        feed.writeStream.foreachBatch(apply_window)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    return _follow_stream(
+        spark, source_root, checkpoint_dir, trigger_seconds, source_options,
+        "mirror", lambda: source_version_mirrored(mirror_engine), apply,
+        pin_name,
     )
 
 
@@ -921,38 +939,17 @@ def follow_view_stream(
     pin_name: str | None = None,
     **source_options,
 ):
-    """The streaming twin of ``plans/matview.follow_view``: the
-    incrementally-maintained aggregate view driven by the ``lake_cdf``
-    stream with ``includePreimage`` — each micro-batch IS the window's
-    pre-image feed, applied directly through
-    ``matview.apply_feed_to_view`` (no second snapshot diff; the batch
-    ``sync_view`` recomputes ``table_changes`` per refresh, the stream
-    already carries it). Spark owns triggers + offset checkpointing;
-    the view's version watermark makes a redelivered micro-batch a
-    no-op — exactly-once end-to-end, same composition as
-    ``follow_mirror_stream``.
-
-    Returns the started ``StreamingQuery``; callers stop it. Kill and
-    restart with the same checkpoint dir resumes from the last
-    committed window. Unlike the mirror (whose full-row merge is
-    idempotent under overlap), the view's SIGNED delta fold must see
-    each window exactly once: every micro-batch carries its window's
-    start bound (``includeWindowStart``) and a window that does not
-    begin at the view's own watermark is refused loudly — this catches
-    a fresh checkpoint dir started below the view's watermark and an
-    out-of-band batch ``sync_view`` racing this stream, both of which
-    would otherwise double-count the overlap. A starting position ahead
-    of the view's watermark is likewise refused (the skipped window
-    would be silently lost).
-    """
-    from pyspark.sql import functions as F
-
-    from dbimport_spark.lake.table import LakeTable
+    """The streaming twin of ``plans/matview.follow_view``: the stream
+    runs with ``includePreimage``, so each micro-batch IS the window's
+    pre-image feed and folds straight into the view through
+    ``matview.apply_feed_to_view`` — no second snapshot diff, where the
+    batch ``sync_view`` computes ``table_changes`` per refresh. The
+    view's signed delta fold is why window continuity matters most here
+    (an overlap double-counts); exactly-once and continuity:
+    ``_follow_stream``. Returns the started ``StreamingQuery``; callers
+    stop it."""
     from dbimport_spark.plans.matview import apply_feed_to_view
 
-    _guard_follower_start(
-        source_root, max(view_engine.table.last_lsn(), 0), source_options
-    )
     pre = _ci_last(source_options, "includePreimage")
     if pre is not None and str(pre).lower() not in ("true", "1"):
         raise ValueError(
@@ -960,46 +957,17 @@ def follow_view_stream(
             "includePreimage cannot be disabled (update inversion "
             "reads the _pre_ columns)"
         )
-    source_options = {"includePreimage": "true", **source_options}
-    # the window-start column makes every micro-batch carry its own
-    # exclusive low bound, so the sink can verify window CONTINUITY: a
-    # signed delta fold applied over a window that starts below the
-    # view's watermark would double-count the overlap (the mirror and
-    # export followers enforce the same check — their netted diffs can
-    # cancel deletes across a straddle, see _require_window_continuity)
-    source_options = _window_start_options(source_options, "view")
-    feed = read_changes_stream(spark, source_root, **source_options)
 
-    def apply_window(batch_df, _epoch_id: int) -> None:
-        head = batch_df.agg(
-            F.max(COMMIT_VERSION_COL).alias("v"),
-            F.max(COMMIT_WINDOW_START_COL).alias("ws"),
-        ).collect()[0]
-        if head["v"] is None:
-            return  # empty window (e.g. compaction-only commits)
-        to_v = int(head["v"])
-        from_v = max(view_engine.table.last_lsn(), 0)
-        if to_v <= from_v:
-            return  # redelivered window: view already has it
-        start = int(head["ws"])
-        source = LakeTable.load(source_root)
-        _require_window_continuity(
-            lambda: source, start, from_v, to_v, "view"
-        )
+    def apply(feed, source, from_v: int, to_v: int) -> None:
         apply_feed_to_view(
-            spark, source, view_engine, spec,
-            batch_df.drop(COMMIT_WINDOW_START_COL), from_v, to_v,
+            spark, source(), view_engine, spec, feed, from_v, to_v
         )
-        if pin_name is not None:
-            from dbimport_spark.lake.table import advance_pin
 
-            advance_pin(source, pin_name, to_v)
-
-    return (
-        feed.writeStream.foreachBatch(apply_window)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    return _follow_stream(
+        spark, source_root, checkpoint_dir, trigger_seconds,
+        {"includePreimage": "true", **source_options},
+        "view", lambda: max(view_engine.table.last_lsn(), 0), apply,
+        pin_name,
     )
 
 
@@ -1012,31 +980,16 @@ def follow_export_stream(
     **source_options,
 ):
     """The streaming twin of ``plans/cdc_export.CDCJdbcExporter.sync``:
-    the RDBMS target follows the source through ``readStream`` — Spark
-    owns the trigger loop and offset checkpointing, completing the
-    follower symmetry (mirror / matview / cdc-export all batch-pollable
-    AND streamable). Exactly-once rides the exporter's own
-    source-version watermark plus its stage-overwrite + delete-then-
-    insert merge: a redelivered micro-batch (crash between foreachBatch
-    and the offset commit) re-runs into the same final target state —
-    the batch path's argument verbatim.
-
-    A micro-batch IS one netted snapshot diff over its window (even
-    when the window spans several source versions under a rate cap):
-    the planner stamps one end version per batch and the per-bucket
-    diff emits at most one row per key, exactly the shape the stage
-    merge requires — no re-netting needed. Window continuity against
-    the exporter's watermark is enforced per micro-batch
-    (``_require_window_continuity``): a straddling window can net an
-    applied insert against an unapplied delete into NO ROW, silently
-    keeping the deleted key in the target. A fresh checkpoint dir must
-    pass ``startingVersion=<the exporter's watermark>``. Preimage rows
-    are refused — the export ships post-images only. An expired delta
-    base stops the stream loudly: run a one-shot batch
-    ``sync(on_gap='full')`` to reconcile, then restart the stream.
-    """
-    from pyspark.sql import functions as F
-
+    the RDBMS target follows the source through ``readStream``, each
+    micro-batch staged and merged by ``CDCJdbcExporter.apply_feed``,
+    which also promotes the exporter's source-version watermark and pin.
+    A micro-batch is one netted snapshot diff even when a rate cap makes
+    it span several versions — at most one row per key, exactly the
+    shape the stage merge requires. Exactly-once and continuity:
+    ``_follow_stream``. Preimage rows are refused (the export ships
+    post-images only). An expired delta base stops the stream loudly:
+    run a one-shot batch ``sync(on_gap='full')``, then restart the
+    stream. Returns the started ``StreamingQuery``; callers stop it."""
     if str(_ci_last(source_options, "includePreimage") or "").lower() in (
         "true", "1",
     ):
@@ -1044,36 +997,11 @@ def follow_export_stream(
             "follow_export_stream ships post-images only — drop "
             "includePreimage"
         )
-    _guard_follower_start(
-        source_root, int(exporter._state()["last_version"]), source_options
-    )
-    source_options = _window_start_options(source_options, "export")
-    feed = read_changes_stream(spark, source_root, **source_options)
 
-    def apply_window(batch_df, _epoch_id: int) -> None:
-        head = batch_df.agg(
-            F.max(COMMIT_VERSION_COL).alias("v"),
-            F.max(COMMIT_WINDOW_START_COL).alias("ws"),
-        ).collect()[0]
-        if head["v"] is None:
-            return  # empty window (compaction/rebucket-only commits)
-        to_v = int(head["v"])
-        from_v = int(exporter._state()["last_version"])
-        if to_v <= from_v:
-            return  # redelivered window: target already has it
-        from dbimport_spark.lake.table import LakeTable
+    def apply(feed, _source, _from_v: int, to_v: int) -> None:
+        exporter.apply_feed(spark, feed, to_v)
 
-        _require_window_continuity(
-            lambda: LakeTable.load(source_root), int(head["ws"]),
-            from_v, to_v, "export",
-        )
-        exporter.apply_feed(
-            spark, batch_df.drop(COMMIT_WINDOW_START_COL), to_v
-        )
-
-    return (
-        feed.writeStream.foreachBatch(apply_window)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    return _follow_stream(
+        spark, source_root, checkpoint_dir, trigger_seconds, source_options,
+        "export", lambda: int(exporter._state()["last_version"]), apply,
     )

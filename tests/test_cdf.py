@@ -329,6 +329,33 @@ def test_follow_changes_yields_new_windows(spark, tmp_path):
         next(gen)
 
 
+def test_follow_changes_stop_rule_finishes_then_stops(tmp_path, monkeypatch):
+    """The stop rule, without Spark: a ``--stop-file`` seen while the
+    table keeps committing yields one final window covering every commit
+    up to that moment, then the generator ends (it used to return at
+    once, dropping windows the help promised to drain)."""
+    import types
+
+    from dbimport_spark.lake import cdf
+
+    monkeypatch.setattr(
+        cdf, "table_changes", lambda spark, table, lo, hi: ("feed", lo, hi)
+    )
+    versions = iter(range(3, 1000))  # one new commit per metadata poll
+    table = types.SimpleNamespace(
+        current=lambda: types.SimpleNamespace(version=next(versions))
+    )
+    stop = tmp_path / "stop"
+    stop.touch()
+    got = list(
+        cdf.follow_changes(
+            None, table, from_version=0, poll_s=3600.0, max_windows=50,
+            stop_file=str(stop),
+        )
+    )
+    assert got == [(0, 3, ("feed", 0, 3))]
+
+
 def test_per_commit_changelog_retention_gap_before_rewrite_only(spark, tmp_path):
     """A version pair spanning a retention gap that ENDS at a
     rewrite-only commit must be scanned, not skipped: the expired

@@ -413,6 +413,73 @@ def test_cli_mirror_stream_drains_then_stops(spark, tmp_path, capsys):
     assert out["verify"]["converged"]
 
 
+class _FakeQuery:
+    """A started streaming query, without Spark: each progress poll
+    delivers one more source version; ``exception()`` returns ``error``,
+    or fails after 500 polls, so a drain that never ends surfaces as an
+    error instead of a hang."""
+
+    def __init__(self, error=None):
+        self.delivered, self.polls, self.error = 0, 0, error
+        self.stopped = False
+
+    def exception(self):
+        self.polls += 1
+        if self.error is not None or self.polls > 500:
+            return self.error or RuntimeError("drain never ended")
+        return None
+
+    @property
+    def lastProgress(self):
+        self.delivered += 1
+        # Spark renders the Python source's offset dict as its repr
+        return {"sources": [{"endOffset": repr({"version": self.delivered})}]}
+
+    def stop(self):
+        self.stopped = True
+
+    def awaitTermination(self, timeout):
+        return True
+
+
+def test_cli_stream_stop_rule_drains_to_seen_version(tmp_path):
+    """The ``--stream`` stop rule, without Spark: once the stop file is
+    seen, the drain targets the source version read at that moment, so a
+    source that keeps committing cannot keep the follower running (the
+    drain used to chase ``current()`` and never end); a drained stream
+    whose trailing windows are empty stops on the delivered offset."""
+    import argparse
+    import types
+
+    from dbimport_spark.cli import _drain_stream
+
+    stop = tmp_path / "stop"
+    stop.touch()
+    args = argparse.Namespace(stop_file=str(stop), poll=0.0, stream="ckpt")
+    versions = iter(range(5, 10**6))  # a commit lands on every read
+    source = types.SimpleNamespace(
+        current=lambda: types.SimpleNamespace(version=next(versions))
+    )
+    q = _FakeQuery()
+    # the watermark never moves (empty windows): the delivered offset ends it
+    out = _drain_stream(args, q, source, lambda: 0, "wm")
+    assert out == {"wm": 0, "checkpoint": "ckpt"}
+    assert q.stopped and q.delivered == 5
+
+    # a follower whose watermark already reached the version stops at once
+    q = _FakeQuery()
+    assert _drain_stream(args, q, source, lambda: 10**6, "wm")["wm"] == 10**6
+    assert q.stopped and q.polls == 1
+
+    # no stop file: keep draining; the stream's own failure surfaces
+    # and the query is still stopped
+    args.stop_file = str(tmp_path / "absent")
+    q = _FakeQuery(error=ValueError("window start"))
+    with pytest.raises(ValueError, match="window start"):
+        _drain_stream(args, q, source, lambda: 0, "wm")
+    assert q.stopped
+
+
 def test_reader_starting_timestamp(spark, tmp_path):
     """startingTimestamp resolves to the newest version committed strictly
     before it (so the first window carries every commit at/after it);

@@ -4,6 +4,7 @@ LSN watermark is the source version, so sync is exactly-once and
 resumable through the engine's existing machinery."""
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -235,6 +236,47 @@ def test_follow_mirror_stop_file(spark, tmp_path):
     assert _payload_state(spark, mir.table) == _payload_state(spark, src.table)
 
 
+def test_follow_sync_stop_rule_finishes_then_stops(tmp_path):
+    """The polling stop rule, without Spark: once the stop file is seen,
+    one final sync covers the windows committed up to that moment, then
+    the loop stops — even when the source commits between every sync
+    (the loop used to check the file only after an idle sync, so a busy
+    source kept it running forever)."""
+    from dbimport_spark.plans.engine import BatchStats
+    from dbimport_spark.plans.mirror import follow_sync
+
+    stop = tmp_path / "stop"
+    calls = []
+
+    def busy_sync():  # the source always has a new window
+        calls.append(len(calls))
+        if len(calls) == 3:
+            stop.touch()  # appears while the third sync runs
+        return BatchStats(lo=len(calls) - 1, hi=len(calls))
+
+    # a 200-sync cap keeps a broken stop rule from hanging the test
+    applied = follow_sync(
+        busy_sync, poll_s=3600.0, max_syncs=200, stop_file=str(stop)
+    )
+    assert len(applied) == 4  # the file is seen before the 4th, its last
+    assert [b.hi for b in applied] == [1, 2, 3, 4]
+
+    calls.clear()
+    applied = follow_sync(
+        busy_sync, poll_s=3600.0, max_syncs=200, stop_file=str(stop)
+    )
+    assert len(applied) == 1  # already present: one final sync
+
+    def idle_sync():
+        calls.append(None)
+        return BatchStats(lo=4, hi=4, skipped=True)
+
+    calls.clear()
+    t0 = time.monotonic()
+    assert follow_sync(idle_sync, poll_s=3600.0, stop_file=str(stop)) == []
+    assert len(calls) == 1 and time.monotonic() - t0 < 60  # no poll sleep
+
+
 def test_mirror_and_view_converge_after_source_repair(spark, tmp_path):
     """Out-of-band repair interplay: repair_keys rewrites source buckets
     in a NEW commit, so a later delta sync ships the corrections through
@@ -311,6 +353,17 @@ def test_mirror_sync_across_reload_boundary(spark, tmp_path):
 
     with pytest.raises(ValueError, match="declared full reload"):
         sync_mirror(spark, src_t, mir)  # on_gap='error' names the cause
+    # the CDC exporter applies the same gap rule, refusing the window
+    # before any JDBC connection is opened
+    from dbimport_spark.plans.cdc_export import CDCJdbcExporter
+
+    exp = CDCJdbcExporter(
+        src_t, "jdbc:derby:memory:never-opened", "tgt",
+        state_dir=str(tmp_path / "export-state"),
+    )
+    exp._save_state({"last_version": base_v, "runs": 1})
+    with pytest.raises(ValueError, match="declared full reload"):
+        exp.sync(spark)
     bs = sync_mirror(spark, src_t, mir, on_gap="full")
     assert not bs.skipped
     assert verify_mirror(spark, src_t, mir_t)["converged"]
