@@ -124,7 +124,7 @@ def main() -> None:
     head = changes.filter(F.col("lsn") <= full)
     tail = changes.filter(F.col("lsn") > full)
 
-    # -- replay with phase timings (DBIMPORT_TIMINGS printed by the engine) --
+    # -- replay timings ------------------------------------------------------
     for i in range(repeats):
         if not wanted("replay"):
             break

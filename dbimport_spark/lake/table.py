@@ -706,7 +706,6 @@ class LakeTable:
                 for c in snap_props.properties.get(key, "").split(",")
                 if c.strip()
             ]
-        t0 = time.time()
         out = df.withColumn("bucket", F.col(bucket_col)).drop(bucket_col)
         # declared sort order (Iceberg SORTED BY analogue, table property
         # 'sort_order'): every data file is written sorted by these
@@ -745,7 +744,6 @@ class LakeTable:
                         f"parquet.bloom.filter.expected.ndv#{c}", ndv
                     )
         writer.parquet(out_dir)
-        t1 = time.time()
 
         import pyarrow.parquet as pq
 
@@ -818,11 +816,6 @@ class LakeTable:
                 for p, b, nrows, nbytes, st in stats
                 if nrows > 0
             ]
-        if os.environ.get("DBIMPORT_TIMINGS", "") not in ("", "0"):
-            print(
-                f"TIMING write_parquet {t1 - t0:.2f} / footer_stats {time.time() - t1:.2f}",
-                flush=True,
-            )
         return out
 
     def commit(

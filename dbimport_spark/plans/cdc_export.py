@@ -54,6 +54,24 @@ from dbimport_spark.lake.table import LakeTable, advance_pin
 from dbimport_spark.schema import AUDIT_COLUMNS, AUDIT_DELETE
 
 
+_STATE_FILE = "_cdc_export_state.json"
+
+
+def read_export_state(store, state_dir: str) -> dict:
+    """The export state committed under ``state_dir`` through ``store``
+    (``last_version``: the source-version watermark; ``runs``; the rename
+    epoch). With ``write_export_state``, the one place that knows the
+    format — the exporter and the lag report both read it here."""
+    text = store.read_text(os.path.join(state_dir, _STATE_FILE))
+    if text is not None:
+        return json.loads(text)
+    return {"last_version": 0, "runs": 0}
+
+
+def write_export_state(store, state_dir: str, state: dict) -> None:
+    store.write_text(os.path.join(state_dir, _STATE_FILE), json.dumps(state))
+
+
 def _q(name: str) -> str:
     """Quote an SQL identifier (Spark's JDBC writer creates columns with
     quoted, case-preserved names — our driver-side SQL must match)."""
@@ -108,18 +126,11 @@ class CDCJdbcExporter:
         self.keys = list(bc) if isinstance(bc, list) else [bc]
 
     # -- state (source-version watermark, two-phase) ---------------------
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self.state_dir, "_cdc_export_state.json")
-
     def _state(self) -> dict:
-        text = self.state_store.read_text(self._state_path)
-        if text is not None:
-            return json.loads(text)
-        return {"last_version": 0, "runs": 0}
+        return read_export_state(self.state_store, self.state_dir)
 
     def _save_state(self, state: dict) -> None:
-        self.state_store.write_text(self._state_path, json.dumps(state))
+        write_export_state(self.state_store, self.state_dir, state)
 
     # -- driver-side SQL (metadata-sized; one transaction) ---------------
     def _qt(self, name: str) -> str:

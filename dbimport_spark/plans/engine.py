@@ -19,7 +19,6 @@ from __future__ import annotations
 import os
 import re
 import shutil
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -47,22 +46,6 @@ from dbimport_spark.schema import (
 )
 
 LOG_BOOKKEEPING = {"lsn", "op", "commit_ts"}
-
-_TIMINGS = os.environ.get("DBIMPORT_TIMINGS", "") not in ("", "0")
-
-
-class _phase_timer:
-    """Prints per-phase wall times when DBIMPORT_TIMINGS=1 (perf triage)."""
-
-    def __init__(self, label: str):
-        self.label = label
-
-    def __enter__(self):
-        self.t0 = time.time()
-
-    def __exit__(self, *exc):
-        if _TIMINGS:
-            print(f"TIMING {self.label} {time.time() - self.t0:.2f}", flush=True)
 
 
 def table_schema_with_audit(
@@ -389,22 +372,32 @@ class CDCEngine:
                 val = prev + timedelta(microseconds=1)
         return val
 
-    def _with_live_payload(
+    def _lww(
         self,
-        deduped: DataFrame,
         src: DataFrame,
         payload_cols: list,
         keys: list | None = None,
     ) -> DataFrame:
-        """Soft mode: attach the batch's last-live (op != 'D') payload as
-        *_lv columns so a delete winner can still materialize its
+        """LWW winner per key of a change frame. ``keys`` is the dedup key
+        list (the merge keys, optionally prefixed by _bucket; defaults to
+        the merge keys).
+
+        Soft mode also attaches the frame's last-live (op != 'D') payload
+        as *_lv columns so a delete winner can still materialize its
         pre-image — final state stays invariant under batching (an I then
         D inside ONE window must equal I in one window, D in the next).
-        ``keys`` is the dedup key list (the merge keys, optionally
-        prefixed by _bucket; defaults to the merge keys). One definition
-        for every soft-merge path: apply_batch (both modes), the MOR
-        apply, repair_keys, and apply_late."""
+        One definition for every write path: the merge step (apply_batch,
+        repair_keys, apply_late) and the MOR apply."""
         keys = list(keys if keys is not None else self.keys)
+        deduped = dedup_lww(
+            src,
+            key=keys,
+            order_col="lsn",
+            strategy=self.dedup_strategy,
+            n_salts=self.n_salts,
+        )
+        if self.delete_mode != "soft":
+            return deduped
         non_key = [c for c in payload_cols if c not in self.keys]
         live = dedup_lww(
             src.filter(F.col("op") != "D"),
@@ -418,20 +411,6 @@ class CDCEngine:
             *[F.col(c).alias(f"{c}_lv") for c in non_key],
         )
         return deduped.join(live, keys, "left")
-
-    def _key_counts(self, key_df: DataFrame):
-        """One-pass ``(n, nulls)`` over key rows: total plus rows with
-        any null merge-key component. A null component means the log
-        carries the key under an UNDECLARED former name — alignment
-        nulled it, and the downstream semi-join/dedup would silently
-        drop those rows; callers refuse when nulls > 0."""
-        null_pred = F.lit(False)
-        for k in self.keys:
-            null_pred = null_pred | F.col(k).isNull()
-        return key_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(null_pred, F.lit(1))).alias("nulls"),
-        ).first()
 
     def _source_expr(self, f, bschema: dict):
         """Column expression sourcing schema field ``f`` from a batch:
@@ -466,17 +445,23 @@ class CDCEngine:
             *[F.col(c).cast(f.dataType) for c in cands]
         ).alias(f.name)
 
-    def _align_exprs(self, fields, bschema: dict, src_label: str | None) -> list:
-        """THE payload-alignment rule, shared by apply_batch and
-        repair_keys so normal replay and recovery can never fold the same
-        log differently: each field sourced via _source_expr (former-name
+    def _align_exprs(
+        self, fields, batch_schema: T.StructType, src_label: str | None
+    ) -> dict:
+        """THE payload-alignment rule, shared by apply_batch, repair_keys
+        and apply_late so normal replay and recovery can never fold the
+        same log differently: each payload field of ``fields`` sourced from
+        a frame of ``batch_schema`` via _source_expr (former-name
         coalesce), engine-stamped provenance label, nulls for absent
-        columns."""
+        columns. Keyed by payload name, in schema order; the key entries
+        are also how the malformed predicate reads the merge keys of the
+        RAW frame (``_bad_event_reason(key_exprs=...)``)."""
         from dbimport_spark.schema import AUDIT_SOURCE
 
         from dbimport_spark.functions.masking import ANONYMIZATION
 
-        out = []
+        bschema = {f.name: f for f in batch_schema.fields}
+        out = {}
         for f in fields:
             if f.name in AUDIT_COLUMNS:
                 continue
@@ -499,14 +484,23 @@ class CDCEngine:
             if f.name == AUDIT_SOURCE and src_label is not None and src is None:
                 # provenance column: stamped by the engine on live rows
                 # (reference datalake_source, etl_operations.py:237-239)
-                out.append(
-                    F.when(F.col("op") != "D", F.lit(src_label)).alias(f.name)
-                )
+                out[f.name] = F.when(
+                    F.col("op") != "D", F.lit(src_label)
+                ).alias(f.name)
             elif src is None:
-                out.append(F.lit(None).cast(f.dataType).alias(f.name))
+                out[f.name] = F.lit(None).cast(f.dataType).alias(f.name)
             else:
-                out.append(src)
+                out[f.name] = src
         return out
+
+    def _aligned(self, events: DataFrame, snap) -> DataFrame:
+        """``lsn``, ``op`` and the payload of ``events`` aligned to the
+        snapshot's schema (missing columns null, narrower cast up, declared
+        former names coalesced, provenance label re-stamped)."""
+        exprs = self._align_exprs(
+            snap.schema.fields, events.schema, snap.properties.get("source_label")
+        )
+        return events.select(F.col("lsn"), F.col("op"), *exprs.values())
 
     # -- dry-run evolution planner -------------------------------------------
 
@@ -776,13 +770,11 @@ class CDCEngine:
         # doesn't carry (older log segments) come through as nulls; narrower
         # batch columns are cast up to the table type
         src_label = snap.properties.get("source_label")
-        bschema = {f.name: f for f in batch.schema.fields}
-        aligned_payload = self._align_exprs(new_schema.fields, bschema, src_label)
-        payload_names = [
-            f.name for f in new_schema.fields if f.name not in AUDIT_COLUMNS
-        ]
-        aligned_cols = [F.col("lsn"), F.col("op")] + aligned_payload
-        has_commit_ts = "commit_ts" in bschema
+        aligned_payload = self._align_exprs(
+            new_schema.fields, batch.schema, src_label
+        )
+        aligned_cols = [F.col("lsn"), F.col("op"), *aligned_payload.values()]
+        has_commit_ts = "commit_ts" in batch.columns
         if has_commit_ts:
             aligned_cols.append(F.col("commit_ts"))
         batch_raw = batch  # pre-alignment: the quarantine parks THESE rows
@@ -805,30 +797,38 @@ class CDCEngine:
         ]
         if has_commit_ts:
             agg_cols.append(F.max("commit_ts").alias("max_ts"))
-        with _phase_timer("stats_agg"):
-            per_bucket = (
-                batch.groupBy(
-                    F.when(bad_reason.isNotNull(), F.lit(-1))
-                    .otherwise(bexpr)
-                    .alias("bucket")
-                )
-                .agg(*agg_cols)
-                .collect()
+        per_bucket = (
+            batch.groupBy(
+                F.when(bad_reason.isNotNull(), F.lit(-1))
+                .otherwise(bexpr)
+                .alias("bucket")
             )
+            .agg(*agg_cols)
+            .collect()
+        )
 
         bad_rows = [r for r in per_bucket if r["bucket"] == -1]
         n_bad = sum(r["events"] for r in bad_rows)
-        # actual lsn span of the quarantined events (F.min/max skip nulls;
-        # all-null-lsn batches fall back to the window's inclusive bounds
-        # lo+1..hi — never the exclusive lo, which per-bucket records also
-        # never stamp)
-        bad_first = min(
-            (r["first_lsn"] for r in bad_rows if r["first_lsn"] is not None),
-            default=lo + 1,
-        )
-        bad_last = max(
-            (r["last_lsn"] for r in bad_rows if r["last_lsn"] is not None),
-            default=hi,
+        # the quarantine's lineage record, with the actual lsn span of the
+        # quarantined events (F.min/max skip nulls; all-null-lsn batches
+        # fall back to the window's inclusive bounds lo+1..hi — never the
+        # exclusive lo, which per-bucket records also never stamp)
+        quarantined = (
+            [
+                {
+                    "quarantined": n_bad,
+                    "first_lsn": min(
+                        (r["first_lsn"] for r in bad_rows if r["first_lsn"] is not None),
+                        default=lo + 1,
+                    ),
+                    "last_lsn": max(
+                        (r["last_lsn"] for r in bad_rows if r["last_lsn"] is not None),
+                        default=hi,
+                    ),
+                }
+            ]
+            if n_bad
+            else []
         )
         per_bucket = [r for r in per_bucket if r["bucket"] != -1]
         if n_bad:
@@ -846,9 +846,7 @@ class CDCEngine:
             # dead letter that lost that evidence could never be repaired
             # or drained. The predicate is the SAME rule, evaluated through
             # the alignment exprs (they are expressions over the raw frame).
-            raw_reason = self._bad_event_reason(
-                key_exprs=dict(zip(payload_names, aligned_payload))
-            )
+            raw_reason = self._bad_event_reason(key_exprs=aligned_payload)
             (
                 batch_raw.filter(raw_reason.isNotNull())
                 .withColumn("dl_reason", raw_reason)
@@ -870,17 +868,7 @@ class CDCEngine:
                 [],
                 set(),
                 properties={"last_lsn": str(hi)},
-                lineage=(
-                    [
-                        {
-                            "quarantined": n_bad,
-                            "first_lsn": bad_first,
-                            "last_lsn": bad_last,
-                        }
-                    ]
-                    if n_bad
-                    else None
-                ),
+                lineage=quarantined or None,
                 expected_version=snap.version,
             )
             return BatchStats(
@@ -889,6 +877,7 @@ class CDCEngine:
 
         touched = sorted(r["bucket"] for r in per_bucket)
         n_events = sum(r["events"] for r in per_bucket)
+        n_dels = sum(r["dels"] or 0 for r in per_bucket)
         ts_vals = (
             [r["max_ts"] for r in per_bucket if r["max_ts"] is not None]
             if has_commit_ts
@@ -901,9 +890,6 @@ class CDCEngine:
         merge_ts_val = self._monotonic_merge_ts(
             snap, max(ts_vals) if ts_vals else None
         )
-        merge_ts = F.lit(merge_ts_val)
-
-        # -- dedup (LWW per key) --------------------------------------------
         batch_nc = batch.drop("commit_ts") if has_commit_ts else batch
 
         # -- write-mode decision (metadata-only) -----------------------------
@@ -927,163 +913,36 @@ class CDCEngine:
                 (n_events / touched_rows) if touched_rows else float("inf"),
                 self.mor_auto_ratio,
             )
+
+        target = self._read_target(touched, new_schema)
         if use_mor:
-            return self._apply_batch_mor(
-                batch_nc, snap, new_schema, delta, payload_cols, bexpr,
-                touched, per_bucket, n_events, lo, hi, merge_ts_val,
-                n_bad, bad_first, bad_last,
-                n_dels=sum(r["dels"] or 0 for r in per_bucket),
+            mode = "mor"
+            deduped, new_files, staged = self._write_mor(
+                batch_nc, snap, target, payload_cols, touched, n_events,
+                n_dels, lo, hi, merge_ts_val,
             )
-
-        # -- target aligned to the (evolved) schema -------------------------
-        # added columns: nulls; widened columns: cast up (old files are also
-        # readable directly through the widened schema — SPARK-40876 — but
-        # this read predates the schema commit, so cast explicitly)
-        target = self.table.read(self.spark, buckets=touched)
-        tcols = set(target.columns)
-        target = target.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    if f.name in tcols
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                )
-                for f in new_schema.fields
-            ]
-        )
-
-        if not touched_have_files:
-            mode = "insert-only"
-        elif n_events <= self.broadcast_threshold_rows:
-            mode = "broadcast"
         else:
-            mode = "shuffle"
-
-        # NOTE the deduped batch is deliberately NOT persisted: its consumers
-        # fuse into the single write job, and recomputing the hash-agg is
-        # measurably cheaper than materializing token arrays into the JVM
-        # block manager (deserialized cache showed 3x slowdown at 32 threads
-        # from GC / memory-store contention).
-        def with_live_payload(deduped: DataFrame, src: DataFrame, keys: list) -> DataFrame:
-            return self._with_live_payload(deduped, src, payload_cols, keys)
-
-        if mode == "broadcast":
-            # steady-state CDC: batch broadcast, target streamed — zero
-            # target shuffle; output keeps the target's per-bucket-file
-            # partitioning, so the partitionBy write stays shuffle-free.
-            deduped = dedup_lww(
-                batch_nc,
-                key=self.keys,
-                order_col="lsn",
-                strategy=self.dedup_strategy,
-                n_salts=self.n_salts,
+            mode, deduped, out = self._merge_step(
+                batch_nc, target, snap, touched, payload_cols, merge_ts_val,
+                n_events,
             )
-            if self.delete_mode == "soft":
-                deduped = with_live_payload(deduped, batch_nc, self.keys)
-            # three consumers inside the broadcast merge (the broadcast
-            # build, the matched-keys semi probe, and the insert anti-join)
-            # would each re-read the window and re-run the dedup;
-            # materialize once — bounded by broadcast_threshold_rows, the
-            # same cap that already gates broadcasting this frame's full
-            # payload. (The bucket path deliberately stays unmaterialized:
-            # at full-replay scale caching token arrays measured 3x slower
-            # than recompute — see the NOTE above.)
-            deduped = deduped.localCheckpoint(eager=False)
-            merged = merge_changes(
-                target,
-                deduped,
-                self.keys,
-                payload_cols,
-                merge_ts,
-                mode="broadcast",
-                delete_mode=self.delete_mode,
-            )
-            out = merged.withColumn("_bucket", bexpr)
-            # small touched set: one cheap exchange keeps one file per
-            # bucket. Large touched set (the 100 TB steady state): skip it —
-            # preserving the zero-target-shuffle property matters more than
-            # file count, and compaction reclaims layout asynchronously.
-            _ts = set(touched)  # hoisted: the generator runs per FILE
-            touched_bytes = sum(
-                f.bytes for f in snap.files if f.bucket in _ts
-            )
-            if touched_bytes < self.repartition_output_bytes:
-                out = out.repartition(max(len(touched), 1), "_bucket")
-        else:
-            # bucket-aligned plan: ONE explicit exchange per side, then the
-            # dedup (groupBy(_bucket, key)), the full-outer join on
-            # (_bucket, key), and the partitionBy(_bucket) write all ride
-            # the same HashPartitioning — no further shuffles, no sorts
-            # (shuffled-hash join preferred in the session config).
-            # partition by the table's bucket layout, NOT by core count:
-            # bounded, data-sized tasks (≈ one bucket each) that pipeline
-            # across whatever parallelism is available — the same plan at
-            # local[4] and on a 1000-executor cluster
-            nparts = snap.num_buckets
-            batch_b = batch_nc.withColumn("_bucket", bexpr).repartition(
-                nparts, "_bucket"
-            )
-            deduped = dedup_lww(
-                batch_b,
-                key=["_bucket"] + self.keys,
-                order_col="lsn",
-                strategy=self.dedup_strategy,
-                n_salts=self.n_salts,
-            )
-            if self.delete_mode == "soft":
-                deduped = with_live_payload(deduped, batch_b, ["_bucket"] + self.keys)
-            if mode == "insert-only":
-                out = inserts_only(
-                    deduped,
-                    self.keys,
-                    payload_cols,
-                    merge_ts,
-                    bucket_col="_bucket",
-                    soft=self.delete_mode == "soft",
-                    track_lsn=self.track_lsn,
-                )
-            else:
-                target_b = target.withColumn("_bucket", bexpr).repartition(
-                    nparts, "_bucket"
-                )
-                out = merge_changes(
-                    target_b,
-                    deduped,
-                    self.keys,
-                    payload_cols,
-                    merge_ts,
-                    mode="shuffle",
-                    bucket_col="_bucket",
-                    delete_mode=self.delete_mode,
-                )
-
-        version_dir = f"s{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        with _phase_timer(f"merge_write[{mode}]"):
-            new_files = self.table.write_data_files(self.spark, out, version_dir)
+            staged = [f"s{snap.version + 1}-{uuid.uuid4().hex[:8]}"]
+            new_files = self.table.write_data_files(self.spark, out, staged[0])
 
         self._run_validators(
-            new_files, snap, new_schema,
+            [f for f in new_files if f.kind != "delete"], snap, new_schema,
             {
                 "lo": lo, "hi": hi, "mode": mode, "events": n_events,
-                "deletes": sum(r["dels"] or 0 for r in per_bucket),
+                "deletes": n_dels,
                 "touched_buckets": len(touched),
                 "out_rows": sum(f.rows for f in new_files),
                 "out_bytes": sum(f.bytes for f in new_files),
                 "prev_rows": touched_rows,
             },
-            [version_dir],
+            staged,
         )
 
-        # -- optional history-audit append (own idempotent commit, BEFORE the
-        # main commit: crash between them re-applies the main batch, crash
-        # after history re-skips it via its own last_lsn) ------------------
-        if self.history_table is not None and self.history_table.last_lsn() < hi:
-            self._append_history(
-                deduped, target, payload_cols, new_schema, merge_ts, hi,
-                broadcast_ok=n_events <= self.broadcast_threshold_rows,
-            )
-
-        # -- lineage + atomic commit ----------------------------------------
+        # -- per-bucket lineage from the written files ----------------------
         out_by_bucket: dict[int, list[int]] = {}
         for fl in new_files:
             rows, nbytes = out_by_bucket.get(fl.bucket, [0, 0])
@@ -1099,22 +958,205 @@ class CDCEngine:
             }
             for r in per_bucket
         ]
-        if n_bad:
-            lineage.append(
-                {"quarantined": n_bad, "first_lsn": bad_first, "last_lsn": bad_last}
+        return self._commit_tail(
+            snap,
+            BatchStats(
+                lo=lo, hi=hi, events=n_events, touched_buckets=len(touched),
+                mode=mode, quarantined=n_bad,
+            ),
+            new_files,
+            staged,
+            (deduped, target, payload_cols),
+            merge_ts_val,
+            replaced=set() if use_mor else touched_set,
+            lineage=lineage + quarantined,
+            new_schema=new_schema if delta else None,
+        )
+
+    def _read_target(self, touched: list[int], schema: T.StructType) -> DataFrame:
+        """Bucket-pruned read of the touched buckets' current rows, aligned
+        to ``schema``: added columns null, widened columns cast up (old
+        files are also readable directly through the widened schema —
+        SPARK-40876 — but this read predates the schema commit, so cast
+        explicitly). Every write path merges into this frame."""
+        target = self.table.read(self.spark, buckets=touched)
+        tcols = set(target.columns)
+        return target.select(
+            *[
+                (
+                    F.col(f.name).cast(f.dataType).alias(f.name)
+                    if f.name in tcols
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                )
+                for f in schema.fields
+            ]
+        )
+
+    def _merge_step(
+        self,
+        events: DataFrame,
+        target: DataFrame,
+        snap,
+        touched: list[int],
+        payload_cols: list[str],
+        merge_ts_val,
+        n: int,
+    ) -> tuple[str, DataFrame, DataFrame]:
+        """THE merge step of every bucket-rewriting path (apply_batch's
+        copy-on-write apply, repair_keys, apply_late): LWW dedup of the
+        aligned change events (``_lww``), the merge into the touched
+        buckets' ``target`` rows, then ``_bucket`` and the pre-write
+        repartition.
+
+        The plan is chosen from metadata and ``n`` (the events, or keys,
+        in scope): touched buckets without files take the insert-only
+        projection; ``n <= broadcast_threshold_rows`` the broadcast merge
+        (zero target exchange); larger sets the bucket-aligned shuffle
+        merge. Returns ``(mode, deduped, out)``; ``deduped`` also feeds the
+        history append.
+
+        NOTE the deduped events are deliberately NOT persisted on the
+        bucket-aligned plans: their consumers fuse into the single write
+        job, and recomputing the hash-agg is measurably cheaper than
+        materializing token arrays into the JVM block manager
+        (deserialized cache showed 3x slowdown at 32 threads from GC /
+        memory-store contention).
+        """
+        merge_ts = F.lit(merge_ts_val)
+        bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
+        ts = set(touched)  # hoisted: the generator runs per FILE
+        touched_files = [f for f in snap.files if f.bucket in ts]
+        if touched_files and n <= self.broadcast_threshold_rows:
+            # steady-state CDC: batch broadcast, target streamed — zero
+            # target shuffle; output keeps the target's per-bucket-file
+            # partitioning, so the partitionBy write stays shuffle-free.
+            # Three consumers inside the broadcast merge (the broadcast
+            # build, the matched-keys semi probe, and the insert anti-join)
+            # would each re-read the events and re-run the dedup;
+            # materialize once — bounded by broadcast_threshold_rows, the
+            # same cap that already gates broadcasting this frame's full
+            # payload.
+            deduped = self._lww(events, payload_cols).localCheckpoint(eager=False)
+            out = merge_changes(
+                target,
+                deduped,
+                self.keys,
+                payload_cols,
+                merge_ts,
+                mode="broadcast",
+                delete_mode=self.delete_mode,
+            ).withColumn("_bucket", bexpr)
+            # small touched set: one cheap exchange keeps one file per
+            # bucket. Large touched set (the 100 TB steady state): skip it —
+            # preserving the zero-target-shuffle property matters more than
+            # file count, and compaction reclaims layout asynchronously.
+            if sum(f.bytes for f in touched_files) < self.repartition_output_bytes:
+                out = out.repartition(max(len(touched), 1), "_bucket")
+            return "broadcast", deduped, out
+        # bucket-aligned plan: ONE explicit exchange per side, then the
+        # dedup (groupBy(_bucket, key)), the full-outer join on
+        # (_bucket, key), and the partitionBy(_bucket) write all ride
+        # the same HashPartitioning — no further shuffles, no sorts
+        # (shuffled-hash join preferred in the session config).
+        # partition by the table's bucket layout, NOT by core count:
+        # bounded, data-sized tasks (≈ one bucket each) that pipeline
+        # across whatever parallelism is available — the same plan at
+        # local[4] and on a 1000-executor cluster
+        nparts = snap.num_buckets
+        events_b = events.withColumn("_bucket", bexpr).repartition(
+            nparts, "_bucket"
+        )
+        deduped = self._lww(events_b, payload_cols, ["_bucket"] + self.keys)
+        if not touched_files:
+            return "insert-only", deduped, inserts_only(
+                deduped,
+                self.keys,
+                payload_cols,
+                merge_ts,
+                bucket_col="_bucket",
+                soft=self.delete_mode == "soft",
+                track_lsn=self.track_lsn,
             )
+        target_b = target.withColumn("_bucket", bexpr).repartition(
+            nparts, "_bucket"
+        )
+        return "shuffle", deduped, merge_changes(
+            target_b,
+            deduped,
+            self.keys,
+            payload_cols,
+            merge_ts,
+            mode="shuffle",
+            bucket_col="_bucket",
+            delete_mode=self.delete_mode,
+        )
+
+    def _drop_staged(self, version_dirs) -> None:
+        """Remove staged, never-committed version dirs under data/."""
+        for d in version_dirs:
+            shutil.rmtree(
+                os.path.join(self.table.root, "data", d), ignore_errors=True
+            )
+
+    def _commit_tail(
+        self,
+        snap,
+        bs: BatchStats,
+        new_files: list,
+        staged: list[str],
+        hist: tuple,
+        merge_ts_val,
+        replaced: set[int],
+        lineage: list[dict] | None = None,
+        new_schema: T.StructType | None = None,
+    ) -> BatchStats:
+        """Publish a write path's staged files (``staged``: their version
+        dirs under data/): the history append, then ONE atomic commit at
+        ``expected_version=snap.version``, then the returned BatchStats
+        (``bs`` plus output rows/bytes). Every write path ends here.
+
+        A window commit (apply_batch; ``lineage`` given) carries the
+        watermark ``bs.hi`` with the data in the same snapshot. Without
+        ``lineage`` it is a marker commit (repair_keys, apply_late): the
+        watermark stays, and the lineage is one ``{bs.mode: True, keys,
+        buckets}`` record. ``hist`` is ``(deduped, target, payload_cols)``
+        for ``_append_history``; ``new_schema`` an evolved schema the
+        commit publishes.
+        """
+        window = lineage is not None
+        # -- optional history-audit append (own idempotent commit, BEFORE the
+        # main commit: crash between them re-applies the main batch, crash
+        # after history re-skips it via its own last_lsn). A marker commit
+        # leaves the watermark where history already is, so it always
+        # appends: history is at-least-once under a re-run repair ---------
+        ht = self.history_table
+        if ht is not None and (not window or ht.last_lsn() < bs.hi):
+            self._append_history(
+                *hist,
+                snap.schema if new_schema is None else new_schema,
+                F.lit(merge_ts_val),
+                bs.hi,
+                broadcast_ok=bs.events <= self.broadcast_threshold_rows,
+            )
+        if window:
+            properties = {
+                "last_lsn": str(bs.hi),
+                "last_batch_events": str(bs.events),
+                "last_batch_mode": bs.mode,
+            }
+        else:
+            properties = {}
+            lineage = [
+                {bs.mode: True, "keys": bs.events, "buckets": sorted(replaced)}
+            ]
+        properties["last_merge_ts"] = merge_ts_val.isoformat()
         try:
             self.table.commit(
                 new_files,
-                replaced_buckets=set(touched),
-                properties={
-                    "last_lsn": str(hi),
-                    "last_batch_events": str(n_events),
-                    "last_batch_mode": mode,
-                    "last_merge_ts": merge_ts_val.isoformat(),
-                },
+                replaced_buckets=replaced,
+                properties=properties,
                 lineage=lineage,
-                new_schema=new_schema if delta else None,
+                new_schema=new_schema,
                 expected_version=snap.version,
             )
         except CommitConflict:
@@ -1123,25 +1165,15 @@ class CDCEngine:
             # is a duplicate: drop the orphaned files and report skipped.
             # Otherwise the table moved under us in a way the caller must
             # resolve — re-raise (the reference's stage machine would
-            # rewind and retry, import_stage.py:1018-1039 analogue).
-            if self.table.last_lsn() >= hi:
-
-                shutil.rmtree(
-                    os.path.join(self.table.root, "data", version_dir),
-                    ignore_errors=True,
-                )
-                return BatchStats(lo=lo, hi=hi, skipped=True)
+            # rewind and retry, import_stage.py:1018-1039 analogue). A
+            # marker commit carries no window, so it always re-raises.
+            if window and self.table.last_lsn() >= bs.hi:
+                self._drop_staged(staged)
+                return BatchStats(lo=bs.lo, hi=bs.hi, skipped=True)
             raise
-        return BatchStats(
-            lo=lo,
-            hi=hi,
-            events=n_events,
-            touched_buckets=len(touched),
-            mode=mode,
-            out_rows=sum(v[0] for v in out_by_bucket.values()),
-            out_bytes=sum(v[1] for v in out_by_bucket.values()),
-            quarantined=n_bad,
-        )
+        bs.out_rows = sum(f.rows for f in new_files)
+        bs.out_bytes = sum(f.bytes for f in new_files)
+        return bs
 
     def _run_validators(
         self, staged_files, snap, new_schema, info: dict, version_dirs
@@ -1165,63 +1197,46 @@ class CDCEngine:
             for v in self.validators:
                 v(staged, info)
         except ValidationFailed:
-
-            for d in version_dirs:
-                shutil.rmtree(
-                    os.path.join(self.table.root, "data", d),
-                    ignore_errors=True,
-                )
+            self._drop_staged(version_dirs)
             raise
 
-    def _apply_batch_mor(
+    def _write_mor(
         self,
         batch_nc: DataFrame,
         snap,
-        new_schema,
-        delta,
+        current: DataFrame,
         payload_cols: list[str],
-        bexpr,
         touched: list[int],
-        per_bucket: list,
         n_events: int,
+        n_dels: int,
         lo: int,
         hi: int,
         merge_ts_val,
-        n_bad: int,
-        bad_first: int,
-        bad_last: int,
-        n_dels: int = 0,
-    ) -> BatchStats:
+    ) -> tuple[DataFrame, list, list[str]]:
         """Merge-on-read apply: append superseding delta files + key-only
-        delete files instead of rewriting the touched buckets.
+        delete files instead of rewriting the touched buckets. Returns
+        ``(deduped, new_files, staged_dirs)`` for the commit tail.
 
         Scale shape (the reason this path exists): a CoW batch's write
         cost is the touched buckets' FULL size — at 100 TB with TB-scale
         buckets a 1k-event batch rewrites terabytes. Here the only
         full-width data movement is the batch itself; the touched buckets
-        are scanned ONCE, COLUMN-PRUNED to (keys, dl_insert_ts[,
-        dl_delete_ts]) — a few percent of bucket bytes under token-array
-        payloads — to preserve insert-vs-update audit parity, and never
-        shuffled (broadcast semi-join, batch side built). Read-time
-        reconciliation + compaction (``lake.maintenance``) fold the
-        deltas back into base asynchronously.
+        (``current``) are scanned ONCE, COLUMN-PRUNED to (keys,
+        dl_insert_ts[, dl_delete_ts]) — a few percent of bucket bytes
+        under token-array payloads — to preserve insert-vs-update audit
+        parity, and never shuffled (broadcast semi-join, batch side
+        built). Read-time reconciliation + compaction
+        (``lake.maintenance``) fold the deltas back into base
+        asynchronously.
         """
+        # resolved at call time, so a wrapper installed on the operators
+        # module (perfbench's layer tracer) sees every call
         from dbimport_spark.operators.merge import mor_outputs
         from dbimport_spark.schema import AUDIT_INSERT
 
-        merge_ts = F.lit(merge_ts_val)
         soft = self.delete_mode == "soft"
-
-        deduped = dedup_lww(
-            batch_nc,
-            key=self.keys,
-            order_col="lsn",
-            strategy=self.dedup_strategy,
-            n_salts=self.n_salts,
-        )
-        if soft:
-            deduped = self._with_live_payload(deduped, batch_nc, payload_cols)
-        deduped = deduped.withColumn("_bucket", bexpr)
+        bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
+        deduped = self._lww(batch_nc, payload_cols).withColumn("_bucket", bexpr)
         # hard-mode batches with deletes run TWO write jobs (delta files,
         # then key-only tombstones) over this frame and its probe; without
         # materialization the second job re-reads the log window, re-runs
@@ -1235,18 +1250,6 @@ class CDCEngine:
         # narrow audit probe: reconciled current rows of the batch's keys,
         # column-pruned to keys + insert-ts. The semi-join streams the
         # touched buckets (batch keys broadcast); output is batch-sized.
-        current = self.table.read(self.spark, buckets=touched)
-        ccols = set(current.columns)
-        current = current.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    if f.name in ccols
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                )
-                for f in new_schema.fields
-            ]
-        )
         probe_cols = [*self.keys, AUDIT_INSERT]
         batch_keys = deduped.select(*self.keys)
         probe = current.select(*probe_cols).join(
@@ -1282,7 +1285,7 @@ class CDCEngine:
             probe,
             self.keys,
             payload_cols,
-            merge_ts,
+            F.lit(merge_ts_val),
             bucket_col="_bucket",
             delete_mode=self.delete_mode,
             track_lsn=self.track_lsn,
@@ -1298,98 +1301,20 @@ class CDCEngine:
 
         nparts = max(1, min(len(touched), _math.ceil(n_events / 1_000_000) * 8))
         version_dir = f"s{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        with _phase_timer("mor_delta_write"):
-            new_files = self.table.write_data_files(
-                self.spark, upserts.repartition(nparts, "_bucket"), version_dir
-            )
+        staged = [version_dir, version_dir + "-del"]
+        new_files = self.table.write_data_files(
+            self.spark, upserts.repartition(nparts, "_bucket"), version_dir
+        )
         for f in new_files:
             f.kind = "delta"
         if delete_keys is not None and n_dels:
-            with _phase_timer("mor_delete_write"):
-                del_files = self.table.write_data_files(
-                    self.spark,
-                    delete_keys.repartition(nparts, "_bucket"),
-                    version_dir + "-del",
-                )
+            del_files = self.table.write_data_files(
+                self.spark, delete_keys.repartition(nparts, "_bucket"), staged[1]
+            )
             for f in del_files:
                 f.kind = "delete"
             new_files = new_files + del_files
-
-        _ts = set(touched)  # hoisted: the generator below runs per FILE
-        self._run_validators(
-            [f for f in new_files if f.kind == "delta"], snap, new_schema,
-            {
-                "lo": lo, "hi": hi, "mode": "mor", "events": n_events,
-                "deletes": n_dels,
-                "touched_buckets": len(touched),
-                "out_rows": sum(f.rows for f in new_files),
-                "out_bytes": sum(f.bytes for f in new_files),
-                "prev_rows": sum(
-                    f.rows for f in snap.files if f.bucket in _ts
-                ),
-            },
-            [version_dir, version_dir + "-del"],
-        )
-
-        if self.history_table is not None and self.history_table.last_lsn() < hi:
-            self._append_history(
-                deduped, current, payload_cols, new_schema, merge_ts, hi,
-                broadcast_ok=n_events <= self.broadcast_threshold_rows,
-            )
-
-        out_by_bucket: dict[int, list[int]] = {}
-        for fl in new_files:
-            rows, nbytes = out_by_bucket.get(fl.bucket, [0, 0])
-            out_by_bucket[fl.bucket] = [rows + fl.rows, nbytes + fl.bytes]
-        lineage = [
-            {
-                "bucket": r["bucket"],
-                "first_lsn": r["first_lsn"],
-                "last_lsn": r["last_lsn"],
-                "events": r["events"],
-                "rows": out_by_bucket.get(r["bucket"], [0, 0])[0],
-                "bytes": out_by_bucket.get(r["bucket"], [0, 0])[1],
-            }
-            for r in per_bucket
-        ]
-        if n_bad:
-            lineage.append(
-                {"quarantined": n_bad, "first_lsn": bad_first, "last_lsn": bad_last}
-            )
-        try:
-            self.table.commit(
-                new_files,
-                replaced_buckets=set(),
-                properties={
-                    "last_lsn": str(hi),
-                    "last_batch_events": str(n_events),
-                    "last_batch_mode": "mor",
-                    "last_merge_ts": merge_ts_val.isoformat(),
-                },
-                lineage=lineage,
-                new_schema=new_schema if delta else None,
-                expected_version=snap.version,
-            )
-        except CommitConflict:
-            if self.table.last_lsn() >= hi:
-
-                for d in (version_dir, version_dir + "-del"):
-                    shutil.rmtree(
-                        os.path.join(self.table.root, "data", d),
-                        ignore_errors=True,
-                    )
-                return BatchStats(lo=lo, hi=hi, skipped=True)
-            raise
-        return BatchStats(
-            lo=lo,
-            hi=hi,
-            events=n_events,
-            touched_buckets=len(touched),
-            mode="mor",
-            out_rows=sum(v[0] for v in out_by_bucket.values()),
-            out_bytes=sum(v[1] for v in out_by_bucket.values()),
-            quarantined=n_bad,
-        )
+        return deduped, new_files, staged
 
     def _append_history(
         self,
@@ -1492,7 +1417,8 @@ class CDCEngine:
         at-least-once under repair crashes, exactly-once under normal
         replay).
 
-        Key sets up to ``broadcast_threshold_rows`` run the broadcast merge
+        The fold runs apply_batch's own merge step (``_merge_step``): key
+        sets up to ``broadcast_threshold_rows`` run the broadcast merge
         (zero target exchange); larger sets fall back to the bucket-aligned
         shuffle plan — same switch apply_batch makes.
 
@@ -1517,124 +1443,83 @@ class CDCEngine:
         # label re-stamped), THEN scope by key: the key itself may carry a
         # former name in old segments, so key derivation and scoping must
         # run on the aligned frame.
-        src_label = snap.properties.get("source_label")
         payload_cols = [
             f.name for f in snap.schema.fields if f.name not in AUDIT_COLUMNS
         ]
-        bschema = {f.name: f for f in changes.schema.fields}
-        aligned_df = changes.select(
-            F.col("lsn"),
-            F.col("op"),
-            *self._align_exprs(snap.schema.fields, bschema, src_label),
-        )
+        aligned_df = self._aligned(changes, snap)
         if keys is None:
             lo, hi = window
-            key_src = aligned_df.filter(
-                (F.col("lsn") > lo) & (F.col("lsn") <= hi)
-            )
+            key_src = aligned_df.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
         else:
             key_src = keys
-        # one materialized frame feeds the count, the scoping join, and the
-        # touched-bucket collect — on a CLI repair the source is the whole
-        # log, so re-deriving it per consumer would triple the log scans
-        key_rows = key_src.select(*self.keys).distinct().localCheckpoint(eager=True)
-        counts = self._key_counts(key_rows)
-        if counts["nulls"] > 0:
-            raise ValueError(
-                "repair scope contains null merge key(s) — the log likely "
-                "carries the key under an undeclared former name; declare "
-                "the rename (CDCEngine(renames={...})) and retry"
-            )
-        n_keys = counts["n"]
-        if n_keys == 0:
-            # nothing in scope: committing would bump the version, advance
-            # last_merge_ts, and stamp an empty repair lineage record for
-            # no state change (same contract as apply_late's empty window)
-            return BatchStats(lo=-1, hi=self.table.last_lsn(), skipped=True)
-        big = n_keys > self.broadcast_threshold_rows
-        scope = key_rows if big else F.broadcast(key_rows)
-        scoped = aligned_df.join(scope, self.keys, "left_semi")
-
-        deduped = dedup_lww(
-            scoped,
-            key=self.keys,
-            order_col="lsn",
-            strategy=self.dedup_strategy,
-            n_salts=self.n_salts,
+        scope = self._key_scope(
+            key_src,
+            snap,
+            "repair scope contains null merge key(s) — the log likely "
+            "carries the key under an undeclared former name; declare "
+            "the rename (CDCEngine(renames={...})) and retry",
         )
-        if self.delete_mode == "soft":
-            deduped = self._with_live_payload(deduped, scoped, payload_cols)
+        if scope is None:
+            return BatchStats(lo=-1, hi=self.table.last_lsn(), skipped=True)
+        key_rows, n_keys, touched = scope
+        big = n_keys > self.broadcast_threshold_rows
+        scoped = aligned_df.join(
+            key_rows if big else F.broadcast(key_rows), self.keys, "left_semi"
+        )
+        merge_ts_val = self._monotonic_merge_ts(snap)
+        target = self._read_target(touched, snap.schema)
+        _mode, deduped, out = self._merge_step(
+            scoped, target, snap, touched, payload_cols, merge_ts_val, n_keys
+        )
+        version_dir = f"r{snap.version + 1}-{uuid.uuid4().hex[:8]}"
+        new_files = self.table.write_data_files(self.spark, out, version_dir)
+        return self._commit_tail(
+            snap,
+            BatchStats(
+                lo=-1, hi=self.table.last_lsn(), events=n_keys,
+                touched_buckets=len(touched), mode="repair",
+            ),
+            new_files,
+            [version_dir],
+            (deduped, target, payload_cols),
+            merge_ts_val,
+            replaced=set(touched),
+        )
 
+    def _key_scope(self, key_src: DataFrame, snap, refusal: str):
+        """Key-scope prelude of repair_keys and apply_late: the distinct
+        merge-key rows of ``key_src`` (current column names), refused with
+        ``refusal`` when any key component is null, and the buckets they
+        touch.
+        Returns ``(key_rows, n_keys, touched)``, or None for an empty scope
+        — committing then would bump the version, advance last_merge_ts,
+        and stamp an empty marker lineage for no state change.
+
+        ONE materialized frame feeds the count, the scoping join, and the
+        touched-bucket collect — on a CLI repair the source is the whole
+        log, so re-deriving it per consumer would multiply the log scans.
+        The null check runs BEFORE any dedup/join: a key riding an
+        UNDECLARED former name aligns to null, and the maxjoin dedup's
+        semi-join would silently DROP those rows while the call reports
+        success."""
+        key_rows = key_src.select(*self.keys).distinct().localCheckpoint(eager=True)
+        null_pred = F.lit(False)
+        for k in self.keys:
+            null_pred = null_pred | F.col(k).isNull()
+        counts = key_rows.agg(  # one pass: total and null-key rows
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(null_pred, F.lit(1))).alias("nulls"),
+        ).first()
+        if counts["nulls"] > 0:
+            raise ValueError(refusal)
+        if counts["n"] == 0:
+            return None
         bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
         touched = sorted(
             r["bucket"]
             for r in key_rows.select(bexpr.alias("bucket")).distinct().collect()
         )
-
-        merge_ts_val = self._monotonic_merge_ts(snap)
-
-        target = self.table.read(self.spark, buckets=touched)
-        if not big:
-            merged = merge_changes(
-                target,
-                deduped,
-                self.keys,
-                payload_cols,
-                F.lit(merge_ts_val),
-                mode="broadcast",
-                delete_mode=self.delete_mode,
-            )
-            out = merged.withColumn("_bucket", bexpr).repartition(
-                max(len(touched), 1), "_bucket"
-            )
-        else:
-            nparts = snap.num_buckets
-            deduped_b = deduped.withColumn("_bucket", bexpr).repartition(
-                nparts, "_bucket"
-            )
-            target_b = target.withColumn("_bucket", bexpr).repartition(
-                nparts, "_bucket"
-            )
-            out = merge_changes(
-                target_b,
-                deduped_b,
-                self.keys,
-                payload_cols,
-                F.lit(merge_ts_val),
-                mode="shuffle",
-                bucket_col="_bucket",
-                delete_mode=self.delete_mode,
-            )
-
-        if self.history_table is not None:
-            self._append_history(
-                deduped,
-                target,
-                payload_cols,
-                snap.schema,
-                F.lit(merge_ts_val),
-                self.table.last_lsn(),
-                broadcast_ok=not big,
-            )
-
-        version_dir = f"r{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        new_files = self.table.write_data_files(self.spark, out, version_dir)
-        self.table.commit(
-            new_files,
-            replaced_buckets=set(touched),
-            properties={"last_merge_ts": merge_ts_val.isoformat()},
-            lineage=[{"repair": True, "keys": n_keys, "buckets": touched}],
-            expected_version=snap.version,
-        )
-        return BatchStats(
-            lo=-1,
-            hi=self.table.last_lsn(),
-            events=n_keys,
-            touched_buckets=len(touched),
-            mode="repair",
-            out_rows=sum(f.rows for f in new_files),
-            out_bytes=sum(f.bytes for f in new_files),
-        )
+        return key_rows, counts["n"], touched
 
     # -- dead-letter drain ----------------------------------------------------
 
@@ -1743,13 +1628,11 @@ class CDCEngine:
         )
         if not route_any:
             return 0
-        snap = self.table.current()
-        bschema = {f.name: f for f in changes.schema.fields}
-        exprs = self._align_exprs(snap.schema.fields, bschema, None)
-        names = [
-            f.name for f in snap.schema.fields if f.name not in AUDIT_COLUMNS
-        ]
-        reason = self._bad_event_reason(key_exprs=dict(zip(names, exprs)))
+        reason = self._bad_event_reason(
+            key_exprs=self._align_exprs(
+                self.table.current().schema.fields, changes.schema, None
+            )
+        )
         out = (
             changes.filter(F.col("lsn").isNull() & pred)
             .withColumn("dl_reason", reason)
@@ -1836,12 +1719,11 @@ class CDCEngine:
         src_label = snap.properties.get("source_label")
 
         def _raw_reason(frame: DataFrame):
-            bschema = {f.name: f for f in frame.schema.fields}
-            exprs = self._align_exprs(snap.schema.fields, bschema, src_label)
-            names = [
-                f.name for f in snap.schema.fields if f.name not in AUDIT_COLUMNS
-            ]
-            return self._bad_event_reason(key_exprs=dict(zip(names, exprs)))
+            return self._bad_event_reason(
+                key_exprs=self._align_exprs(
+                    snap.schema.fields, frame.schema, src_label
+                )
+            )
 
         fixed = df.localCheckpoint(eager=True)  # 3 consumers: check/keys/apply
         still_bad = fixed.filter(_raw_reason(fixed).isNotNull()).count()
@@ -1868,14 +1750,9 @@ class CDCEngine:
                 combined = clean_log.unionByName(
                     fixed, allowMissingColumns=True
                 )
-                bschema = {f.name: f for f in fixed.schema.fields}
-                exprs = self._align_exprs(snap.schema.fields, bschema, src_label)
-                names = [
-                    f.name
-                    for f in snap.schema.fields
-                    if f.name not in AUDIT_COLUMNS
-                ]
-                emap = dict(zip(names, exprs))
+                emap = self._align_exprs(
+                    snap.schema.fields, fixed.schema, src_label
+                )
                 scope = fixed.select(
                     *[emap[k].alias(k) for k in self.keys]
                 ).distinct()
@@ -1928,6 +1805,11 @@ class CDCEngine:
         ``dl_lsn`` already ≥ its events and commits nothing. The watermark
         is left unchanged; the commit carries a ``late_merge`` lineage
         marker.
+
+        The gated events run apply_batch's own merge step
+        (``_merge_step``): late key sets up to ``broadcast_threshold_rows``
+        run the broadcast merge, larger ones the bucket-aligned shuffle
+        plan — same switch apply_batch makes.
         """
         if not self.track_lsn:
             raise ValueError(
@@ -1942,59 +1824,23 @@ class CDCEngine:
         from dbimport_spark.schema import AUDIT_LSN
 
         snap = self.table.current()
-        src_label = snap.properties.get("source_label")
         payload_cols = [
             f.name for f in snap.schema.fields if f.name not in AUDIT_COLUMNS
         ]
-        bschema = {f.name: f for f in late.schema.fields}
-        aligned = late.select(
-            F.col("lsn"),
-            F.col("op"),
-            *self._align_exprs(snap.schema.fields, bschema, src_label),
+        aligned = self._aligned(late, snap)
+        # the checkpointed late key set also feeds the gate's broadcast
+        scope = self._key_scope(
+            aligned,
+            snap,
+            "apply_late scope contains null merge key(s) — the late "
+            "segment likely carries the key under an undeclared former "
+            "name; declare the rename (CDCEngine(renames={...})) and "
+            "retry",
         )
-
-        bexpr = self.table.bucket_expr(
-            key_col=self.keys, num_buckets=snap.num_buckets
-        )
-        # ONE scan of the late input builds the checkpointed key set; the
-        # null guard, touched-bucket collect, and the gate's broadcast all
-        # reuse it (an uncached distinct would re-scan per consumer).
-        late_keys = (
-            aligned.select(*self.keys).distinct().localCheckpoint(eager=True)
-        )
-        # null merge keys raise BEFORE any dedup/join, exactly as
-        # repair_keys does: a late segment carrying the key under an
-        # UNDECLARED former name aligns to null, and the maxjoin dedup's
-        # semi-join would silently DROP those rows — the events would
-        # vanish while apply_late reports success.
-        counts = self._key_counts(late_keys)
-        if counts["nulls"] > 0:
-            raise ValueError(
-                "apply_late scope contains null merge key(s) — the late "
-                "segment likely carries the key under an undeclared former "
-                "name; declare the rename (CDCEngine(renames={...})) and "
-                "retry"
-            )
-        if counts["n"] == 0:
+        if scope is None:
             return BatchStats(lo=-1, hi=self.table.last_lsn(), skipped=True)
-        touched = sorted(
-            r["bucket"]
-            for r in late_keys.select(bexpr.alias("bucket")).distinct().collect()
-        )
-
-        # bucket-pruned target read, aligned to the table schema
-        target = self.table.read(self.spark, buckets=touched)
-        tcols = set(target.columns)
-        target = target.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    if f.name in tcols
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                )
-                for f in snap.schema.fields
-            ]
-        )
+        late_keys, n_late, touched = scope
+        target = self._read_target(touched, snap.schema)
 
         # the version gate, applied to EVENTS (not winners): every late
         # event with lsn ≤ the row's dl_lsn is strictly obsolete — gating
@@ -2016,62 +1862,29 @@ class CDCEngine:
             .filter(F.col("lsn") > F.coalesce(F.col("_row_lsn"), F.lit(-1)))
             .drop("_row_lsn")
         )
-        winners = dedup_lww(
-            gated_events,
-            key=self.keys,
-            order_col="lsn",
-            strategy=self.dedup_strategy,
-            n_salts=self.n_salts,
+        merge_ts_val = self._monotonic_merge_ts(snap)
+        _mode, gated, out = self._merge_step(
+            gated_events, target, snap, touched, payload_cols, merge_ts_val,
+            n_late,
         )
-        # soft pre-images for 'D' winners, same construction as apply_batch
-        gated = self._with_live_payload(
-            winners, gated_events, payload_cols
-        ).localCheckpoint(eager=True)
+        # on the broadcast plan this count materializes the winners'
+        # checkpoint, which the merge and the history append then reuse
         n_keys = gated.count()
         if n_keys == 0:
             return BatchStats(lo=-1, hi=self.table.last_lsn(), skipped=True)
-
-        merge_ts_val = self._monotonic_merge_ts(snap)
-
-        merged = merge_changes(
-            target,
-            gated,
-            self.keys,
-            payload_cols,
-            F.lit(merge_ts_val),
-            mode="broadcast",
-            delete_mode=self.delete_mode,
-        )
-        out = merged.withColumn("_bucket", bexpr).repartition(
-            max(len(touched), 1), "_bucket"
-        )
-        if self.history_table is not None:
-            self._append_history(
-                gated,
-                target,
-                payload_cols,
-                snap.schema,
-                F.lit(merge_ts_val),
-                self.table.last_lsn(),
-                broadcast_ok=True,
-            )
         version_dir = f"l{snap.version + 1}-{uuid.uuid4().hex[:8]}"
         new_files = self.table.write_data_files(self.spark, out, version_dir)
-        self.table.commit(
+        return self._commit_tail(
+            snap,
+            BatchStats(
+                lo=-1, hi=self.table.last_lsn(), events=n_keys,
+                touched_buckets=len(touched), mode="late_merge",
+            ),
             new_files,
-            replaced_buckets=set(touched),
-            properties={"last_merge_ts": merge_ts_val.isoformat()},
-            lineage=[{"late_merge": True, "keys": n_keys, "buckets": touched}],
-            expected_version=snap.version,
-        )
-        return BatchStats(
-            lo=-1,
-            hi=self.table.last_lsn(),
-            events=n_keys,
-            touched_buckets=len(touched),
-            mode="late_merge",
-            out_rows=sum(f.rows for f in new_files),
-            out_bytes=sum(f.bytes for f in new_files),
+            [version_dir],
+            (gated, target, payload_cols),
+            merge_ts_val,
+            replaced=set(touched),
         )
 
     # -- declared full reload ------------------------------------------------

@@ -33,10 +33,10 @@ come back None rather than a guess.
 
 from __future__ import annotations
 
-import json
 import os
 
 from dbimport_spark.lake.table import LakeTable
+from dbimport_spark.plans.cdc_export import read_export_state
 
 __all__ = ["follower_lag", "log_lsn_bounds", "log_max_lsn", "source_lag"]
 
@@ -169,7 +169,7 @@ def follower_lag(
             "followers": [],
         }
         if e.history and LakeTable.exists(e.history):
-            # lock-step with replay, LSN units (engine.py:992)
+            # lock-step with replay, LSN units (CDCEngine._commit_tail)
             h_lsn = max(LakeTable.load(e.history).last_lsn(), 0)
             rec["followers"].append(
                 {
@@ -196,12 +196,8 @@ def follower_lag(
                      **_version_lag(src, applied)}
                 )
         for x in e.cdc_exports:
-            state_path = os.path.join(
-                x["state_dir"], "_cdc_export_state.json"
-            )
-            text = registry.store.read_text(state_path)
-            applied = (
-                int(json.loads(text)["last_version"]) if text else 0
+            applied = int(
+                read_export_state(registry.store, x["state_dir"])["last_version"]
             )
             rec["followers"].append(
                 {

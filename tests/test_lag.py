@@ -9,6 +9,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from dbimport_spark.plans.cdc_export import write_export_state
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.lag import follower_lag, log_max_lsn, source_lag
 from dbimport_spark.plans.matview import AggSpec, create_view, sync_view
@@ -119,9 +120,11 @@ def test_cdc_export_lag_from_state_json(spark, tmp_path):
     exp = [f for f in rep["followers"] if f["kind"] == "cdc_export"][0]
     assert exp["applied_version"] == 0
     assert exp["versions_behind"] == rep["source"]["version"]
-    # a committed watermark (what CDCJdbcExporter._save_state writes)
-    (state_dir / "_cdc_export_state.json").write_text(
-        json.dumps({"last_version": src.table.current().version, "runs": 1})
+    # a committed watermark, written the way CDCJdbcExporter commits it
+    write_export_state(
+        reg.store,
+        str(state_dir),
+        {"last_version": src.table.current().version, "runs": 1},
     )
     rep = follower_lag(reg)["docs"]
     exp = [f for f in rep["followers"] if f["kind"] == "cdc_export"][0]

@@ -2,6 +2,8 @@
 (FIXTURES.md §4) under single-batch, K-batch, kill+resume, and duplicate
 re-apply — plus audit/resurrection semantics."""
 
+import itertools
+
 from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
@@ -244,13 +246,17 @@ def test_repair_keys_hard_and_soft(spark, tmp_path):
     from dbimport_spark.plans.validate import fold_expected, reconcile
     from dbimport_spark.schema import PAYLOAD_COLUMNS
 
-    for soft in (False, True):
-        name = "soft" if soft else "hard"
+    # broadcast_threshold_rows=0 puts the repair (and the replay) on the
+    # bucket-aligned shuffle merge; the default keeps both on broadcast
+    for soft, shuffle in itertools.product((False, True), (False, True)):
+        name = ("soft" if soft else "hard") + ("-shuffle" if shuffle else "")
         log = generate_changes(spark, 800, n_keys=40, seed=53)
         table = CDCEngine.create_table(
             str(tmp_path / f"rp-{name}"), num_buckets=4, soft_delete=soft
         )
-        eng = CDCEngine(spark, table)
+        eng = CDCEngine(
+            spark, table, **({"broadcast_threshold_rows": 0} if shuffle else {})
+        )
         # simulate an out-of-order gap: a middle window never applied
         eng.replay(log.filter("lsn <= 300"), num_batches=1)
         eng.replay(

@@ -37,11 +37,23 @@ def test_heavy_skew_converges(spark, tmp_path):
 def test_commit_race_duplicate_window_skipped(spark, tmp_path):
     """Two engines sharing one table apply the same window concurrently:
     the loser of the version race must detect the duplicate and skip."""
+    _race_duplicate_window(spark, tmp_path, "cow")
+
+
+def test_commit_race_duplicate_window_skipped_mor(spark, tmp_path):
+    """The same race when the racing window takes the merge-on-read path:
+    the loser also removes its staged delete-file dir."""
+    _race_duplicate_window(spark, tmp_path, "mor")
+
+
+def _race_duplicate_window(spark, tmp_path, write_mode):
+    from dbimport_spark.lake import maintenance
+
     log = generate_changes(spark, 1000, n_keys=50, seed=88)
     root = str(tmp_path / "t")
     table = CDCEngine.create_table(root, num_buckets=4)
-    e1 = CDCEngine(spark, table)
-    e2 = CDCEngine(spark, table)
+    e1 = CDCEngine(spark, table, write_mode=write_mode)
+    e2 = CDCEngine(spark, table, write_mode=write_mode)
     # interleave: e2 snapshots the table (inside apply), e1 commits first.
     # Simulate by committing via e1 mid-way: easiest deterministic variant —
     # e1 applies, then e2 applies the same window against its stale view.
@@ -54,8 +66,15 @@ def test_commit_race_duplicate_window_skipped(spark, tmp_path):
     # first let another writer commit, then attempt the stale commit
     from dbimport_spark.lake.table import LakeTable
 
-    log2 = log.withColumn("lsn", F.col("lsn") + 1000)
-    e3 = CDCEngine(spark, LakeTable.load(root))
+    # the racing window replays the log past the first window. The MoR run
+    # replays it in reverse, so each key's FIRST event wins: keys whose
+    # first event is a delete are live rows then, and the window writes
+    # delete files (its -del dir) next to its delta files.
+    if write_mode == "mor":
+        log2 = log.withColumn("lsn", 2001 - F.col("lsn"))
+    else:
+        log2 = log.withColumn("lsn", F.col("lsn") + 1000)
+    e3 = CDCEngine(spark, LakeTable.load(root), write_mode=write_mode)
     orig_commit = e3.table.commit
     raced = {"done": False}
 
@@ -63,7 +82,7 @@ def test_commit_race_duplicate_window_skipped(spark, tmp_path):
         if not raced["done"]:
             raced["done"] = True
             # a competing writer lands the SAME window first
-            other = CDCEngine(spark, LakeTable.load(root))
+            other = CDCEngine(spark, LakeTable.load(root), write_mode=write_mode)
             other.apply_batch(log2, 1000, 2000)
         return orig_commit(*args, **kwargs)
 
@@ -71,6 +90,11 @@ def test_commit_race_duplicate_window_skipped(spark, tmp_path):
     bs3 = e3.apply_batch(log2, 1000, 2000)
     assert bs3.skipped  # conflict detected, duplicate window dropped
     assert e3.table.last_lsn() == 2000
+    if write_mode == "mor":
+        assert e3.table.current().properties["last_batch_mode"] == "mor"
+        assert any(f.kind == "delete" for f in e3.table.current().files)
+    # the loser's staged dirs are gone: no file outside every snapshot
+    assert maintenance.find_orphan_files(e3.table) == []
     rec = reconcile(
         e3.table.read(spark),
         fold_expected(log.unionByName(log2)),
