@@ -816,6 +816,11 @@ class LakeTable:
                 for p, b, nrows, nbytes, st in stats
                 if nrows > 0
             ]
+        if not out:
+            # nothing to reference (e.g. a MoR delete write whose deletes
+            # hit no live key): no snapshot will name this dir, and orphan
+            # listing sees .parquet files only, so it would stay forever
+            shutil.rmtree(out_dir, ignore_errors=True)
         return out
 
     def commit(

@@ -7,11 +7,10 @@ reference import_config.py:2087-2255), and for each range
   watermark scan → LWW dedup → schema-evolve → bucket-pruned MERGE →
   atomic commit carrying {files, last_lsn, lineage} in ONE snapshot.
 
-Because the watermark rides the data commit, a crash anywhere leaves the
-table either fully-before or fully-after a batch; re-running a committed
-range is detected via ``last_lsn`` and skipped (the reference needed a
-two-phase pending/committed dance across MySQL + Hive for the same
-guarantee, import_config.py:1086-1108 — a single metadata swap replaces it).
+The watermark rides the data commit: one metadata swap replaces the
+reference's two-phase pending/committed dance across MySQL + Hive
+(import_config.py:1086-1108). The exactly-once argument built on it is
+stated once, in ``CDCEngine.replay``.
 """
 
 from __future__ import annotations
@@ -44,6 +43,7 @@ from dbimport_spark.schema import (
     MERGE_KEY,
     PAYLOAD_SCHEMA,
 )
+from dbimport_spark.sources.changelog import check_log_gap
 
 LOG_BOOKKEEPING = {"lsn", "op", "commit_ts"}
 
@@ -1532,47 +1532,37 @@ class CDCEngine:
         Metadata-sized: dead letters are rare by construction. Dirs
         written before the ``dl_srcfile`` column existed contribute
         nothing (their segments re-park once, then carry the record)."""
-        if self.quarantine_dir is None or not os.path.isdir(self.quarantine_dir):
+        qdir = self.quarantine_dir
+        if qdir is None or not os.path.isdir(qdir):
             return set()
-        out: set[str] = set()
-        for name in sorted(os.listdir(self.quarantine_dir)):
-            if not re.match(r"^(drained-)?batch-(-?\d+)-(-?\d+)$", name):
-                continue
-            try:
-                df = self.spark.read.parquet(
-                    os.path.join(self.quarantine_dir, name)
-                )
-            except Exception:
-                continue
-            if "dl_srcfile" not in df.columns or "dl_reason" not in df.columns:
-                continue
-            rows = (
-                df.filter(F.col("dl_reason").contains("null_lsn"))
-                .select("dl_srcfile")
-                .distinct()
-                .collect()
-            )
-            out.update(r["dl_srcfile"] for r in rows if r["dl_srcfile"])
-        return out
+        dirs = [
+            os.path.join(qdir, name)
+            for name in sorted(os.listdir(qdir))
+            if re.match(r"^(drained-)?batch-(-?\d+)-(-?\d+)$", name)
+        ]
+        if not dirs:
+            return set()
+        # one read of the two record columns only: the dirs' payload
+        # schemas differ, and a dir older than dl_srcfile reads it as null
+        rec = self.spark.read.schema("dl_reason string, dl_srcfile string")
+        rows = (
+            rec.parquet(*dirs)
+            .filter(F.col("dl_reason").contains("null_lsn"))
+            .select("dl_srcfile")
+            .distinct()
+            .collect()
+        )
+        return {r["dl_srcfile"] for r in rows if r["dl_srcfile"]}
 
-    def _null_route_pred(self, changes: DataFrame, committed: int):
-        """Predicate selecting the null-lsn (malformed) rows the first
-        applied window should route into the quarantine. Null lsn is
-        invisible to every window filter AND to the watermark, so routing
-        ALL of them would re-park every historical dead letter on each
-        re-planned replay over the same grown log (and double-count
-        already-drained events). Dedup by source segment — segments are
-        immutable, and a segment's null rows are parked all-at-once by
-        whichever window first routes them: segments already recorded in
-        the quarantine (``dl_srcfile``) are excluded. Non-file frames
-        ('' name) have no durable identity and fall back to the watermark
-        heuristic: route iff the frame carries rows beyond the committed
-        watermark (i.e. it is not a pure re-read of applied history).
-
-        Returns ``(predicate_or_None, route_any)``. Cost ∝ dirty
-        segments: the IS NULL probe prunes clean row groups via parquet
-        null counts, and the quarantine read-back is dead-letter-sized.
-        """
+    def _null_segments(self, changes: DataFrame) -> list[str]:
+        """Source segments of ``changes`` holding null-lsn (malformed)
+        rows: replay's dirty list for ``_admit_window``. Segments are
+        immutable, so the name is the identity the quarantine record
+        dedups on. A non-file frame ('' name) has none and falls back to
+        the watermark: it counts iff it carries rows beyond the committed
+        watermark (it is not a pure re-read of applied history) or no
+        orderable row at all. The IS NULL probe prunes clean row groups
+        via parquet null counts, so its cost is ∝ dirty segments."""
         dirty = [
             r["f"]
             for r in changes.filter(F.col("lsn").isNull())
@@ -1580,37 +1570,21 @@ class CDCEngine:
             .distinct()
             .collect()
         ]
-        if not dirty:
-            return None, False
-        parked = self.quarantined_null_srcfiles()
-        candidates = [f for f in dirty if f and f not in parked]
-        route_blank = "" in dirty
-        if route_blank:
+        if "" in dirty:
             mx = (
                 changes.filter(F.input_file_name() == "")
                 .agg(F.max("lsn"))
                 .first()[0]
             )
-            route_blank = mx is None or mx > committed
-        preds = []
-        if candidates:
-            preds.append(F.input_file_name().isin(candidates))
-        if route_blank:
-            preds.append(F.input_file_name() == F.lit(""))
-        if not preds:
-            return None, False
-        pred = preds[0]
-        for p in preds[1:]:
-            pred = pred | p
-        return pred, True
+            if mx is not None and mx <= self.table.last_lsn():
+                dirty.remove("")
+        return dirty
 
     def park_dead_letters(self, changes: DataFrame) -> int:
         """Explicitly park every UNPARKED null-lsn dead letter in
-        ``changes`` — the operator remedy when no fresh data anchors a
-        replay window (e.g. the bad-only segment a stream refuses):
-        ``replay`` routes dead letters only inside a window it applies,
-        and a no-op sweep stays metadata-cheap by design, so historical
-        dead letters with nothing new to ride along with need this.
+        ``changes`` — the operator remedy when no fresh row anchors a
+        window (e.g. the bad-only segment a stream refuses); ``replay``
+        with a quarantine does the same for a log with nothing new.
 
         Rows land under ``batch-<w>-<w>`` (zero-span at the committed
         watermark) with the same ``dl_reason``/``dl_srcfile`` record the
@@ -1623,20 +1597,20 @@ class CDCEngine:
         window's job, historical ones were parked when theirs applied."""
         if self.quarantine_dir is None:
             raise ValueError("no quarantine_dir configured")
-        pred, route_any = self._null_route_pred(
-            changes, self.table.last_lsn()
-        )
-        if not route_any:
-            return 0
+        bs = self._admit_window(changes, None, self._null_segments(changes))
+        return bs.quarantined if bs is not None else 0
+
+    def _park(self, rows: DataFrame) -> int:
+        """Write null-lsn ``rows`` to the quarantine under the zero-span
+        window ``batch-<w>-<w>`` at the committed watermark (see
+        ``park_dead_letters``); returns the number of rows added."""
         reason = self._bad_event_reason(
             key_exprs=self._align_exprs(
-                self.table.current().schema.fields, changes.schema, None
+                self.table.current().schema.fields, rows.schema, None
             )
         )
-        out = (
-            changes.filter(F.col("lsn").isNull() & pred)
-            .withColumn("dl_reason", reason)
-            .withColumn("dl_srcfile", F.input_file_name())
+        out = rows.withColumn("dl_reason", reason).withColumn(
+            "dl_srcfile", F.input_file_name()
         )
         w = self.table.last_lsn()
         dst = os.path.join(self.quarantine_dir, f"batch-{w}-{w}")
@@ -1973,7 +1947,57 @@ class CDCEngine:
             self.state_store.delete(plan_path)
         return self.replay(changes, num_batches=num_batches)
 
-    # -- replay loop ---------------------------------------------------------
+    # -- ingest: window admission + replay loop -----------------------------
+
+    def _admit_window(
+        self,
+        changes: DataFrame,
+        window: tuple[int, int] | None,
+        dirty: list[str],
+        parkable: set[str] | None = None,
+    ) -> BatchStats | None:
+        """Admit one LSN window of ``changes``: the step both ingest
+        drivers share (``replay`` and the log stream's micro-batch); each
+        computes ``window`` and ``dirty`` from its own bounds pass.
+
+        ``dirty`` names the segments whose null-lsn rows the driver still
+        owes the quarantine ('' for a non-file frame). Those the
+        quarantine's ``dl_srcfile`` record holds are dropped; the rest
+        ride the window ``(lo, hi)`` into ``apply_batch``, whose quarantine
+        parks them. With no window (None) they are parked at the
+        watermark when a quarantine is configured and every one is in
+        ``parkable`` (None = any), else refused: green stats over them
+        would lose them silently. Returns the window's stats, the
+        parking's (``skipped``, ``quarantined`` set), or None if nothing
+        was owed."""
+        route = dirty
+        if dirty:
+            parked = self.quarantined_null_srcfiles()
+            route = [f for f in dirty if f not in parked]
+        routed = F.col("lsn").isNull() & F.input_file_name().isin(route)
+        if window is not None:
+            lo, hi = window
+            keep = (F.col("lsn") > lo) & (F.col("lsn") <= hi)
+            if route:
+                keep = keep | routed
+            return self.apply_batch(changes.filter(keep), lo, hi)
+        if not route:
+            return None
+        if self.quarantine_dir is None or not (
+            parkable is None or set(route) <= parkable
+        ):
+            raise ValueError(
+                f"segment(s) {sorted(route)} carry unparked malformed "
+                "events (null lsn / corrupt wire lines) and no fresh "
+                "orderable row anchors a window to carry them. Fix or "
+                "remove the segment(s), or park them with "
+                "CDCEngine.park_dead_letters(changes) (needs "
+                "quarantine_dir; then drain_quarantine once repaired): "
+                "unparked null-lsn events are never silently ignored."
+            )
+        w = self.table.last_lsn()
+        n = self._park(changes.filter(routed))
+        return BatchStats(lo=w, hi=w, skipped=True, quarantined=n)
 
     def replay(
         self,
@@ -1986,35 +2010,40 @@ class CDCEngine:
 
         ``stop_after`` aborts after N applied batches (test hook for
         kill-and-resume). Re-invoking replays the identical plan (loaded
-        from the checkpoint) and skips committed windows.
+        from the checkpoint) and skips committed windows; once that plan
+        is complete, a re-invocation over a grown log plans the remainder
+        (the steady-state "tail the log again" call).
 
         If the log no longer covers the committed watermark (retention
         truncated past it), raises ``LogTruncatedError`` — the reference's
         forced-full-reload signal (import_config.py:2493-2517). Silently
         skipping the gap would be data loss; ``allow_log_gap=True`` is the
         explicit caller override.
+
+        Exactly-once, for this driver and the log stream's micro-batch
+        (``streaming/stream.py``) alike: every window is admitted through
+        ``_admit_window`` into ``apply_batch``, which commits the window's
+        rows together with ``hi`` as the table watermark in ONE snapshot
+        and skips any window whose ``hi`` is at or below the watermark. A
+        crash leaves a window wholly applied or not at all, and a re-run
+        (a resumed plan, a re-delivered micro-batch) of a committed window
+        is a no-op. Null-lsn rows escape the watermark, so they are owed
+        per source segment instead: the quarantine's ``dl_srcfile`` record
+        is written before the window that parks them commits, and a
+        segment it holds is never routed again.
         """
         ckpt_path = (
             f"{self.checkpoint_dir}/replay_plan.json" if self.checkpoint_dir else None
         )
         plan = load_plan(ckpt_path, self.state_store) if ckpt_path else None
         # None = unknown (plan resumed from checkpoint, no bounds agg ran);
-        # the fresh-plan and completed-plan paths learn it for free from
-        # their single bounds agg so a clean log never pays the
-        # _null_route_pred probe job
+        # otherwise the bounds agg tells it for free, so a clean log never
+        # pays the _null_segments probe job
         log_has_nulls: bool | None = None
-        if plan is not None and plan.completed >= len(plan.ranges):
-            # prior plan fully applied; if the log has grown since, re-plan
-            # the remainder (the steady-state "tail the log again" call)
-            probe = changes.agg(
-                F.max("lsn").alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-                F.count("lsn").alias("n_lsn"),
-            ).first()
-            log_has_nulls = probe["n"] > probe["n_lsn"]
-            if probe["hi"] is not None and probe["hi"] > self.table.last_lsn():
-                plan = None
-        if plan is None:
+        replan = False
+        if plan is None or plan.completed >= len(plan.ranges):
+            # ONE bounds agg plans a fresh log, and tells a completed plan
+            # whether the log has grown since
             bounds = changes.agg(
                 F.min("lsn").alias("lo"),
                 F.max("lsn").alias("hi"),
@@ -2022,6 +2051,11 @@ class CDCEngine:
                 F.count("lsn").alias("n_lsn"),
             ).first()
             log_has_nulls = bounds["n"] > bounds["n_lsn"]
+            committed = self.table.last_lsn()
+            replan = plan is None or (
+                bounds["hi"] is not None and bounds["hi"] > committed
+            )
+        if replan:
             if bounds["lo"] is None:
                 if bounds["n"] > 0:
                     # min/max skip nulls: rows exist but NONE carries an
@@ -2033,17 +2067,9 @@ class CDCEngine:
                         "window. Fix the source (or the lsn_expr mapping)."
                     )
                 return ReplayStats()
-            committed = self.table.last_lsn()
-            if committed >= 0 and bounds["lo"] > committed + 1 and not allow_log_gap:
-                from dbimport_spark.sources.changelog import LogTruncatedError
-
-                raise LogTruncatedError(
-                    f"log starts at lsn {bounds['lo']} but table watermark "
-                    f"is {committed}; changes in ({committed}, "
-                    f"{bounds['lo']}) are gone — full re-snapshot required "
-                    "(pass allow_log_gap=True to override)"
-                )
-            start = max(self.table.last_lsn(), bounds["lo"] - 1)
+            if not allow_log_gap:
+                check_log_gap(bounds["lo"], committed)
+            start = max(committed, bounds["lo"] - 1)
             hi = bounds["hi"]
             span = hi - start
             edges = [start + (span * i) // num_batches for i in range(num_batches + 1)]
@@ -2058,57 +2084,16 @@ class CDCEngine:
                 save_plan(ckpt_path, plan, self.state_store)
 
         stats = ReplayStats()
-        # A log whose only NEW content is null-lsn dead letters plans no
-        # window at all (bounds come from valid lsns, which are all at or
-        # below the watermark) — the loop below would never run and the
-        # bad rows would be silently ignored under green stats, while the
-        # streaming path stops loudly for this exact state. Park them here
-        # (the window-less twin of the in-window routing), or refuse when
-        # no quarantine is configured.
-        will_apply = any(
-            i >= plan.completed and rhi > self.table.last_lsn()
-            for i, (_rlo, rhi) in enumerate(plan.ranges)
-        )
-        if not will_apply and log_has_nulls:
-            if self.quarantine_dir is not None:
-                stats.events_quarantined += self.park_dead_letters(changes)
-            else:
-                _pred, route_any = self._null_route_pred(
-                    changes, self.table.last_lsn()
-                )
-                if route_any:
-                    raise ValueError(
-                        "log holds unparked null-lsn event(s) but no "
-                        "fresh orderable rows — no replay window can "
-                        "carry them. Configure quarantine_dir (or call "
-                        "park_dead_letters) so they are parked instead "
-                        "of silently ignored."
-                    )
-        # Null-lsn (malformed) rows are invisible to every window filter —
-        # route them into the FIRST window this run applies, where the
-        # engine's quarantine parks them (or refuses loudly). A resumed
-        # plan (completed > 0) parked them on the original run: the
-        # quarantine write precedes the window's commit. Routing is
-        # deduped per source segment against the quarantine's own
-        # dl_srcfile record (_null_route_pred) so a re-planned replay
-        # over the same grown log never re-parks (or double-drains)
-        # historical dead letters.
-        nulls_routed = plan.completed > 0
+        # Null-lsn (malformed) rows ride the FIRST window this run applies.
+        # A resumed plan (completed > 0) routed them on its original run.
+        owed = plan.completed == 0 and log_has_nulls is not False
         for i, (rlo, rhi) in enumerate(plan.ranges):
             if i < plan.completed or rhi <= self.table.last_lsn():
                 stats.batches_skipped += 1
                 continue
-            cond = (F.col("lsn") > rlo) & (F.col("lsn") <= rhi)
-            if not nulls_routed:
-                if log_has_nulls is not False:
-                    pred, route_any = self._null_route_pred(
-                        changes, self.table.last_lsn()
-                    )
-                    if route_any:
-                        cond = cond | (F.col("lsn").isNull() & pred)
-                nulls_routed = True
-            window = changes.filter(cond)
-            bs = self.apply_batch(window, rlo, rhi)
+            first = not stats.batch_stats
+            dirty = self._null_segments(changes) if owed and first else []
+            bs = self._admit_window(changes, (rlo, rhi), dirty)
             stats.batch_stats.append(bs)
             if bs.skipped:
                 stats.batches_skipped += 1
@@ -2121,4 +2106,10 @@ class CDCEngine:
                 save_plan(ckpt_path, plan, self.state_store)
             if stop_after is not None and stats.batches_applied >= stop_after:
                 break
+        if not stats.batch_stats and log_has_nulls:
+            # a log whose only NEW content is dead letters plans no window
+            # (bounds come from valid lsns, all at or below the watermark)
+            bs = self._admit_window(changes, None, self._null_segments(changes))
+            if bs is not None:
+                stats.events_quarantined += bs.quarantined
         return stats

@@ -74,14 +74,20 @@ class ChangeLogSource:
         are indistinguishable here; the streaming path's per-segment
         ledger, and lineage (``repair_watermark_from_lineage``), are the
         surfaces that can still catch the second case."""
-        lo, _ = self.bounds()
-        if not allow_gap and lo is not None and committed_lsn + 1 < lo:
-            raise LogTruncatedError(
-                f"log starts at lsn {lo} but table watermark is "
-                f"{committed_lsn}; changes in ({committed_lsn}, {lo}) are "
-                "gone — full re-snapshot required (allow_gap=True if this "
-                "source's LSN space is legitimately sparse)"
-            )
+        if not allow_gap:
+            check_log_gap(self.bounds()[0], committed_lsn)
+
+
+def check_log_gap(log_lo: int | None, committed: int) -> None:
+    """The log-gap rule: a log starting past ``committed + 1`` lost the
+    events in between. An empty log and an empty table's watermark pass."""
+    if log_lo is not None and committed >= 0 and log_lo > committed + 1:
+        raise LogTruncatedError(
+            f"log starts at lsn {log_lo} but table watermark is "
+            f"{committed}; changes in ({committed}, {log_lo}) are gone — "
+            "full re-snapshot required (or allow the gap if this "
+            "source's LSN space is legitimately sparse)"
+        )
 
 
 def repair_watermark_from_lineage(table) -> int:

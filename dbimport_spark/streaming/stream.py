@@ -6,31 +6,27 @@ the same apply path runs under Structured Streaming via ``foreachBatch``:
     readStream(file source over the log dir)
       → foreachBatch(micro_batch -> CDCEngine.apply_batch)
 
-Exactly-once composition: Structured Streaming's checkpoint gives at-least-
-once micro-batch delivery; the engine's LSN-watermark commit makes re-
-delivery a no-op (apply_batch skips any window whose hi ≤ table.last_lsn),
-so the sink is effectively exactly-once — the same property the batch
-replay relies on. Late/out-of-order arrival inside a micro-batch is
-absorbed by LWW dedup; events older than the committed watermark are
-filtered (they were already applied from a previous file).
+Exactly-once: Structured Streaming's checkpoint gives at-least-once
+micro-batch delivery, and each micro-batch admits its window through the
+same engine step as batch replay, so re-delivery is a no-op — the argument
+is stated once, in ``CDCEngine.replay``. Late/out-of-order arrival inside a
+micro-batch is absorbed by LWW dedup; events older than the committed
+watermark are filtered (they were already applied from a previous file).
 
 Ordering assumption: log segments are appended in LSN order (true for any
 real binlog/WAL tailer writing sequential segments) and the file source
 delivers them in discovery order — so the committed watermark only ever
-trails the stream. Violations are detected per micro-batch, and with the
-per-segment ledger (one ``(file, lsn-range)`` record per processed segment,
-kept next to the checkpoint) they are also RECOVERABLE: a re-delivered
-already-ledgered segment is skipped silently (at-least-once contract), and
-a genuinely late segment under ``on_out_of_order='recover'`` triggers a
-key-scoped authoritative re-fold (``CDCEngine.repair_keys``) over the
-ledgered log instead of demanding a manual batch replay. The reference's
-sources are all scalar-watermark ordered (import_config.py:2087-2255); the
-ledger is the generalization a bulk-parallel segment writer needs.
+trails the stream. Violations are detected per micro-batch and classified
+against a per-segment ledger kept next to the checkpoint (``run_stream``).
+The reference's sources are all scalar-watermark ordered
+(import_config.py:2087-2255); the ledger is the generalization a
+bulk-parallel segment writer needs.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +34,9 @@ from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.schema import CHANGE_SCHEMA
+from dbimport_spark.sources.changelog import LogTruncatedError
+
+log = logging.getLogger(__name__)
 
 
 def _ledger_path(checkpoint_dir: str) -> str:
@@ -292,8 +291,6 @@ def run_stream(
                 "on_out_of_order='recover' re-folds the affected keys from "
                 "the ledgered log; a batch replay also recovers."
             )
-            from dbimport_spark.sources.changelog import LogTruncatedError
-
             # catch-up standing is a PHASE, not a single batch: a
             # rate-capped catch-up (maxFilesPerTrigger) spans several
             # micro-batches, and a crash mid-catch-up restarts with the
@@ -337,7 +334,7 @@ def run_stream(
             if policy == "error":
                 raise LogTruncatedError(suspect)
             if policy == "recover":
-                print(f"RECOVER {suspect}", flush=True)
+                log.warning("RECOVER %s", suspect)
                 recovered_files = set(late_files)
                 if engine.track_lsn and engine.delete_mode == "soft":
                     # track_lsn table: bounded-work path — merge the late
@@ -378,7 +375,7 @@ def run_stream(
                         full_log, window=(int(lo_late) - 1, int(last))
                     )
             else:
-                print(f"WARN {suspect}", flush=True)
+                log.warning("WARN %s", suspect)
                 # mid-stream warned-but-skipped late segments must NOT be
                 # ledgered: they were not absorbed, and ledgering them
                 # would make future re-delivery look benign (and a later
@@ -399,87 +396,36 @@ def run_stream(
         # its fresh rows from the apply (and from the window bounds) keeps
         # the skipped file cleanly recoverable as one unit.
         applied = [r for r in per_file if r["file"] not in skipped_late]
-        n_fresh_a = sum(r["fresh_rows"] for r in applied)
-        # null-lsn (malformed / corrupt-wire) rows are invisible to the
-        # watermark filter — route them into the window explicitly so the
-        # engine's quarantine parks them instead of the filter silently
-        # dropping them. Already-ledgered re-delivered files are excluded:
-        # their bad rows were parked when the file was first absorbed.
-        n_bad_a = sum(r["bad_rows"] for r in applied)
-        # null-lsn rows route only from files that are neither ledgered
-        # (their bad rows were parked when the file was first absorbed)
-        # nor already recorded in the quarantine's own dl_srcfile record
-        # (parked by an earlier batch replay, or by this stream before a
-        # crash between the table commit and the ledger append) —
-        # re-parking would double-count (and double-drain) the same dead
-        # letters under a new window dir.
-        bad_route_files: list[str] = []
-        if n_bad_a > 0:
-            cand = [
-                r["file"]
-                for r in applied
-                if r["bad_rows"] > 0 and r["file"] not in seen
-            ]
-            if cand:
-                parked = engine.quarantined_null_srcfiles()
-                bad_route_files = [f for f in cand if f not in parked]
-        if n_fresh_a > 0:
-            hi_a = max(
-                r["max_lsn"] for r in applied if r["max_lsn"] is not None
+        frame = batch
+        if skipped_late:
+            frame = batch.filter(~F.input_file_name().isin(skipped_late))
+        fresh = [r for r in applied if r["fresh_rows"]]
+        window = None
+        if fresh:
+            window = (
+                int(min(r["fresh_lo"] for r in fresh)) - 1,
+                int(max(r["max_lsn"] for r in fresh)),
             )
-            lo_a = min(
-                r["fresh_lo"] for r in applied if r["fresh_lo"] is not None
+        # a ledgered segment's dead letters were parked when it was first
+        # absorbed; the rest are owed unless the quarantine record holds
+        # them. 'recover' just absorbed the late segments' ordered rows:
+        # refusing their malformed leftovers would fail the micro-batch
+        # AFTER the recovery commit and wedge the stream in a crash loop
+        # (each restart re-runs the idempotent recovery and re-raises), so
+        # those, and only those, park when no window carries them.
+        dirty = [
+            r["file"] for r in applied if r["bad_rows"] and r["file"] not in seen
+        ]
+        bs = engine._admit_window(frame, window, dirty, parkable=recovered_files)
+        if bs is not None and window is None:
+            log.warning(
+                "RECOVER micro-batch %s: parked %d malformed event(s) from "
+                "recovered late segment(s) %s",
+                batch_id, bs.quarantined, sorted(recovered_files),
             )
-            keep = F.col("lsn") > F.lit(last)
-            if bad_route_files:
-                keep = keep | (
-                    F.col("lsn").isNull()
-                    & F.input_file_name().isin(bad_route_files)
-                )
-            fresh = batch.filter(keep)
-            if skipped_late:
-                fresh = fresh.filter(~F.input_file_name().isin(skipped_late))
-            bs = engine.apply_batch(fresh, int(lo_a) - 1, int(hi_a))
-            if on_batch_applied is not None and not bs.skipped:
-                on_batch_applied(bs)
-        elif bad_route_files:
-            if (
-                recovered_files
-                and set(bad_route_files) <= recovered_files
-                and engine.quarantine_dir is not None
-            ):
-                # 'recover' just absorbed these late segments' ordered
-                # rows; raising on their malformed leftovers would fail
-                # the micro-batch AFTER the recovery commit and wedge
-                # the stream in a crash loop (recovery is idempotent, so
-                # each restart re-runs it and re-raises). Park the dead
-                # letters instead — the same terminal state the fresh
-                # path gives them — and let the batch complete.
-                bad_df = _reread(spark, sorted(bad_route_files))
-                n_parked = engine.park_dead_letters(bad_df)
-                print(
-                    f"RECOVER micro-batch {batch_id}: parked {n_parked} "
-                    f"malformed event(s) from recovered late segment(s) "
-                    f"{sorted(bad_route_files)}",
-                    flush=True,
-                )
-            else:
-                # a micro-batch with UNPARKED malformed rows and no fresh
-                # row to anchor a window: stop loudly rather than ledger
-                # the segment(s) as absorbed (which would silently lose
-                # them). Benign re-delivery never lands here — a
-                # re-delivered segment's dead letters are in the
-                # quarantine record (parked before the window's commit)
-                # and are filtered out above.
-                raise ValueError(
-                    f"micro-batch {batch_id}: segment(s) "
-                    f"{sorted(bad_route_files)} carry unparked malformed "
-                    "events (null lsn / corrupt wire lines) and no fresh "
-                    "row anchors a window to park them under. Fix or "
-                    "remove the segment(s), or park them explicitly with "
-                    "CDCEngine.park_dead_letters(changes) (then "
-                    "drain_quarantine once repaired)."
-                )
+        elif bs is not None and on_batch_applied is not None and not bs.skipped:
+            on_batch_applied(bs)
+
         # record this batch's segments only after they are fully absorbed:
         # a crash before this point re-delivers them, and re-delivery of
         # ledgered segments is benign by construction

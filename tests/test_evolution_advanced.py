@@ -345,8 +345,8 @@ def test_key_type_widening_refused(spark, tmp_path):
             T.StructField("val", T.StringType(), True),
         ]
     )
-    eng.apply_batch(spark.createDataFrame([(1, "I", 7, "x")], sch), 0, 1)
-    widened = spark.createDataFrame([(2, "U", 7, "y")], sch).withColumn(
+    eng.apply_batch(local_frame(spark, [(1, "I", 7, "x")], sch), 0, 1)
+    widened = local_frame(spark, [(2, "U", 7, "y")], sch).withColumn(
         "id", F.col("id").cast("long")
     )
     with pytest.raises(SchemaEvolutionError, match="full_reload"):
@@ -479,8 +479,8 @@ def test_comment_metadata_evolution(spark, tmp_path):
             for f in CHANGE_SCHEMA.fields
         ]
     )
-    b1 = spark.createDataFrame(
-        [_row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))], commented
+    b1 = local_frame(
+        spark, [_row(1, "I", "k1", [1], "web", dt.datetime(2024, 1, 1))], commented
     )
     eng.apply_batch(b1, 0, 1)
     meta = {f.name: dict(f.metadata or {}) for f in table.current().schema.fields}
@@ -506,8 +506,10 @@ def test_comment_metadata_evolution(spark, tmp_path):
             for f in CHANGE_SCHEMA.fields
         ]
     )
-    b3 = spark.createDataFrame(
-        [_row(3, "U", "k1", [9], "web", dt.datetime(2024, 1, 3))], recommented
+    b3 = local_frame(
+        spark,
+        [_row(3, "U", "k1", [9], "web", dt.datetime(2024, 1, 3))],
+        recommented,
     )
     eng.apply_batch(b3, 2, 3)
     meta = {f.name: dict(f.metadata or {}) for f in table.current().schema.fields}
@@ -609,8 +611,8 @@ def test_repair_window_api_and_null_key_guard(spark, tmp_path):
     sch_old = (
         "lsn long, op string, id string, val int"  # key under its OLD name
     )
-    old_log = spark.createDataFrame(
-        [(1, "I", "k1", 10), (2, "I", "k2", 20), (3, "U", "k1", 11)], sch_old
+    old_log = local_frame(
+        spark, [(1, "I", "k1", 10), (2, "I", "k2", 20), (3, "U", "k1", 11)], sch_old
     )
     # undeclared: alignment has no candidate for 'uid' -> null keys -> raise
     eng_plain = CDCEngine(spark, table)
@@ -757,5 +759,5 @@ def test_plan_evolution_matches_apply_refusals(spark, tmp_path):
         "lsn long, op string, doc_id int, tokens array<int>, tok_n int, "
         "source string, commit_ts timestamp"
     )
-    rep = eng.plan_evolution(spark.createDataFrame([], b5_schema).schema)
+    rep = eng.plan_evolution(local_frame(spark, [], b5_schema).schema)
     assert rep["would_apply"] is False

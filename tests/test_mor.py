@@ -547,3 +547,37 @@ def test_inserts_only_track_lsn_tombstone_without_lv(spark):
     assert rows["b"][AUDIT_LSN] == 2  # the version late events lose to
     assert rows["b"]["tokens"] is None and rows["b"]["n_tok"] is None
     assert rows["a"][AUDIT_IUD] == "I" and rows["a"][AUDIT_DELETE] is None
+
+
+def test_mor_windows_leave_no_unreferenced_version_dirs(spark, tmp_path):
+    """A MoR window whose deletes hit no live key writes no delete file,
+    and a window that only deletes absent keys writes no file at all. The
+    staged version dir of such a write must not stay under data/: no
+    snapshot references it, and orphan listing sees .parquet files only."""
+    import datetime as dt
+    import os
+
+    from dbimport_spark.schema import CHANGE_SCHEMA
+
+    changes = generate_changes(spark, 1000, n_keys=50, seed=88)
+    table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=4)
+    eng = CDCEngine(spark, table, write_mode="mor")
+    eng.apply_batch(changes.filter("lsn <= 500"), 0, 500)
+    eng.apply_batch(changes.filter("lsn > 500"), 500, 1000)
+    ts = dt.datetime(2024, 1, 1)
+    absent = local_frame(
+        spark,
+        [(1000 + i, "D", f"absent-{i}", None, None, None, ts) for i in (1, 2)],
+        CHANGE_SCHEMA,
+    )
+    eng.apply_batch(absent, 1000, 1002)
+    assert table.last_lsn() == 1002
+
+    referenced = {
+        f.path.split("/")[1]
+        for v in table.snapshots()
+        for f in table.snapshot(v).files
+    }
+    dirs = set(os.listdir(os.path.join(table.root, "data")))
+    assert dirs <= referenced, sorted(dirs - referenced)
+    assert _state(spark, table) == _oracle_state(changes)

@@ -172,7 +172,8 @@ def test_quarantine_preserves_source_only_columns(spark, tmp_path):
         list(LAX_SCHEMA.fields)
         + [T.StructField("src_pk", T.StringType(), True)]
     )
-    log = spark.createDataFrame(
+    log = local_frame(
+        spark,
         [
             (1, "I", None, [1], 1, "web", TS, "kA"),  # key only in src_pk
             (2, "I", None, [2], 1, "web", TS, "kB"),

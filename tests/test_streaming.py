@@ -129,7 +129,7 @@ def test_stateful_running_digest(spark, tmp_path):
     assert got == expected
 
 
-def test_stream_late_segment_recover_converges(spark, tmp_path):
+def test_stream_late_segment_recover_converges(spark, tmp_path, caplog, capsys):
     """on_out_of_order='recover': a segment arriving AFTER a later one was
     committed triggers a key-scoped authoritative re-fold over the
     per-segment ledger — the stream converges to the full-log fold without
@@ -166,6 +166,15 @@ def test_stream_late_segment_recover_converges(spark, tmp_path):
     expected = lww_fold([r.asDict() for r in changes.collect()])
     assert got == as_tuple_set(list(expected.values()), PAYLOAD_COLUMNS)
     assert table.last_lsn() == 1000  # watermark never moved backward
+    # the recovery is reported as a log record, never on stdout (the
+    # stream verb's stdout carries only its JSON result)
+    assert any(
+        r.levelname == "WARNING" and r.getMessage().startswith("RECOVER")
+        and "seg-late" in r.getMessage()
+        for r in caplog.records
+        if r.name == "dbimport_spark.streaming.stream"
+    )
+    assert capsys.readouterr().out == ""
 
 
 def test_stream_auto_escalates_on_restarted_checkpoint(spark, tmp_path):
@@ -365,7 +374,9 @@ def test_stream_recover_late_prerename_segment_keeps_payload(spark, tmp_path):
     assert table.last_lsn() == 3
 
 
-def test_stream_warn_straddling_segment_wholly_skipped(spark, tmp_path):
+def test_stream_warn_straddling_segment_wholly_skipped(
+    spark, tmp_path, caplog, capsys
+):
     """ADVICE r3: under 'warn', a late segment that STRADDLES the watermark
     (min_lsn <= last < max_lsn) must stay wholly unprocessed — applying its
     fresh rows while excluding it from the ledger would advance the
@@ -415,6 +426,14 @@ def test_stream_warn_straddling_segment_wholly_skipped(spark, tmp_path):
     ledger = os.path.join(ckpt, "dbimport-segments.jsonl")
     files = [_json.loads(line)["file"] for line in open(ledger)]
     assert not any("straddle" in p for p in files)
+    # the skip is reported as a log record, never on stdout
+    assert any(
+        r.levelname == "WARNING" and r.getMessage().startswith("WARN")
+        and "seg-straddle" in r.getMessage()
+        for r in caplog.records
+        if r.name == "dbimport_spark.streaming.stream"
+    )
+    assert capsys.readouterr().out == ""
 
     # clean recovery as one unit: repair the below-watermark half, replay
     # the fresh half — converges on the full-log fold
@@ -880,3 +899,83 @@ def test_recover_parks_dead_letters_from_late_segment(spark, tmp_path):
     assert park_df.count() == spark.read.parquet(
         *(os.path.join(qdir, d) for d in parked)
     ).count()
+
+
+def test_replay_and_stream_park_in_window_dead_letters_alike(spark, tmp_path):
+    """One log whose segments carry null-lsn rows next to fresh rows, fed
+    through batch replay and through the stream into twin tables, each
+    with its own quarantine: both ingest paths admit windows through the
+    same step, so they end with the same live rows and the same parked
+    dead letters (payload, reason, source segment), and a second pass of
+    either parks nothing new."""
+    import datetime as dt
+    import os
+    import time
+
+    from pyspark.sql import types as T
+
+    from dbimport_spark.schema import CHANGE_SCHEMA
+
+    LAX = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in CHANGE_SCHEMA.fields]
+    )
+    TS = dt.datetime(2024, 1, 1)
+    log_dir = str(tmp_path / "log")
+    for rows in (
+        [(1, "I", "k1", [1], 1, "web", TS), (None, "I", "kx", [7], 1, "web", TS),
+         (2, "I", "k2", [2], 1, "web", TS)],
+        [(3, "U", "k1", [3], 1, "web", TS), (None, "U", "ky", [8], 1, "web", TS)],
+        [(4, "D", "k2", None, None, None, TS), (5, "I", "k3", [5], 1, "web", TS)],
+    ):
+        local_frame(spark, rows, LAX).coalesce(1).write.mode("append").parquet(
+            log_dir
+        )
+        time.sleep(0.05)  # distinct mtimes: the WAL-tailer delivery order
+
+    def twin(name):
+        table = CDCEngine.create_table(str(tmp_path / name), num_buckets=4)
+        qdir = str(tmp_path / f"{name}-q")
+        return table, qdir, CDCEngine(spark, table, quarantine_dir=qdir)
+
+    def parked(qdir):
+        dirs = [os.path.join(qdir, d) for d in os.listdir(qdir)]
+        return sorted(
+            (r["lsn"], r["op"], r["doc_id"], tuple(r["tokens"]), r["n_tok"],
+             r["source"], r["commit_ts"], r["dl_reason"], r["dl_srcfile"])
+            for r in spark.read.parquet(*dirs).collect()
+        )
+
+    def live(table):
+        return as_tuple_set(
+            [r.asDict() for r in table.read(spark).collect()], PAYLOAD_COLUMNS
+        )
+
+    rt, rq, reng = twin("r")
+    assert reng.replay(spark.read.parquet(log_dir), num_batches=2) \
+        .events_quarantined == 2
+    st, sq, seng = twin("s")
+    run_stream(
+        seng, stream_changes(spark, log_dir, max_files_per_trigger=1),
+        checkpoint_dir=str(tmp_path / "c1"),
+    ).awaitTermination(300)
+
+    assert rt.last_lsn() == st.last_lsn() == 5
+    assert live(rt) == live(st)
+    expected = lww_fold(
+        [r.asDict() for r in spark.read.parquet(log_dir).collect()
+         if r["lsn"] is not None]
+    )
+    assert live(rt) == as_tuple_set(list(expected.values()), PAYLOAD_COLUMNS)
+    parked_r, parked_s = parked(rq), parked(sq)
+    assert [p[2] for p in parked_r] == ["kx", "ky"]
+    assert all(p[-1].endswith(".parquet") for p in parked_r)
+    assert parked_r == parked_s
+
+    # a second pass parks nothing new: a re-run replay, and a fresh
+    # checkpoint re-delivering every segment to the stream
+    assert reng.replay(spark.read.parquet(log_dir)).events_quarantined == 0
+    run_stream(
+        seng, stream_changes(spark, log_dir),
+        checkpoint_dir=str(tmp_path / "c2"),
+    ).awaitTermination(300)
+    assert parked(rq) == parked_r and parked(sq) == parked_s
