@@ -348,7 +348,7 @@ def purge_tombstones(
     # per-bucket purgeable counts in the SAME census job that finds the
     # todo buckets — raw footer rows would OVERCOUNT purged_rows on
     # merge-on-read buckets (a key superseded by a delta counts twice,
-    # key-only delete files count as rows), so count the RECONCILED rows
+    # delete files count as rows), so count the RECONCILED rows
     # the purge actually drops
     per_bucket = (
         df.filter(purgeable)

@@ -33,6 +33,7 @@ catalog CAS — the rest of the format is storage-agnostic.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -61,14 +62,16 @@ class DataFile:
     epoch: int = 0
     # merge-on-read (Iceberg v2 analogue): "base" files hold whole-bucket
     # state (at most one row per key per bucket); "delta" files hold
-    # superseding upsert rows; "delete" files hold key-only tombstones
-    # (the equality-delete-file analogue). Non-base files carry ``seq``
+    # superseding upsert rows; "delete" files hold tombstones (the
+    # equality-delete-file analogue): only their keys are read, the rest
+    # is null (key-only in older tables). Non-base files carry ``seq``
     # (the committing snapshot version, stamped by ``commit``) — the
     # last-writer-wins order across delta commits. ``seq`` lives in file
     # METADATA, never as a per-row column. Invariant: a commit writes at
     # most one row per key across its delta and delete files (the engine
-    # writes both from one deduped batch); ``read_files_reconciled`` relies
-    # on it, since rows of equal seq never compete.
+    # writes both from one projection of one deduped batch, in one write
+    # job); ``read_files_reconciled`` relies on it, since rows of equal
+    # seq never compete.
     kind: str = "base"
     seq: int = 0
     # per-file column statistics (the Iceberg manifest-metrics analogue):
@@ -691,6 +694,9 @@ class LakeTable:
         One output dir per commit — files are immutable, never renamed, and
         become visible only via the metadata swap. Returns per-file stats
         (rows/bytes from parquet footers — same stats Iceberg manifests keep).
+        A df that also carries ``_kind`` (merge-on-read: ``'delta'`` or
+        ``'delete'``) is written one file per (bucket, kind) per task, in
+        the same job; its DataFiles take ``kind`` from that partition.
         """
         out_dir = os.path.join(self.root, "data", version_dir)
         # one snapshot parse for the whole write path: current() re-reads
@@ -707,6 +713,12 @@ class LakeTable:
                 if c.strip()
             ]
         out = df.withColumn("bucket", F.col(bucket_col)).drop(bucket_col)
+        # the kind partition dir must not start with '_' or '.' (Spark and
+        # Hadoop skip such paths as hidden); dl_ is the engine's namespace
+        parts, kind_dir = ["bucket"], "dl_kind"
+        if "_kind" in out.columns:
+            out = out.withColumnRenamed("_kind", kind_dir)
+            parts.append(kind_dir)
         # declared sort order (Iceberg SORTED BY analogue, table property
         # 'sort_order'): every data file is written sorted by these
         # columns WITHIN its bucket — a task-local sort, no shuffle. Rows
@@ -714,12 +726,13 @@ class LakeTable:
         # so range predicates prune row groups at scan time (Spark's
         # pushed filters) and file-level stats ('stat_columns') prune
         # whole files via read_where; sorted data also dictionary/RLE
-        # compresses better. Columns absent from this write (e.g.
-        # key-only delete files) are skipped.
+        # compresses better. The sort leads with every partition column,
+        # else Spark adds its own partition sort, which breaks the declared
+        # order inside the files. Columns absent from this write are skipped.
         sort_cols = [c for c in _csv_prop("sort_order") if c in out.columns]
         if sort_cols:
-            out = out.sortWithinPartitions("bucket", *sort_cols)
-        writer = out.write.partitionBy("bucket").mode("overwrite")
+            out = out.sortWithinPartitions(*parts, *sort_cols)
+        writer = out.write.partitionBy(*parts).mode("overwrite")
         # declared bloom filters (Iceberg write.parquet.bloom-filter-enabled
         # analogue, table properties 'bloom_columns' / 'bloom_ndv'): parquet
         # split-block bloom filters on the named columns. Min/max stats prune
@@ -731,9 +744,9 @@ class LakeTable:
         # a point lookup on a 100 TB table touches ~1 bucket's files and
         # skips every row group the key isn't in. The scan side is free —
         # parquet-mr consults blooms for pushed = / IN predicates
-        # automatically. Columns absent from this write (key-only delete
-        # files) are skipped; ndv is per-row-group expected distinct count
-        # (sizes the filter; parquet default when unset).
+        # automatically. Delete files carry them too; columns absent from
+        # this write are skipped; ndv is per-row-group expected distinct
+        # count (sizes the filter; parquet default when unset).
         bloom_cols = [c for c in _csv_prop("bloom_columns") if c in out.columns]
         if bloom_cols:
             ndv = snap_props.properties.get("bloom_ndv", "").strip()
@@ -759,26 +772,25 @@ class LakeTable:
         want_stats = [AUDIT_UPDATE, AUDIT_LSN, AUDIT_DELETE]
         want_stats += _csv_prop("stat_columns")
 
-        def stat_one(args: tuple[int, str]) -> DataFile | None:
-            b, p = args
+        def stat_one(args: tuple[int, str, str]) -> DataFile | None:
+            b, kind, p = args
             pf = pq.ParquetFile(p)
             nrows = pf.metadata.num_rows
             if nrows == 0:
                 return None
             return DataFile(
                 os.path.relpath(p, self.root), b, nrows, os.path.getsize(p),
-                epoch, stats=footer_stats(pf, want_stats),
+                epoch, kind, stats=footer_stats(pf, want_stats),
             )
 
-        todo: list[tuple[int, str]] = []
-        for sub in sorted(os.listdir(out_dir)):
-            if not sub.startswith("bucket="):
-                continue
-            b = int(sub.split("=", 1)[1])
-            subdir = os.path.join(out_dir, sub)
-            for name in sorted(os.listdir(subdir)):
-                if name.endswith(".parquet"):
-                    todo.append((b, os.path.join(subdir, name)))
+        # (bucket, kind, path) per parquet file, from its partition dirs
+        todo: list[tuple[int, str, str]] = []
+        pattern = os.path.join(glob.escape(out_dir), "bucket=*", "**", "*.parquet")
+        for p in sorted(glob.glob(pattern, recursive=True)):
+            part = dict(
+                d.split("=", 1) for d in os.path.relpath(p, out_dir).split(os.sep)[:-1]
+            )
+            todo.append((int(part["bucket"]), part.get(kind_dir, "base"), p))
         # footer stats: thread pool for small commits; for large commits
         # (compaction / initial load at scale) the statting itself is
         # distributed — executors open the footers, the driver only
@@ -792,18 +804,18 @@ class LakeTable:
         else:
             root = self.root
 
-            def stat_remote(args: tuple[int, str]):
+            def stat_remote(args: tuple[int, str, str]):
                 import os as _os
 
                 import pyarrow.parquet as _pq
 
                 from dbimport_spark.lake.table import footer_stats as _fs
 
-                b, p = args
+                b, kind, p = args
                 pf = _pq.ParquetFile(p)
                 nrows = pf.metadata.num_rows
                 st = _fs(pf, want_stats) if nrows else None
-                return (p, b, nrows, _os.path.getsize(p), st)
+                return (p, b, kind, nrows, _os.path.getsize(p), st)
 
             sc = spark.sparkContext
             stats = (
@@ -812,13 +824,13 @@ class LakeTable:
                 .collect()
             )
             out = [
-                DataFile(os.path.relpath(p, root), b, nrows, nbytes, epoch, stats=st)
-                for p, b, nrows, nbytes, st in stats
+                DataFile(os.path.relpath(p, root), b, nrows, nbytes, epoch, kind, stats=st)
+                for p, b, kind, nrows, nbytes, st in stats
                 if nrows > 0
             ]
         if not out:
-            # nothing to reference (e.g. a MoR delete write whose deletes
-            # hit no live key): no snapshot will name this dir, and orphan
+            # nothing to reference (e.g. a MoR window whose deletes all
+            # hit absent keys): no snapshot will name this dir, and orphan
             # listing sees .parquet files only, so it would stay forever
             shutil.rmtree(out_dir, ignore_errors=True)
         return out

@@ -384,8 +384,8 @@ def mor_outputs(
     delete_mode: str = "hard",
     track_lsn: bool = False,
     preimages: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Merge-on-read batch outputs: (upsert delta rows, delete keys).
+) -> DataFrame:
+    """Merge-on-read batch output: delta and delete rows in one frame.
 
     ``batch`` is the LWW-deduped winner set (one row per key; lsn, op,
     payload, optional ``*_lv`` pre-images in soft mode). ``probe`` is the
@@ -404,12 +404,15 @@ def mor_outputs(
     same-value update in both modes); incremental exports may re-ship
     such rows (consistent, merely less suppressed).
 
-    Returns ``(upserts, delete_keys)``: upserts become kind='delta'
-    files; delete_keys (hard mode only, matched 'D' winners) become
-    kind='delete' key-only tombstone files — soft-mode deletes are dead
-    ROWS (pre-image + dl_delete_ts) and ride the upsert output, exactly
-    like the CoW soft branch; ``preimages`` supplies the base pre-image
-    for 'D' winners whose window carried no live payload.
+    Returns one frame, projected once from one join, whose ``_kind``
+    column routes each row to its file kind in
+    ``LakeTable.write_data_files``: ``'delta'`` rows are upserts;
+    ``'delete'`` rows (hard mode only, matched 'D' winners) are
+    tombstones that keep the key and carry nulls in every other column.
+    Soft-mode deletes are dead ROWS (pre-image + dl_delete_ts), so every
+    soft row is a delta, exactly like the CoW soft branch;
+    ``preimages`` supplies the base pre-image for 'D' winners whose
+    window carried no live payload.
     """
     soft = delete_mode == "soft"
     keys = [key] if isinstance(key, str) else list(key)
@@ -449,52 +452,44 @@ def mor_outputs(
         F.when(is_del, del_payload(c)).otherwise(F.col(f"b.{c}")).alias(c)
         for c in non_key
     ]
-    audit_cols = [
-        F.when(is_del, F.lit("D"))
+    audit = {
+        AUDIT_IUD: F.when(is_del, F.lit("D"))
         .when(matched, F.lit("U"))
-        .otherwise(F.lit("I"))
-        .alias(AUDIT_IUD),
-        F.when(matched, F.col(f"p.{AUDIT_INSERT}"))
-        .otherwise(merge_ts)
-        .alias(AUDIT_INSERT),
-        merge_ts.alias(AUDIT_UPDATE),
-    ]
+        .otherwise(F.lit("I")),
+        AUDIT_INSERT: F.when(matched, F.col(f"p.{AUDIT_INSERT}")).otherwise(
+            merge_ts
+        ),
+        AUDIT_UPDATE: merge_ts,
+    }
     if soft:
-        audit_cols.append(
-            F.when(is_del, merge_ts)
-            .otherwise(F.lit(None))
-            .cast("timestamp")
-            .alias(AUDIT_DELETE)
+        audit[AUDIT_DELETE] = (
+            F.when(is_del, merge_ts).otherwise(F.lit(None)).cast("timestamp")
         )
     if track_lsn:
-        audit_cols.append(F.col("b.lsn").alias(AUDIT_LSN))
+        audit[AUDIT_LSN] = F.col("b.lsn")
 
     if soft:
-        # dead rows ride the upsert output; drop only pre-image-less
-        # NOT-MATCHED deletes (no row to mark) — except in track_lsn mode,
-        # where they become null-payload tombstones (the version a later
-        # late event must lose to), mirroring the CoW shuffle branch
+        # dead rows ride as deltas; drop only pre-image-less NOT-MATCHED
+        # deletes (no row to mark) — except in track_lsn mode, where they
+        # become null-payload tombstones (the version a later late event
+        # must lose to), mirroring the CoW shuffle branch
         if track_lsn:
             keep = F.lit(True)
         elif has_lv:
             keep = ~is_del | matched | F.coalesce(F.col("_has_lv"), F.lit(False))
         else:
             keep = ~is_del | matched
-        upserts = joined.filter(keep).select(
-            *out_cols,
-            *[F.col(f"b.{k}").alias(k) for k in keys],
-            *payload,
-            *audit_cols,
-        )
-        return upserts, None
-
-    upserts = joined.filter(~is_del).select(
+        kind = F.lit("delta")
+    else:
+        # a delete row per MATCHED 'D' winner (an unmatched one has no row
+        # to hide); its audit columns are null like its payload
+        keep = ~is_del | matched
+        kind = F.when(is_del, F.lit("delete")).otherwise(F.lit("delta"))
+        audit = {c: F.when(~is_del, e) for c, e in audit.items()}
+    return joined.filter(keep).select(
         *out_cols,
         *[F.col(f"b.{k}").alias(k) for k in keys],
         *payload,
-        *audit_cols,
+        *[e.alias(c) for c, e in audit.items()],
+        kind.alias("_kind"),
     )
-    delete_keys = joined.filter(is_del & matched).select(
-        *out_cols, *[F.col(f"b.{k}").alias(k) for k in keys]
-    )
-    return upserts, delete_keys

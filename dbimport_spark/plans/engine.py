@@ -195,7 +195,7 @@ class CDCEngine:
         # merge-on-read (Iceberg v2 analogue): 'cow' rewrites touched
         # buckets in full per batch (read amplification zero, write
         # amplification ∝ bucket size); 'mor' appends superseding delta
-        # files + key-only delete files and defers the fold to read-time
+        # files + delete files and defers the fold to read-time
         # reconciliation / compaction (write cost ∝ batch size — the only
         # viable shape for small steady-state batches against 100 TB
         # buckets); 'auto' picks MOR when the batch is small relative to
@@ -1213,9 +1213,11 @@ class CDCEngine:
         hi: int,
         merge_ts_val,
     ) -> tuple[DataFrame, list, list[str]]:
-        """Merge-on-read apply: append superseding delta files + key-only
-        delete files instead of rewriting the touched buckets. Returns
-        ``(deduped, new_files, staged_dirs)`` for the commit tail.
+        """Merge-on-read apply: append superseding delta files + delete
+        files (the key, every other column null) instead of rewriting the
+        touched buckets, both from one frame in ONE write job under one
+        staged version dir. Returns ``(deduped, new_files, staged_dirs)``
+        for the commit tail.
 
         Scale shape (the reason this path exists): a CoW batch's write
         cost is the touched buckets' FULL size — at 100 TB with TB-scale
@@ -1237,15 +1239,6 @@ class CDCEngine:
         soft = self.delete_mode == "soft"
         bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
         deduped = self._lww(batch_nc, payload_cols).withColumn("_bucket", bexpr)
-        # hard-mode batches with deletes run TWO write jobs (delta files,
-        # then key-only tombstones) over this frame and its probe; without
-        # materialization the second job re-reads the log window, re-runs
-        # the dedup, and re-scans the touched buckets' narrow probe
-        # columns. Both frames are batch-sized (the MOR invariant), so the
-        # lazy checkpoint is bounded by batch size at any table scale.
-        two_jobs = n_dels and self.delete_mode == "hard"
-        if two_jobs:
-            deduped = deduped.localCheckpoint(eager=False)
 
         # narrow audit probe: reconciled current rows of the batch's keys,
         # column-pruned to keys + insert-ts. The semi-join streams the
@@ -1255,8 +1248,6 @@ class CDCEngine:
         probe = current.select(*probe_cols).join(
             F.broadcast(batch_keys), self.keys, "left_semi"
         )
-        if two_jobs:
-            probe = probe.localCheckpoint(eager=False)
 
         preimages = None
         if soft and n_dels:
@@ -1280,7 +1271,7 @@ class CDCEngine:
                     F.broadcast(no_lv_dels), self.keys, "left_semi"
                 )
 
-        upserts, delete_keys = mor_outputs(
+        out = mor_outputs(
             deduped,
             probe,
             self.keys,
@@ -1292,28 +1283,19 @@ class CDCEngine:
             preimages=preimages,
         )
         # batch-sized output: a handful of write tasks, each emitting one
-        # file per bucket it holds — total delta files per batch stays
-        # <= touched buckets regardless of parallelism. Both writes come
-        # from ``deduped`` (one winner per key), so this commit holds at
-        # most one row per key across its delta and delete files — the
-        # invariant ``LakeTable.read_files_reconciled`` relies on.
+        # file per (bucket, kind) it holds — delta plus delete files per
+        # batch stay <= 2 x touched buckets regardless of parallelism. One
+        # write job: both kinds come from one projection of ``deduped``
+        # (one winner per key), so this commit holds at most one row per
+        # key across its delta and delete files — the invariant
+        # ``LakeTable.read_files_reconciled`` relies on.
         import math as _math
 
         nparts = max(1, min(len(touched), _math.ceil(n_events / 1_000_000) * 8))
-        version_dir = f"s{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        staged = [version_dir, version_dir + "-del"]
+        staged = [f"s{snap.version + 1}-{uuid.uuid4().hex[:8]}"]
         new_files = self.table.write_data_files(
-            self.spark, upserts.repartition(nparts, "_bucket"), version_dir
+            self.spark, out.repartition(nparts, "_bucket"), staged[0]
         )
-        for f in new_files:
-            f.kind = "delta"
-        if delete_keys is not None and n_dels:
-            del_files = self.table.write_data_files(
-                self.spark, delete_keys.repartition(nparts, "_bucket"), staged[1]
-            )
-            for f in del_files:
-                f.kind = "delete"
-            new_files = new_files + del_files
         return deduped, new_files, staged
 
     def _append_history(

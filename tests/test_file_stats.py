@@ -121,6 +121,29 @@ def test_export_scans_only_touched_buckets(spark, tmp_path):
     assert s2["last_run_rows"] == 0
     assert s2["last_update_ts"] == s["last_update_ts"]
 
+    # a MoR window that only deletes a key: its delete file records the
+    # all-null marker for dl_update_ts (a delete row can only hide rows),
+    # and the export still equals an unpruned read past the watermark
+    gone = table.read(spark).select("doc_id").orderBy(F.desc("doc_id")).first()[0]
+    dels = local_frame(
+        spark, [(100_001, "D", gone, None, None, None)], EVENT_SCHEMA
+    )
+    mor.apply_batch(dels, table.last_lsn(), 100_001)
+    deletes = [f for f in table.current().files if f.kind == "delete"]
+    assert [f.stats[AUDIT_UPDATE] for f in deletes] == [[None, None]]
+
+    def rows(df):
+        return {
+            (r.doc_id, tuple(r.tokens or ()), r.n_tok, r.source)
+            for r in df.select("doc_id", "tokens", "n_tok", "source").collect()
+        }
+
+    past = F.col(AUDIT_UPDATE) > F.lit(s2["last_update_ts"]).cast("timestamp")
+    want = rows(table.read(spark).filter(past))
+    s3 = ex.export(spark, mode="incr")
+    assert s3["last_run_rows"] == len(want)
+    assert rows(spark.read.parquet(s3["last_run_dir"])) == want
+
 
 def test_ts_micros_roundtrip():
     d = datetime(2026, 8, 17, 12, 34, 56, 789012)
@@ -161,12 +184,12 @@ def test_purge_census_pruned_by_stats(spark, tmp_path):
     )
     eng = CDCEngine(spark, table)
     keys = [f"p{i}" for i in range(12)]
-    ins = spark.createDataFrame(
-        [(i + 1, "I", k, [1], 1, "s") for i, k in enumerate(keys)], schema
+    ins = local_frame(
+        spark, [(i + 1, "I", k, [1], 1, "s") for i, k in enumerate(keys)], schema
     )
     eng.apply_batch(ins, 0, 12)
-    dels = spark.createDataFrame(
-        [(20, "D", keys[0], None, None, None)], schema
+    dels = local_frame(
+        spark, [(20, "D", keys[0], None, None, None)], schema
     )
     eng.apply_batch(dels, 12, 20)
 

@@ -159,7 +159,7 @@ def test_rename_column_metadata_only(spark, tmp_path):
     got = {(r["doc_id"], r["v_renamed"]) for r in t.read(spark).collect()}
     assert got == {("a", 1), ("b", 2)}
     # new writes use the new physical name; mixed-epoch reads still align
-    df = spark.createDataFrame([("c", 3)], t.current().schema).withColumn(
+    df = local_frame(spark, [("c", 3)], t.current().schema).withColumn(
         "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")
     )
     f2 = t.write_data_files(spark, df, "s2")

@@ -3,8 +3,9 @@ compaction fold, CDF equivalence, and CoW-parity convergence.
 
 The MOR path is the Iceberg-v2 analogue for this lake format (SURVEY.md
 §2.1 S7/S9 scale notes): a batch appends superseding delta files plus
-key-only delete files instead of rewriting the touched buckets, reads
-reconcile by per-file commit seq, and compaction folds the deltas back.
+delete files (the key; every other column null), in one write job, instead
+of rewriting the touched buckets; reads reconcile by per-file commit seq,
+and compaction folds the deltas back.
 Every test here pins MOR state against either the CoW engine on the same
 log or the pure-Python LWW oracle — the two must be indistinguishable to
 readers.
@@ -197,6 +198,33 @@ def test_mor_replay_matches_oracle_hard(spark, tmp_path):
     assert len(counts) == len(by_seq) > 1
     assert all(r.n == r.k for r in counts)
 
+    # one write per MoR window: one staged version dir holds both kinds,
+    # at most one file per (bucket, kind), so <= 2 x touched buckets
+    import os
+
+    import pyarrow.parquet as pq
+
+    data_dirs = os.listdir(os.path.join(t.root, "data"))
+    assert not [d for d in data_dirs if d.endswith("-del")], data_dirs
+    for seq, grp in by_seq.items():
+        assert len({f.path.split("/")[1] for f in grp}) == 1, seq
+        assert len({(f.bucket, f.kind) for f in grp}) == len(grp), seq
+        touched = {r["bucket"] for r in t.snapshot(seq).lineage if "bucket" in r}
+        assert len(grp) <= 2 * len(touched), seq
+    # delete files keep the key; every other column is null
+    deletes = [f for f in extras.values() if f.kind == "delete"]
+    for f in deletes:
+        tbl = pq.read_table(os.path.join(t.root, f.path))
+        assert tbl.num_rows == f.rows > 0
+        assert all(
+            tbl[c].null_count == tbl.num_rows
+            for c in tbl.column_names
+            if c != "doc_id"
+        ), f.path
+    # the partition dirs (bucket=, dl_kind=) never leak into a read
+    assert t.read_files(spark, snap, deletes).columns == snap.schema.fieldNames()
+    assert t.read(spark).columns == snap.schema.fieldNames()
+
 
 def test_mor_replay_matches_cow_soft(spark, tmp_path):
     log = generate_changes(spark, 3000, n_keys=150, seed=7)
@@ -370,12 +398,47 @@ def test_cdf_equal_cow_vs_mor(spark, tmp_path):
 def test_cdf_stream_equals_batch_over_mor(spark, tmp_path):
     """The streaming per-bucket diff reconciles deltas identically to the
     batch table_changes over every MOR window."""
+    import datetime as dt
+    import os
+
+    import pyarrow.parquet as pq
+
     from dbimport_spark.lake.cdf import table_changes
+    from dbimport_spark.schema import CHANGE_SCHEMA
     from dbimport_spark.streaming.cdf_source import diff_bucket, plan_window
 
     log = generate_changes(spark, 2500, n_keys=120, seed=44)
     eng = _engine(spark, tmp_path, "sm", write_mode="mor")
     eng.replay(log, num_batches=4)
+    # two delete-file layouts in one table: a key-only file committed by
+    # hand (what tables written before null-padded delete files hold),
+    # then an engine window whose deletes write null-padded ones
+    t = eng.table
+    live = sorted(r.doc_id for r in t.read(spark).select("doc_id").collect())
+    key_only = local_frame(spark, [(live[0],)], "doc_id string")
+    files = t.write_data_files(
+        spark, key_only.withColumn("_bucket", t.bucket_expr()), "key-only-del"
+    )
+    for f in files:
+        f.kind = "delete"
+    t.commit(files, replaced_buckets=set())
+    lsn = t.last_lsn()
+    ts = dt.datetime(2024, 1, 1)
+    dels = local_frame(
+        spark,
+        [
+            (lsn + i, "D", k, None, None, None, ts)
+            for i, k in enumerate(live[1:4], 1)
+        ],
+        CHANGE_SCHEMA,
+    )
+    eng.apply_batch(dels, lsn, lsn + 3)
+    widths = {
+        len(pq.read_schema(os.path.join(t.root, f.path)).names)
+        for f in t.current().files
+        if f.kind == "delete"
+    }
+    assert widths == {1, len(t.current().schema)}
     hi = eng.table.current().version
     for lo in range(hi):
         parts = plan_window(eng.table, lo, lo + 1)

@@ -69,7 +69,7 @@ def _race_duplicate_window(spark, tmp_path, write_mode):
     # the racing window replays the log past the first window. The MoR run
     # replays it in reverse, so each key's FIRST event wins: keys whose
     # first event is a delete are live rows then, and the window writes
-    # delete files (its -del dir) next to its delta files.
+    # delete files next to its delta files, in the same staged dir.
     if write_mode == "mor":
         log2 = log.withColumn("lsn", 2001 - F.col("lsn"))
     else:

@@ -10,6 +10,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from dbimport_spark.plans.engine import CDCEngine
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
 
@@ -30,10 +31,22 @@ def test_files_written_sorted(spark, tmp_path):
     table, _ = _make_table(
         spark, tmp_path, sort_order="n_tok", stat_columns="n_tok"
     )
-    files = glob.glob(os.path.join(table.root, "data", "*", "bucket=*", "*.parquet"))
+    # a merge-on-read window writes its delta and delete files in one job
+    # partitioned by bucket AND kind; the declared order holds there too
+    mor = CDCEngine(spark, table, write_mode="mor")
+    mor.replay(
+        generate_changes(spark, 2000, n_keys=150, seed=14, tokens_min=1,
+                         tokens_max=64, first_lsn=2001),
+        num_batches=1,
+    )
+    assert {"delta", "delete"} <= {f.kind for f in table.current().files}
+    files = glob.glob(
+        os.path.join(table.root, "data", "*", "bucket=*", "**", "*.parquet"),
+        recursive=True,
+    )
     assert files
     for p in files:
-        vals = pq.read_table(p, columns=["n_tok"])["n_tok"].to_pylist()
+        vals = pq.read_table(p, columns=["n_tok"])["n_tok"].drop_null().to_pylist()
         assert vals == sorted(vals), p
 
 
@@ -85,8 +98,8 @@ def test_read_where_keeps_whole_mor_buckets(spark, tmp_path):
         ]
     )
     big = list(range(500))
-    batch = spark.createDataFrame(
-        [(9999, "U", key, big, len(big), "s")], schema
+    batch = local_frame(
+        spark, [(9999, "U", key, big, len(big), "s")], schema
     )
     mor = CDCEngine(spark, table, write_mode="mor")
     mor.apply_batch(batch, table.last_lsn(), 9999)
@@ -104,3 +117,11 @@ def test_read_where_keeps_whole_mor_buckets(spark, tmp_path):
         for r in table.read_where(spark, "n_tok", hi=399).collect()
     }
     assert key not in low
+
+    # a MoR delete of that key: its delete file records the all-null stat
+    # marker for n_tok, the bucket stays readable through the delta's
+    # stats, and reconciliation hides the key — nothing is >= 400 now
+    gone = local_frame(spark, [(10_000, "D", key, None, None, None)], schema)
+    mor.apply_batch(gone, table.last_lsn(), 10_000)
+    assert any(f.kind == "delete" for f in table.current().files)
+    assert table.read_where(spark, "n_tok", lo=400).collect() == []
