@@ -1,7 +1,10 @@
 """Key-partitioned MERGE with I/U/D routing — the engine's crown jewel.
 
 Semantics mirror the reference's generated ``MERGE INTO`` (reference
-etl_operations.py:100-298, SURVEY.md J1/J2/P5):
+etl_operations.py:100-298, SURVEY.md J1/J2/P5), stated once, in
+``_row_rule``, as a function of four predicates per joined row — a
+target row exists (``has_t``), a batch winner exists (``has_b``), the
+winner is a delete, and the matched payload differs:
 
 - WHEN MATCHED AND op='D'            → delete the row
 - WHEN MATCHED AND any column differs (null-safe) → update + audit 'U'
@@ -14,22 +17,39 @@ etl_operations.py:100-298, SURVEY.md J1/J2/P5):
   (handled upstream: LWW dedup keeps only the max-LSN event per key,
   reference fixup analogue etl_operations.py:300-316)
 
-Physical strategies (the part DBImport delegated to Hive/Iceberg and we own):
+Soft mode keeps deleted rows as tombstones (dl_iud='D' + dl_delete_ts,
+payload = the window's last live image, else the target's); a batch
+winner on a tombstone revives it. ``track_lsn`` tables stamp every
+touched row's dl_lsn and keep a delete of an absent key as a
+null-payload tombstone.
 
-- ``broadcast`` (steady-state CDC batches): the deduped batch is broadcast;
-  the target side is NEVER shuffled — scan only touched buckets, zero
-  target exchange, zero sort. Two streams over the pruned target buckets:
-  (a) target LEFT JOIN broadcast(batch) applies updates/deletes, (b) a
-  broadcast semi/anti pair computes inserts.
-- ``shuffle`` (initial loads / huge batches): bucket-aligned co-partitioned
-  join. Both sides carry a materialized ``_bucket`` column and are hash-
-  partitioned on it; the full-outer join runs on (_bucket, key), which the
-  existing HashPartitioning(_bucket) satisfies on both sides — so the join
-  itself adds NO exchange and the downstream ``partitionBy(_bucket)`` write
-  adds none either. Net data movement: exactly one shuffle of the batch +
-  one of the touched target buckets. Pair with
-  spark.sql.join.preferSortMergeJoin=false so Spark picks a shuffled-hash
-  join and skips both sorts (token arrays make sort spill expensive).
+Four shapes call the rule; each fixes what it knows up front as a plain
+bool, which the rule folds away, so every plan carries only its live
+terms:
+
+- ``broadcast`` (steady-state CDC batches, ``has_t`` = True for the
+  survivors): the deduped batch is broadcast; the target side is NEVER
+  shuffled — scan only touched buckets, zero target exchange, zero
+  sort. Two streams over the pruned target buckets: (a) target LEFT
+  JOIN broadcast(batch) applies updates/deletes, (b) a broadcast
+  semi/anti pair computes inserts (the insert-only shape).
+- ``shuffle`` (initial loads / huge batches, the general case):
+  bucket-aligned co-partitioned join. Both sides carry a materialized
+  ``_bucket`` column and are hash-partitioned on it; the full-outer
+  join runs on (_bucket, key), which the existing
+  HashPartitioning(_bucket) satisfies on both sides — so the join itself
+  adds NO exchange and the downstream ``partitionBy(_bucket)`` write
+  adds none either. Net data movement: exactly one shuffle of the batch
+  + one of the touched target buckets. Pair with
+  spark.sql.join.preferSortMergeJoin=false so Spark picks a
+  shuffled-hash join and skips both sorts (token arrays make sort spill
+  expensive). Spark cannot broadcast a full outer join, hence two CoW
+  shapes.
+- ``inserts_only`` (touched buckets without rows, ``has_t`` = False):
+  a projection of the batch, no join.
+- ``mor_outputs`` (merge-on-read): the batch against a narrow probe of
+  the touched buckets, which cannot compare payloads — every matched
+  upsert counts as changed (the one documented divergence from CoW).
 
 The null-safe per-column diff uses Spark's ``<=>`` (eqNullSafe), which is
 native on array columns — token-array change detection stays JVM-side,
@@ -37,6 +57,9 @@ no Python in the data path.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -49,13 +72,135 @@ from dbimport_spark.schema import (
     AUDIT_UPDATE,
 )
 
+# Predicates below are a Column or a plain bool: a shape that knows one up
+# front passes the bool, and these fold it away.
 
-def _changed_predicate(payload_cols: list[str]) -> Column:
+
+def _and(*ps: Column | bool) -> Column | bool:
+    if any(p is False for p in ps):
+        return False
+    cols = [p for p in ps if p is not True]
+    return reduce(operator.and_, cols) if cols else True
+
+
+def _or(*ps: Column | bool) -> Column | bool:
+    if any(p is True for p in ps):
+        return True
+    cols = [p for p in ps if p is not False]
+    return reduce(operator.or_, cols) if cols else False
+
+
+def _not(p: Column | bool) -> Column | bool:
+    return (not p) if isinstance(p, bool) else ~p
+
+
+def _case(branches: list, otherwise: Column | None) -> Column | None:
+    """CASE WHEN over ``(predicate, value)`` pairs; a None value is null."""
+    out = None
+    for cond, val in branches:
+        if cond is False:
+            continue
+        if cond is True:
+            otherwise = val
+            break
+        val = F.lit(None) if val is None else val
+        out = F.when(cond, val) if out is None else out.when(cond, val)
+    if out is None:
+        return otherwise
+    return out if otherwise is None else out.otherwise(otherwise)
+
+
+def _coalesce(*cols: Column | None) -> Column | None:
+    cols = [c for c in cols if c is not None]
+    return F.coalesce(*cols) if len(cols) > 1 else (cols[0] if cols else None)
+
+
+def _changed_predicate(payload_cols: list[str]) -> Column | bool:
     """OR-fold of null-safe inequality over every non-key column."""
-    pred = F.lit(False)
-    for c in payload_cols:
-        pred = pred | ~F.col(f"t.{c}").eqNullSafe(F.col(f"b.{c}"))
-    return pred
+    return _or(
+        *[~F.col(f"t.{c}").eqNullSafe(F.col(f"b.{c}")) for c in payload_cols]
+    )
+
+
+def _row_rule(
+    has_t: Column | bool,
+    has_b: Column | bool,
+    differs: Column | bool,
+    target,
+    out_keys: list[str],
+    non_key: list[str],
+    merge_ts: Column,
+    soft: bool,
+    track_lsn: bool,
+    lv: bool,
+) -> tuple[Column | bool, dict[str, Column]]:
+    """The merge's row rule: ``(keep, {column: expression})`` over one
+    joined row, the batch winner aliased ``b``.
+
+    ``has_t``/``has_b``: a target row / a batch winner exists;
+    ``differs``: a matched payload differs. ``target(c)`` is the row's
+    prior value of column ``c`` — the target's, a ``_pre_`` image — or
+    None when the shape has none. ``lv``: the batch carries the window's
+    last-live ``*_lv`` images (soft mode, built by the engine).
+    """
+
+    def b(c: str) -> Column:
+        return F.col(f"b.{c}")
+
+    is_del = _and(has_b, b("op") == "D")
+    tomb = target(AUDIT_DELETE)
+    revived = _and(soft, tomb.isNotNull()) if tomb is not None else False
+    # the row comes through as it was: no winner, or a live match that
+    # neither changes the payload nor revives a tombstone
+    same = _or(
+        _not(has_b),
+        _and(has_t, has_b, _not(is_del), _not(_or(differs, revived))),
+    )
+    kept_del = _and(soft, is_del)  # a delete that leaves a tombstone row
+    lv_hit = _and(lv, F.coalesce(b("_has_lv"), F.lit(False)))
+    # soft keeps a delete with a row to mark, and lands one of an absent
+    # key as a dead row when the window carried a live image — or always
+    # under track_lsn, as a null-payload tombstone: dropping it would
+    # erase the very dl_lsn a later late event must lose to (the
+    # absent-row ambiguity apply_late avoids)
+    keep = _or(_not(is_del), _and(soft, _or(has_t, track_lsn, lv_hit)))
+    # the key: the target's where every row has one, else either side's
+    cols = {
+        k: _coalesce(target(k), None if has_t is True else b(k)) for k in out_keys
+    }
+    for c in non_key:
+        dead = _coalesce(b(f"{c}_lv") if lv else None, target(c))
+        cols[c] = _case([(kept_del, dead), (same, target(c))], b(c))
+    cols[AUDIT_IUD] = _case(
+        [
+            (kept_del, F.lit("D")),
+            (same, target(AUDIT_IUD)),
+            (_not(has_t), F.lit("I")),
+        ],
+        F.lit("U"),
+    )
+    cols[AUDIT_INSERT] = _case([(_not(has_t), merge_ts)], target(AUDIT_INSERT))
+    # soft deletes bump dl_update_ts too: incremental export filters on
+    # it, so tombstones must be visible to it
+    cols[AUDIT_UPDATE] = _case([(same, target(AUDIT_UPDATE))], merge_ts)
+    if soft:
+        cols[AUDIT_DELETE] = _case(
+            [(kept_del, merge_ts), (same, tomb)], F.lit(None).cast("timestamp")
+        )
+    if track_lsn:
+        # every row a winner touched takes its lsn — INCLUDING a
+        # content-identical match (audit timestamps stay put there): a
+        # later-but-equal event must still win over an in-between late
+        # event on the version comparison
+        cols[AUDIT_LSN] = _case([(has_b, b("lsn"))], target(AUDIT_LSN))
+    return keep, cols
+
+
+def _project(
+    df: DataFrame, keep: Column | bool, cols: dict, *extra: Column
+) -> DataFrame:
+    df = df if keep is True else df.filter(keep)
+    return df.select(*[e.alias(c) for c, e in cols.items()], *extra)
 
 
 def normalize_batch(batch: DataFrame) -> DataFrame:
@@ -111,82 +256,28 @@ def merge_changes(
     (built by the engine): a 'D' winner then lands/updates its pre-image as
     a dead row, which makes the soft final state invariant under batching
     (an I followed by D in ONE window equals I in one window, D in the
-    next).
+    next). A target carrying dl_lsn (a ``track_lsn`` table) gets it
+    stamped on every row the batch touched.
     """
     soft = delete_mode == "soft"
-    has_lv = soft and "_has_lv" in batch.columns
-    # row-version mode is a TABLE property surfaced by the target carrying
-    # dl_lsn: every branch then stamps the batch event's lsn on every row
-    # it touched — INCLUDING content-identical matches (audit timestamps
-    # stay put there), because a later-but-equal event must still win over
-    # an in-between late event on the version comparison
     track_lsn = AUDIT_LSN in target.columns
     keys = [key] if isinstance(key, str) else list(key)
     non_key = [c for c in payload_cols if c not in keys]
+    out_keys = ([bucket_col] if bucket_col else []) + keys
     t = target.alias("t")
     b = normalize_batch(batch).alias("b")
 
-    def del_payload(c: str):
-        """Payload for a soft-deleted row: batch pre-image, else target."""
-        if has_lv:
-            return F.coalesce(F.col(f"b.{c}_lv"), F.col(f"t.{c}"))
-        return F.col(f"t.{c}")
+    def rule(has_t):
+        return _row_rule(
+            has_t=has_t, has_b=F.col("b.op").isNotNull(),
+            differs=_changed_predicate(non_key), target=lambda c: F.col(f"t.{c}"),
+            out_keys=out_keys, non_key=non_key, merge_ts=merge_ts, soft=soft,
+            track_lsn=track_lsn, lv=soft and "_has_lv" in batch.columns,
+        )
 
     if mode == "broadcast":
-        bb = F.broadcast(b)
-        key_cond = F.lit(True)
-        for k in keys:
-            key_cond = key_cond & (F.col(f"t.{k}") == F.col(f"b.{k}"))
-        joined = t.join(bb, key_cond, "left")
-        matched = F.col("b.op").isNotNull()
-        is_del = matched & (F.col("b.op") == "D")
-        revived = (
-            (matched & ~is_del & F.col(f"t.{AUDIT_DELETE}").isNotNull())
-            if soft
-            else F.lit(False)
-        )
-        changed = (matched & ~is_del & _changed_predicate(non_key)) | revived
-        out_cols = []
-        if bucket_col:
-            out_cols.append(F.col(f"t.{bucket_col}").alias(bucket_col))
-        audit_cols = [
-            F.when(is_del, F.lit("D"))
-            .when(changed, F.lit("U"))
-            .otherwise(F.col(f"t.{AUDIT_IUD}"))
-            .alias(AUDIT_IUD),
-            F.col(f"t.{AUDIT_INSERT}").alias(AUDIT_INSERT),
-            # soft deletes bump the update timestamp too: incremental export
-            # filters on dl_update_ts, so tombstones must be visible to it
-            F.when(is_del | changed, merge_ts)
-            .otherwise(F.col(f"t.{AUDIT_UPDATE}"))
-            .alias(AUDIT_UPDATE),
-        ]
-        if soft:
-            audit_cols.append(
-                F.when(is_del, merge_ts)
-                .when(matched, F.lit(None).cast("timestamp"))
-                .otherwise(F.col(f"t.{AUDIT_DELETE}"))
-                .alias(AUDIT_DELETE)
-            )
-        if track_lsn:
-            audit_cols.append(
-                F.when(matched, F.col("b.lsn"))
-                .otherwise(F.col(f"t.{AUDIT_LSN}"))
-                .alias(AUDIT_LSN)
-            )
-        survivors = joined if soft else joined.filter(~is_del)
-        survivors = survivors.select(
-            *out_cols,
-            *[F.col(f"t.{k}").alias(k) for k in keys],
-            *[
-                F.when(is_del, del_payload(c))
-                .when(changed, F.col(f"b.{c}"))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-                for c in non_key
-            ],
-            *audit_cols,
-        )
+        key_cond = _and(*[F.col(f"t.{k}") == F.col(f"b.{k}") for k in keys])
+        survivors = _project(t.join(F.broadcast(b), key_cond, "left"), *rule(True))
         # inserts: batch keys with no target row. The semi-join result is
         # bounded by the batch size, so both joins stay broadcast — the big
         # target side is streamed, never shuffled.
@@ -205,93 +296,11 @@ def merge_changes(
         return survivors.unionByName(inserts)
 
     if mode == "shuffle":
-        join_keys = ([bucket_col] if bucket_col else []) + keys
-        cond = F.lit(True)
-        for k in join_keys:
-            cond = cond & (F.col(f"t.{k}") == F.col(f"b.{k}"))
+        cond = _and(*[F.col(f"t.{k}") == F.col(f"b.{k}") for k in out_keys])
         # hash join (build = batch side), not sort-merge: with co-partitioned
         # inputs this is exchange-free AND sort-free
         joined = t.join(b.hint("shuffle_hash"), cond, "full_outer")
-        has_t = F.col(f"t.{AUDIT_IUD}").isNotNull()
-        has_b = F.col("b.op").isNotNull()
-        is_del = has_b & (F.col("b.op") == "D")
-        revived = (
-            (has_t & has_b & ~is_del & F.col(f"t.{AUDIT_DELETE}").isNotNull())
-            if soft
-            else F.lit(False)
-        )
-        changed = (has_t & has_b & ~is_del & _changed_predicate(non_key)) | revived
-        insert = ~has_t & has_b & ~is_del
-        take_b = changed | insert
-        out_cols = []
-        if bucket_col:
-            out_cols.append(
-                F.coalesce(F.col(f"t.{bucket_col}"), F.col(f"b.{bucket_col}")).alias(bucket_col)
-            )
-        # hard: drop matched deletes entirely; soft: keep matched deletes and
-        # not-matched deletes that carry a pre-image; drop only pre-image-
-        # less not-matched deletes (no row to mark) — EXCEPT in track_lsn
-        # mode, where they become null-payload tombstones: dropping them
-        # would erase the very version a later late event must lose to
-        # (the absent-row ambiguity apply_late exists to avoid).
-        if soft and track_lsn:
-            keep = F.lit(True)
-        elif soft and has_lv:
-            keep = ~(is_del & ~has_t & ~F.coalesce(F.col("b._has_lv"), F.lit(False)))
-        elif soft:
-            keep = ~(is_del & ~has_t)
-        else:
-            keep = ~is_del
-        if soft and track_lsn:
-            dead_insert = is_del & ~has_t
-        elif has_lv:
-            dead_insert = is_del & ~has_t & F.coalesce(
-                F.col("b._has_lv"), F.lit(False)
-            )
-        else:
-            dead_insert = F.lit(False)
-        audit_cols = [
-            F.when(insert, F.lit("I"))
-            .when(is_del & (has_t | dead_insert), F.lit("D"))
-            .when(changed, F.lit("U"))
-            .otherwise(F.col(f"t.{AUDIT_IUD}"))
-            .alias(AUDIT_IUD),
-            F.when(insert | dead_insert, merge_ts)
-            .otherwise(F.col(f"t.{AUDIT_INSERT}"))
-            .alias(AUDIT_INSERT),
-            # soft deletes bump dl_update_ts (incremental export visibility)
-            F.when(insert | changed | (is_del & has_t) | dead_insert, merge_ts)
-            .otherwise(F.col(f"t.{AUDIT_UPDATE}"))
-            .alias(AUDIT_UPDATE),
-        ]
-        if soft:
-            audit_cols.append(
-                F.when((is_del & has_t) | dead_insert, merge_ts)
-                .when(has_t & has_b, F.lit(None).cast("timestamp"))
-                .otherwise(F.col(f"t.{AUDIT_DELETE}"))
-                .alias(AUDIT_DELETE)
-            )
-        if track_lsn:
-            audit_cols.append(
-                F.when(has_b, F.col("b.lsn"))
-                .otherwise(F.col(f"t.{AUDIT_LSN}"))
-                .alias(AUDIT_LSN)
-            )
-        return joined.filter(keep).select(
-            *out_cols,
-            *[
-                F.coalesce(F.col(f"t.{k}"), F.col(f"b.{k}")).alias(k)
-                for k in keys
-            ],
-            *[
-                F.when(is_del, del_payload(c))
-                .when(take_b, F.col(f"b.{c}"))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-                for c in non_key
-            ],
-            *audit_cols,
-        )
+        return _project(joined, *rule(F.col(f"t.{AUDIT_IUD}").isNotNull()))
 
     raise ValueError(f"unknown merge mode: {mode}")
 
@@ -307,71 +316,16 @@ def inserts_only(
 ) -> DataFrame:
     """Insert projection (also the fast path when the touched buckets hold
     no target rows yet). In soft mode, a 'D' winner carrying a *_lv
-    pre-image is inserted as a dead row (dl_iud='D', dl_delete_ts set)."""
-    has_lv = soft and "_has_lv" in batch.columns
+    pre-image is inserted as a dead row (dl_iud='D', dl_delete_ts set);
+    under track_lsn one without lands as a null-payload tombstone."""
     keys = [key] if isinstance(key, str) else list(key)
-    non_key = [c for c in payload_cols if c not in keys]
-    out_cols = [F.col(bucket_col)] if bucket_col else []
-    is_del = F.col("op") == "D"
-    if has_lv:
-        # track_lsn keeps pre-image-less 'D' winners as null-payload
-        # tombstones (their dl_lsn is what gates later late events)
-        keep = (
-            F.lit(True)
-            if track_lsn
-            else (~is_del | F.coalesce(F.col("_has_lv"), F.lit(False)))
-        )
-        payload = [
-            F.when(is_del, F.col(f"{c}_lv")).otherwise(F.col(c)).alias(c)
-            for c in non_key
-        ]
-        audit_cols = [
-            F.when(is_del, F.lit("D")).otherwise(F.lit("I")).alias(AUDIT_IUD),
-            merge_ts.alias(AUDIT_INSERT),
-            merge_ts.alias(AUDIT_UPDATE),
-            F.when(is_del, merge_ts).cast("timestamp").alias(AUDIT_DELETE),
-        ]
-    elif soft and track_lsn:
-        # no *_lv columns, but track_lsn 'D' winners must STILL land as
-        # null-payload tombstones — merge_changes' shuffle branch keeps
-        # them unconditionally, and dropping them here (the old ~is_del)
-        # would erase the very dl_lsn a later late event has to lose to:
-        # the absent-row ambiguity apply_late exists to prevent, and a
-        # silent divergence between two modes documented as identical
-        keep = F.lit(True)
-        payload = [
-            F.when(is_del, F.lit(None)).otherwise(F.col(c))
-            .cast(batch.schema[c].dataType).alias(c)
-            for c in non_key
-        ]
-        audit_cols = [
-            F.when(is_del, F.lit("D")).otherwise(F.lit("I")).alias(AUDIT_IUD),
-            merge_ts.alias(AUDIT_INSERT),
-            merge_ts.alias(AUDIT_UPDATE),
-            F.when(is_del, merge_ts).cast("timestamp").alias(AUDIT_DELETE),
-        ]
-    else:
-        keep = ~is_del
-        payload = [F.col(c) for c in non_key]
-        audit_cols = [
-            F.lit("I").alias(AUDIT_IUD),
-            merge_ts.alias(AUDIT_INSERT),
-            merge_ts.alias(AUDIT_UPDATE),
-        ]
-        if soft:
-            audit_cols.append(F.lit(None).cast("timestamp").alias(AUDIT_DELETE))
-    if track_lsn:
-        audit_cols.append(F.col("lsn").alias(AUDIT_LSN))
-    return (
-        normalize_batch(batch)
-        .filter(keep)
-        .select(
-            *out_cols,
-            *keys,
-            *payload,
-            *audit_cols,
-        )
+    keep, cols = _row_rule(
+        has_t=False, has_b=True, differs=False, target=lambda c: None,
+        out_keys=([bucket_col] if bucket_col else []) + keys,
+        non_key=[c for c in payload_cols if c not in keys], merge_ts=merge_ts,
+        soft=soft, track_lsn=track_lsn, lv=soft and "_has_lv" in batch.columns,
     )
+    return _project(normalize_batch(batch).alias("b"), keep, cols)
 
 
 def mor_outputs(
@@ -389,20 +343,21 @@ def mor_outputs(
 
     ``batch`` is the LWW-deduped winner set (one row per key; lsn, op,
     payload, optional ``*_lv`` pre-images in soft mode). ``probe`` is the
-    NARROW current state of the batch's keys — keys + dl_insert_ts
-    (+ dl_delete_ts in soft mode), built from a column-pruned streamed
-    semi-join against the touched buckets, so this function never sees
-    (and the caller never pays for) the buckets' full payload. Both
-    inputs are batch-sized; every join here is small-against-small.
+    NARROW current state of the batch's keys — keys + dl_insert_ts,
+    built from a column-pruned streamed semi-join against the touched
+    buckets, so this function never sees (and the caller never pays for)
+    the buckets' full payload. Both inputs are batch-sized; every join
+    here is small-against-small.
 
-    Audit parity with ``merge_changes`` (the CoW path), with one
-    DOCUMENTED divergence: CoW's per-column change detection preserves
-    dl_iud/dl_update_ts when a matched row's content is identical — the
-    narrow probe cannot compare payload, so a matched upsert always
-    stamps 'U' + merge_ts. Final payload state is identical either way
-    (the change feed, which diffs payload only, emits nothing for a
-    same-value update in both modes); incremental exports may re-ship
-    such rows (consistent, merely less suppressed).
+    Audit parity with ``merge_changes`` (the CoW path) through the same
+    row rule, with one DOCUMENTED divergence: CoW's per-column change
+    detection preserves dl_iud/dl_update_ts when a matched row's content
+    is identical — the narrow probe cannot compare payload, so the rule
+    runs with every matched upsert counted as changed (stamped 'U' +
+    merge_ts). Final payload state is identical either way (the change
+    feed, which diffs payload only, emits nothing for a same-value update
+    in both modes); incremental exports may re-ship such rows
+    (consistent, merely less suppressed).
 
     Returns one frame, projected once from one join, whose ``_kind``
     column routes each row to its file kind in
@@ -410,86 +365,37 @@ def mor_outputs(
     ``'delete'`` rows (hard mode only, matched 'D' winners) are
     tombstones that keep the key and carry nulls in every other column.
     Soft-mode deletes are dead ROWS (pre-image + dl_delete_ts), so every
-    soft row is a delta, exactly like the CoW soft branch;
+    soft row is a delta, exactly as CoW keeps them;
     ``preimages`` supplies the base pre-image for 'D' winners whose
     window carried no live payload.
     """
     soft = delete_mode == "soft"
     keys = [key] if isinstance(key, str) else list(key)
     non_key = [c for c in payload_cols if c not in keys]
-    has_lv = soft and "_has_lv" in batch.columns
+    out_keys = ([bucket_col] if bucket_col else []) + keys
 
     b = normalize_batch(batch).alias("b")
     p = probe.withColumn("_probe_hit", F.lit(True)).alias("p")
     joined = b.join(p, keys, "left")
+    image = {AUDIT_INSERT: F.col(f"p.{AUDIT_INSERT}")}
     if preimages is not None:
         pre = preimages.select(
             *keys, *[F.col(c).alias(f"_pre_{c}") for c in non_key]
         )
         joined = joined.join(pre, keys, "left")
+        image.update({c: F.col(f"_pre_{c}") for c in non_key})
 
     matched = F.coalesce(F.col("_probe_hit"), F.lit(False))
-    is_del = F.col("b.op") == "D"
-
-    def del_payload(c: str):
-        src = (
-            F.coalesce(F.col(f"b.{c}_lv"), F.col(f"_pre_{c}"))
-            if preimages is not None and has_lv
-            else (
-                F.col(f"b.{c}_lv")
-                if has_lv
-                else (
-                    F.col(f"_pre_{c}")
-                    if preimages is not None
-                    else F.lit(None)
-                )
-            )
-        )
-        return src
-
-    out_cols = [F.col(f"b.{bucket_col}").alias(bucket_col)] if bucket_col else []
-    payload = [
-        F.when(is_del, del_payload(c)).otherwise(F.col(f"b.{c}")).alias(c)
-        for c in non_key
-    ]
-    audit = {
-        AUDIT_IUD: F.when(is_del, F.lit("D"))
-        .when(matched, F.lit("U"))
-        .otherwise(F.lit("I")),
-        AUDIT_INSERT: F.when(matched, F.col(f"p.{AUDIT_INSERT}")).otherwise(
-            merge_ts
-        ),
-        AUDIT_UPDATE: merge_ts,
-    }
-    if soft:
-        audit[AUDIT_DELETE] = (
-            F.when(is_del, merge_ts).otherwise(F.lit(None)).cast("timestamp")
-        )
-    if track_lsn:
-        audit[AUDIT_LSN] = F.col("b.lsn")
-
-    if soft:
-        # dead rows ride as deltas; drop only pre-image-less NOT-MATCHED
-        # deletes (no row to mark) — except in track_lsn mode, where they
-        # become null-payload tombstones (the version a later late event
-        # must lose to), mirroring the CoW shuffle branch
-        if track_lsn:
-            keep = F.lit(True)
-        elif has_lv:
-            keep = ~is_del | matched | F.coalesce(F.col("_has_lv"), F.lit(False))
-        else:
-            keep = ~is_del | matched
-        kind = F.lit("delta")
-    else:
-        # a delete row per MATCHED 'D' winner (an unmatched one has no row
-        # to hide); its audit columns are null like its payload
-        keep = ~is_del | matched
-        kind = F.when(is_del, F.lit("delete")).otherwise(F.lit("delta"))
-        audit = {c: F.when(~is_del, e) for c, e in audit.items()}
-    return joined.filter(keep).select(
-        *out_cols,
-        *[F.col(f"b.{k}").alias(k) for k in keys],
-        *payload,
-        *[e.alias(c) for c, e in audit.items()],
-        kind.alias("_kind"),
+    keep, cols = _row_rule(
+        has_t=matched, has_b=True, differs=True, target=image.get,
+        out_keys=out_keys, non_key=non_key, merge_ts=merge_ts, soft=soft,
+        track_lsn=track_lsn, lv=soft and "_has_lv" in batch.columns,
     )
+    if soft:
+        return _project(joined, keep, cols, F.lit("delta").alias("_kind"))
+    # hard: a delete row per MATCHED 'D' winner (an unmatched one has no
+    # row to hide), the key kept and every other column null
+    is_del = F.col("b.op") == "D"
+    cols = {c: e if c in out_keys else F.when(~is_del, e) for c, e in cols.items()}
+    kind = F.when(is_del, F.lit("delete")).otherwise(F.lit("delta"))
+    return _project(joined, _or(keep, matched), cols, kind.alias("_kind"))

@@ -791,8 +791,8 @@ class CDCEngine:
             F.count(F.lit(1)).alias("events"),
             F.min("lsn").alias("first_lsn"),
             F.max("lsn").alias("last_lsn"),
-            # delete-event presence, same pass: lets the MOR path skip the
-            # tombstone-file write job entirely on delete-free batches
+            # delete-event count, same pass: gates the soft-mode MoR
+            # pre-image fetch and feeds the validators' info
             F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("dels"),
         ]
         if has_commit_ts:
@@ -1224,10 +1224,9 @@ class CDCEngine:
         buckets a 1k-event batch rewrites terabytes. Here the only
         full-width data movement is the batch itself; the touched buckets
         (``current``) are scanned ONCE, COLUMN-PRUNED to (keys,
-        dl_insert_ts[, dl_delete_ts]) — a few percent of bucket bytes
-        under token-array payloads — to preserve insert-vs-update audit
-        parity, and never shuffled (broadcast semi-join, batch side
-        built). Read-time reconciliation + compaction
+        dl_insert_ts) — a few percent of bucket bytes under token-array
+        payloads — to preserve insert-vs-update audit parity, and never
+        shuffled (broadcast semi-join, batch side built). Read-time reconciliation + compaction
         (``lake.maintenance``) fold the deltas back into base
         asynchronously.
         """

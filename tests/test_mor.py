@@ -644,3 +644,92 @@ def test_mor_windows_leave_no_unreferenced_version_dirs(spark, tmp_path):
     dirs = set(os.listdir(os.path.join(table.root, "data")))
     assert dirs <= referenced, sorted(dirs - referenced)
     assert _state(spark, table) == _oracle_state(changes)
+
+
+# one row rule, every merge shape: broadcast, shuffle, insert-only and MoR
+# windows over the same hand-built events; (delete_mode, track_lsn) -> the
+# expected dl_iud per key after both windows ('-' = no row)
+_SHAPE_EXPECT = {
+    ("hard", False): "I U I - I I - U I - - - I",
+    ("soft", False): "I U I D U I - U I - D D I",
+    ("soft", True): "I U I D U I D U I D D D I",
+}
+
+
+def _shape_windows():
+    """Two windows of (op, key, token) events; window 1 meets an empty
+    table, so every engine applies it through the insert-only shape."""
+    w1 = [
+        ("I", "k01", 1), ("I", "k02", 2), ("I", "k03", 3), ("I", "k04", 4),
+        ("I", "k05", 5), ("D", "k05", None),    # insert then delete
+        ("D", "k06", None), ("I", "k06", 6),    # delete then re-insert
+        ("D", "k07", None),                     # delete of an absent key
+        ("I", "k08", 8), ("I", "k09", 9),
+        ("I", "k12", 12), ("D", "k12", None),   # a second soft tombstone
+    ]
+    w2 = [
+        ("U", "k01", 1),                        # same-value update
+        ("U", "k02", 22),                       # changed update
+        ("D", "k04", None),                     # delete of a live key
+        ("D", "k10", None),                     # delete of an absent key
+        ("I", "k11", 11), ("D", "k11", None),   # insert then delete
+        ("D", "k08", None), ("I", "k08", 88),   # delete then re-insert
+        ("U", "k05", 55),                       # update of a soft tombstone
+        ("D", "k12", None),                     # delete of a soft tombstone
+        ("D", "k07", None),                     # (a tombstone in track_lsn)
+        ("I", "k13", 13),
+    ]
+    return w1, w2
+
+
+@pytest.mark.parametrize(
+    "delete_mode,track_lsn", list(_SHAPE_EXPECT), ids=["hard", "soft", "soft_lsn"]
+)
+def test_merge_shapes_share_one_row_rule(spark, tmp_path, delete_mode, track_lsn):
+    """Broadcast and shuffle CoW give the same rows, audit columns
+    included; MoR differs from them only by the documented same-value
+    update divergence (dl_iud='U' and a re-stamped dl_update_ts)."""
+    import datetime as dt
+
+    from dbimport_spark.schema import CHANGE_SCHEMA
+
+    soft = delete_mode == "soft"
+    lsn, frames = 0, []
+    for w, events in enumerate(_shape_windows(), start=1):
+        ts = dt.datetime(2024, 1, w)
+        rows = []
+        for op, k, tok in events:
+            lsn += 1
+            toks = None if tok is None else [tok]
+            rows.append((lsn, op, k, toks, None if toks is None else 1,
+                         None if toks is None else "s", ts))
+        frames.append((lsn - len(rows), lsn, local_frame(spark, rows, CHANGE_SCHEMA)))
+
+    def run(name, **kw):
+        root = str(tmp_path / name)
+        table = CDCEngine.create_table(
+            root, num_buckets=2, soft_delete=soft, track_lsn=track_lsn
+        )
+        eng = CDCEngine(spark, table, **kw)
+        modes = [eng.apply_batch(f, lo, hi).mode for lo, hi, f in frames]
+        return modes, {r["doc_id"]: r.asDict() for r in table.read(spark).collect()}
+
+    b_modes, bcast = run("b")
+    s_modes, shuffle = run("s", broadcast_threshold_rows=0)
+    m_modes, mor = run("m", write_mode="mor")
+    assert (b_modes, s_modes, m_modes) == (
+        ["insert-only", "broadcast"], ["insert-only", "shuffle"],
+        ["insert-only", "mor"],
+    )
+    keys = [f"k{i:02d}" for i in range(1, 14)]
+    assert [bcast[k]["dl_iud"] if k in bcast else "-" for k in keys] == (
+        _SHAPE_EXPECT[(delete_mode, track_lsn)].split()
+    )
+    assert shuffle == bcast
+
+    # MoR stamps a same-value update like any matched upsert; nothing else
+    w2_ts = bcast["k02"]["dl_update_ts"]
+    assert bcast["k01"]["dl_update_ts"] != w2_ts
+    expected = {k: dict(r) for k, r in bcast.items()}
+    expected["k01"].update(dl_iud="U", dl_update_ts=w2_ts)
+    assert mor == expected

@@ -112,6 +112,75 @@ def test_bucket_plan_single_exchange_per_side(spark, tmp_path):
     assert plan.count("+- Sort ") == 0
 
 
+def _plan_nodes(plan: str):
+    """(depth, text) per operator line of a "simple" physical plan."""
+    body = plan.split("== Physical Plan ==", 1)[-1].strip().splitlines()
+    return [(len(l) - len(l.lstrip(" :|+-")), l.lstrip(" :|+-")) for l in body]
+
+
+def _streamed_below(nodes, i):
+    """Operator lines under node ``i`` whose rows stream up into it: the
+    subtree minus every BroadcastExchange subtree (a broadcast build is
+    collected to the driver, never shuffled)."""
+    depth, out, skip = nodes[i][0], [], None
+    for d, text in nodes[i + 1 :]:
+        if d <= depth:
+            break
+        if skip is not None and d > skip:
+            continue
+        skip = d if text.startswith("BroadcastExchange") else None
+        if skip is None:
+            out.append(text)
+    return out
+
+
+def test_mor_write_plan_reads_narrow_and_never_shuffles_target(
+    spark, tmp_path, monkeypatch
+):
+    """The frame a hard-mode merge-on-read apply hands to the writer scans
+    the touched buckets only for the narrow probe (keys + dl_insert_ts,
+    never the token arrays), and no table scan streams into a hash
+    exchange: the only hash exchanges sit in the batch's LWW dedup and
+    the batch-sized output repartition."""
+    from dbimport_spark.lake.table import LakeTable
+
+    log = generate_changes(spark, 2000, n_keys=100, seed=5)
+    table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=8)
+    eng = CDCEngine(spark, table, write_mode="mor")
+    eng.apply_batch(log.filter("lsn <= 1500"), 0, 1500)  # insert-only base
+
+    captured = []
+    write = LakeTable.write_data_files
+
+    def capture(self, spark, df, *args, **kwargs):
+        captured.append(df)
+        return write(self, spark, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "write_data_files", capture)
+    assert eng.apply_batch(log.filter("lsn > 1500"), 1500, 2000).mode == "mor"
+    assert len(captured) == 1
+
+    conf = "spark.sql.maxMetadataStringLength"  # keep scan locations whole
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "100000")
+    try:
+        nodes = _plan_nodes(explain_str(captured[0], "simple"))
+    finally:
+        spark.conf.set(conf, old)
+    scans = [t for _, t in nodes if t.startswith("FileScan")]
+    assert scans and all(f"file:{table.root}" in t for t in scans), scans
+    for t in scans:
+        assert "ReadSchema: struct<doc_id:string,dl_insert_ts:timestamp>" in t, t
+    exchanges = [
+        i for i, (_, t) in enumerate(nodes)
+        if t.startswith("Exchange hashpartitioning")
+    ]
+    assert exchanges
+    for i in exchanges:
+        below = _streamed_below(nodes, i)
+        assert not any(t.startswith("FileScan") for t in below), nodes[i][1]
+
+
 def test_codegen_on_hot_path(spark):
     log = generate_changes(spark, 1000, n_keys=50, seed=4)
     df = dedup_lww(log)

@@ -3,9 +3,12 @@
 Usage: python tools/capture_plans.py <outdir> [name ...]
 
 Writes <outdir>/<name>.txt for each captured plan. Names cover the bench
-queries plus the engine's internal merge/dedup dataflows (which never
-surface as a single DataFrame in bench.py, so they are reconstructed here
-exactly as engine._apply_batch builds them).
+queries, the change-feed and view-feed dataflows, and the four merge
+shapes as the frame a real ``CDCEngine.apply_batch`` hands to
+``LakeTable.write_data_files``: ``merge_insert_only`` (a window on an
+empty table), ``merge_broadcast`` (the default engine),
+``merge_shuffle`` (``broadcast_threshold_rows=0``) and ``merge_mor``
+(``write_mode="mor"``), one window each on one table.
 """
 
 from __future__ import annotations
@@ -104,6 +107,33 @@ def main() -> None:
         .groupBy("source")
         .agg(F.sum("_d_n").alias("_d_n"))
     )
+
+    # the four merge shapes: consecutive windows of the log on one table,
+    # each captured where apply_batch hands its frame to the writer
+    from dbimport_spark.lake.table import LakeTable
+
+    write = LakeTable.write_data_files
+    mt = CDCEngine.create_table(os.path.join(work, "m"), num_buckets=16)
+    for name, kw, lo, hi, mode in [
+        ("merge_insert_only", {}, 0, 60_000, "insert-only"),
+        ("merge_broadcast", {}, 60_000, 70_000, "broadcast"),
+        ("merge_shuffle", {"broadcast_threshold_rows": 0}, 70_000, 80_000, "shuffle"),
+        ("merge_mor", {"write_mode": "mor"}, 80_000, 90_000, "mor"),
+    ]:
+        frames = []
+
+        def capture(self, spark, df, *args, _frames=frames, **kwargs):
+            _frames.append(df)
+            return write(self, spark, df, *args, **kwargs)
+
+        LakeTable.write_data_files = capture
+        try:
+            window = changes.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
+            stats = CDCEngine(spark, mt, **kw).apply_batch(window, lo, hi)
+        finally:
+            LakeTable.write_data_files = write
+        assert stats.mode == mode and len(frames) == 1, (name, stats.mode)
+        plans[name] = frames[0]
 
     # operator queries from the entry (bench set)
     for name, fn in [
