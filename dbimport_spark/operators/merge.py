@@ -23,7 +23,7 @@ winner on a tombstone revives it. ``track_lsn`` tables stamp every
 touched row's dl_lsn and keep a delete of an absent key as a
 null-payload tombstone.
 
-Four shapes call the rule; each fixes what it knows up front as a plain
+Five shapes call the rule; each fixes what it knows up front as a plain
 bool, which the rule folds away, so every plan carries only its live
 terms:
 
@@ -50,6 +50,11 @@ terms:
 - ``mor_outputs`` (merge-on-read): the batch against a narrow probe of
   the touched buckets, which cannot compare payloads — every matched
   upsert counts as changed (the one documented divergence from CoW).
+- ``driver_merge`` (driver placement, the follower view's recompute): the
+  target rows and the batch are already collected, so the key join is a
+  dict on the driver and the rule runs as a projection over one local
+  frame, which Spark evaluates on the driver without a job; only the
+  write that follows is a Spark job.
 
 The null-safe per-column diff uses Spark's ``<=>`` (eqNullSafe), which is
 native on array columns — token-array change detection stays JVM-side,
@@ -61,8 +66,9 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbimport_spark.schema import (
     AUDIT_DELETE,
@@ -71,6 +77,7 @@ from dbimport_spark.schema import (
     AUDIT_LSN,
     AUDIT_UPDATE,
 )
+from dbimport_spark.session import local_frame
 
 # Predicates below are a Column or a plain bool: a shape that knows one up
 # front passes the bool, and these fold it away.
@@ -399,3 +406,58 @@ def mor_outputs(
     cols = {c: e if c in out_keys else F.when(~is_del, e) for c, e in cols.items()}
     kind = F.when(is_del, F.lit("delete")).otherwise(F.lit("delta"))
     return _project(joined, _or(keep, matched), cols, kind.alias("_kind"))
+
+
+def driver_merge(
+    spark: SparkSession,
+    target: list[tuple],
+    target_schema: T.StructType,
+    batch: list[tuple],
+    batch_schema: T.StructType,
+    key: str | list[str],
+    payload_cols: list[str],
+    merge_ts: Column,
+    delete_mode: str = "hard",
+    track_lsn: bool = False,
+) -> DataFrame:
+    """Driver-placed merge of collected rows: the new content of the
+    touched buckets, as ``merge_changes`` returns it.
+
+    ``target``: the touched buckets' rows; ``batch``: lsn, op and the
+    payload, already normalized (``normalize_batch``), at most one event
+    per key, so no LWW runs here. Both are tuples in their schema's field
+    order. The key join is a dict keyed by the key tuple; its pairs form
+    one local frame with struct columns ``t`` and ``b`` (null where that
+    side has no row), so the rule's ``t.c``/``b.c`` references resolve as
+    in the Spark shapes. No ``*_lv`` images: with one event per key a
+    delete winner never has a live image in its window. Without target
+    rows the rule folds as in ``inserts_only``.
+    """
+    keys = [key] if isinstance(key, str) else list(key)
+    non_key = [c for c in payload_cols if c not in keys]
+    t_idx = [target_schema.names.index(k) for k in keys]
+    b_idx = [batch_schema.names.index(k) for k in keys]
+    pairs = {tuple(r[i] for i in t_idx): [r, None] for r in target}
+    for r in batch:
+        k = tuple(r[i] for i in b_idx)
+        pair = pairs.setdefault(k, [None, None])
+        if pair[1] is not None:
+            raise ValueError(f"driver_merge: more than one event for key {k}")
+        pair[1] = r
+    # a side without a row is a null struct, so no field of it is required
+    joined = local_frame(spark, list(pairs.values()), T.StructType([
+        T.StructField(side, T.StructType([
+            T.StructField(f.name, f.dataType) for f in schema.fields
+        ]))
+        for side, schema in (("t", target_schema), ("b", batch_schema))
+    ]))
+    # no target rows: every pair is a batch row, the insert-only shape
+    keep, cols = _row_rule(
+        has_t=bool(target) and F.col("t").isNotNull(),
+        has_b=not target or F.col("b").isNotNull(),
+        differs=_changed_predicate(non_key),
+        target=lambda c: F.col(f"t.{c}") if target else None,
+        out_keys=keys, non_key=non_key, merge_ts=merge_ts,
+        soft=delete_mode == "soft", track_lsn=track_lsn, lv=False,
+    )
+    return _project(joined, keep, cols)

@@ -32,7 +32,12 @@ from dbimport_spark.lake.evolve import (
 )
 from dbimport_spark.lake.table import CommitConflict, LakeTable
 from dbimport_spark.operators.dedup import dedup_lww
-from dbimport_spark.operators.merge import inserts_only, merge_changes
+from dbimport_spark.operators.merge import (
+    driver_merge,
+    inserts_only,
+    merge_changes,
+    normalize_batch,
+)
 from dbimport_spark.plans.checkpoint import ReplayPlan, load_plan, save_plan
 from dbimport_spark.schema import (
     AUDIT_COLUMNS,
@@ -43,6 +48,7 @@ from dbimport_spark.schema import (
     MERGE_KEY,
     PAYLOAD_SCHEMA,
 )
+from dbimport_spark.session import collect_local, local_frame
 from dbimport_spark.sources.changelog import check_log_gap
 
 LOG_BOOKKEEPING = {"lsn", "op", "commit_ts"}
@@ -678,7 +684,10 @@ class CDCEngine:
         ``rescanned_groups``) BEFORE the stats-sink emit — setting them
         on the returned object would be too late for telemetry.
         """
-        bs = self._apply_batch(batch, lo, hi)
+        return self._report(self._apply_batch(batch, lo, hi), stats_extra)
+
+    def _report(self, bs: BatchStats, stats_extra: dict | None) -> BatchStats:
+        """A window's stats, with the caller's ``stats_extra``, to the sink."""
         for k, v in (stats_extra or {}).items():
             setattr(bs, k, v)
         self._emit_stats("apply_batch", bs)
@@ -727,24 +736,7 @@ class CDCEngine:
             return BatchStats(lo=lo, hi=hi, skipped=True)
 
         # -- schema evolution: adds + type widenings (metadata-only) --------
-        from dbimport_spark.schema import AUDIT_SOURCE as _AUD_SRC
-
-        # a mixed log (mergeSchema read spanning a DECLARED rename) also
-        # carries the former column names — they are sourced via coalesce
-        # in alignment, never evolution adds. Only declared formers are
-        # excluded: an undeclared column matching a historical former name
-        # still reaches the diff and the epoch-collision commit guard, the
-        # designed loud refusal for that ambiguity.
-        former_cols = {
-            n for f in snap.schema.fields for n in self._former_names(f.name)
-        }
-        delta = diff_payload_schema(
-            snap.schema, batch.schema, ignore=LOG_BOOKKEEPING | former_cols,
-            check_renames=self.rename_check,
-            engine_cols=(
-                {_AUD_SRC} if snap.properties.get("source_label") else None
-            ),
-        )
+        delta = self._schema_delta(snap, batch.schema)
         # bucket placement is pmod(xxhash64(key), N) and xxhash64 is
         # type-sensitive (xxhash64(7 as int) != xxhash64(7 as bigint)):
         # a metadata-only widen of a merge/bucket key would compute touched
@@ -863,17 +855,7 @@ class CDCEngine:
             batch = batch.filter(bad_reason.isNull())
 
         if not per_bucket:
-            # empty window: still advance the watermark (atomic, no files)
-            self.table.commit(
-                [],
-                set(),
-                properties={"last_lsn": str(hi)},
-                lineage=quarantined or None,
-                expected_version=snap.version,
-            )
-            return BatchStats(
-                lo=lo, hi=hi, events=0, mode="empty", quarantined=n_bad
-            )
+            return self._commit_empty(snap, lo, hi, quarantined)
 
         touched = sorted(r["bucket"] for r in per_bucket)
         n_events = sum(r["events"] for r in per_bucket)
@@ -929,20 +911,75 @@ class CDCEngine:
             staged = [f"s{snap.version + 1}-{uuid.uuid4().hex[:8]}"]
             new_files = self.table.write_data_files(self.spark, out, staged[0])
 
+        return self._publish_window(
+            snap,
+            BatchStats(
+                lo=lo, hi=hi, events=n_events, touched_buckets=len(touched),
+                mode=mode, quarantined=n_bad,
+            ),
+            per_bucket, n_dels, touched_rows, new_files, staged,
+            (deduped, target, payload_cols), merge_ts_val,
+            replaced=set() if use_mor else touched_set,
+            schema=new_schema, evolved=bool(delta), quarantined=quarantined,
+        )
+
+    def _schema_delta(self, snap, batch_schema: T.StructType):
+        """The evolution (adds, widenings, comments) a batch of
+        ``batch_schema`` demands from the snapshot's schema."""
+        from dbimport_spark.schema import AUDIT_SOURCE
+
+        # a mixed log (mergeSchema read spanning a DECLARED rename) also
+        # carries the former column names — they are sourced via coalesce
+        # in alignment, never evolution adds. Only declared formers are
+        # excluded: an undeclared column matching a historical former name
+        # still reaches the diff and the epoch-collision commit guard, the
+        # designed loud refusal for that ambiguity.
+        former_cols = {
+            n for f in snap.schema.fields for n in self._former_names(f.name)
+        }
+        return diff_payload_schema(
+            snap.schema, batch_schema, ignore=LOG_BOOKKEEPING | former_cols,
+            check_renames=self.rename_check,
+            engine_cols=(
+                {AUDIT_SOURCE} if snap.properties.get("source_label") else None
+            ),
+        )
+
+    def _commit_empty(self, snap, lo: int, hi: int, quarantined: list) -> BatchStats:
+        """An empty window still advances the watermark (atomic, no files)."""
+        self.table.commit(
+            [],
+            set(),
+            properties={"last_lsn": str(hi)},
+            lineage=quarantined or None,
+            expected_version=snap.version,
+        )
+        n_bad = sum(r["quarantined"] for r in quarantined)
+        return BatchStats(lo=lo, hi=hi, events=0, mode="empty", quarantined=n_bad)
+
+    def _publish_window(
+        self, snap, bs: BatchStats, per_bucket, n_dels: int, prev_rows: int,
+        new_files: list, staged: list[str], hist: tuple, merge_ts_val,
+        replaced: set[int], schema: T.StructType, evolved: bool = False,
+        quarantined: list | None = None,
+    ) -> BatchStats:
+        """The tail of every window write (``apply_batch`` and the driver
+        apply): the validators over the staged files, the per-bucket
+        lineage from the written files (``per_bucket``: bucket, first_lsn,
+        last_lsn, events), then ``_commit_tail``. ``schema`` is the
+        window's table schema, published when ``evolved``."""
         self._run_validators(
-            [f for f in new_files if f.kind != "delete"], snap, new_schema,
+            [f for f in new_files if f.kind != "delete"], snap, schema,
             {
-                "lo": lo, "hi": hi, "mode": mode, "events": n_events,
+                "lo": bs.lo, "hi": bs.hi, "mode": bs.mode, "events": bs.events,
                 "deletes": n_dels,
-                "touched_buckets": len(touched),
+                "touched_buckets": bs.touched_buckets,
                 "out_rows": sum(f.rows for f in new_files),
                 "out_bytes": sum(f.bytes for f in new_files),
-                "prev_rows": touched_rows,
+                "prev_rows": prev_rows,
             },
             staged,
         )
-
-        # -- per-bucket lineage from the written files ----------------------
         out_by_bucket: dict[int, list[int]] = {}
         for fl in new_files:
             rows, nbytes = out_by_bucket.get(fl.bucket, [0, 0])
@@ -959,27 +996,22 @@ class CDCEngine:
             for r in per_bucket
         ]
         return self._commit_tail(
-            snap,
-            BatchStats(
-                lo=lo, hi=hi, events=n_events, touched_buckets=len(touched),
-                mode=mode, quarantined=n_bad,
-            ),
-            new_files,
-            staged,
-            (deduped, target, payload_cols),
-            merge_ts_val,
-            replaced=set() if use_mor else touched_set,
-            lineage=lineage + quarantined,
-            new_schema=new_schema if delta else None,
+            snap, bs, new_files, staged, hist, merge_ts_val, replaced=replaced,
+            lineage=lineage + (quarantined or []),
+            new_schema=schema if evolved else None,
         )
 
-    def _read_target(self, touched: list[int], schema: T.StructType) -> DataFrame:
-        """Bucket-pruned read of the touched buckets' current rows, aligned
-        to ``schema``: added columns null, widened columns cast up (old
-        files are also readable directly through the widened schema —
-        SPARK-40876 — but this read predates the schema commit, so cast
-        explicitly). Every write path merges into this frame."""
-        target = self.table.read(self.spark, buckets=touched)
+    def _read_target(
+        self, touched: list[int] | None, schema: T.StructType,
+        version: int | None = None,
+    ) -> DataFrame:
+        """Bucket-pruned read of the touched buckets' rows (None: every
+        bucket) at ``version`` (None: current), aligned to ``schema``:
+        added columns null, widened columns cast up (old files are also
+        readable directly through the widened schema — SPARK-40876 — but
+        this read predates the schema commit, so cast explicitly). Every
+        write path merges into this frame."""
+        target = self.table.read(self.spark, buckets=touched, version=version)
         tcols = set(target.columns)
         return target.select(
             *[
@@ -990,6 +1022,111 @@ class CDCEngine:
                 )
                 for f in schema.fields
             ]
+        )
+
+    def _collect_target(self, snap):
+        """Every row of the table at ``snap`` with its ``_bucket``, as one
+        Arrow table from one action: the merge target ``_apply_on_driver``
+        takes, which its caller may read too (the view's diff)."""
+        bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
+        return (
+            self._read_target(None, snap.schema, snap.version)
+            .withColumn("_bucket", bexpr)
+            .toArrow()
+        )
+
+    def _apply_on_driver(
+        self, snap, target, events: DataFrame, lo: int, hi: int,
+        stats_extra: dict | None = None,
+    ) -> BatchStats:
+        """``apply_batch`` for a small window whose merge runs on the
+        driver: the same copy-on-write commit of the touched buckets, and
+        one Spark job (the write) instead of the merge's plan.
+
+        ``snap`` and ``target`` come from ``_collect_target``, collected
+        once by the caller; ``events`` is a ``local_frame`` of lsn, op and
+        payload holding at most one event per key (no LWW runs). Every
+        per-row rule is evaluated as a projection over a local frame,
+        which Spark runs on the driver without a job: alignment (masks and
+        casts included), ``normalize_batch``, the malformed-event
+        predicate, bucket assignment and the merge's row rule
+        (``operators.merge.driver_merge``). Python adds only the rule's key
+        join and the per-bucket lineage counts. The write is
+        ``write_data_files`` in one task (one file per touched bucket);
+        validators, history append, commit and stats emit are
+        ``apply_batch``'s, and an empty batch commits the watermark alone.
+        A ``write_mode='mor'`` engine gets the same rewrite of its touched
+        buckets here, folding their delta files away.
+
+        A batch the Spark path owns goes to ``apply_batch`` as it is: one
+        with a malformed event (it refuses or parks it) or one that evolves
+        the table's schema (a widened source column under a view's min/max).
+        """
+        return self._report(
+            self._driver_window(snap, target, events, lo, hi), stats_extra
+        )
+
+    def _driver_window(
+        self, snap, target, events: DataFrame, lo: int, hi: int
+    ) -> BatchStats:
+        if int(snap.properties.get("last_lsn", "-1")) >= hi:
+            return BatchStats(lo=lo, hi=hi, skipped=True)
+        if self._schema_delta(snap, events.schema):
+            return self._apply_batch(events, lo, hi)
+        aligned = normalize_batch(self._aligned(events, snap))
+        bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
+        rows = collect_local(aligned.select(
+            "*", bexpr.alias("_bucket"), self._bad_event_reason().alias("_bad")
+        ))
+        if any(r[-1] is not None for r in rows):
+            return self._apply_batch(events, lo, hi)
+        if not rows:
+            return self._commit_empty(snap, lo, hi, [])
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        # per-bucket lineage counts (the Spark path's stats agg)
+        per_bucket: dict[int, dict] = {}
+        for lsn, *_, bucket, _bad in rows:
+            r = per_bucket.setdefault(
+                bucket, {"bucket": bucket, "events": 0, "first_lsn": lsn, "last_lsn": lsn}
+            )
+            r["events"] += 1
+            r["first_lsn"] = min(r["first_lsn"], lsn)
+            r["last_lsn"] = max(r["last_lsn"], lsn)
+        touched = set(per_bucket)
+        buckets = target["_bucket"]
+        in_touched = pc.is_in(buckets, pa.array(sorted(touched), buckets.type))
+        t_rows = list(zip(*(c.to_pylist() for c in target.filter(in_touched).columns)))
+        t_schema = T.StructType(
+            [*snap.schema.fields, T.StructField("_bucket", T.IntegerType())]
+        )
+        payload_cols = [f.name for f in snap.schema.fields if f.name not in AUDIT_COLUMNS]
+        merge_ts_val = self._monotonic_merge_ts(snap)
+        out = driver_merge(
+            self.spark, t_rows, t_schema, [r[:-2] for r in rows], aligned.schema,
+            self.keys, payload_cols, F.lit(merge_ts_val), self.delete_mode,
+            self.track_lsn,
+        )
+        staged = [f"s{snap.version + 1}-{uuid.uuid4().hex[:8]}"]
+        new_files = self.table.write_data_files(
+            self.spark, out.withColumn("_bucket", bexpr).coalesce(1), staged[0]
+        )
+        hist_target = (
+            local_frame(self.spark, t_rows, t_schema)
+            if self.history_table is not None else None
+        )
+        return self._publish_window(
+            snap,
+            BatchStats(
+                lo=lo, hi=hi, events=len(rows), touched_buckets=len(touched),
+                mode="driver",
+            ),
+            per_bucket.values(), sum(r[1] == "D" for r in rows),
+            sum(f.rows for f in snap.files if f.bucket in touched), new_files,
+            staged, (aligned, hist_target, payload_cols), merge_ts_val,
+            replaced=touched, schema=snap.schema,
         )
 
     def _merge_step(

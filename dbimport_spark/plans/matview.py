@@ -46,13 +46,21 @@ view's rows and a bound on its groups after the window, min(source rows,
 view rows + rows of the window's new files), are both within the view
 engine's ``broadcast_threshold_rows``. A column-pruned groupBy of the
 source and the view's rows are then collected and diffed on the driver,
-and only new, changed and vanished groups reach the engine's merge. (A
-copy-on-write window's new files are whole buckets: a window touching
+and only new, changed and vanished groups reach the view's merge, which
+runs on the driver too (``CDCEngine._apply_on_driver``): the collected
+view rows are its target, every per-row rule is a projection Spark
+evaluates on the driver, and the view's write is one Spark job. A sync
+over a merge-on-read source with one delta commit runs 5 jobs: 3 for the
+groupBy's collect over the reconciled source, 1 for the view read, 1 for
+the write; each further uncompacted delta commit of the source adds one.
+(A copy-on-write window's new files are whole buckets: a window touching
 every bucket recomputes only a source within that limit.) Otherwise it
 folds INCREMENTALLY: a groupBy of the delta, a left join against the
-touched groups' current totals, the engine's bucket-pruned merge; only
-min/max-invalidated groups read the base table. The ``on_gap='full'``
-rebuild always recomputes, diffing in Spark when over the limit.
+touched groups' current totals, the engine's bucket-pruned merge in
+Spark; only min/max-invalidated groups read the base table. The
+``on_gap='full'`` rebuild always recomputes, diffing and merging in Spark
+when over the limit. Each sync logs one INFO line with the choice, its
+inputs, where the view merge ran and the view buckets it touched.
 """
 
 from __future__ import annotations
@@ -531,27 +539,33 @@ def _sync_view_impl(
         group_bound = min(src_rows, view_rows + new_rows)
         fits = max(group_bound, view_rows) <= limit  # the driver holds both
         recompute = fits and 0 < diff_bytes and src_bytes <= diff_bytes
+        if recompute:
+            bs = _recompute_view(spark, source, view_engine, spec, from_v, to_v)
+        else:
+            # compare_cols scopes update detection to the view's own
+            # columns: a source row whose group/sum/min/max columns are
+            # ALL unchanged contributes exactly zero to every aggregate,
+            # and Catalyst prunes the wide payload columns from both
+            # diff-join sides
+            feed = table_changes(
+                spark, source, from_v, to_v, include_preimage=True,
+                compare_cols=compare_scope(
+                    snap_to, [*spec.group_cols, *spec.sum_cols, *spec.minmax_cols()]
+                ),
+            )
+            bs = apply_feed_to_view(
+                spark, source, view_engine, spec, feed, from_v, to_v
+            )
         _log().info(
             "sync_view window (%d, %d]: %s — diff read set %d B vs source "
-            "%d B, view group bound %d, view rows %d (driver fold limit %d)",
+            "%d B, view group bound %d, view rows %d (driver fold limit %d); "
+            "view merge %s, %d view bucket(s) touched",
             from_v, to_v, "recompute" if recompute else "incremental",
             diff_bytes, src_bytes, group_bound, view_rows, limit,
+            "on the driver" if recompute else "in Spark",
+            bs.touched_buckets,
         )
-        if recompute:
-            return _recompute_view(spark, source, view_engine, spec, from_v, to_v)
-        # compare_cols scopes update detection to the view's own columns:
-        # a source row whose group/sum/min/max columns are ALL unchanged
-        # contributes exactly zero to every aggregate, and Catalyst prunes
-        # the wide payload columns from both diff-join sides
-        feed = table_changes(
-            spark, source, from_v, to_v, include_preimage=True,
-            compare_cols=compare_scope(
-                snap_to, [*spec.group_cols, *spec.sum_cols, *spec.minmax_cols()]
-            ),
-        )
-        return apply_feed_to_view(
-            spark, source, view_engine, spec, feed, from_v, to_v
-        )
+        return bs
 
     on_driver = max(src_rows, view_rows) <= limit
     # no-silent-caps: the rebuild scans the whole source once — report
@@ -576,36 +590,23 @@ def _recompute_view(
     on_driver: bool = True,
 ) -> BatchStats:
     """Fold the window by recomputing: one groupBy of the source's live
-    rows at ``to_v``, diffed against the view's rows — collected to the
-    driver (``on_driver``; callers bound both sides) or by a full outer
-    join in Spark. Only new or changed (``U``) and vanished (``D``) groups
-    reach the exactly-once ``apply_batch``; an unchanged view commits the
-    watermark alone. ``rescanned_groups`` = the groups recomputed."""
-    fresh = _aggregate(
-        _source_live(spark, source, version=to_v),
-        spec, view_engine.table.current().schema,
-    )
-    cur = view_engine.table.read(spark)
-    if AUDIT_DELETE in cur.columns:
-        cur = cur.filter(F.col(AUDIT_DELETE).isNull())
-    cur = cur.select(*spec.view_cols())
-    ng = len(spec.group_cols)
-    if on_driver:
-        def rows(df: DataFrame) -> list[tuple]:
-            return list(zip(*(c.to_pylist() for c in df.toArrow().columns)))
+    rows at ``to_v``, diffed against the view's rows. Only new or changed
+    (``U``) and vanished (``D``) groups reach the view's merge; an
+    unchanged view commits the watermark alone. ``rescanned_groups`` = the
+    groups recomputed.
 
-        groups = rows(fresh)
-        stale = {r[:ng]: r for r in rows(cur)}
-        n_groups = len(groups)
-        # pop: what is left in ``stale`` afterwards has vanished
-        events = [(to_v, "U", *r) for r in groups if stale.pop(r[:ng], None) != r]
-        events += [(to_v, "D", *k, *[None] * (len(fresh.columns) - ng)) for k in stale]
-        # D events carry nulls in every value column: all fields nullable
-        events = local_frame(spark, events, T.StructType(
-            [T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType())]
-            + [T.StructField(f.name, f.dataType) for f in fresh.schema.fields]
-        ))
-    else:
+    ``on_driver`` (callers bound both sides): the groupBy and the view's
+    rows are collected, diffed on the driver, and merged there too
+    (``CDCEngine._apply_on_driver``, which reuses the collected rows as its
+    target); the view's write is the merge's only Spark job. Otherwise a
+    full outer join in Spark diffs them and ``apply_batch`` merges."""
+    snap = view_engine.table.current()
+    fresh = _aggregate(_source_live(spark, source, version=to_v), spec, snap.schema)
+    ng = len(spec.group_cols)
+    if not on_driver:
+        cur = view_engine.table.read(spark)
+        if AUDIT_DELETE in cur.columns:
+            cur = cur.filter(F.col(AUDIT_DELETE).isNull())
         vals = spec.view_cols()[ng:]
         fresh = fresh.localCheckpoint(eager=True)  # joined and counted
         n_groups = fresh.count()
@@ -623,8 +624,32 @@ def _recompute_view(
             )
             .localCheckpoint(eager=False)  # the engine reads it twice
         )
-    return view_engine.apply_batch(
-        events, from_v, to_v, stats_extra={"rescanned_groups": n_groups}
+        return view_engine.apply_batch(
+            events, from_v, to_v, stats_extra={"rescanned_groups": n_groups}
+        )
+
+    import pyarrow.compute as pc
+
+    def rows(tbl) -> list[tuple]:
+        return list(zip(*(c.to_pylist() for c in tbl.columns)))
+
+    target = view_engine._collect_target(snap)
+    live = target
+    if AUDIT_DELETE in target.column_names:
+        live = target.filter(pc.is_null(target[AUDIT_DELETE]))
+    stale = {r[:ng]: r for r in rows(live.select(spec.view_cols()))}
+    groups = rows(fresh.toArrow())
+    # pop: what is left in ``stale`` afterwards has vanished
+    events = [(to_v, "U", *r) for r in groups if stale.pop(r[:ng], None) != r]
+    events += [(to_v, "D", *k, *[None] * (len(fresh.columns) - ng)) for k in stale]
+    # D events carry nulls in every value column: all fields nullable
+    events = local_frame(spark, events, T.StructType(
+        [T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType())]
+        + [T.StructField(f.name, f.dataType) for f in fresh.schema.fields]
+    ))
+    return view_engine._apply_on_driver(
+        snap, target, events, from_v, to_v,
+        stats_extra={"rescanned_groups": len(groups)},
     )
 
 

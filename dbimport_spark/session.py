@@ -122,3 +122,30 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
             vals = [conv(v, f.dataType) for v in vals]
         cols.append(pa.array(vals, type=arrow.field(i).type))
     return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
+def collect_local(df: DataFrame) -> list[tuple]:
+    """The rows of a frame over a ``local_frame`` (projections and filters
+    of one) as tuples that ``local_frame`` reads back unchanged.
+
+    Spark folds such a plan into a local relation on the driver, so its
+    ``collect()`` runs no Spark job. ``collect()`` hands timestamps back as
+    naive local-time datetimes, which ``local_frame`` would read as UTC;
+    here they come back time-zone aware.
+    """
+
+    def aware(v, dt: T.DataType):
+        if v is None:
+            return None
+        if isinstance(dt, T.TimestampType):
+            return v.astimezone(timezone.utc)
+        if isinstance(dt, T.ArrayType):
+            return [aware(x, dt.elementType) for x in v]
+        if isinstance(dt, T.StructType):
+            return tuple(aware(x, f.dataType) for f, x in zip(dt.fields, v))
+        if isinstance(dt, T.MapType):
+            return {aware(k, dt.keyType): aware(x, dt.valueType) for k, x in v.items()}
+        return v
+
+    types = [f.dataType for f in df.schema.fields]
+    return [tuple(aware(v, dt) for v, dt in zip(r, types)) for r in df.collect()]

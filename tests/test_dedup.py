@@ -94,7 +94,7 @@ def test_one_per_doc_width_and_deterministic_survivor(spark):
     from dbimport_spark.operators.text_dedup import _one_per_doc, word_shingles
 
     rows = [("d1", "alpha beta gamma"), ("d1", "zzz yyy xxx"), ("d2", "one two three")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    df = local_frame(spark, rows, "doc_id string, text string")
 
     out = _one_per_doc(df, "doc_id", num_partitions=7)
     assert out.rdd.getNumPartitions() == 7
@@ -102,7 +102,7 @@ def test_one_per_doc_width_and_deterministic_survivor(spark):
     # max-struct survivor: 'zzz yyy xxx' > 'alpha beta gamma'
     assert got == {"d1": "zzz yyy xxx", "d2": "one two three"}
     # stable across repeated evaluation and input order
-    df_rev = spark.createDataFrame(list(reversed(rows)), ["doc_id", "text"])
+    df_rev = local_frame(spark, list(reversed(rows)), "doc_id string, text string")
     got2 = {r["doc_id"]: r["text"] for r in _one_per_doc(df_rev, "doc_id").collect()}
     assert got2 == got
 
@@ -135,14 +135,14 @@ def test_one_per_doc_nested_map_deterministic_survivor(spark):
         ("d1", "HELLO WORLD", [{"k": "w"}]),  # contract violation: same id
         ("d2", "bye", None),
     ]
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
     out = _one_per_doc(df, "doc_id", num_partitions=3)
     assert out.count() == 2
     assert out.rdd.getNumPartitions() == 3
     survivor = {r["doc_id"]: (r["text"], r["attrs"]) for r in out.collect()}
 
     # stable across re-runs AND input row order
-    df_rev = spark.createDataFrame(list(reversed(rows)), schema).repartition(5)
+    df_rev = local_frame(spark, list(reversed(rows)), schema).repartition(5)
     for attempt_df in (df, df_rev):
         again = {
             r["doc_id"]: (r["text"], r["attrs"])

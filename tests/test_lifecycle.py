@@ -75,7 +75,8 @@ def test_full_lifecycle(spark, tmp_path):
     # 4. a window is lost (lsn 5), later one applied; repair recovers the
     # lost key from the full log — across the rename (old segments carry
     # the former name via a mergeSchema-style mixed frame)
-    b5 = spark.createDataFrame(
+    b5 = local_frame(
+        spark,
         [
             (
                 6,
@@ -104,7 +105,8 @@ def test_full_lifecycle(spark, tmp_path):
     eng.apply_batch(b5, 5, 6)  # lsn-5 window silently skipped upstream
     assert table.last_lsn() == 6
 
-    lost = spark.createDataFrame(
+    lost = local_frame(
+        spark,
         [
             (
                 5,

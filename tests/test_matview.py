@@ -755,3 +755,188 @@ def test_merge_key_only_view_syncs_incrementally(spark, tmp_path):
     assert ": incremental —" in msg and not bs.skipped
     assert {r["doc_id"] for r in view.table.read(spark).collect()} == {"k1", "k3"}
     assert verify_view(spark, src_t, view.table, spec)["converged"]
+
+
+# ---- driver placement: the recompute's merge on the driver ------------------
+
+
+def _stamped(table, spark):
+    """The view's rows, each audit stamp mapped to the source version of
+    the sync whose commit first carried it as ``last_merge_ts``."""
+    stamp = {}
+    for v in table.snapshots():
+        props = table.snapshot_properties(v)
+        if "last_merge_ts" in props:
+            ts = dt.datetime.fromisoformat(props["last_merge_ts"])
+            stamp.setdefault(ts, int(props["last_lsn"]))
+    return sorted(
+        tuple(
+            stamp[v] if c in ("dl_insert_ts", "dl_update_ts") else v
+            for c, v in r.asDict().items()
+        )
+        for r in table.read(spark).collect()
+    )
+
+
+def _new_file_schemas(table, before: int):
+    """(bucket, parquet schema) of every file the commits after version
+    ``before`` added."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    old = {f.path for f in table.snapshot(before).files}
+    return sorted(
+        (f.bucket, str(pq.read_schema(os.path.join(table.root, f.path))))
+        for f in table.current().files if f.path not in old
+    )
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_driver_merge_equals_spark_merge(spark, tmp_path, mode):
+    """The recompute's driver-placed merge writes what its Spark merge
+    writes: after every window of the seeded sequence, equal rows and
+    ``dl_iud``, audit stamps from the same sync, files in the same buckets
+    with the same parquet schema (nullability included). A source row with
+    a null group value is refused with the same error on both sides and,
+    with a quarantine, parked as the same rows."""
+    import glob
+
+    from dbimport_spark.plans.matview import _recompute_view
+
+    src_t = CDCEngine.create_table(str(tmp_path / "src"), num_buckets=4)
+    src = CDCEngine(spark, src_t, write_mode=mode)
+    drv, sp = (
+        CDCEngine(spark, create_view(str(tmp_path / n), src_t, MM_SPEC, 4))
+        for n in ("drv", "sp")
+    )
+
+    def sync(view, on_driver):
+        before = view.table.current().version
+        bs = _recompute_view(
+            spark, src_t, view, MM_SPEC, max(view.table.last_lsn(), 0),
+            src_t.current().version, on_driver=on_driver,
+        )
+        return bs, _new_file_schemas(view.table, before)
+
+    lo = 0
+    for win in _windows(seed=5):
+        hi = win[-1][0]
+        src.apply_batch(_log(spark, win), lo, hi)
+        lo = hi
+        (d_bs, d_files), (s_bs, s_files) = sync(drv, True), sync(sp, False)
+        assert d_bs.mode == "driver" and s_bs.mode != "driver"
+        assert (d_bs.events, d_bs.touched_buckets, d_bs.rescanned_groups) == (
+            s_bs.events, s_bs.touched_buckets, s_bs.rescanned_groups
+        )
+        assert d_files == s_files
+        assert _stamped(drv.table, spark) == _stamped(sp.table, spark)
+    assert verify_view(spark, src_t, drv.table, MM_SPEC)["converged"]
+    if mode == "mor":
+        return  # the malformed window below takes the same path either way
+
+    # a null group value: the same refusal, then the same parked rows
+    src.apply_batch(_log(spark, [(lo + 1, "I", "kn", [1], 1, None, TS)]), lo, lo + 1)
+    errors = []
+    for view, on_driver in ((drv, True), (sp, False)):
+        with pytest.raises(ValueError, match="malformed") as e:
+            sync(view, on_driver)
+        errors.append(str(e.value))
+    assert errors[0] == errors[1]
+    parked = []
+    for name, view, on_driver in (("drv", drv, True), ("sp", sp, False)):
+        qdir = str(tmp_path / f"q-{name}")
+        sync(CDCEngine(spark, view.table, quarantine_dir=qdir), on_driver)
+        (batch_dir,) = glob.glob(f"{qdir}/batch-*")
+        parked.append(sorted(map(tuple, spark.read.parquet(batch_dir).collect())))
+    assert parked[0] == parked[1] and len(parked[0]) == 1
+    assert _stamped(drv.table, spark) == _stamped(sp.table, spark)
+
+
+def _jobs(spark, fn):
+    """``fn()`` inside its own Spark job group: (result, jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{id(fn)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_recompute_sync_job_count(spark, tmp_path, monkeypatch):
+    """One recompute sync over a small merge-on-read source runs at most
+    six Spark jobs, one of them the view's write; the commit reports the
+    driver placement in its stats, its snapshot and the sync's log line."""
+    from dbimport_spark.lake.table import LakeTable
+    from dbimport_spark.plans.stats_sink import CallableStatsSink
+
+    rows = [(i, "I", f"k{i}", [1] * i, i, f"g{i % 3}", TS) for i in range(1, 49)]
+    src_t = CDCEngine.create_table(str(tmp_path / "src"), num_buckets=4)
+    src = CDCEngine(spark, src_t, write_mode="mor")
+    src.apply_batch(_log(spark, rows), 0, 48)
+    sunk = []
+    view = CDCEngine(
+        spark, create_view(str(tmp_path / "v"), src_t, MM_SPEC, 4),
+        stats_sink=CallableStatsSink(sunk.append),
+    )
+    sync_view(spark, src_t, view, MM_SPEC)
+    upd = [(48 + i, "U", f"k{i}", [1] * 2, 2, f"g{i % 3}", TS) for i in range(1, 49)]
+    src.apply_batch(_log(spark, upd), 48, 96)
+
+    write_jobs = []
+    orig = LakeTable.write_data_files
+
+    def write(self, *a, **kw):
+        out, n = _jobs(spark, lambda: orig(self, *a, **kw))
+        spark.sparkContext.setJobGroup(sync_group, "job count")
+        write_jobs.append(n)
+        return out
+
+    monkeypatch.setattr(LakeTable, "write_data_files", write)
+    sync_group = "test-jobs-sync"
+    spark.sparkContext.setJobGroup(sync_group, "job count")
+    try:
+        bs, msg, _ = _decision(spark, src_t, view, MM_SPEC)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    sync_jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(sync_group))
+    assert ": recompute —" in msg and bs.mode == "driver"
+    assert write_jobs == [1] and sync_jobs + sum(write_jobs) <= 6
+    assert f"view merge on the driver, {bs.touched_buckets} view bucket(s)" in msg
+    assert view.table.current().properties["last_batch_mode"] == "driver"
+    assert sunk[-1]["mode"] == "driver" and sunk[-1]["rescanned_groups"] == 3
+    assert verify_view(spark, src_t, view.table, MM_SPEC)["converged"]
+
+
+def test_row_rule_over_local_frame_runs_no_job(spark):
+    """The driver merge rests on Spark folding a projection over a
+    ``local_frame`` into a local relation: ``_row_rule``'s projection
+    collects without a single Spark job."""
+    from pyspark.sql import types as T
+
+    from dbimport_spark.operators.merge import driver_merge
+
+    schema = T.StructType([
+        T.StructField("k", T.StringType()), T.StructField("v", T.LongType()),
+    ])
+    audit = T.StructType([
+        *schema.fields, T.StructField("dl_iud", T.StringType()),
+        T.StructField("dl_insert_ts", T.TimestampType()),
+        T.StructField("dl_update_ts", T.TimestampType()),
+    ])
+    batch = T.StructType([
+        T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType()),
+        *schema.fields,
+    ])
+    out = driver_merge(
+        spark, [("a", 1, "I", TS, TS), ("b", 2, "I", TS, TS)], audit,
+        [(5, "U", "a", 3, ), (6, "D", "b", None), (7, "I", "c", 4)], batch,
+        "k", ["k", "v"], F.lit(TS + dt.timedelta(1)),
+    )
+    rows, jobs = _jobs(spark, out.collect)
+    assert jobs == 0
+    assert sorted((r["k"], r["v"], r["dl_iud"]) for r in rows) == [
+        ("a", 3, "U"), ("c", 4, "I"),
+    ]

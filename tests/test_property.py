@@ -322,7 +322,7 @@ def test_random_dead_letter_interleavings(
         lax = T.StructType(
             [T.StructField(f.name, f.dataType, True) for f in CHANGE_SCHEMA]
         )
-        spark.createDataFrame(seg_rows, lax).coalesce(1).write.mode(
+        local_frame(spark, seg_rows, lax).coalesce(1).write.mode(
             "append"
         ).parquet(log)
         if not valid_rows:

@@ -10,6 +10,7 @@ from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.registry import TableEntry, TableRegistry, replay_all
 from dbimport_spark.plans.validate import fold_expected, reconcile
 from dbimport_spark.schema import PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes, write_changes
 
 
@@ -363,7 +364,7 @@ def test_registry_write_mode_and_delete_guard(spark, tmp_path):
     )
     keys = [f"g{i}" for i in range(10)]
     inserts = [(i + 1, "I", k, [1], 1, "s") for i, k in enumerate(keys)]
-    spark.createDataFrame(inserts, schema).write.parquet(str(tmp_path / "log-g"))
+    local_frame(spark, inserts, schema).write.parquet(str(tmp_path / "log-g"))
     CDCEngine.create_table(str(tmp_path / "t-g"), num_buckets=4)
 
     reg = TableRegistry(str(tmp_path / "reg.json"))
@@ -391,7 +392,7 @@ def test_registry_write_mode_and_delete_guard(spark, tmp_path):
     deletes = [
         (50 + i, "D", k, None, None, None) for i, k in enumerate(keys[:9])
     ]
-    spark.createDataFrame(deletes, schema).write.mode("append").parquet(
+    local_frame(spark, deletes, schema).write.mode("append").parquet(
         str(tmp_path / "log-g")
     )
     res2 = replay_all(spark, reg)

@@ -6,6 +6,7 @@ from dbimport_spark.functions.schema_normalize import (
     normalize_dataframe,
     normalize_type,
 )
+from dbimport_spark.session import local_frame
 
 
 def test_normalize_type_rules():
@@ -41,8 +42,8 @@ def test_normalize_dataframe(spark):
             T.StructField("i", T.IntegerType()),
         ]
     )
-    df = spark.createDataFrame(
-        [((b"\x01\x02",), [b"ab"], dt.datetime(2024, 1, 2, 3, 4, 5), 7)], schema
+    df = local_frame(
+        spark, [((b"\x01\x02",), [b"ab"], dt.datetime(2024, 1, 2, 3, 4, 5), 7)], schema
     )
     out = normalize_dataframe(df, dates_to_string=True)
     row = out.first()
@@ -59,7 +60,7 @@ def test_null_struct_stays_null(spark):
     schema = T.StructType(
         [T.StructField("doc", T.StructType([T.StructField("blob", T.BinaryType())]))]
     )
-    df = spark.createDataFrame([((b"x",),), (None,)], schema)
+    df = local_frame(spark, [((b"x",),), (None,)], schema)
     rows = normalize_dataframe(df).collect()
     vals = [r["doc"] for r in rows]
     assert sum(v is None for v in vals) == 1  # NULL subdocument preserved

@@ -65,3 +65,35 @@ def test_local_frame_empty_and_ddl(spark):
     )
     with pytest.raises(TypeError, match="struct schema"):
         local_frame(spark, [(1,)], "int")
+
+
+def test_collect_local_round_trips_off_utc(spark, monkeypatch):
+    """``collect_local`` over a local frame runs no Spark job and hands
+    back rows that ``local_frame`` reads as the same instants, also when
+    the Python process is not on UTC (``collect()`` alone returns naive
+    local times, which ``local_frame`` reads as UTC)."""
+    import time
+
+    from dbimport_spark.session import collect_local
+
+    schema = T.StructType([
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("arr", T.ArrayType(T.TimestampType())),
+        T.StructField("n", T.LongType()),
+    ])
+    when = dt.datetime(2024, 3, 10, 12, 30, tzinfo=dt.timezone.utc)
+    df = local_frame(spark, [(when, [when, None], 7), (None, None, None)], schema)
+    sc = spark.sparkContext
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        sc.setJobGroup("test-collect-local", "collect_local")
+        rows = collect_local(df.select("*"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.delenv("TZ")
+        time.tzset()
+    assert sc.statusTracker().getJobIdsForGroup("test-collect-local") == []
+    assert rows[0] == (when, [when, None], 7) and rows[1] == (None, None, None)
+    back = local_frame(spark, rows, schema).collect()
+    assert [tuple(r) for r in back] == [tuple(r) for r in df.collect()]

@@ -16,6 +16,7 @@ from dbimport_spark.plans.validate import (
     staged_rowcount,
 )
 from dbimport_spark.schema import PAYLOAD_COLUMNS
+from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 from tests.oracle import as_tuple_set, lww_fold
 
@@ -92,11 +93,13 @@ def test_max_delete_fraction_guard(spark, tmp_path):
         ]
     )
     keys = [f"k{i}" for i in range(20)]
-    inserts = spark.createDataFrame(
+    inserts = local_frame(
+        spark,
         [(i + 1, "I", k, [1], 1, "s") for i, k in enumerate(keys)], schema
     )
     # a "truncated upstream": deletes for 80% of the keys in one window
-    deletes = spark.createDataFrame(
+    deletes = local_frame(
+        spark,
         [(100 + i, "D", k, None, None, None) for i, k in enumerate(keys[:16])],
         schema,
     )
