@@ -444,12 +444,18 @@ def driver_merge(
         if pair[1] is not None:
             raise ValueError(f"driver_merge: more than one event for key {k}")
         pair[1] = r
-    # a side without a row is a null struct, so no field of it is required
+    # a side without a row is a null struct, so no field of it is required;
+    # without target rows every pair has its batch row, whose fields keep
+    # their nullability (written files then match ``inserts_only``'s)
+    whole_b = not target
     joined = local_frame(spark, list(pairs.values()), T.StructType([
-        T.StructField(side, T.StructType([
-            T.StructField(f.name, f.dataType) for f in schema.fields
-        ]))
-        for side, schema in (("t", target_schema), ("b", batch_schema))
+        T.StructField("t", T.StructType([
+            T.StructField(f.name, f.dataType) for f in target_schema.fields
+        ])),
+        T.StructField("b", T.StructType([
+            f if whole_b else T.StructField(f.name, f.dataType)
+            for f in batch_schema.fields
+        ]), nullable=not whole_b),
     ]))
     # no target rows: every pair is a batch row, the insert-only shape
     keep, cols = _row_rule(

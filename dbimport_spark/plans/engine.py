@@ -1036,52 +1036,49 @@ class CDCEngine:
         )
 
     def _apply_on_driver(
-        self, snap, target, events: DataFrame, lo: int, hi: int,
-        stats_extra: dict | None = None,
+        self, snap, target, events: list[tuple], schema: T.StructType,
+        lo: int, hi: int, stats_extra: dict | None = None,
     ) -> BatchStats:
         """``apply_batch`` for a small window whose merge runs on the
         driver: the same copy-on-write commit of the touched buckets, and
         one Spark job (the write) instead of the merge's plan.
 
         ``snap`` and ``target`` come from ``_collect_target``, collected
-        once by the caller; ``events`` is a ``local_frame`` of lsn, op and
-        payload holding at most one event per key (no LWW runs). Every
-        per-row rule is evaluated as a projection over a local frame,
-        which Spark runs on the driver without a job: alignment (masks and
-        casts included), ``normalize_batch``, the malformed-event
-        predicate, bucket assignment and the merge's row rule
-        (``operators.merge.driver_merge``). Python adds only the rule's key
-        join and the per-bucket lineage counts. The write is
-        ``write_data_files`` in one task (one file per touched bucket);
-        validators, history append, commit and stats emit are
-        ``apply_batch``'s, and an empty batch commits the watermark alone.
-        A ``write_mode='mor'`` engine gets the same rewrite of its touched
-        buckets here, folding their delta files away.
+        once by the caller; ``events`` are tuples of lsn, op and payload in
+        ``schema``'s field order, at most one event per key (no LWW runs).
+        They become one ``local_frame``, and every per-row rule is a
+        projection over a local frame, which Spark runs on the driver
+        without a job: alignment (masks and casts included),
+        ``normalize_batch``, the malformed-event predicate, bucket
+        assignment and the merge's row rule (``operators.merge.
+        driver_merge``). Python adds only the rule's key join and the
+        per-bucket lineage counts. The write is ``write_data_files`` in
+        one task (one file per touched bucket); validators, history
+        append, commit and stats emit are ``apply_batch``'s, and an empty
+        batch commits the watermark alone. A ``write_mode='mor'`` engine
+        gets the same rewrite of its touched buckets here, folding their
+        delta files away.
 
         A batch the Spark path owns goes to ``apply_batch`` as it is: one
-        with a malformed event (it refuses or parks it) or one that evolves
-        the table's schema (a widened source column under a view's min/max).
+        already committed (it skips), one that evolves the table's schema
+        (a widened source column under a view's min/max) or one with a
+        malformed event (it refuses or parks it).
         """
-        return self._report(
-            self._driver_window(snap, target, events, lo, hi), stats_extra
-        )
-
-    def _driver_window(
-        self, snap, target, events: DataFrame, lo: int, hi: int
-    ) -> BatchStats:
-        if int(snap.properties.get("last_lsn", "-1")) >= hi:
-            return BatchStats(lo=lo, hi=hi, skipped=True)
-        if self._schema_delta(snap, events.schema):
-            return self._apply_batch(events, lo, hi)
-        aligned = normalize_batch(self._aligned(events, snap))
+        batch = local_frame(self.spark, events, schema)
+        if (
+            int(snap.properties.get("last_lsn", "-1")) >= hi
+            or self._schema_delta(snap, schema)
+        ):
+            return self.apply_batch(batch, lo, hi, stats_extra)
+        aligned = normalize_batch(self._aligned(batch, snap))
         bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
         rows = collect_local(aligned.select(
             "*", bexpr.alias("_bucket"), self._bad_event_reason().alias("_bad")
         ))
         if any(r[-1] is not None for r in rows):
-            return self._apply_batch(events, lo, hi)
+            return self.apply_batch(batch, lo, hi, stats_extra)
         if not rows:
-            return self._commit_empty(snap, lo, hi, [])
+            return self._report(self._commit_empty(snap, lo, hi, []), stats_extra)
 
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -1117,7 +1114,7 @@ class CDCEngine:
             local_frame(self.spark, t_rows, t_schema)
             if self.history_table is not None else None
         )
-        return self._publish_window(
+        bs = self._publish_window(
             snap,
             BatchStats(
                 lo=lo, hi=hi, events=len(rows), touched_buckets=len(touched),
@@ -1128,6 +1125,7 @@ class CDCEngine:
             staged, (aligned, hist_target, payload_cols), merge_ts_val,
             replaced=touched, schema=snap.schema,
         )
+        return self._report(bs, stats_extra)
 
     def _merge_step(
         self,

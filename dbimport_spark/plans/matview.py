@@ -539,33 +539,44 @@ def _sync_view_impl(
         group_bound = min(src_rows, view_rows + new_rows)
         fits = max(group_bound, view_rows) <= limit  # the driver holds both
         recompute = fits and 0 < diff_bytes and src_bytes <= diff_bytes
-        if recompute:
-            bs = _recompute_view(spark, source, view_engine, spec, from_v, to_v)
-        else:
-            # compare_cols scopes update detection to the view's own
-            # columns: a source row whose group/sum/min/max columns are
-            # ALL unchanged contributes exactly zero to every aggregate,
-            # and Catalyst prunes the wide payload columns from both
-            # diff-join sides
-            feed = table_changes(
-                spark, source, from_v, to_v, include_preimage=True,
-                compare_cols=compare_scope(
-                    snap_to, [*spec.group_cols, *spec.sum_cols, *spec.minmax_cols()]
-                ),
+        bs = None
+        try:
+            if recompute:
+                bs = _recompute_view(spark, source, view_engine, spec, from_v, to_v)
+            else:
+                # compare_cols scopes update detection to the view's own
+                # columns: a source row whose group/sum/min/max columns are
+                # ALL unchanged contributes exactly zero to every aggregate,
+                # and Catalyst prunes the wide payload columns from both
+                # diff-join sides
+                feed = table_changes(
+                    spark, source, from_v, to_v, include_preimage=True,
+                    compare_cols=compare_scope(
+                        snap_to,
+                        [*spec.group_cols, *spec.sum_cols, *spec.minmax_cols()],
+                    ),
+                )
+                bs = apply_feed_to_view(
+                    spark, source, view_engine, spec, feed, from_v, to_v
+                )
+            return bs
+        finally:
+            # logged also when the fold raises (a refused malformed window,
+            # a lost commit race): the decision is what the line records
+            if bs is None:
+                merge = "raised"
+            elif bs.skipped or bs.mode == "empty":
+                merge = "not run (no view change)"
+            else:
+                where = "on the driver" if bs.mode == "driver" else "in Spark"
+                merge = f"{where}, {bs.touched_buckets} view bucket(s) touched"
+            _log().info(
+                "sync_view window (%d, %d]: %s — diff read set %d B vs source "
+                "%d B, view group bound %d, view rows %d (driver fold limit "
+                "%d); view merge %s",
+                from_v, to_v, "recompute" if recompute else "incremental",
+                diff_bytes, src_bytes, group_bound, view_rows, limit, merge,
             )
-            bs = apply_feed_to_view(
-                spark, source, view_engine, spec, feed, from_v, to_v
-            )
-        _log().info(
-            "sync_view window (%d, %d]: %s — diff read set %d B vs source "
-            "%d B, view group bound %d, view rows %d (driver fold limit %d); "
-            "view merge %s, %d view bucket(s) touched",
-            from_v, to_v, "recompute" if recompute else "incremental",
-            diff_bytes, src_bytes, group_bound, view_rows, limit,
-            "on the driver" if recompute else "in Spark",
-            bs.touched_buckets,
-        )
-        return bs
 
     on_driver = max(src_rows, view_rows) <= limit
     # no-silent-caps: the rebuild scans the whole source once — report
@@ -596,9 +607,10 @@ def _recompute_view(
     groups recomputed.
 
     ``on_driver`` (callers bound both sides): the groupBy and the view's
-    rows are collected, diffed on the driver, and merged there too
-    (``CDCEngine._apply_on_driver``, which reuses the collected rows as its
-    target); the view's write is the merge's only Spark job. Otherwise a
+    rows are collected and diffed on the driver, and the diff's event
+    tuples are merged there too (``CDCEngine._apply_on_driver``, which
+    reuses the collected rows as its target); the view's write is the
+    merge's only Spark job. Otherwise a
     full outer join in Spark diffs them and ``apply_batch`` merges."""
     snap = view_engine.table.current()
     fresh = _aggregate(_source_live(spark, source, version=to_v), spec, snap.schema)
@@ -642,13 +654,15 @@ def _recompute_view(
     # pop: what is left in ``stale`` afterwards has vanished
     events = [(to_v, "U", *r) for r in groups if stale.pop(r[:ng], None) != r]
     events += [(to_v, "D", *k, *[None] * (len(fresh.columns) - ng)) for k in stale]
-    # D events carry nulls in every value column: all fields nullable
-    events = local_frame(spark, events, T.StructType(
-        [T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType())]
+    # D events carry nulls in every value column: only lsn and op are
+    # always set, as in the Spark diff's events
+    schema = T.StructType(
+        [T.StructField("lsn", T.LongType(), False),
+         T.StructField("op", T.StringType(), False)]
         + [T.StructField(f.name, f.dataType) for f in fresh.schema.fields]
-    ))
+    )
     return view_engine._apply_on_driver(
-        snap, target, events, from_v, to_v,
+        snap, target, events, schema, from_v, to_v,
         stats_extra={"rescanned_groups": len(groups)},
     )
 

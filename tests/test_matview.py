@@ -9,6 +9,7 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.matview import (
@@ -760,6 +761,9 @@ def test_merge_key_only_view_syncs_incrementally(spark, tmp_path):
 # ---- driver placement: the recompute's merge on the driver ------------------
 
 
+AUDIT_STAMPS = ("dl_insert_ts", "dl_update_ts", "dl_delete_ts")
+
+
 def _stamped(table, spark):
     """The view's rows, each audit stamp mapped to the source version of
     the sync whose commit first carried it as ``last_merge_ts``."""
@@ -771,7 +775,7 @@ def _stamped(table, spark):
             stamp.setdefault(ts, int(props["last_lsn"]))
     return sorted(
         tuple(
-            stamp[v] if c in ("dl_insert_ts", "dl_update_ts") else v
+            stamp[v] if c in AUDIT_STAMPS and v is not None else v
             for c, v in r.asDict().items()
         )
         for r in table.read(spark).collect()
@@ -792,24 +796,60 @@ def _new_file_schemas(table, before: int):
     )
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_driver_merge_equals_spark_merge(spark, tmp_path, mode):
+def _history_rows(engine, spark):
+    """The view's history rows without their append stamp, or None."""
+    if engine.history_table is None:
+        return None
+    return sorted(
+        tuple(v for c, v in r.asDict().items() if c != "dl_hist_ts")
+        for r in engine.history_table.read(spark).collect()
+    )
+
+
+@pytest.mark.parametrize("mode,view", [
+    ("cow", "default"), ("mor", "default"), ("cow", "mor_soft"),
+])
+def test_driver_merge_equals_spark_merge(spark, tmp_path, mode, view):
     """The recompute's driver-placed merge writes what its Spark merge
     writes: after every window of the seeded sequence, equal rows and
     ``dl_iud``, audit stamps from the same sync, files in the same buckets
-    with the same parquet schema (nullability included). A source row with
-    a null group value is refused with the same error on both sides and,
+    with the same parquet schema (nullability included). ``mode`` is the
+    source's write mode, ``view`` the view engine's: the default, or a
+    ``write_mode='mor'`` soft-delete ``track_lsn`` view with a history
+    table (the driver rewrites the buckets its Spark merge writes deltas
+    for, so rows, stamps and history rows compare, files do not). A source row with a
+    null group value is refused with the same error on both sides and,
     with a quarantine, parked as the same rows."""
     import glob
 
-    from dbimport_spark.plans.matview import _recompute_view
+    from dbimport_spark.plans.matview import _recompute_view, view_schema
+    from dbimport_spark.schema import AUDIT_COLUMNS
 
     src_t = CDCEngine.create_table(str(tmp_path / "src"), num_buckets=4)
     src = CDCEngine(spark, src_t, write_mode=mode)
-    drv, sp = (
-        CDCEngine(spark, create_view(str(tmp_path / n), src_t, MM_SPEC, 4))
-        for n in ("drv", "sp")
-    )
+
+    def view_engine(name):
+        if view == "default":
+            return CDCEngine(
+                spark, create_view(str(tmp_path / name), src_t, MM_SPEC, 4)
+            )
+        payload = view_schema(T.StructType(
+            [f for f in src_t.current().schema.fields if f.name not in AUDIT_COLUMNS]
+        ), MM_SPEC)
+        keys = list(MM_SPEC.group_cols)
+        return CDCEngine(
+            spark,
+            CDCEngine.create_table(
+                str(tmp_path / name), payload_schema=payload, num_buckets=4,
+                key=keys, soft_delete=True, track_lsn=True,
+            ),
+            history_table=CDCEngine.create_history_table(
+                str(tmp_path / f"{name}-h"), payload, num_buckets=4, key=keys
+            ),
+            write_mode="mor",
+        )
+
+    drv, sp = view_engine("drv"), view_engine("sp")
 
     def sync(view, on_driver):
         before = view.table.current().version
@@ -829,10 +869,12 @@ def test_driver_merge_equals_spark_merge(spark, tmp_path, mode):
         assert (d_bs.events, d_bs.touched_buckets, d_bs.rescanned_groups) == (
             s_bs.events, s_bs.touched_buckets, s_bs.rescanned_groups
         )
-        assert d_files == s_files
+        if view == "default":
+            assert d_files == s_files
         assert _stamped(drv.table, spark) == _stamped(sp.table, spark)
+        assert _history_rows(drv, spark) == _history_rows(sp, spark)
     assert verify_view(spark, src_t, drv.table, MM_SPEC)["converged"]
-    if mode == "mor":
+    if (mode, view) != ("cow", "default"):
         return  # the malformed window below takes the same path either way
 
     # a null group value: the same refusal, then the same parked rows
@@ -914,8 +956,6 @@ def test_row_rule_over_local_frame_runs_no_job(spark):
     """The driver merge rests on Spark folding a projection over a
     ``local_frame`` into a local relation: ``_row_rule``'s projection
     collects without a single Spark job."""
-    from pyspark.sql import types as T
-
     from dbimport_spark.operators.merge import driver_merge
 
     schema = T.StructType([

@@ -7,13 +7,14 @@ Usage (from anywhere):
 
 For each seed it runs ``perfbench/run.py --trace 0`` once in each
 checkout, alternating which side goes first from one seed to the next,
-so a drift of the host over the session lands on both sides. ``--aa``
-runs A against a second run of itself: the noise floor of the same
-comparison. Runs go one at a time.
+so a drift of the host over the session lands on both sides. Each run
+lasts A's ``BENCHMARK.json`` ``run_seconds``, the length the benchmark
+itself runs. ``--aa`` runs A against a second run of itself: the noise
+floor of the same comparison. Runs go one at a time.
 
 It prints one line per pair with the B/A ratio of every end-to-end metric
-(named in A's ``BENCHMARK.json``) and of ``sync_s`` (the timed loop's
-median view sync, from the samples line), then per metric the median and
+(named in the same file) and of ``sync_s`` (the timed loop's median view
+sync, from the samples line), then per metric the median and
 quartiles of each side, the median ratio, and in how many pairs B was
 better. A run that is not correct, or fails operations, is reported and
 left out of the pair. ``--out`` keeps every run's result as JSON lines.
@@ -81,7 +82,6 @@ def main(argv=None) -> int:
     ap.add_argument("--aa", action="store_true", help="run A against itself")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=parse_seeds)
-    ap.add_argument("--seconds", type=float, default=5.0)
     ap.add_argument("--out", help="append every run's result here (JSON lines)")
     args = ap.parse_args(argv)
     if args.aa == (args.b is not None):
@@ -90,7 +90,9 @@ def main(argv=None) -> int:
     b = a if args.aa else os.path.abspath(args.b)
 
     with open(os.path.join(a, "BENCHMARK.json")) as fh:
-        better = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
+        bench = json.load(fh)
+    seconds = bench["run_seconds"]
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
     better.update(SAMPLE_METRICS)
     names = list(better)
 
@@ -99,7 +101,7 @@ def main(argv=None) -> int:
         order = [("A", a), ("B", b)] if i % 2 == 0 else [("B", b), ("A", a)]
         runs = {}
         for side, checkout in order:
-            r = run_once(checkout, args.workload, seed, args.seconds)
+            r = run_once(checkout, args.workload, seed, seconds)
             r["side"] = side
             runs[side] = r
             if args.out:
