@@ -60,7 +60,8 @@ touched groups' current totals, the engine's bucket-pruned merge in
 Spark; only min/max-invalidated groups read the base table. The
 ``on_gap='full'`` rebuild always recomputes, diffing and merging in Spark
 when over the limit. Each sync logs one INFO line with the choice, its
-inputs, where the view merge ran and the view buckets it touched.
+inputs, where the view merge ran and the view buckets it touched (or that
+it raised).
 """
 
 from __future__ import annotations
