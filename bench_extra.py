@@ -160,7 +160,7 @@ def main() -> None:
     from dbimport_spark.operators.dedup import dedup_lww
 
     for i in range(repeats):
-        sample("dedup_maxjoin_noop", lambda: noop(dedup_lww(head.drop("commit_ts"))))
+        sample("dedup_lww_noop", lambda: noop(dedup_lww(head.drop("commit_ts"))))
 
     # -- minhash phases -------------------------------------------------------
     from dbimport_spark.operators.text_dedup import (

@@ -159,9 +159,6 @@ def main(argv: list[str] | None = None) -> int:
         "(default: _id for json, doc_id for debezium)",
     )
     sp.add_argument(
-        "--dedup", default="maxjoin", choices=["maxjoin", "maxby", "window", "salted"]
-    )
-    sp.add_argument(
         "--delete-mode", default=None, choices=["hard", "soft"],
         help="default: the mode the table was created with",
     )
@@ -1185,7 +1182,6 @@ def main(argv: list[str] | None = None) -> int:
             spark,
             table,
             checkpoint_dir=args.checkpoint,
-            dedup_strategy=args.dedup,
             delete_mode=args.delete_mode,
             history_table=LakeTable.load(args.history) if args.history else None,
             renames=renames,

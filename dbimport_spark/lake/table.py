@@ -203,6 +203,19 @@ def footer_stats(pf, cols: list[str]) -> dict | None:
     return out or None
 
 
+def stat_file(bucket: int, kind: str, path: str, stat_cols: list[str]) -> tuple:
+    """``(path, bucket, kind, rows, bytes, footer stats)`` of one written
+    parquet file, from one footer read; stats are None for an empty file.
+    ``LakeTable.write_data_files`` runs it on a driver thread pool or, for
+    large commits, in executor tasks."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    rows = pf.metadata.num_rows
+    stats = footer_stats(pf, stat_cols) if rows else None
+    return path, bucket, kind, rows, os.path.getsize(path), stats
+
+
 @dataclass
 class Snapshot:
     version: int
@@ -555,6 +568,8 @@ class LakeTable:
         """Read a file subset with merge-on-read reconciliation by the
         Iceberg-v2 equality-delete rule: a delta or delete row of seq *s*
         hides its key's rows in base files and in delta files of seq < *s*.
+        This is the one statement of the rule; the stream's per-bucket diff
+        (``streaming/cdf_source.diff_bucket``) applies it in pandas.
 
         Plan shape: anti-joins only. With ``sup(s)`` the merge keys of
         every delta/delete file of seq > *s*, the live rows are base
@@ -758,8 +773,6 @@ class LakeTable:
                     )
         writer.parquet(out_dir)
 
-        import pyarrow.parquet as pq
-
         from dbimport_spark.schema import AUDIT_DELETE, AUDIT_LSN, AUDIT_UPDATE
 
         # column stats recorded per file from the same footer read that
@@ -771,17 +784,6 @@ class LakeTable:
         # renamed; declared extras should be too).
         want_stats = [AUDIT_UPDATE, AUDIT_LSN, AUDIT_DELETE]
         want_stats += _csv_prop("stat_columns")
-
-        def stat_one(args: tuple[int, str, str]) -> DataFile | None:
-            b, kind, p = args
-            pf = pq.ParquetFile(p)
-            nrows = pf.metadata.num_rows
-            if nrows == 0:
-                return None
-            return DataFile(
-                os.path.relpath(p, self.root), b, nrows, os.path.getsize(p),
-                epoch, kind, stats=footer_stats(pf, want_stats),
-            )
 
         # (bucket, kind, path) per parquet file, from its partition dirs
         todo: list[tuple[int, str, str]] = []
@@ -800,34 +802,18 @@ class LakeTable:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=16) as pool:
-                out = [f for f in pool.map(stat_one, todo) if f is not None]
+                stats = list(pool.map(lambda t: stat_file(*t, want_stats), todo))
         else:
-            root = self.root
-
-            def stat_remote(args: tuple[int, str, str]):
-                import os as _os
-
-                import pyarrow.parquet as _pq
-
-                from dbimport_spark.lake.table import footer_stats as _fs
-
-                b, kind, p = args
-                pf = _pq.ParquetFile(p)
-                nrows = pf.metadata.num_rows
-                st = _fs(pf, want_stats) if nrows else None
-                return (p, b, kind, nrows, _os.path.getsize(p), st)
-
-            sc = spark.sparkContext
             stats = (
-                sc.parallelize(todo, max(1, min(len(todo) // 8, 256)))
-                .map(stat_remote)
+                spark.sparkContext.parallelize(todo, max(1, min(len(todo) // 8, 256)))
+                .map(lambda t: stat_file(*t, want_stats))
                 .collect()
             )
-            out = [
-                DataFile(os.path.relpath(p, root), b, nrows, nbytes, epoch, kind, stats=st)
-                for p, b, kind, nrows, nbytes, st in stats
-                if nrows > 0
-            ]
+        out = [
+            DataFile(os.path.relpath(p, self.root), b, rows, nbytes, epoch, kind, stats=st)
+            for p, b, kind, rows, nbytes, st in stats
+            if rows > 0
+        ]
         if not out:
             # nothing to reference (e.g. a MoR window whose deletes all
             # hit absent keys): no snapshot will name this dir, and orphan

@@ -1,90 +1,60 @@
-"""Last-writer-wins batch dedup: one surviving event per key, max LSN.
+"""Last-writer-wins batch dedup: exactly one surviving event per key.
 
-This is correctness-critical, not an optimization: the MERGE requires a
-unique source key per target key (exactly why the reference pre-dedupes its
-Flashback imports with a max-SCN-per-PK view, reference
+This is correctness-critical, not an optimization: every merge shape
+requires a unique source key per target key (exactly why the reference
+pre-dedupes its Flashback imports with a max-SCN-per-PK view, reference
 import_config.py:3238-3252, SURVEY.md J6).
 
+The rule, for any input:
+
+- the event with the highest ``order_col`` (the lsn) wins;
+- events of one key that share that lsn are settled by the greater
+  ``xxhash64`` over the event's other columns (op and the non-key
+  payload, in frame order). Identical events hash alike and collapse to
+  one row; which of two different events wins depends only on their
+  values, never on row order or partitioning.
+
 ``key`` may be a list — the engine passes ["_bucket", "doc_id"] in its
-bucket-aligned plan so the grouping is satisfied by the batch's existing
+bucket-aligned and merge-on-read plans so the grouping is satisfied by the batch's existing
 HashPartitioning(_bucket) and the dedup runs WITHOUT its own shuffle
 (Catalyst: HashPartitioning(exprs) satisfies ClusteredDistribution(keys)
-when exprs ⊆ keys).
+when exprs ⊆ keys). The key columns are left out of the tie hash, so both
+key lists pick the same winner.
 
-Three strategies, all equivalent:
-
-- ``window``  — ``row_number() OVER (PARTITION BY key ORDER BY lsn DESC)``,
-  the literal form named by the north star. A single hot key serializes
-  into one task.
-- ``maxby``   — ``groupBy(key).agg(max_by(struct(*cols), lsn))``. Map-side
-  partial combine absorbs hot keys, BUT the struct-typed aggregation
-  buffer is not hash-aggregable, so Spark compiles it to SortAggregate —
-  a per-partition sort of full event rows (token arrays included).
-- ``maxjoin`` — ``groupBy(key).agg(max(lsn))`` (pure-long HashAggregate,
-  map-side combined, skew-immune) then a semi join back on
-  (key, order_col) to pick the winning rows. Requires order_col unique
-  per key (LSNs are globally unique). The winners side is tiny after the
-  agg, so Catalyst broadcasts the semi join — no sort anywhere, no event
-  row ever passes through an aggregation buffer. Measured ~2x faster than
-  maxby on 8M events. **Default.**
-- ``salted``  — explicit two-phase: first reduce per (key, salt) where
-  salt = pmod(xxhash64(lsn), S), then per key. Guards the reducer even if
-  partial aggregation is disabled/overwhelmed; the form the north rule
-  names ("salted on hot doc_id prefixes"). The rank is computed per
-  (salt, key) then re-reduced per key — the re-reduce is what makes
-  salting correct (SURVEY.md §7.4).
+Shape: one ``groupBy(key).agg(max_by(struct(*other), struct(lsn, hash)))``.
+Where the dedup brings its own exchange (the engine's broadcast plan),
+map-side partial aggregation absorbs hot keys. The struct buffer is not
+hash-aggregable, so Spark plans a SortAggregate: each partition sorts its
+event rows by key. A max-lsn semi-join (a pure-long HashAggregate) sorts
+nothing, but keeps every event at the max lsn — two rows for one key on a
+tie or an at-least-once duplicate; settling those after it costs a second
+aggregation, which measured slower than this one at the benchmark's sizes.
+Dedup alone on a 4-core host (local[4], 1M events over 100k keys, 32-128
+tokens each, noop sink, median of 5): 2.0 s here, 1.6 s for the
+semi-join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-STRATEGIES = ("window", "maxby", "maxjoin", "salted")
 
 
 def dedup_lww(
-    df: DataFrame,
-    key: str | list[str] = "doc_id",
-    order_col: str = "lsn",
-    strategy: str = "maxjoin",
-    n_salts: int = 16,
+    df: DataFrame, key: str | list[str] = "doc_id", order_col: str = "lsn"
 ) -> DataFrame:
-    """Return one row per key: the event with the highest order_col."""
-    if strategy not in STRATEGIES:
-        raise ValueError(f"strategy must be one of {STRATEGIES}")
+    """Return one row per key: the event with the highest ``order_col``,
+    ties settled by the greater hash of the other columns. The output has
+    ``df``'s columns, in ``df``'s order."""
     keys = [key] if isinstance(key, str) else list(key)
-    cols = df.columns
-
-    if strategy == "maxjoin":
-        winners = df.groupBy(*keys).agg(F.max(order_col).alias(order_col))
-        return df.join(winners, [*keys, order_col], "left_semi")
-
-    if strategy == "window":
-        w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    payload = F.struct(*[F.col(c) for c in cols])
-    if strategy == "maxby":
-        return (
-            df.groupBy(*keys)
-            .agg(F.max_by(payload, F.col(order_col)).alias("_w"))
-            .select("_w.*")
-        )
-
-    # salted two-phase
-    salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_salts))
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(*keys, "_salt")
-        .agg(F.max_by(payload, F.col(order_col)).alias("_w"), F.max(order_col).alias("_o"))
+    rest = [c for c in df.columns if c not in keys]
+    tie = F.xxhash64(*[c for c in rest if c != order_col])
+    won = df.groupBy(*keys).agg(
+        F.max_by(F.struct(*rest), F.struct(order_col, tie)).alias("_w")
     )
-    return (
-        partial.groupBy(*keys)
-        .agg(F.max_by(F.col("_w"), F.col("_o")).alias("_w"))
-        .select("_w.*")
+    # the keys stay grouping columns, not struct fields, so the output keeps
+    # the aggregation's partitioning on them and the shuffle merge's join
+    # on (_bucket, key) needs no exchange of its own
+    return won.select(
+        *[c if c in keys else F.col("_w").getField(c).alias(c) for c in df.columns]
     )

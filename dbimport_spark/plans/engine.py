@@ -138,8 +138,6 @@ class CDCEngine:
         spark: SparkSession,
         table: LakeTable,
         checkpoint_dir: str | None = None,
-        dedup_strategy: str = "maxjoin",
-        n_salts: int = 16,
         broadcast_threshold_rows: int = 200_000,
         repartition_output_bytes: int = 2 << 30,
         key: str | list[str] | None = None,
@@ -216,8 +214,6 @@ class CDCEngine:
         # raise ValidationFailed; the staged files are then deleted and
         # the table (watermark included) stays byte-untouched for retry.
         self.validators = list(validators or [])
-        self.dedup_strategy = dedup_strategy
-        self.n_salts = n_salts
         self.broadcast_threshold_rows = broadcast_threshold_rows
         self.repartition_output_bytes = repartition_output_bytes
         # delete_mode is a TABLE property (stamped at create_table): a soft
@@ -395,22 +391,12 @@ class CDCEngine:
         One definition for every write path: the merge step (apply_batch,
         repair_keys, apply_late) and the MOR apply."""
         keys = list(keys if keys is not None else self.keys)
-        deduped = dedup_lww(
-            src,
-            key=keys,
-            order_col="lsn",
-            strategy=self.dedup_strategy,
-            n_salts=self.n_salts,
-        )
+        deduped = dedup_lww(src, key=keys, order_col="lsn")
         if self.delete_mode != "soft":
             return deduped
         non_key = [c for c in payload_cols if c not in self.keys]
         live = dedup_lww(
-            src.filter(F.col("op") != "D"),
-            key=keys,
-            order_col="lsn",
-            strategy=self.dedup_strategy,
-            n_salts=self.n_salts,
+            src.filter(F.col("op") != "D"), key=keys, order_col="lsn"
         ).select(
             *keys,
             F.lit(True).alias("_has_lv"),
@@ -1191,8 +1177,9 @@ class CDCEngine:
         # bucket-aligned plan: ONE explicit exchange per side, then the
         # dedup (groupBy(_bucket, key)), the full-outer join on
         # (_bucket, key), and the partitionBy(_bucket) write all ride
-        # the same HashPartitioning — no further shuffles, no sorts
-        # (shuffled-hash join preferred in the session config).
+        # the same HashPartitioning — no further shuffles; the one sort is
+        # the dedup's, over the batch (shuffled-hash join preferred in the
+        # session config, so the target is never sorted).
         # partition by the table's bucket layout, NOT by core count:
         # bounded, data-sized tasks (≈ one bucket each) that pipeline
         # across whatever parallelism is available — the same plan at
@@ -1372,7 +1359,18 @@ class CDCEngine:
 
         soft = self.delete_mode == "soft"
         bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
-        deduped = self._lww(batch_nc, payload_cols).withColumn("_bucket", bexpr)
+        # batch-sized output: a handful of write tasks, each emitting one
+        # file per (bucket, kind) it holds — delta plus delete files per
+        # batch stay <= 2 x touched buckets regardless of parallelism. The
+        # batch is partitioned for the write up front, so the dedup
+        # (grouped by (_bucket, key)) and the probe's broadcast joins ride
+        # that one exchange and Spark drops the write's repartition as
+        # redundant; a join that does shuffle keeps it.
+        import math as _math
+
+        nparts = max(1, min(len(touched), _math.ceil(n_events / 1_000_000) * 8))
+        batch_b = batch_nc.withColumn("_bucket", bexpr).repartition(nparts, "_bucket")
+        deduped = self._lww(batch_b, payload_cols, ["_bucket"] + self.keys)
 
         # narrow audit probe: reconciled current rows of the batch's keys,
         # column-pruned to keys + insert-ts. The semi-join streams the
@@ -1416,16 +1414,10 @@ class CDCEngine:
             track_lsn=self.track_lsn,
             preimages=preimages,
         )
-        # batch-sized output: a handful of write tasks, each emitting one
-        # file per (bucket, kind) it holds — delta plus delete files per
-        # batch stay <= 2 x touched buckets regardless of parallelism. One
-        # write job: both kinds come from one projection of ``deduped``
-        # (one winner per key), so this commit holds at most one row per
-        # key across its delta and delete files — the invariant
-        # ``LakeTable.read_files_reconciled`` relies on.
-        import math as _math
-
-        nparts = max(1, min(len(touched), _math.ceil(n_events / 1_000_000) * 8))
+        # one write job: both kinds come from one projection of
+        # ``deduped`` (one winner per key), so this commit holds at most one
+        # row per key across its delta and delete files — the invariant
+        # ``LakeTable.read_files_reconciled`` relies on
         staged = [f"s{snap.version + 1}-{uuid.uuid4().hex[:8]}"]
         new_files = self.table.write_data_files(
             self.spark, out.repartition(nparts, "_bucket"), staged[0]
@@ -1615,9 +1607,8 @@ class CDCEngine:
         touched-bucket collect — on a CLI repair the source is the whole
         log, so re-deriving it per consumer would multiply the log scans.
         The null check runs BEFORE any dedup/join: a key riding an
-        UNDECLARED former name aligns to null, and the maxjoin dedup's
-        semi-join would silently DROP those rows while the call reports
-        success."""
+        UNDECLARED former name aligns to null, and the scoping semi-join
+        would silently DROP those rows while the call reports success."""
         key_rows = key_src.select(*self.keys).distinct().localCheckpoint(eager=True)
         null_pred = F.lit(False)
         for k in self.keys:

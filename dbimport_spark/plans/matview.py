@@ -79,7 +79,7 @@ from dbimport_spark.lake.cdf import (
 from dbimport_spark.lake.table import LakeTable, advance_pin
 from dbimport_spark.plans.engine import BatchStats, CDCEngine
 from dbimport_spark.schema import AUDIT_COLUMNS, AUDIT_DELETE
-from dbimport_spark.session import local_frame
+from dbimport_spark.session import collect_local, local_frame
 
 
 def _log():
@@ -459,9 +459,11 @@ def apply_feed_to_view(
     # min/max columns: the filter folds to false and runs no job),
     # collected once for the log and fed back as per-column isin filters
     # that reach the parquet scan, plus a semi-join with the exact keys
-    # (the filters admit their cross product)
+    # (the filters admit their cross product). collect_local, not
+    # collect(): timestamp keys must come back as the instants local_frame
+    # reads, whatever the Python process's time zone
     key_rows = merged.filter(inval).select(*spec.group_cols)
-    keys = key_rows.collect()
+    keys = collect_local(key_rows)
     n_rescan = len(keys)
     _log().info(
         "sync_view window (%d, %d]: %d group(s) rescanned for min/max "
@@ -483,8 +485,8 @@ def apply_feed_to_view(
     # count/sum would fold exactly anyway, but one groupBy for
     # everything keeps the rescan single-pass
     src = _source_live(spark, source, version=to_v)
-    for g in spec.group_cols:
-        src = src.filter(F.col(g).isin(list({k[g] for k in keys})))
+    for i, g in enumerate(spec.group_cols):
+        src = src.filter(F.col(g).isin(list({k[i] for k in keys})))
     src = src.join(
         F.broadcast(local_frame(spark, keys, key_rows.schema)),
         on=list(spec.group_cols), how="left_semi",

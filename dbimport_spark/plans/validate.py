@@ -19,17 +19,30 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from dbimport_spark.operators.dedup import dedup_lww
 
 
 def fold_expected(
     changes: DataFrame, key: str = "doc_id", payload_cols: list[str] | None = None
 ) -> DataFrame:
-    """Expected final table state: LWW fold over the whole log."""
-    winners = dedup_lww(changes, key=key, order_col="lsn", strategy="maxby")
+    """Expected final table state: LWW fold over the whole log.
+
+    The same order as the engine's ``operators/dedup.dedup_lww``, written
+    independently of it (a window rank, not an aggregation), so checks
+    against this fold compare two implementations: highest lsn first, then
+    the greater xxhash64 over op and the non-key payload (the log's
+    columns without key, lsn and commit_ts, which the engine's dedup input
+    does not carry)."""
+    tie = [c for c in changes.columns if c not in (key, "lsn", "commit_ts")]
+    rank = Window.partitionBy(key).orderBy(
+        F.col("lsn").desc(), F.xxhash64(*tie).desc()
+    )
+    winners = (
+        changes.withColumn("_rank", F.row_number().over(rank))
+        .filter(F.col("_rank") == 1)
+        .drop("_rank")
+    )
     live = winners.filter(F.col("op") != "D")
     if "tokens" in live.columns:
         live = live.withColumn(

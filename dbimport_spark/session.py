@@ -125,13 +125,14 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
 
 
 def collect_local(df: DataFrame) -> list[tuple]:
-    """The rows of a frame over a ``local_frame`` (projections and filters
-    of one) as tuples that ``local_frame`` reads back unchanged.
+    """The rows of a frame as tuples that ``local_frame`` reads back
+    unchanged.
 
-    Spark folds such a plan into a local relation on the driver, so its
-    ``collect()`` runs no Spark job. ``collect()`` hands timestamps back as
-    naive local-time datetimes, which ``local_frame`` would read as UTC;
-    here they come back time-zone aware.
+    Over a ``local_frame`` (projections and filters of one) Spark folds the
+    plan into a local relation on the driver, so this runs no Spark job.
+    ``collect()`` hands timestamps back as naive local-time datetimes,
+    which ``local_frame`` would read as UTC; here they come back time-zone
+    aware.
     """
 
     def aware(v, dt: T.DataType):

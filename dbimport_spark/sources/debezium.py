@@ -31,7 +31,8 @@ Semantics:
   ``(source.ts_ms << 12) + source.ord`` when both exist (MongoDB: the
   in-second event counter breaks same-timestamp ties), else the envelope
   ``ts_ms`` — a lossy last resort (same-millisecond events to one key tie
-  on lsn and LWW picks arbitrarily; a warning says so).
+  on lsn; LWW keeps the one whose op and payload hash higher, which need
+  not be the later write; a warning says so).
 - Kafka tombstones (null value emitted after a delete for log compaction)
   and schema-only lines carry no ``op`` AND no row image — dropped.
 - ``m`` (logical message) is a documented non-row event — dropped.
@@ -241,8 +242,9 @@ def _to_change_shape(
         warnings.warn(
             "debezium source: ordering falls back to the envelope ts_ms "
             "(source.lsn/pos/ord all absent) — events to the same key in "
-            "the same millisecond tie on lsn and last-writer-wins picks "
-            "arbitrarily; pass lsn_expr for a lossless ordering key",
+            "the same millisecond tie on lsn and last-writer-wins keeps "
+            "the one whose op and payload hash higher, not necessarily "
+            "the later write; pass lsn_expr for a lossless ordering key",
             stacklevel=2,
         )
         lsn = F.col("ts_ms").cast("long")

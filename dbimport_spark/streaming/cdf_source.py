@@ -286,31 +286,29 @@ def diff_bucket(meta: dict) -> Iterator:
 
     def side_pd(files, prefix: str) -> "pd.DataFrame":
         """One side's LIVE state as pandas: plain concat for pure-base
-        file sets (pre-MOR behavior, zero overhead), merge-on-read
-        reconciliation otherwise — the max-seq event per key supersedes
-        base rows; delete-file events remove the key. Runs entirely
-        inside this bucket's task: the bucket invariant means no other
-        task holds rows for these keys."""
+        file sets, otherwise the merge-on-read rule stated at
+        ``LakeTable.read_files_reconciled`` — a delta or delete row of seq
+        *s* hides its key in base files (seq 0) and in deltas of seq < *s*;
+        delete rows are never live. Runs entirely inside this bucket's
+        task: the bucket invariant means no other task holds rows for
+        these keys."""
         base = [f for f in files if f[2] == "base"]
         extra = [f for f in files if f[2] != "base"]
         df = to_pd(read_side(base), "")
         if extra:
-            evs = []
-            for f in sorted(extra, key=lambda x: x[3]):
-                e = to_pd(read_side([f]), "")
-                e["_mor_seq"] = f[3]
-                e["_mor_del"] = f[2] == "delete"
-                evs.append(e)
-            ev = pd.concat(evs, ignore_index=True)
-            ev = ev.sort_values("_mor_seq", kind="stable").drop_duplicates(
-                keys, keep="last"
+            rows = pd.concat(
+                [df.assign(_mor_seq=0, _mor_del=False)]
+                + [
+                    to_pd(read_side([f]), "").assign(
+                        _mor_seq=f[3], _mor_del=f[2] == "delete"
+                    )
+                    for f in extra
+                ],
+                ignore_index=True,
             )
-            hit = df.merge(
-                ev[keys].assign(_mor_hit=True), on=keys, how="left"
-            )["_mor_hit"]
-            df = df.loc[hit.isna().to_numpy()]
-            live = ev.loc[~ev["_mor_del"].to_numpy(), list(df.columns)]
-            df = pd.concat([df, live], ignore_index=True)
+            newest = rows.groupby(keys, dropna=False)["_mor_seq"].transform("max")
+            keep = (rows["_mor_seq"] >= newest) & ~rows["_mor_del"]
+            df = rows.loc[keep.to_numpy(dtype=bool), list(df.columns)]
         return df.rename(
             columns={c: prefix + c for c in df.columns if c not in keys}
         )

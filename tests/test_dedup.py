@@ -1,6 +1,12 @@
+import datetime as dt
+
+import pytest
 from pyspark.sql import functions as F
 
-from dbimport_spark.operators.dedup import STRATEGIES, dedup_lww
+from dbimport_spark.operators.dedup import dedup_lww
+from dbimport_spark.plans.engine import CDCEngine
+from dbimport_spark.plans.validate import fold_expected, reconcile
+from dbimport_spark.schema import CHANGE_SCHEMA, PAYLOAD_COLUMNS
 from dbimport_spark.session import local_frame
 from dbimport_spark.sources.loggen import generate_changes
 
@@ -14,25 +20,87 @@ def _winners_by_oracle(rows):
     return {k: v["lsn"] for k, v in best.items()}
 
 
-def test_strategies_agree_and_match_oracle(spark):
+def test_dedup_matches_oracle(spark):
     df = generate_changes(spark, 3000, n_keys=80, seed=11)
     # shuffle input order within the frame: dedup must not depend on order
     df = df.orderBy(F.xxhash64("lsn"))
     expected = _winners_by_oracle(df.collect())
-    for strategy in STRATEGIES:
-        out = dedup_lww(df, strategy=strategy, n_salts=4).collect()
-        got = {r["doc_id"]: r["lsn"] for r in out}
-        assert got == expected, strategy
-        assert len(out) == len(expected)
+    out = dedup_lww(df).collect()
+    assert {r["doc_id"]: r["lsn"] for r in out} == expected
+    assert len(out) == len(expected)
 
 
-def test_salted_hot_key(spark):
-    # one key with many events: salted two-phase must still return exactly
-    # the max-LSN event
+def test_dedup_hot_key(spark):
+    # one key with every event: the map-side partial aggregation still
+    # returns exactly the max-LSN event
     df = generate_changes(spark, 2000, n_keys=1, seed=5)
-    out = dedup_lww(df, strategy="salted", n_salts=8).collect()
+    out = dedup_lww(df).collect()
     assert len(out) == 1
     assert out[0]["lsn"] == 2000
+
+
+_TS = dt.datetime(2024, 1, 1)
+# lsn 1-2 make every key live; lsn 3-4 tie within keys: two different
+# events of a (and of c, where an insert ties a delete) and an
+# at-least-once duplicate of one event of b
+_PRELOAD = [
+    (1, "I", "a", [1], 1, "web", _TS),
+    (1, "I", "b", [2], 1, "web", _TS),
+    (2, "I", "c", [3], 1, "web", _TS),
+]
+_TIES = [
+    (3, "U", "a", [10, 11], 2, "books", _TS),
+    (3, "U", "a", [12], 1, "code", _TS),
+    (4, "U", "b", [20], 1, "code", _TS),
+    (4, "U", "b", [20], 1, "code", _TS),
+    (4, "I", "c", [30], 1, "web", _TS),
+    (4, "D", "c", None, None, None, _TS),
+]
+
+
+def test_dedup_keeps_one_event_per_key_on_ties(spark):
+    """Equal lsns within a key: an exact duplicate collapses to one row,
+    different events are settled by the tie hash, and the winner does not
+    depend on row order or partitioning."""
+    def by_key(frame):
+        rows = frame.collect()
+        out = {r["doc_id"]: r for r in rows}
+        assert len(out) == len(rows)
+        return out
+
+    df = local_frame(spark, _TIES, CHANGE_SCHEMA).drop("commit_ts")
+    out = by_key(dedup_lww(df))
+    assert sorted(out) == ["a", "b", "c"]
+    shuffled = local_frame(spark, list(reversed(_TIES)), CHANGE_SCHEMA)
+    again = dedup_lww(shuffled.drop("commit_ts").repartition(3).orderBy("op"))
+    assert by_key(again) == out
+    # the bucket-prefixed key list the shuffle merge passes picks the same
+    bucketed = df.withColumn("_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(2)))
+    by_bucket = dedup_lww(bucketed, key=["_bucket", "doc_id"])
+    assert by_key(by_bucket.select(*df.columns)) == out
+
+
+@pytest.mark.parametrize("shape", ["insert-only", "broadcast", "shuffle", "mor", "repair"])
+def test_write_paths_keep_one_row_per_key_on_ties(spark, tmp_path, shape):
+    """Every write path dedups through the one rule: a tie window leaves one
+    row per key, equal to the independent fold."""
+    kw = {"shuffle": {"broadcast_threshold_rows": 0}, "mor": {"write_mode": "mor"}}
+    table = CDCEngine.create_table(str(tmp_path / "t"), num_buckets=2)
+    eng = CDCEngine(spark, table, **kw.get(shape, {}))
+    rows = _TIES if shape == "insert-only" else _PRELOAD + _TIES
+    log = local_frame(spark, rows, CHANGE_SCHEMA)
+    if shape == "insert-only":
+        assert eng.apply_batch(log, 2, 4).mode == shape
+    else:
+        eng.apply_batch(log.filter("lsn <= 2"), 0, 2)
+        if shape == "repair":
+            assert eng.repair_keys(log, window=(2, 4)).mode == shape
+        else:
+            assert eng.apply_batch(log.filter("lsn > 2"), 2, 4).mode == shape
+    got = table.read(spark)
+    assert got.count() == got.select("doc_id").distinct().count()
+    rec = reconcile(got, fold_expected(log), PAYLOAD_COLUMNS)
+    assert rec["converged"], rec
 
 
 def test_neardup_clusters_and_survivors(spark):

@@ -32,7 +32,6 @@ def test_evolution_skew_resume_combined(spark, tmp_path):
         spark,
         table,
         checkpoint_dir=str(tmp_path / "ck"),
-        dedup_strategy="salted",
         broadcast_threshold_rows=3_000,  # mixes broadcast and shuffle paths
     )
     # phase 1: pre-evolution segment, killed mid-replay
@@ -42,7 +41,6 @@ def test_evolution_skew_resume_combined(spark, tmp_path):
         spark,
         table,
         checkpoint_dir=str(tmp_path / "ck"),
-        dedup_strategy="salted",
         broadcast_threshold_rows=3_000,
     )
     eng2.replay(old, num_batches=4)
@@ -54,7 +52,6 @@ def test_evolution_skew_resume_combined(spark, tmp_path):
         spark,
         table,
         checkpoint_dir=str(tmp_path / "ck2"),
-        dedup_strategy="salted",
         broadcast_threshold_rows=3_000,
     )
     eng3.replay(new, num_batches=3)

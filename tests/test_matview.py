@@ -414,6 +414,46 @@ def test_minmax_nonextremal_delete_no_rescan(spark, tmp_path):
     assert verify_view(spark, src.table, view.table, MM_SPEC)["converged"]
 
 
+def test_minmax_rescan_of_timestamp_groups_off_utc(spark, tmp_path, monkeypatch):
+    """A view grouped by a timestamp column rescans the group whose max
+    carrier was deleted also when the Python process is not on UTC: the
+    rescan's keys go back into Spark as the instants they were."""
+    import time
+
+    from dbimport_spark.lake.cdf import table_changes
+
+    payload = T.StructType([
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("day", T.TimestampType(), True),
+        T.StructField("n_tok", T.IntegerType(), True),
+    ])
+    events = "lsn long, op string, doc_id string, day timestamp, n_tok int"
+    spec = AggSpec(group_cols=["day"], max_cols=["n_tok"])
+    d1 = dt.datetime(2024, 3, 10, 12, 30, tzinfo=dt.timezone.utc)
+    d2 = dt.datetime(2024, 3, 11, 12, 30, tzinfo=dt.timezone.utc)
+    src_t = CDCEngine.create_table(
+        str(tmp_path / "src"), payload_schema=payload, num_buckets=2
+    )
+    src = CDCEngine(spark, src_t)
+    view = CDCEngine(spark, create_view(str(tmp_path / "v"), src_t, spec, 2))
+    src.apply_batch(local_frame(spark, [
+        (1, "I", "k1", d1, 10), (2, "I", "k2", d1, 20), (3, "I", "k3", d2, 7),
+    ], events), 0, 3)
+    feed = table_changes(spark, src_t, 0, 1, include_preimage=True)
+    apply_feed_to_view(spark, src_t, view, spec, feed, 0, 1)
+    src.apply_batch(local_frame(spark, [(4, "D", "k2", None, None)], events), 3, 4)
+    feed = table_changes(spark, src_t, 1, 2, include_preimage=True)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        bs = apply_feed_to_view(spark, src_t, view, spec, feed, 1, 2)
+    finally:
+        monkeypatch.delenv("TZ")
+        time.tzset()
+    assert bs.rescanned_groups == 1
+    assert verify_view(spark, src_t, view.table, spec)["converged"]
+
+
 def test_minmax_tied_extremum_delete_rescans_and_survives(spark, tmp_path):
     """Two rows tie for the max; deleting one MUST rescan (the stored
     extremum was possibly removed) and the max must survive via the

@@ -396,8 +396,11 @@ def test_cdf_equal_cow_vs_mor(spark, tmp_path):
 
 
 def test_cdf_stream_equals_batch_over_mor(spark, tmp_path):
-    """The streaming per-bucket diff reconciles deltas identically to the
-    batch table_changes over every MOR window."""
+    """Both diff kernels apply one merge-on-read rule: the streaming
+    per-bucket diff equals the batch table_changes over every window of
+    hand-built commits — a key-only delete file, a null-padded delete
+    file, a reinsert after a delete, a delta that hides an older delta,
+    and a delete of a key only an older delta holds."""
     import datetime as dt
     import os
 
@@ -439,28 +442,40 @@ def test_cdf_stream_equals_batch_over_mor(spark, tmp_path):
         if f.kind == "delete"
     }
     assert widths == {1, len(t.current().schema)}
-    hi = eng.table.current().version
-    for lo in range(hi):
-        parts = plan_window(eng.table, lo, lo + 1)
-        got = set()
-        for meta in parts:
-            for batch in diff_bucket(meta):
-                for row in batch.to_pylist():
-                    got.add(
-                        tuple(row[c] if c != "tokens" else tuple(row[c] or []) for c in COLS)
-                        + (row["_change_type"],)
-                    )
-        want = {
-            tuple(
-                r[c] if c != "tokens" else tuple(r[c] or []) for c in COLS
-            )
+    # live[1] comes back after its delete; live[5] gets a delta that the
+    # next window's delta hides; a new key lives only in a delta until the
+    # next window deletes it
+    first_hand_built = t.current().version
+    for i, (op, k, toks) in enumerate([
+        ("I", live[1], [7, 7]), ("U", live[5], [8]), ("I", "zz-new", [9]),
+        ("U", live[5], [10, 10]), ("D", "zz-new", None),
+    ]):
+        n = len(toks) if toks else None
+        row = (lsn + 4 + i, op, k, toks, n, "web" if toks else None, ts)
+        eng.apply_batch(local_frame(spark, [row], CHANGE_SCHEMA), lsn + 3 + i, lsn + 4 + i)
+    assert {f.kind for f in t.current().files} == {"base", "delta", "delete"}
+
+    def canon(rows):
+        return {
+            tuple(r[c] if c != "tokens" else tuple(r[c] or []) for c in COLS)
             + (r["_change_type"],)
-            for r in (
-                row.asDict()
-                for row in table_changes(spark, eng.table, lo, lo + 1).collect()
-            )
+            for r in rows
         }
-        assert got == want, f"window ({lo}, {lo + 1}]"
+
+    hi = eng.table.current().version
+    windows = [(lo, lo + 1) for lo in range(hi)]
+    windows += [(lo, hi) for lo in range(first_hand_built - 2, hi - 1)]
+    for lo, up in windows:
+        got = canon(
+            row
+            for meta in plan_window(eng.table, lo, up)
+            for batch in diff_bucket(meta)
+            for row in batch.to_pylist()
+        )
+        want = canon(
+            row.asDict() for row in table_changes(spark, eng.table, lo, up).collect()
+        )
+        assert got == want, f"window ({lo}, {up}]"
 
 
 def test_fsck_mor_findings(spark, tmp_path):

@@ -85,12 +85,11 @@ def test_bucket_plan_single_exchange_per_side(spark, tmp_path):
         .repartition(8, "_bucket")
     )
     deduped = dedup_lww(batch_b, key=["_bucket", "doc_id"])
-    # maxjoin dedup: pure-long HashAggregate (never SortAggregate — the
-    # struct-buffer fallback would sort every event row), broadcast semi
+    # the LWW max_by: a SortAggregate on (_bucket, key) that rides the
+    # repartition — no exchange of its own
     dplan = explain_str(deduped, "simple")
-    assert "HashAggregate" in dplan
-    assert "SortAggregate" not in dplan
-    assert dplan.count("Exchange hashpartitioning") <= 2
+    assert "SortAggregate" in dplan
+    assert dplan.count("Exchange hashpartitioning") == 1
 
     target_b = table.read(spark).withColumn("_bucket", bexpr).repartition(8, "_bucket")
     out = merge_changes(
@@ -103,13 +102,13 @@ def test_bucket_plan_single_exchange_per_side(spark, tmp_path):
         bucket_col="_bucket",
     )
     plan = explain_str(out, "simple")
-    # the full-outer join rides the explicit per-side exchanges: no extra
-    # exchange beyond the three (2 repartitions + 1 in the dedup winners
-    # subtree), shuffled-hash (build = batch), and ZERO sorts anywhere
-    assert plan.count("Exchange hashpartitioning") == 3
+    # the dedup and the full-outer join ride the explicit per-side
+    # exchanges: two exchanges, shuffled-hash (build = batch), and the one
+    # sort is the dedup's aggregation sort — the target is never sorted
+    assert plan.count("Exchange hashpartitioning") == 2
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("+- Sort ") == 0
+    assert plan.count("+- Sort ") == 1
 
 
 def _plan_nodes(plan: str):

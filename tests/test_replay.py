@@ -151,16 +151,6 @@ def test_shuffle_mode_matches_broadcast(spark, tmp_path):
     assert e2.table.properties["last_batch_mode"] in ("shuffle", "insert-only")
 
 
-def test_dedup_strategies_replay_equal(spark, tmp_path):
-    log = generate_changes(spark, 2000, n_keys=100, seed=21)
-    states = []
-    for strat in ("window", "maxby", "maxjoin", "salted"):
-        e = _new_engine(spark, tmp_path, f"ds-{strat}", dedup_strategy=strat)
-        e.replay(log, num_batches=2)
-        states.append(_table_state(spark, e.table))
-    assert all(s == states[0] for s in states)
-
-
 def test_n_tok_recomputed(spark, tmp_path):
     import datetime as dt
 

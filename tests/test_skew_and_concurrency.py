@@ -2,7 +2,6 @@
 
 from pyspark.sql import functions as F
 
-from dbimport_spark.operators.dedup import STRATEGIES, dedup_lww
 from dbimport_spark.plans.engine import CDCEngine
 from dbimport_spark.plans.validate import fold_expected, reconcile
 from dbimport_spark.schema import PAYLOAD_COLUMNS
@@ -10,8 +9,8 @@ from dbimport_spark.sources.loggen import generate_changes
 
 
 def test_heavy_skew_converges(spark, tmp_path):
-    """50% of 20k events hit 1 hot key (zipf-extreme): every dedup strategy
-    and both merge paths must still converge."""
+    """50% of 20k events hit 1 hot key (zipf-extreme): the LWW dedup must
+    still converge through both merge paths."""
     log = generate_changes(
         spark,
         20_000,
@@ -22,16 +21,13 @@ def test_heavy_skew_converges(spark, tmp_path):
     )
     hot = log.groupBy("doc_id").count().orderBy(F.desc("count")).first()
     assert hot["count"] > 5_000  # skew actually present
-    for strategy in ("maxjoin", "salted"):
-        table = CDCEngine.create_table(
-            str(tmp_path / f"t-{strategy}"), num_buckets=8
-        )
-        eng = CDCEngine(
-            spark, table, dedup_strategy=strategy, broadcast_threshold_rows=1_000
-        )
+    for mode, threshold in (("broadcast", 200_000), ("shuffle", 1_000)):
+        table = CDCEngine.create_table(str(tmp_path / f"t-{mode}"), num_buckets=8)
+        eng = CDCEngine(spark, table, broadcast_threshold_rows=threshold)
         eng.replay(log, num_batches=3)
+        assert table.properties["last_batch_mode"] == mode
         rec = reconcile(table.read(spark), fold_expected(log), PAYLOAD_COLUMNS)
-        assert rec["converged"], (strategy, rec)
+        assert rec["converged"], (mode, rec)
 
 
 def test_commit_race_duplicate_window_skipped(spark, tmp_path):

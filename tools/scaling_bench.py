@@ -65,7 +65,7 @@ spark.sparkContext.setLogLevel("ERROR")
 changes = spark.read.parquet({log!r}).select("doc_id", "lsn", "op")
 changes.count()  # warm page cache so the timed window is compute
 t0 = time.time()
-n = dedup_lww(changes, key="doc_id", order_col="lsn", strategy="maxjoin").count()
+n = dedup_lww(changes, key="doc_id", order_col="lsn").count()
 dt = time.time() - t0
 print("RESULT " + json.dumps({{"cpus": {cpus}, "sec": round(dt, 3),
       "events": {n_events}, "rows_out": n,
