@@ -728,6 +728,20 @@ class LakeTable:
                 if c.strip()
             ]
         out = df.withColumn("bucket", F.col(bucket_col)).drop(bucket_col)
+        # one parquet nullability per table: the writer takes each column's
+        # from the optimized plan, so a folded literal (the insert-only
+        # shape's audit stamps) would be written required where the matched
+        # shapes' CASE columns are optional. A column the schema declares
+        # nullable is written optional; the gate is a partition-id test
+        # because Catalyst folds every deterministic always-true one.
+        nullable = {f.name for f in snap_props.schema.fields if f.nullable}
+        required = [
+            f.name for f in out.schema.fields if not f.nullable and f.name in nullable
+        ]
+        if required:
+            out = out.withColumns({
+                c: F.when(F.spark_partition_id() >= 0, F.col(c)) for c in required
+            })
         # the kind partition dir must not start with '_' or '.' (Spark and
         # Hadoop skip such paths as hidden); dl_ is the engine's namespace
         parts, kind_dir = ["bucket"], "dl_kind"

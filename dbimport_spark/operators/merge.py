@@ -350,11 +350,11 @@ def mor_outputs(
 
     ``batch`` is the LWW-deduped winner set (one row per key; lsn, op,
     payload, optional ``*_lv`` pre-images in soft mode). ``probe`` is the
-    NARROW current state of the batch's keys — keys + dl_insert_ts,
-    built from a column-pruned streamed semi-join against the touched
-    buckets, so this function never sees (and the caller never pays for)
-    the buckets' full payload. Both inputs are batch-sized; every join
-    here is small-against-small.
+    NARROW current state — keys + dl_insert_ts, column-pruned — of the
+    touched buckets (broadcast whole while they are small) or of just the
+    batch's keys (a streamed semi-join), so this function never sees (and
+    the caller never pays for) the buckets' full payload; the batch is
+    the streamed side of the one join here.
 
     Audit parity with ``merge_changes`` (the CoW path) through the same
     row rule, with one DOCUMENTED divergence: CoW's per-column change

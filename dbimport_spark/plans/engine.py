@@ -887,7 +887,7 @@ class CDCEngine:
             mode = "mor"
             deduped, new_files, staged = self._write_mor(
                 batch_nc, snap, target, payload_cols, touched, n_events,
-                n_dels, lo, hi, merge_ts_val,
+                n_dels, touched_rows, lo, hi, merge_ts_val,
             )
         else:
             mode, deduped, out = self._merge_step(
@@ -996,9 +996,16 @@ class CDCEngine:
         added columns null, widened columns cast up (old files are also
         readable directly through the widened schema — SPARK-40876 — but
         this read predates the schema commit, so cast explicitly). Every
-        write path merges into this frame."""
+        write path merges into this frame. Without pending evolution the
+        read is returned as it is: Catalyst drops same-type casts anyway,
+        and building a cast per column costs py4j round trips per call."""
         target = self.table.read(self.spark, buckets=touched, version=version)
-        tcols = set(target.columns)
+        fields = target.schema.fields
+        if [(f.name, f.dataType) for f in fields] == [
+            (f.name, f.dataType) for f in schema.fields
+        ]:
+            return target
+        tcols = {f.name for f in fields}
         return target.select(
             *[
                 (
@@ -1331,6 +1338,7 @@ class CDCEngine:
         touched: list[int],
         n_events: int,
         n_dels: int,
+        touched_rows: int,
         lo: int,
         hi: int,
         merge_ts_val,
@@ -1348,15 +1356,22 @@ class CDCEngine:
         (``current``) are scanned ONCE, COLUMN-PRUNED to (keys,
         dl_insert_ts) — a few percent of bucket bytes under token-array
         payloads — to preserve insert-vs-update audit parity, and never
-        shuffled (broadcast semi-join, batch side built). Read-time reconciliation + compaction
+        shuffled: up to ``broadcast_threshold_rows`` touched rows (snapshot
+        metadata, ``touched_rows``) the narrow probe is broadcast as it is;
+        past it a semi-join against the broadcast batch keys first cuts it
+        to batch size. Read-time reconciliation + compaction
         (``lake.maintenance``) fold the deltas back into base
         asynchronously.
         """
+        import logging
+        import math
+
         # resolved at call time, so a wrapper installed on the operators
         # module (perfbench's layer tracer) sees every call
         from dbimport_spark.operators.merge import mor_outputs
         from dbimport_spark.schema import AUDIT_INSERT
 
+        log = logging.getLogger(__name__)
         soft = self.delete_mode == "soft"
         bexpr = self.table.bucket_expr(key_col=self.keys, num_buckets=snap.num_buckets)
         # batch-sized output: a handful of write tasks, each emitting one
@@ -1366,20 +1381,30 @@ class CDCEngine:
         # (grouped by (_bucket, key)) and the probe's broadcast joins ride
         # that one exchange and Spark drops the write's repartition as
         # redundant; a join that does shuffle keeps it.
-        import math as _math
-
-        nparts = max(1, min(len(touched), _math.ceil(n_events / 1_000_000) * 8))
+        nparts = max(1, min(len(touched), math.ceil(n_events / 1_000_000) * 8))
         batch_b = batch_nc.withColumn("_bucket", bexpr).repartition(nparts, "_bucket")
         deduped = self._lww(batch_b, payload_cols, ["_bucket"] + self.keys)
 
-        # narrow audit probe: reconciled current rows of the batch's keys,
-        # column-pruned to keys + insert-ts. The semi-join streams the
-        # touched buckets (batch keys broadcast); output is batch-sized.
-        probe_cols = [*self.keys, AUDIT_INSERT]
-        batch_keys = deduped.select(*self.keys)
-        probe = current.select(*probe_cols).join(
-            F.broadcast(batch_keys), self.keys, "left_semi"
+        # narrow audit probe: reconciled current rows, column-pruned to
+        # keys + insert-ts. Touched buckets small enough by metadata (the
+        # bound _merge_step broadcasts under) are broadcast whole: no second
+        # scan of the window, exchange and key broadcast for a semi-join.
+        # Larger ones (the 100 TB case) are streamed through a semi-join
+        # against the broadcast batch keys, so only batch-sized output moves.
+        probe = current.select(*self.keys, AUDIT_INSERT)
+        whole = touched_rows <= self.broadcast_threshold_rows
+        log.info(
+            "mor probe for window (%d, %d]: %s (%d touched rows from "
+            "metadata vs bound %d)", lo, hi,
+            "broadcast" if whole else "semi-join", touched_rows,
+            self.broadcast_threshold_rows,
         )
+        if whole:
+            probe = F.broadcast(probe)
+        else:
+            probe = probe.join(
+                F.broadcast(deduped.select(*self.keys)), self.keys, "left_semi"
+            )
 
         preimages = None
         if soft and n_dels:
@@ -1392,9 +1417,7 @@ class CDCEngine:
                 & ~F.coalesce(F.col("_has_lv"), F.lit(False))
             ).select(*self.keys)
             if no_lv_dels.limit(1).count() > 0:
-                import logging
-
-                logging.getLogger(__name__).info(
+                log.info(
                     "mor window (%d, %d]: fetching soft-delete pre-images "
                     "(full-width scan of %d touched bucket(s))",
                     lo, hi, len(touched),

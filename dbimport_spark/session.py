@@ -24,6 +24,15 @@ def get_spark(
 
     master defaults to local[$SPARK_GRAFT_CPUS] (32 in the sandbox); on a
     real deployment pass master=None and let spark-submit decide.
+
+    DataFrame call-site capture (``spark.python.sql.dataFrameDebugging.
+    enabled``) is off: on every Column function call PySpark walks the
+    Python stack and makes extra py4j round trips, so a merge-on-read
+    window costs ~1560 round trips instead of ~640. With it off, a
+    DataFrame error message lacks the Python line that built the failing
+    expression; pass ``extra_conf={"spark.python.sql.dataFrameDebugging.
+    enabled": "true"}`` to get it back. PySpark reads the setting once per
+    process, at the first Column call under an active session.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -58,6 +67,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # no Python call-site capture per Column call: one 5k-event
+        # merge-on-read window made 1560 py4j round trips with it, 640 without
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

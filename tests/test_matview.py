@@ -6,6 +6,7 @@ shape, import_config.py:2257-2284 — run the aggregate both ways,
 compare)."""
 
 import datetime as dt
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
@@ -935,10 +936,14 @@ def test_driver_merge_equals_spark_merge(spark, tmp_path, mode, view):
     assert _stamped(drv.table, spark) == _stamped(sp.table, spark)
 
 
+_JOB_GROUPS = itertools.count()
+
+
 def _jobs(spark, fn):
-    """``fn()`` inside its own Spark job group: (result, jobs it ran)."""
+    """``fn()`` inside its own Spark job group: (result, jobs it ran). Each
+    call takes a fresh group (a recycled ``id(fn)`` would add up calls)."""
     sc = spark.sparkContext
-    group = f"test-jobs-{id(fn)}"
+    group = f"test-jobs-{next(_JOB_GROUPS)}"
     sc.setJobGroup(group, "job count")
     try:
         out = fn()

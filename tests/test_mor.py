@@ -700,13 +700,24 @@ def _shape_windows():
 @pytest.mark.parametrize(
     "delete_mode,track_lsn", list(_SHAPE_EXPECT), ids=["hard", "soft", "soft_lsn"]
 )
-def test_merge_shapes_share_one_row_rule(spark, tmp_path, delete_mode, track_lsn):
+def test_merge_shapes_share_one_row_rule(
+    spark, tmp_path, caplog, monkeypatch, delete_mode, track_lsn
+):
     """Broadcast and shuffle CoW give the same rows, audit columns
     included; MoR differs from them only by the documented same-value
-    update divergence (dl_iud='U' and a re-stamped dl_update_ts)."""
+    update divergence (dl_iud='U' and a re-stamped dl_update_ts). The MoR
+    probe's two shapes, the whole touched buckets broadcast and the
+    semi-join (``broadcast_threshold_rows=0``), write the same files, each
+    logging its choice. Every file of every table, insert-only window or
+    merge, has one parquet schema, nullability included. A hard-mode MoR
+    window runs at most five Spark jobs in one write call."""
     import datetime as dt
+    import os
+
+    import pyarrow.parquet as pq
 
     from dbimport_spark.schema import CHANGE_SCHEMA
+    from tests.test_matview import _jobs
 
     soft = delete_mode == "soft"
     lsn, frames = 0, []
@@ -720,21 +731,45 @@ def test_merge_shapes_share_one_row_rule(spark, tmp_path, delete_mode, track_lsn
                          None if toks is None else "s", ts))
         frames.append((lsn - len(rows), lsn, local_frame(spark, rows, CHANGE_SCHEMA)))
 
+    write_jobs = []
+    orig = LakeTable.write_data_files
+
+    def write(self, *a, **kw):
+        sc = spark.sparkContext
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        out, n = _jobs(spark, lambda: orig(self, *a, **kw))
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+        write_jobs.append(n)
+        return out
+
+    monkeypatch.setattr(LakeTable, "write_data_files", write)
+
     def run(name, **kw):
+        """Both windows through one engine: their modes, per window its
+        jobs and the jobs of each ``write_data_files`` call, the table and
+        its rows by key."""
         root = str(tmp_path / name)
         table = CDCEngine.create_table(
             root, num_buckets=2, soft_delete=soft, track_lsn=track_lsn
         )
         eng = CDCEngine(spark, table, **kw)
-        modes = [eng.apply_batch(f, lo, hi).mode for lo, hi, f in frames]
-        return modes, {r["doc_id"]: r.asDict() for r in table.read(spark).collect()}
+        modes, jobs = [], []
+        for lo, hi, f in frames:
+            del write_jobs[:]
+            bs, n = _jobs(spark, lambda: eng.apply_batch(f, lo, hi))
+            modes.append(bs.mode)
+            jobs.append((n + sum(write_jobs), list(write_jobs)))
+        rows = {r["doc_id"]: r.asDict() for r in table.read(spark).collect()}
+        return modes, jobs, table, rows
 
-    b_modes, bcast = run("b")
-    s_modes, shuffle = run("s", broadcast_threshold_rows=0)
-    m_modes, mor = run("m", write_mode="mor")
-    assert (b_modes, s_modes, m_modes) == (
+    b_modes, _, b_t, bcast = run("b")
+    s_modes, _, s_t, shuffle = run("s", broadcast_threshold_rows=0)
+    with caplog.at_level("INFO", logger="dbimport_spark.plans.engine"):
+        m_modes, m_jobs, m_t, mor = run("m", write_mode="mor")
+        m0_modes, _, m0_t, mor0 = run("m0", write_mode="mor", broadcast_threshold_rows=0)
+    assert (b_modes, s_modes, m_modes, m0_modes) == (
         ["insert-only", "broadcast"], ["insert-only", "shuffle"],
-        ["insert-only", "mor"],
+        ["insert-only", "mor"], ["insert-only", "mor"],
     )
     keys = [f"k{i:02d}" for i in range(1, 14)]
     assert [bcast[k]["dl_iud"] if k in bcast else "-" for k in keys] == (
@@ -748,3 +783,33 @@ def test_merge_shapes_share_one_row_rule(spark, tmp_path, delete_mode, track_lsn
     expected = {k: dict(r) for k, r in bcast.items()}
     expected["k01"].update(dl_iud="U", dl_update_ts=w2_ts)
     assert mor == expected
+
+    # the probe's shapes: same rows and stamps, same files, one log line each
+    assert mor0 == mor
+    assert sorted((f.bucket, f.kind, f.rows) for f in m0_t.current().files) == (
+        sorted((f.bucket, f.kind, f.rows) for f in m_t.current().files)
+    )
+    lo, hi = frames[1][:2]
+    touched = sum(f.rows for f in m_t.snapshot(1).files)
+    assert [r.getMessage() for r in caplog.records if "mor probe" in r.getMessage()] == [
+        f"mor probe for window ({lo}, {hi}]: {shape} ({touched} touched rows "
+        f"from metadata vs bound {bound})"
+        for shape, bound in (("broadcast", 200_000), ("semi-join", 0))
+    ]
+    if delete_mode == "hard":
+        # one write call; under it AQE runs the batch exchange, the probe
+        # broadcast and the write as three jobs (the semi-join took five)
+        total, writes = m_jobs[1]
+        assert len(writes) == 1 and writes[0] <= 3 and total <= 5, m_jobs
+
+    def file_schemas(table):
+        return {
+            tuple(
+                (c.name, str(c.type), c.nullable)
+                for c in pq.read_schema(os.path.join(table.root, f.path))
+            )
+            for v in range(1, table.current().version + 1)
+            for f in table.snapshot(v).files
+        }
+
+    assert len(set().union(*map(file_schemas, (b_t, s_t, m_t, m0_t)))) == 1

@@ -15,9 +15,12 @@ floor of the same comparison. Runs go one at a time.
 It prints one line per pair with the B/A ratio of every end-to-end metric
 (named in the same file) and of ``sync_s`` (the timed loop's median view
 sync, from the samples line), then per metric the median and
-quartiles of each side, the median ratio, and in how many pairs B was
-better. A run that is not correct, or fails operations, is reported and
-left out of the pair. ``--out`` keeps every run's result as JSON lines.
+quartiles of each side, the median ratio, in how many pairs B was
+better, and whether a gain may be claimed for it: B better in at least
+nine of ten pairs, and B's median better than A's by more than A's
+interquartile range. A run that is not correct, or fails operations, is
+reported and left out of the pair. ``--out`` keeps every run's result as
+JSON lines.
 """
 
 from __future__ import annotations
@@ -75,6 +78,14 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def claim_holds(va: list[float], vb: list[float], wins: int, lower: bool) -> bool:
+    """The gain rule: B better in >= 9/10 of the pairs, and the medians
+    apart, in B's favour, by more than A's interquartile range."""
+    qa, qb = quartiles(va), quartiles(vb)
+    gain = qa[1] - qb[1] if lower else qb[1] - qa[1]
+    return wins >= 0.9 * len(va) and gain > qa[2] - qa[0]
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("a", help="checkout A (the baseline)")
@@ -124,7 +135,7 @@ def main(argv=None) -> int:
     print(f"\n{args.workload}: {len(pairs)} pair(s)"
           f"{' (A/A)' if args.aa else ''}; A={a}" + ("" if args.aa else f" B={b}"))
     print(f"{'metric':26} {'A median [q1, q3]':>30} {'B median [q1, q3]':>30} "
-          f"{'ratio':>7} {'B better':>9}")
+          f"{'ratio':>7} {'B better':>9} {'claim':>6}")
     for n in names:
         va = [p[1]["A"]["metrics"][n] for p in pairs if n in p[2]]
         vb = [p[1]["B"]["metrics"][n] for p in pairs if n in p[2]]
@@ -132,10 +143,12 @@ def main(argv=None) -> int:
         if not rs:
             continue
         qa, qb = quartiles(va), quartiles(vb)
-        wins = sum((r < 1) if better[n] == "lower" else (r > 1) for r in rs)
+        lower = better[n] == "lower"
+        wins = sum((r < 1) if lower else (r > 1) for r in rs)
+        claim = "yes" if claim_holds(va, vb, wins, lower) else "no"
         print(f"{n:26} {qa[1]:>12.4g} [{qa[0]:.4g}, {qa[2]:.4g}] "
               f"{qb[1]:>12.4g} [{qb[0]:.4g}, {qb[2]:.4g}] "
-              f"{statistics.median(rs):>7.3f} {wins:>5}/{len(rs)}")
+              f"{statistics.median(rs):>7.3f} {wins:>5}/{len(rs)} {claim:>6}")
     return 0 if pairs else 1
 
 
